@@ -4,9 +4,11 @@ U6/U9/U10 re-expressed Spark-first).
 The reference computes euclidean/manhattan/cosine in Python per row
 (reference code/src/global_model_manager.py:60-85,
 code/src/distance_measures.py:16-88). Here they are
-``zip_with``/``aggregate`` column expressions: JVM-side, inside
-whole-stage codegen, no Python worker round-trip — the 10-100× path at
-100 TB. DTW (inherently iterative) lives in ml/dtw.py as a pandas UDF.
+``zip_with``/``aggregate`` column expressions: JVM-side, no Python
+worker round-trip. They are NOT compiled by whole-stage codegen: in
+Spark 4.1.2 ``ArrayTransform``, ``ArrayAggregate`` and ``ZipWith`` are
+``CodegenFallback`` expressions, evaluated by the interpreter row by
+row. DTW (inherently iterative) lives in ml/dtw.py as a pandas UDF.
 
 All functions take Column-or-name and return a Column, composing with
 any DataFrame expression.

@@ -173,26 +173,6 @@ def dtw_distance_udf(exemplar: list[float], window: int | None = None):
     return _dtw
 
 
-def nearest_dtw_index_udf(window: int | None = None):
-    """pandas UDF (features array, exemplars array<array>) → 0-based
-    index of the DTW-nearest exemplar. The DTW analogue of the native
-    ``nearest_exemplar_index`` expression, for distance-kernel
-    proximity-tree splits (reference distance_measures.py:16-52 feeds
-    its trees multiple measures)."""
-    from pyspark.sql.types import IntegerType as _Int
-
-    @F.pandas_udf(_Int())
-    def _nearest(features: pd.Series, exemplars: pd.Series) -> pd.Series:
-        out = []
-        for x, exs in zip(features, exemplars):
-            xa = np.asarray(x, dtype=np.float64)
-            ds = [dtw_distance(xa, np.asarray(e, dtype=np.float64), window=window) for e in exs]
-            out.append(int(np.argmin(ds)))
-        return pd.Series(out, dtype="int32")
-
-    return _nearest
-
-
 def dtw_pairwise_udf(window: int | None = None):
     """pandas UDF over two array columns → DTW distance per row."""
 

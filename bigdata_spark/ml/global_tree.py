@@ -1,35 +1,36 @@
-"""Global proximity tree as Spark DataFrame dataflow (SURVEY §3.2;
+"""Global proximity tree as a level-wise Spark pass (SURVEY §3.2;
 reference global_model_manager.py:168-402).
 
 The reference's BFS level loop costs O(k·open_nodes) Spark actions per
 level (one weighted-Gini job per candidate split — the reason its
-global training takes 1,900-5,300 s). This implementation keeps the
-same semantics but runs ONE fused Spark job per level (SURVEY §7
-Phase 4), plus one bootstrap job:
+global training takes 1,900-5,300 s). This implementation grows the
+same tree with ONE Spark job per level, in the shape of Spark ML's
+level-wise ``RandomForest.findBestSplits``:
 
-  bootstrap — a window pass over the root yields the per-label counts
-              and the k-per-label exemplar pool (bounded collect —
-              the reference's own "P2" lesson).
-  level job — every candidate's branch assignment is computed natively
-              (nearest_exemplar_index — no Python UDF) over the
-              frontier joined with a broadcast candidate-exemplar
-              table; ONE window over (node, cand, branch, label)
-              yields BOTH the branch-label counts (the weighted-Gini
-              input, finished on the driver over the tiny table, and
-              the would-be children's label stats — so leaf checks run
-              at child creation with no stats job) AND the
-              k-per-group exemplar pool for the next level, ranked by
-              a content hash keyed to the next depth — bit-identical
-              to what a dedicated next-level sampling pass would draw
-              for the winning candidate's branches.
+  - the training frame (label, features) is persisted once; each job
+    projects it as (label, features, xxhash64(seed + depth + 1,
+    features)) and runs ``_level_kernel`` over it with ``mapInArrow``;
+  - the tree grown so far and every open node's candidate splits
+    travel as one broadcast of flat numpy arrays (NaN-padded exemplar
+    blocks, their valid counts, the child table);
+  - each partition routes its rows from the root through the decided
+    splits, drops rows that reach a leaf, scores every candidate of
+    every open node (``nearest_exemplar``) and returns mergeable
+    partials: per (node, cand, branch, label) group the row count and
+    the ``exemplar_pool_k`` rows of smallest hash, each pooled series
+    shipped once by row id;
+  - the driver merges the partials (counts summed, the k smallest
+    hashes kept in order — exactly a ``row_number()`` window's ranks),
+    picks each node's split by weighted Gini, leafs children from the
+    winning branch counts, and draws the next level's candidates from
+    the winning branches' pools.
 
-The routing projection (broadcast join + column expressions, no
-shuffle; an inner join that drops rows bound for leaf children, so the
-frontier shrinks monotonically) is never materialized by its own
-action: the NEXT level's fused job is its first action and fills the
-cache, after which the parent level's cache is dropped. Net: 1 job per
-level (the reference: O(k·open_nodes)+3), and the last level's routing
-never executes at all.
+The bootstrap (root label counts and exemplar pool) is the same job run
+as a level with one empty root candidate, ranked by
+xxhash64(seed, features). The ranking hashes row CONTENT, so the
+fitted tree does not depend on partitioning or row order. A fit of
+depth d costs at most d + 1 Spark jobs and no shuffle (plus one shuffle
+job when an under-partitioned input is first spread out).
 
 Prediction broadcasts the plain-dict tree and traverses it in one
 Arrow-batched pandas UDF pass (U3 parity; reference :405-483).
@@ -43,11 +44,37 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
-from ..functions.distances import nearest_exemplar_index
+# node states in the kernel's routing table
+_LEAF, _SPLIT, _OPEN = 0, 1, 2
+# Partial rows a level job returns, by kind: ENTRY, one pool entry of a
+# (node, cand, branch, label) group — its hash h, its series' row id,
+# and on the group's first entry the group's row count n; SERIES, the
+# features of one pooled row; WIDTH, n input rows of features length
+# `width` (-1: null label, null features or a null element).
+_ENTRY, _SERIES, _WIDTH = 0, 1, 2
+_PARTIAL_SCHEMA = (
+    "kind byte, node int, cand int, branch int, label int, "
+    "n long, h long, row long, width int, features array<double>"
+)
+_PARTIAL_ARROW = pa.schema(
+    [
+        ("kind", pa.int8()), ("node", pa.int32()), ("cand", pa.int32()),
+        ("branch", pa.int32()), ("label", pa.int32()), ("n", pa.int64()),
+        ("h", pa.int64()), ("row", pa.int64()), ("width", pa.int32()),
+        ("features", pa.list_(pa.float64())),
+    ]
+)
+
+
+def _partial_batch(kind: int, num_rows: int, **cols) -> pa.RecordBatch:
+    cols["kind"] = pa.array(np.full(num_rows, kind, dtype=np.int8))
+    columns = [cols.get(f.name, pa.nulls(num_rows, f.type)) for f in _PARTIAL_ARROW]
+    return pa.record_batch(columns, schema=_PARTIAL_ARROW)
 
 
 @dataclass
@@ -63,11 +90,202 @@ class TreeNode:
     children: dict[int, int] = field(default_factory=dict)  # branch ix → child node_id
 
 
+def nearest_exemplar(
+    X: np.ndarray,
+    blocks: np.ndarray,
+    counts: np.ndarray,
+    slots: np.ndarray,
+    metric: str = "euclidean",
+    window: int | None = None,
+) -> np.ndarray:
+    """0-based nearest-exemplar index of every row of ``X`` (m, d) in
+    each of its exemplar blocks: ``slots`` (m, c) picks blocks of
+    ``blocks`` (b, K, d), of which the first ``counts[slot]`` rows are
+    exemplars and the rest padding that never wins.
+
+    Euclidean follows ``nearest_exemplar_index`` bit for bit: squares
+    summed dimension by dimension in index order (Spark's ``aggregate``
+    fold), then ``sqrt``; NaN ranks above every number, ties go to the
+    lowest index, and an all-NaN row goes to the first exemplar. DTW
+    takes ``np.argmin`` over ``dtw_distance`` (first NaN wins)."""
+    m, c = slots.shape
+    if blocks.shape[1] == 0:
+        return np.zeros((m, c), dtype=np.int64)
+    if metric == "dtw":
+        from .dtw import dtw_distance
+
+        out = np.empty((m, c), dtype=np.int64)
+        for r in range(m):
+            for j in range(c):
+                exemplars = blocks[slots[r, j], : counts[slots[r, j]]]
+                dists = [dtw_distance(X[r], e, window=window) for e in exemplars]
+                out[r, j] = int(np.argmin(dists))
+        return out
+    per_dim = np.ascontiguousarray(blocks.transpose(2, 0, 1))  # (d, b, K)
+    xt = np.ascontiguousarray(X.T)
+    acc = np.zeros((m, c, blocks.shape[1]))
+    for i in range(X.shape[1]):
+        diff = xt[i][:, None, None] - per_dim[i][slots]
+        acc += diff * diff
+    dist = np.sqrt(acc)
+    dist[np.arange(blocks.shape[1]) >= counts[slots][..., None]] = np.nan
+    best = np.where(np.isnan(dist), np.inf, dist).min(axis=-1, keepdims=True)
+    # no hit (every distance NaN) → argmax of all-False → 0
+    return np.argmax(dist == best, axis=-1)
+
+
+def _reduce_entries(e: dict[str, np.ndarray], k: int) -> dict[str, np.ndarray]:
+    """Merge pool entries: per (node, cand, branch, label) group, sum the
+    counts ``n`` onto the first entry and keep the ``k`` smallest hashes
+    in ascending order. Associative, so partitions and the driver apply
+    it to any split of the rows."""
+    order = np.lexsort((e["h"], e["label"], e["branch"], e["cand"], e["node"]))
+    e = {key: v[order] for key, v in e.items()}
+    keys = np.stack([e["node"], e["cand"], e["branch"], e["label"]])
+    new = np.ones(len(order), dtype=bool)
+    new[1:] = (keys[:, 1:] != keys[:, :-1]).any(axis=0)
+    starts = np.flatnonzero(new)
+    group = np.cumsum(new) - 1
+    rank = np.arange(len(order)) - starts[group]
+    n = np.zeros(len(order), dtype=np.int64)
+    n[starts] = np.add.reduceat(e["n"], starts) if len(starts) else []
+    e["n"] = n
+    keep = rank < k
+    return {key: v[keep] for key, v in e.items()}
+
+
+def _branch_counts(entries: dict[str, np.ndarray]) -> dict[tuple[int, int], dict]:
+    """(node, cand) → branch → label → row count."""
+    agg: dict[tuple[int, int], dict[int, dict[int, int]]] = {}
+    head = entries["n"] > 0
+    cols = (entries[c][head].tolist() for c in ("node", "cand", "branch", "label", "n"))
+    for nid, cand, branch, lbl, n in zip(*cols):
+        agg.setdefault((nid, cand), {}).setdefault(branch, {})[lbl] = n
+    return agg
+
+
+def _branch_pools(entries: dict[str, np.ndarray], row_ix: dict[int, int], winners: dict[int, int]):
+    """(node, branch) → label → pooled series indexes in ascending hash
+    order, for each node's winning candidate only."""
+    pools: dict[tuple[int, int], dict[int, list[int]]] = {}
+    cols = (entries[c].tolist() for c in ("node", "cand", "branch", "label", "row"))
+    for nid, cand, branch, lbl, row in zip(*cols):
+        if winners.get(nid) == cand:
+            pools.setdefault((nid, branch), {}).setdefault(lbl, []).append(row_ix[row])
+    return pools
+
+
+def _level_kernel(bc, k: int, metric: str, window: int | None):
+    """mapInArrow body of one level job (see the module docstring)."""
+
+    def run(batches):
+        from pyspark import TaskContext
+
+        t = bc.value
+        state, slot, dim = t["state"], t["slot"], t["dim"]
+        n_cand = t["n_cand"]
+        base = TaskContext.get().partitionId() << 32
+        offset = 0
+        widths: dict[int, int] = {}
+        parts, kept_rows, kept_feats = [], [], []
+        for batch in batches:
+            label, feats, h = batch.column(0), batch.column(1), batch.column(2)
+            rows = base + offset + np.arange(batch.num_rows, dtype=np.int64)
+            offset += batch.num_rows
+            # null label, null features or a null element: unusable
+            width = feats.value_lengths().fill_null(-1).to_numpy(zero_copy_only=False)
+            bad = label.is_null().to_numpy(zero_copy_only=False) | (width < 0)
+            flat = feats.flatten()
+            if flat.null_count:
+                is_null = flat.is_null().to_numpy(zero_copy_only=False)
+                nulls = np.concatenate([[0], np.cumsum(is_null)])
+                ends = np.cumsum(np.maximum(width, 0))
+                bad |= (nulls[ends] - nulls[ends - np.maximum(width, 0)]) > 0
+            width = np.where(bad, -1, width)
+            for w, cnt in zip(*np.unique(width, return_counts=True)):
+                widths[int(w)] = widths.get(int(w), 0) + int(cnt)
+            ok = ~bad if dim < 0 else width == dim
+            if not ok.all():
+                feats = feats.filter(pa.array(ok))
+            good = {w for w in widths if w >= 0}
+            if len(good) != 1 or not ok.any():
+                continue  # ragged: only the width counts go back
+            X = feats.flatten().to_numpy(zero_copy_only=False).reshape(int(ok.sum()), good.pop())
+            y = label.to_numpy(zero_copy_only=False)[ok].astype(np.int64)
+            hh = h.to_numpy(zero_copy_only=False)[ok]
+            rows = rows[ok]
+
+            # route from the root through the decided splits, all nodes
+            # of a depth at once
+            cur = np.zeros(len(X), dtype=np.int64)
+            while True:
+                mv = np.flatnonzero(state[cur] == _SPLIT)
+                if not len(mv):
+                    break
+                s = slot[cur[mv]]
+                b = nearest_exemplar(
+                    X[mv], t["split_blocks"], t["split_counts"], s[:, None], metric, window
+                )
+                cur[mv] = t["children"][s, b[:, 0]]
+            live = np.flatnonzero(state[cur] == _OPEN)
+            if not len(live):
+                continue
+            slots = slot[cur[live]][:, None] * n_cand + np.arange(n_cand)
+            branch = nearest_exemplar(
+                X[live], t["cand_blocks"], t["cand_counts"], slots, metric, window
+            )
+            e = _reduce_entries(
+                {
+                    "node": np.repeat(cur[live], n_cand),
+                    "cand": np.tile(np.arange(n_cand), len(live)),
+                    "branch": branch.ravel(),
+                    "label": np.repeat(y[live], n_cand),
+                    "n": np.ones(branch.size, dtype=np.int64),
+                    "h": np.repeat(hh[live], n_cand),
+                    "row": np.repeat(rows[live], n_cand),
+                },
+                k,
+            )
+            parts.append(e)
+            pooled = np.isin(rows, e["row"])
+            kept_rows.append(rows[pooled])
+            kept_feats.append(X[pooled])
+
+        yield _partial_batch(
+            _WIDTH,
+            len(widths),
+            n=pa.array(list(widths.values()), pa.int64()),
+            width=pa.array(list(widths), pa.int32()),
+        )
+        if len({w for w in widths if w >= 0}) != 1 or not parts:
+            return
+        e = _reduce_entries({key: np.concatenate([p[key] for p in parts]) for key in parts[0]}, k)
+        yield _partial_batch(
+            _ENTRY,
+            len(e["n"]),
+            **{c: pa.array(e[c].astype(np.int32)) for c in ("node", "cand", "branch", "label")},
+            **{c: pa.array(e[c].astype(np.int64)) for c in ("n", "h", "row")},
+        )
+        # each pooled series once, however many groups pool it
+        rows, feats = np.concatenate(kept_rows), np.concatenate(kept_feats)
+        ship = np.isin(rows, e["row"])
+        rows, feats = rows[ship], feats[ship]
+        offsets = np.arange(len(rows) + 1, dtype=np.int32) * feats.shape[1]
+        yield _partial_batch(
+            _SERIES,
+            len(rows),
+            row=pa.array(rows),
+            features=pa.ListArray.from_arrays(pa.array(offsets), pa.array(feats.ravel())),
+        )
+
+    return run
+
+
 class GlobalProximityTree:
     def __init__(
         self,
         n_splitters: int = 5,
-        max_depth: int = 15,
+        max_depth: int | None = 15,
         min_samples_split: int = 4,
         exemplar_pool_k: int = 3,
         seed: int = 42,
@@ -76,8 +294,10 @@ class GlobalProximityTree:
     ) -> None:
         if metric not in ("euclidean", "dtw"):
             raise ValueError(f"metric must be 'euclidean' or 'dtw', got {metric!r}")
+        if exemplar_pool_k < 1:
+            raise ValueError(f"exemplar_pool_k must be >= 1, got {exemplar_pool_k}")
         self.n_splitters = n_splitters
-        self.max_depth = max_depth
+        self.max_depth = max_depth  # None: grow until no node splits
         self.min_samples_split = min_samples_split
         self.exemplar_pool_k = exemplar_pool_k
         self.seed = seed
@@ -86,193 +306,162 @@ class GlobalProximityTree:
         self.nodes: dict[int, TreeNode] = {}
         self.majority_class: int | None = None
 
-    def _branch_ix(self, features: F.Column, exemplars: F.Column) -> F.Column:
-        """0-based nearest-exemplar index under the configured kernel:
-        the native codegen expression for euclidean, an Arrow-batched
-        pandas UDF for DTW (inherently iterative — reference
-        distance_measures.py:16-52)."""
-        if self.metric == "euclidean":
-            return nearest_exemplar_index(features, exemplars)
-        from .dtw import nearest_dtw_index_udf
-
-        return nearest_dtw_index_udf(self.dtw_window)(features, exemplars)
-
     # ------------------------------------------------------------------ fit
+
+    def _level(
+        self,
+        frame: DataFrame,
+        depth: int,
+        blocks: dict[int, np.ndarray],
+        candidates: dict,
+        dim: int,
+    ):
+        """One level job: ship the tree and the open nodes' candidates;
+        return the merged pool entries (with group counts), the pooled
+        series, their index by row id, and the features length. Raises
+        ValueError, with the count, on unusable training rows."""
+        n_nodes = max(self.nodes) + 1
+        state = np.full(n_nodes, _LEAF, dtype=np.int8)
+        slot = np.full(n_nodes, -1, dtype=np.int64)
+        width = max([len(b) for b in blocks.values()] + [1])
+        split_blocks = np.full((len(blocks), width, max(dim, 0)), np.nan)
+        split_counts = np.zeros(len(blocks), dtype=np.int64)
+        children = np.zeros((len(blocks), width), dtype=np.int64)
+        for i, nid in enumerate(blocks):
+            state[nid], slot[nid] = _SPLIT, i
+            b = blocks[nid]
+            split_blocks[i, : len(b)] = b
+            split_counts[i] = len(b)
+            children[i, : len(b)] = [self.nodes[nid].children[j] for j in range(len(b))]
+        open_ids = sorted(candidates)
+        n_cand = len(candidates[open_ids[0]])
+        cwidth = max(len(ex) for cands in candidates.values() for _, ex in cands)
+        cand_blocks = np.full((len(open_ids) * n_cand, cwidth, max(dim, 0)), np.nan)
+        cand_counts = np.zeros(len(open_ids) * n_cand, dtype=np.int64)
+        for i, nid in enumerate(open_ids):
+            state[nid], slot[nid] = _OPEN, i
+            for c, (_labels, ex) in enumerate(candidates[nid]):
+                cand_blocks[i * n_cand + c, : len(ex)] = ex
+                cand_counts[i * n_cand + c] = len(ex)
+        sc = frame.sparkSession.sparkContext
+        bc = sc.broadcast(
+            {
+                "state": state, "slot": slot, "dim": dim, "n_cand": n_cand,
+                "split_blocks": split_blocks, "split_counts": split_counts, "children": children,
+                "cand_blocks": cand_blocks, "cand_counts": cand_counts,
+            }
+        )
+        try:
+            kernel = _level_kernel(bc, self.exemplar_pool_k, self.metric, self.dtw_window)
+            rank = F.xxhash64(F.lit(self.seed + depth + 1), "features")
+            level = frame.select("label", "features", rank).mapInArrow(kernel, _PARTIAL_SCHEMA)
+            tbl = level.toArrow()
+        finally:
+            bc.destroy()
+        kind = tbl.column("kind").to_numpy()
+
+        widths: dict[int, int] = {}
+        wt = tbl.filter(kind == _WIDTH)
+        for w, n in zip(wt.column("width").to_pylist(), wt.column("n").to_pylist()):
+            widths[w] = widths.get(w, 0) + n
+        total = sum(widths.values())
+        expect = dim if dim >= 0 else max((w for w in widths if w >= 0), key=widths.get, default=-1)
+        bad = total - (widths.get(expect, 0) if expect >= 0 else 0)
+        if bad:
+            raise ValueError(
+                f"{bad} of {total} training rows have a null label, null features, a null "
+                f"feature value, or a features length other than {expect}"
+            )
+
+        et = tbl.filter(kind == _ENTRY)
+        cols = ("node", "cand", "branch", "label", "n", "h", "row")
+        entries = _reduce_entries({c: et.column(c).to_numpy() for c in cols}, self.exemplar_pool_k)
+        st = tbl.filter(kind == _SERIES)
+        feats = st.column("features").combine_chunks()
+        series = feats.flatten().to_numpy().reshape(len(feats), max(expect, 0))
+        row_ix = dict(zip(st.column("row").to_pylist(), range(len(feats))))
+        return entries, series, row_ix, expect
 
     def fit(self, df: DataFrame, label_col: str = "label", features_col: str = "features") -> "GlobalProximityTree":
         rng = random.Random(self.seed)
-        assign = df.select(
+        frame = df.select(
             F.col(label_col).cast("int").alias("label"),
             F.col(features_col).cast("array<double>").alias("features"),
-            F.lit(0).alias("node_id"),
         )
-        # Spread an under-partitioned frontier across the executors: a
-        # small training table often arrives as 1-2 scan partitions and
-        # every level's distance compute (the real per-row cost) would
-        # run serially. Routing joins are narrow, so the whole BFS
-        # inherits this layout. No-op at scale (inputs already have
-        # >= parallelism partitions); content-hash ranking keeps the
-        # fitted tree independent of the physical layout either way.
+        # Spread an under-partitioned frame across the executors: a small
+        # training table often arrives as 1-2 scan partitions and every
+        # level's distance compute (the real per-row cost) would run
+        # serially. No-op at scale (inputs already have >= parallelism
+        # partitions); content-hash ranking keeps the fitted tree
+        # independent of the physical layout either way.
         spread = max(2, df.sparkSession.sparkContext.defaultParallelism // 2)
-        if assign.rdd.getNumPartitions() < spread:
-            assign = assign.repartition(spread)
-        assign = assign.persist()
+        if frame.rdd.getNumPartitions() < spread:
+            frame = frame.repartition(spread)
+        # Persisted once: a lazy local checkpoint fills its blocks during
+        # the bootstrap job. A fresh persist() would cost one more job,
+        # because adaptive execution materializes a new cache in a job
+        # of its own before the first query that reads it.
+        frame = frame.localCheckpoint(eager=False)
+        try:
+            self._grow(frame, rng)
+        finally:
+            frame._jdf.logicalPlan().rdd().unpersist(False)
+        return self
 
-        # global majority for the null-prediction fallback (reference
-        # :182-184) — derived from the bootstrap stats (node 0 holds
-        # every row), no separate job
+    def _grow(self, frame: DataFrame, rng: random.Random) -> None:
         self.majority_class = None
         self.nodes = {0: TreeNode(0)}
-        next_id = 1
-        depth = 0
-        # per-node label counts, accumulated across levels: the root
-        # from the bootstrap count window, every later node from its
-        # parent's winning gini branch counts — so leaf decisions and
-        # the final dangling-node sweep never need their own Spark job
-        stats: dict[int, dict[int, int]] = {}
-        prev_assign: DataFrame | None = None
+        # exemplar blocks of the nodes split so far, for routing
+        blocks: dict[int, np.ndarray] = {}
 
-        # ---- bootstrap job: root pool + per-label counts, one pass.
-        # order key hashes row CONTENT (not partition-seeded rand): the
-        # sampled pool is identical on any cluster layout, so a seeded
-        # fit is reproducible across sessions/retries. Arrow boundary
-        # (toPandas), not .collect(): the pool is O(k·classes) rows of
-        # feature arrays and py4j Row materialization was the measured
-        # bottleneck on wide trees.
-        w0 = Window.partitionBy("node_id", "label").orderBy(
-            F.xxhash64(F.lit(self.seed), "features")
-        )
-        cw0 = Window.partitionBy("node_id", "label")
-        pool_pdf = (
-            assign.withColumn("_rk", F.row_number().over(w0))
-            .withColumn("_cnt", F.count("*").over(cw0))
-            .filter(F.col("_rk") <= self.exemplar_pool_k)
-            .select("node_id", "label", "features", "_cnt", "_rk")
-            .toPandas()
-            .sort_values(["node_id", "label", "_rk"])
-        )
-        pool: dict[int, dict[int, list[list[float]]]] = {}
-        for nid_, lbl_, feats_, cnt_ in zip(
-            pool_pdf["node_id"], pool_pdf["label"], pool_pdf["features"], pool_pdf["_cnt"]
-        ):
-            stats.setdefault(int(nid_), {})[int(lbl_)] = int(cnt_)
-            pool.setdefault(int(nid_), {}).setdefault(int(lbl_), []).append(
-                np.asarray(feats_, dtype=np.float64).tolist()
-            )
-        s0 = stats.get(0, {})
+        # bootstrap: a level with one empty root candidate (branch 0)
+        entries, series, row_ix, dim = self._level(frame, -1, blocks, {0: [([], [])]}, -1)
+        s0 = _branch_counts(entries).get((0, 0), {}).get(0, {})
+        # per-node label counts: the root from the bootstrap, every later
+        # node from its parent's winning branch counts — so leaf
+        # decisions never need their own Spark job
+        stats: dict[int, dict[int, int]] = {0: s0}
+        pool = {0: _branch_pools(entries, row_ix, {0: 0}).get((0, 0), {})}
         if s0:
             self.majority_class = int(max(sorted(s0), key=lambda k: s0[k]))
         # root leaf check (reference :248-253); later levels run these
-        # at child creation from the fused job's branch counts
-        open_nodes = (
-            [0]
-            if sum(s0.values()) >= self.min_samples_split and len(s0) > 1
-            else []
-        )
+        # at child creation from the winning branch counts
+        open_nodes = [0] if sum(s0.values()) >= self.min_samples_split and len(s0) > 1 else []
         if not open_nodes:
             self._make_leaf(0, s0)
 
-        while open_nodes and depth < self.max_depth:
+        depth = 0
+        next_id = 1
+        while open_nodes and (self.max_depth is None or depth < self.max_depth):
             # candidate splits: per node, n_splitters random exemplar
             # sets drawn from the (winning-branch) pool of the previous
             # level — iteration order is ascending node id, so the rng
             # draw sequence is deterministic
-            candidates: dict[int, list[tuple[list[int], list[list[float]]]]] = {}
+            candidates: dict[int, list[tuple[list[int], np.ndarray]]] = {}
             for nid in open_nodes:
                 node_pool = pool.get(nid, {})
                 labels = sorted(node_pool)
                 if len(labels) < 2:
-                    self._make_leaf(nid, stats.get(nid, {}))
+                    self._make_leaf(nid, stats[nid])
                     continue
-                cands = []
-                for _ in range(self.n_splitters):
-                    exemplars = [rng.choice(node_pool[lbl]) for lbl in labels]
-                    cands.append((labels, exemplars))
-                candidates[nid] = cands
+                candidates[nid] = [
+                    (labels, series[[rng.choice(node_pool[lbl]) for lbl in labels]])
+                    for _ in range(self.n_splitters)
+                ]
             if not candidates:
                 break
 
-            # THE fused level job — the only Spark job per level. For
-            # every (node, candidate) pair it computes, in one window
-            # pass over the frontier stacked n_splitters times:
-            #   - the per-(branch,label) counts (_cnt — the gini input,
-            #     and the would-be child's label stats), and
-            #   - the k-per-(branch,label) exemplar pool for the NEXT
-            #     level, ranked by xxhash64(seed+depth+1, features) —
-            #     exactly the ranking a separate next-level pool pass
-            #     would use, so the winning candidate's branch pools are
-            #     bit-identical to a dedicated sampling job.
-            # Candidate exemplars travel as a broadcast-joined table,
-            # NOT per-exemplar literals: a literal plan grows
-            # O(nodes·k·dims) and Catalyst analysis/codegen dominates
-            # (measured 400+ s at sf0.01); the joined plan is
-            # constant-size however many nodes are open. The shuffle
-            # moves frontier×n_splitters full rows — at scale that is
-            # n_splitters× a plain pool pass, the price of running one
-            # job per level instead of three.
-            spark = assign.sparkSession
-            cand_pdf = pd.DataFrame(
-                [
-                    (nid, c, cands[c][1])
-                    for nid, cands in candidates.items()
-                    for c in range(self.n_splitters)
-                ],
-                columns=["node_id", "cand", "exemplars"],
-            )
-            cand_df = spark.createDataFrame(
-                cand_pdf, "node_id int, cand int, exemplars array<array<double>>"
-            )
-            part = ("node_id", "cand", "branch", "label")
-            wp = Window.partitionBy(*part).orderBy(
-                F.xxhash64(F.lit(self.seed + depth + 1), "features")
-            )
-            cwp = Window.partitionBy(*part)
-            # inner join IS the node filter: every open node has
-            # candidate rows (depth>0 open nodes are split-worthy by
-            # construction; depth-0 degenerates drop out of the join)
-            stacked = (
-                assign.join(F.broadcast(cand_df), "node_id")
-                .withColumn(
-                    "branch", self._branch_ix(F.col("features"), F.col("exemplars"))
-                )
-                .withColumn("_rk", F.row_number().over(wp))
-                .withColumn("_cnt", F.count("*").over(cwp))
-                .filter(F.col("_rk") <= self.exemplar_pool_k)
-                .select("node_id", "cand", "branch", "label", "features", "_cnt", "_rk")
-                .toPandas()  # O(nodes·cands·branches·labels·k) rows — Arrow, not py4j
-            )
-            # this action is also the FIRST one over the previous
-            # level's routing projection — it just landed in the cache,
-            # so the parent level's cache can go now
-            if prev_assign is not None:
-                prev_assign.unpersist()
-                prev_assign = None
-            stacked = stacked.sort_values(["node_id", "cand", "branch", "label", "_rk"])
+            entries, series, row_ix, _ = self._level(frame, depth, blocks, candidates, dim)
 
-            # unpack pass 1: branch counts for gini (rk==1 rows carry
-            # the partition count; feature arrays are NOT touched here).
-            # Vectorized prefilter: the rk==1 mask and int casts run in
-            # pandas/numpy, the Python loop only walks the small result.
-            top = stacked[stacked["_rk"] == 1]
-            agg: dict[tuple[int, int], dict[int, dict[int, int]]] = {}
-            for nid_, cand_, branch_, lbl_, cnt_ in zip(
-                top["node_id"].astype(int), top["cand"].astype(int),
-                top["branch"].astype(int), top["label"].astype(int),
-                top["_cnt"].astype(int),
-            ):
-                agg.setdefault((int(nid_), int(cand_)), {}).setdefault(
-                    int(branch_), {}
-                )[int(lbl_)] = int(cnt_)
-            # sorted(): collect order is task-completion order; iterating
-            # sorted keys makes Gini tie-breaks (strict <, so the lowest
-            # cand id wins a tie) and child-id allocation deterministic
+            # branch counts per (node, cand): the Gini input, and the
+            # would-be children's label stats
+            agg = _branch_counts(entries)
+            # sorted(): Gini tie-breaks (strict <, so the lowest cand id
+            # wins a tie) and child-id allocation are deterministic
             best: dict[int, tuple[float, int]] = {}
             for (nid, cand), branches in sorted(agg.items()):
-                # integer sums are order-free, but the float Gini
-                # accumulation is NOT associative — iterate branches and
-                # labels in sorted order so the result doesn't inherit
-                # the collect()'s task-completion order (a near-tied
-                # candidate pair otherwise flips winners across layouts)
+                # the float Gini accumulation is NOT associative — iterate
+                # branches and labels in sorted order
                 total = sum(sum(b.values()) for b in branches.values())
                 if len(branches) < 2:
                     gini = 1.0  # degenerate: routes everything one way
@@ -286,118 +475,44 @@ class GlobalProximityTree:
                 if nid not in best or gini < best[nid][0]:
                     best[nid] = (gini, cand)
 
-            # unpack pass 2: exemplar pools ONLY for each node's winning
-            # candidate (ADVICE r3 — losers' pools were an n_splitters×
-            # driver-memory overhead; the next level only ever reads the
-            # winner's branch pools)
             winners = {nid: cand for nid, (_g, cand) in best.items()}
-            win_mask = [
-                winners.get(int(n)) == int(c)
-                for n, c in zip(stacked["node_id"], stacked["cand"])
-            ]
-            win = stacked[win_mask]
-            cand_pool: dict[tuple[int, int, int], dict[int, list[list[float]]]] = {}
-            for nid_, cand_, branch_, lbl_, feats_ in zip(
-                win["node_id"].astype(int), win["cand"].astype(int),
-                win["branch"].astype(int), win["label"].astype(int),
-                win["features"],
-            ):
-                # Arrow hands back numpy arrays; .tolist() converts the
-                # whole vector at C speed (the old per-element float()
-                # comprehension was ~40% of driver unpack time)
-                cand_pool.setdefault(
-                    (int(nid_), int(cand_), int(branch_)), {}
-                ).setdefault(int(lbl_), []).append(np.asarray(feats_, dtype=np.float64).tolist())
+            cand_pool = _branch_pools(entries, row_ix, winners)
 
-            # materialize winners into the tree; routing goes through the
-            # same broadcast-join pattern (constant-size plan per level).
-            # Each child's label counts are the winning candidate's
-            # per-branch gini counts — routing sends exactly those rows
-            # there — so leaf checks happen NOW, with no stats job next
-            # level, and the pool pass only scans split-worthy children.
-            route_rows: list[tuple[int, list[list[float]], list[int], list[bool]]] = []
+            # materialize winners; each child's label counts are the
+            # winning candidate's branch counts, so leaf checks happen now
             new_open: list[int] = []
-            next_pool: dict[int, dict[int, list[list[float]]]] = {}
+            next_pool: dict[int, dict[int, list[int]]] = {}
             for nid, (gini, cand) in sorted(best.items()):
                 labels, exemplars = candidates[nid][cand]
                 if gini >= 1.0:
-                    self._make_leaf(nid, stats.get(nid, {}))
+                    self._make_leaf(nid, stats[nid])
                     continue
                 node = self.nodes[nid]
                 node.exemplar_labels = labels
-                node.exemplars = exemplars
-                child_ids = []
-                child_open = []
+                node.exemplars = exemplars.tolist()
+                blocks[nid] = exemplars
                 branches = agg[(nid, cand)]
                 for b_ix in range(len(labels)):
                     self.nodes[next_id] = TreeNode(next_id, parent_id=nid)
-                    child_ids.append(next_id)
+                    node.children[b_ix] = next_id
                     cstats = dict(branches.get(b_ix, {}))
                     stats[next_id] = cstats
-                    total = sum(cstats.values())
-                    if total < self.min_samples_split or len(cstats) <= 1:
+                    if sum(cstats.values()) < self.min_samples_split or len(cstats) <= 1:
                         self._make_leaf(next_id, cstats)
-                        child_open.append(False)
                     else:
                         new_open.append(next_id)
-                        child_open.append(True)
                         # the winning candidate's branch pool IS the
                         # child's exemplar pool next level
-                        next_pool[next_id] = cand_pool.get((nid, cand, b_ix), {})
+                        next_pool[next_id] = cand_pool.get((nid, b_ix), {})
                     next_id += 1
-                node.children = dict(enumerate(child_ids))
-                route_rows.append((nid, exemplars, child_ids, child_open))
             pool = next_pool
-
-            # either break leaves no dangling node: every node this
-            # level was split (has children) or explicitly leafed
             open_nodes = new_open
-            if not route_rows or not open_nodes:
-                break
-
-            # Routing is an INNER join (rows at nodes just closed drop
-            # out) plus an open-child filter: a row whose target child
-            # is already a leaf can never influence the tree again —
-            # its label counts were captured in `stats` — so assign
-            # shrinks monotonically to the active frontier.
-            route_df = spark.createDataFrame(
-                pd.DataFrame(
-                    route_rows,
-                    columns=["node_id", "exemplars", "child_map", "open_map"],
-                ),
-                "node_id int, exemplars array<array<double>>, "
-                "child_map array<int>, open_map array<boolean>",
-            )
-            new_assign = (
-                assign.join(F.broadcast(route_df), "node_id")
-                .withColumn(
-                    "_ix", self._branch_ix(F.col("features"), F.col("exemplars")) + 1
-                )
-                .filter(F.element_at(F.col("open_map"), F.col("_ix")))
-                .select(
-                    "label",
-                    "features",
-                    F.element_at(F.col("child_map"), F.col("_ix"))
-                    .cast("int")
-                    .alias("node_id"),
-                )
-                .persist()
-            )
-            # no count() here: the next level's pool collect is the
-            # first (and only needed) materialization of this projection;
-            # if the loop exits instead, the routing never runs at all
-            prev_assign = assign
-            assign = new_assign
             depth += 1
 
         # dangling-node sweep (reference :384-398): anything still open →
         # leaf, from the stats accumulated at creation time — no job
         for nid in open_nodes:
-            self._make_leaf(nid, stats.get(nid, {}))
-        if prev_assign is not None:
-            prev_assign.unpersist()
-        assign.unpersist()
-        return self
+            self._make_leaf(nid, stats[nid])
 
     def _make_leaf(self, nid: int, node_stats: dict[int, int]) -> None:
         node = self.nodes[nid]
@@ -436,8 +551,8 @@ class GlobalProximityTree:
             for ts in features:
                 x = np.asarray(ts, dtype=np.float64)
                 node = nodes["0"]
-                hops = 0
-                while not node["is_leaf"] and hops < 50:
+                # the tree is finite and acyclic: every walk ends at a leaf
+                while not node["is_leaf"]:
                     ex = np.asarray(node["exemplars"], dtype=np.float64)
                     if metric == "euclidean":
                         ix = int(np.argmin(((ex - x) ** 2).sum(axis=1)))
@@ -446,8 +561,7 @@ class GlobalProximityTree:
                             np.argmin([dtw_distance(x, e, window=window) for e in ex])
                         )
                     node = nodes[str(node["children"][str(ix)])]
-                    hops += 1
-                out.append(node["prediction"] if node["is_leaf"] else None)
+                out.append(node["prediction"])
             return pd.Series(out, dtype="Int32")
 
         return df.withColumn(

@@ -47,7 +47,7 @@ class ProximityTree:
     def __init__(
         self,
         n_splitters: int = 5,
-        max_depth: int = 20,
+        max_depth: int | None = 20,
         min_samples_split: int = 2,
         seed: int = 42,
         metric: str = "euclidean",
@@ -56,7 +56,7 @@ class ProximityTree:
         if metric not in ("euclidean", "dtw"):
             raise ValueError(f"metric must be 'euclidean' or 'dtw', got {metric!r}")
         self.n_splitters = n_splitters
-        self.max_depth = max_depth
+        self.max_depth = max_depth  # None: grow until no node splits
         self.min_samples_split = min_samples_split
         self.seed = seed
         self.metric = metric
@@ -96,7 +96,7 @@ class ProximityTree:
         node = _Node(node_id)
         self.nodes[node_id] = node
         if (
-            depth >= self.max_depth
+            (self.max_depth is not None and depth >= self.max_depth)
             or len(y) < self.min_samples_split
             or len(np.unique(y)) == 1
         ):
@@ -143,11 +143,10 @@ class ProximityTree:
         out = np.empty(len(X), dtype=np.int64)
         for i, x in enumerate(X):
             node = self.nodes[0]
-            hops = 0
-            while not node.is_leaf and hops < 100:
+            # the tree is finite and acyclic: every walk ends at a leaf
+            while not node.is_leaf:
                 d2 = self._pairwise(x[None, :], node.exemplars)[0]
                 node = self.nodes[node.children[int(np.argmin(d2))]]
-                hops += 1
             out[i] = node.prediction if node.prediction is not None else -1
         return out
 

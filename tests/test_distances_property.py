@@ -22,6 +22,7 @@ from bigdata_spark.functions.distances import (
     manhattan_distance,
     nearest_exemplar_index,
 )
+from bigdata_spark.ml.global_tree import nearest_exemplar
 
 finite = st.floats(
     min_value=-1e6, max_value=1e6, allow_nan=False, allow_infinity=False, width=32
@@ -66,6 +67,43 @@ def test_nearest_exemplar_matches_argmin(spark, exemplars, ts):
     dists = [float(np.sqrt(((np.asarray(e) - t) ** 2).sum())) for e in exemplars]
     # ties break to the first minimum — same as numpy argmin
     assert got == int(np.argmin(dists))
+
+
+# few distinct values make exact distance ties common; NaN elements
+# exercise Spark's "NaN ranks above every number" argmin rule
+tie_prone = st.sampled_from([0.0, 1.0, -1.0, 2.0, 0.5, float("nan")])
+
+
+@settings(max_examples=20, deadline=None)
+@given(
+    st.integers(min_value=1, max_value=4).flatmap(
+        lambda d: st.tuples(
+            st.lists(st.lists(tie_prone, min_size=d, max_size=d), min_size=1, max_size=3),
+            st.lists(st.integers(min_value=0, max_value=2), min_size=1, max_size=5),
+            st.lists(st.lists(tie_prone, min_size=d, max_size=d), min_size=1, max_size=6),
+        )
+    )
+)
+def test_level_kernel_nearest_matches_spark(spark, case):
+    """The global tree's numpy kernel picks the same exemplar as the
+    Spark expression on every row, duplicate exemplars and NaN padding
+    included."""
+    distinct, picks, rows = case
+    exemplars = [distinct[i % len(distinct)] for i in picks]  # duplicates
+    df = spark.createDataFrame(
+        [(i, r, exemplars) for i, r in enumerate(rows)],
+        "id int, ts array<double>, ex array<array<double>>",
+    )
+    got = [ix for _, ix in sorted(df.select("id", nearest_exemplar_index("ts", "ex")).collect())]
+    # one block padded with two NaN rows beyond its valid count
+    block = np.vstack([np.asarray(exemplars, dtype=np.float64), np.full((2, len(rows[0])), np.nan)])
+    want = nearest_exemplar(
+        np.asarray(rows, dtype=np.float64),
+        block[None],
+        np.array([len(exemplars)]),
+        np.zeros((len(rows), 1), dtype=np.int64),
+    )[:, 0]
+    assert got == want.tolist()
 
 
 @pytest.mark.parametrize(
