@@ -10,8 +10,9 @@ column instead of opaque pickles (engine-portable persistence,
 SURVEY §7 hard-point 3).
 
 Scale: training shuffles each row once (the partition groupBy);
-prediction broadcasts the (small) forest and runs one Arrow-batched
-pandas UDF pass — no shuffle, same as the reference's predict path.
+prediction broadcasts the (small) forest once as ``FlatTree`` arrays and
+routes each Arrow batch through every tree in one pandas UDF pass — no
+shuffle, same as the reference's predict path.
 """
 
 from __future__ import annotations
@@ -22,10 +23,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType, StringType, DoubleType
+from pyspark.sql.types import IntegerType
 
 from ..operators.preprocess import balanced_stratified_repartition
 from .proximity import ProximityTree
+from .tree_core import feature_matrix
+
+# constructor arguments, in the order ``save`` writes them
+_PARAMS = ("num_partitions", "n_splitters", "max_depth", "use_weighting", "seed", "metric", "dtw_window")
 
 
 class LocalProximityForest:
@@ -67,26 +72,14 @@ class LocalProximityForest:
             "_row_key", F.xxhash64(F.lit(self.seed), label_col, features_col)
         )
         parted = balanced_stratified_repartition(
-            keyed,
-            label_col,
-            self.num_partitions,
-            seed=self.seed,
-            keep_partition_col=True,
+            keyed, label_col, self.num_partitions, seed=self.seed, keep_partition_col=True
         )
 
-        n_splitters = self.n_splitters
-        max_depth = self.max_depth
-        use_weighting = self.use_weighting
-        seed = self.seed
-        metric = self.metric
-        dtw_window = self.dtw_window
-        schema = StructType(
-            [
-                StructField("partition_id", IntegerType()),
-                StructField("tree_json", StringType()),
-                StructField("oob_score", DoubleType()),
-            ]
+        params = dict(
+            n_splitters=self.n_splitters, max_depth=self.max_depth,
+            metric=self.metric, dtw_window=self.dtw_window,
         )
+        seed, use_weighting = self.seed, self.use_weighting
 
         def train_partition(key, pdf):
             pid = int(key[0])
@@ -97,26 +90,18 @@ class LocalProximityForest:
             if use_weighting and len(y) >= 10:
                 # 80/20 holdout for the ensemble weight (reference
                 # local_model_manager.py:178-188)
-                rng = np.random.default_rng(seed + pid)
-                ix = rng.permutation(len(y))
-                cut = int(len(y) * 0.8)
-                tr, va = ix[:cut], ix[cut:]
-                t = ProximityTree(
-                    n_splitters, max_depth, seed=seed + pid,
-                    metric=metric, dtw_window=dtw_window,
-                ).fit(X[tr], y[tr])
+                ix = np.random.default_rng(seed + pid).permutation(len(y))
+                tr, va = np.split(ix, [int(len(y) * 0.8)])
+                t = ProximityTree(seed=seed + pid, **params).fit(X[tr], y[tr])
                 oob = float((t.predict(X[va]) == y[va]).mean()) if len(va) else 1.0
-            tree = ProximityTree(
-                n_splitters, max_depth, seed=seed + pid,
-                metric=metric, dtw_window=dtw_window,
-            ).fit(X, y)
+            tree = ProximityTree(seed=seed + pid, **params).fit(X, y)
             return pd.DataFrame(
                 [{"partition_id": pid, "tree_json": json.dumps(tree.to_state()), "oob_score": oob}]
             )
 
         rows = (
             parted.groupBy("_partition_id")
-            .applyInPandas(train_partition, schema=schema)
+            .applyInPandas(train_partition, "partition_id int, tree_json string, oob_score double")
             .collect()
         )
         rows.sort(key=lambda r: r["partition_id"])
@@ -131,26 +116,20 @@ class LocalProximityForest:
         Arrow-batched pandas UDF pass (reference prediction_manager.py:
         84-98 shape); ties break to the smallest class id."""
         spark = df.sparkSession
-        states = [t.to_state() for t in self.trees]
-        weights = list(self.weights)
-        bc = spark.sparkContext.broadcast((states, weights))
+        trees = [(t.tree, t.metric, t.dtw_window) for t in self.trees]
+        width = next((tree.width for tree, _, _ in trees if tree.width is not None), None)
+        classes = np.array(sorted({int(c) for t in self.trees for c in t.classes_}))
+        bc = spark.sparkContext.broadcast((trees, list(self.weights), classes))
 
         @F.pandas_udf(IntegerType())
         def forest_predict(features: pd.Series) -> pd.Series:
-            states_, weights_ = bc.value
-            trees = [ProximityTree.from_state(s) for s in states_]
-            X = np.stack(features.to_numpy())
-            classes = sorted(
-                {int(c) for t in trees for c in (t.classes_.tolist() if t.classes_ is not None else [])}
-            )
-            cls_ix = {c: i for i, c in enumerate(classes)}
-            votes = np.zeros((len(X), len(classes)))
-            for t, w in zip(trees, weights_):
-                pred = t.predict(X)
-                for r, p in enumerate(pred):
-                    votes[r, cls_ix[int(p)]] += w
-            out = [classes[i] for i in np.argmax(votes, axis=1)]
-            return pd.Series(out, dtype="int32")
+            trees_, weights_, classes_ = bc.value
+            X = feature_matrix(features, width)
+            votes = np.zeros((len(X), len(classes_)))
+            for (tree, metric, window), w in zip(trees_, weights_):
+                pred = tree.prediction[tree.route(X, metric, window)]
+                votes[np.arange(len(X)), np.searchsorted(classes_, pred)] += w
+            return pd.Series(classes_[np.argmax(votes, axis=1)], dtype="int32")
 
         return df.withColumn("prediction", forest_predict(F.col(features_col)))
 
@@ -158,30 +137,15 @@ class LocalProximityForest:
 
     def save(self, path: str) -> None:
         with open(path, "w") as f:
-            json.dump(
-                {
-                    "num_partitions": self.num_partitions,
-                    "n_splitters": self.n_splitters,
-                    "max_depth": self.max_depth,
-                    "use_weighting": self.use_weighting,
-                    "seed": self.seed,
-                    "weights": self.weights,
-                    "trees": [t.to_state() for t in self.trees],
-                },
-                f,
-            )
+            state = {k: getattr(self, k) for k in _PARAMS}
+            json.dump({**state, "weights": self.weights, "trees": [t.to_state() for t in self.trees]}, f)
 
     @classmethod
     def load(cls, path: str) -> "LocalProximityForest":
         with open(path) as f:
             state = json.load(f)
-        m = cls(
-            num_partitions=state["num_partitions"],
-            n_splitters=state["n_splitters"],
-            max_depth=state["max_depth"],
-            use_weighting=state["use_weighting"],
-            seed=state["seed"],
-        )
+        # a forest saved without metric and dtw_window is euclidean
+        m = cls(**{k: state[k] for k in _PARAMS if k in state})
         m.weights = state["weights"]
         m.trees = [ProximityTree.from_state(s) for s in state["trees"]]
         return m

@@ -1,0 +1,179 @@
+"""The proximity-tree core shared by the global tree, the local tree and
+the local forest (Lucas et al., Proximity Forest, DMKD 2019): route each
+series to its nearest exemplar, pick the split by weighted Gini.
+
+  - ``nearest_exemplar``, the one numpy distance kernel;
+  - ``FlatTree``, one tree as arrays, converted to and from the
+    per-node JSON the models persist;
+  - ``FlatTree.route``, the one traversal: it moves a whole batch of
+    rows from the root, all rows of a depth at once;
+  - ``weighted_gini``, the one split score.
+"""
+
+from __future__ import annotations
+
+import numpy as np
+
+# node states
+LEAF, SPLIT, OPEN = 0, 1, 2
+# rows per step of the euclidean kernel, which bounds its
+# (rows, cand, K, d) temporary
+_ROW_CHUNK = 256
+
+
+def nearest_exemplar(
+    X: np.ndarray, blocks: np.ndarray, counts: np.ndarray, slots: np.ndarray,
+    metric: str = "euclidean", window: int | None = None,
+) -> np.ndarray:
+    """0-based nearest-exemplar index of every row of ``X`` (m, d) in
+    each of its exemplar blocks: ``slots`` (m, c) picks blocks of
+    ``blocks`` (b, K, d), of which the first ``counts[slot]`` rows are
+    exemplars and the rest padding that never wins.
+
+    Euclidean follows ``nearest_exemplar_index`` bit for bit: squares
+    summed dimension by dimension in index order (Spark's ``aggregate``
+    fold), then ``sqrt``. DTW uses ``dtw_distance``. Under both, NaN
+    ranks above every number, ties go to the lowest index, and a row
+    whose distances are all NaN goes to the first exemplar."""
+    m, c = slots.shape
+    out = np.zeros((m, c), dtype=np.int64)
+    if blocks.shape[1] == 0 or X.shape[1] == 0:
+        return out  # every distance is equal: the first exemplar
+    valid = np.arange(blocks.shape[1]) < counts[slots][..., None]
+    for lo in range(0, m, _ROW_CHUNK):
+        x, s = X[lo : lo + _ROW_CHUNK], slots[lo : lo + _ROW_CHUNK]
+        if metric == "dtw":
+            from .dtw import dtw_distance
+
+            dist = np.full(s.shape + blocks.shape[1:2], np.nan)
+            for r, j, e in zip(*np.nonzero(valid[lo : lo + _ROW_CHUNK])):
+                dist[r, j, e] = dtw_distance(x[r], blocks[s[r, j], e], window=window)
+        else:
+            d = x[:, None, None, :] - blocks[s]
+            dist = np.sqrt(np.cumsum(d * d, axis=-1)[..., -1])
+            dist[~valid[lo : lo + _ROW_CHUNK]] = np.nan
+        best = np.where(np.isnan(dist), np.inf, dist).min(axis=-1, keepdims=True)
+        # no hit (every distance NaN) → argmax of all-False → 0
+        out[lo : lo + _ROW_CHUNK] = np.argmax(dist == best, axis=-1)
+    return out
+
+
+def padded_blocks(exemplar_sets: list, width: int) -> tuple[np.ndarray, np.ndarray]:
+    """The exemplar sets as NaN-padded (sets, K, width) blocks, and the
+    number of exemplars in each."""
+    counts = np.array([len(e) for e in exemplar_sets], dtype=np.int64)
+    blocks = np.full((len(exemplar_sets), counts.max(initial=0), width), np.nan)
+    for i, e in enumerate(exemplar_sets):
+        blocks[i, : len(e)] = e
+    return blocks, counts
+
+
+def weighted_gini(counts: np.ndarray) -> float:
+    """Weighted Gini impurity of a split from its (branch × label) row
+    counts. Branches and labels are summed in index order, so equal
+    tables score equal bit for bit. Empty branches are skipped."""
+    n = counts.sum(axis=1)
+    keep = n > 0
+    p = counts[keep] / n[keep, None]
+    # pow(p, 2) as Python's ``**`` squares; ``p * p`` can differ in the last bit
+    impurity = 1.0 - np.cumsum(np.float_power(p, 2), axis=1)[:, -1]
+    return float(np.cumsum(n[keep] / n.sum() * impurity)[-1])
+
+
+def feature_matrix(rows, width: int | None) -> np.ndarray:
+    """``rows`` as one (m, width) float matrix. A row of another length
+    raises ``ValueError``; a tree without splits (``width`` None) reads
+    no feature."""
+    if width is None:
+        return np.empty((len(rows), 0))
+    lengths = {len(r) for r in rows}
+    if lengths - {width}:
+        raise ValueError(
+            f"the tree was fitted on features of length {width}, "
+            f"found length {min(lengths - {width})}"
+        )
+    return np.asarray(list(rows), dtype=np.float64).reshape(len(rows), width)
+
+
+class FlatTree:
+    """A proximity tree as arrays. Node ``i`` has a ``state`` (LEAF,
+    SPLIT, or OPEN while the global fit grows it) and, as a leaf, a
+    ``prediction`` (NaN: none). Split node ``i`` owns block ``s =
+    slot[i]``: ``counts[s]`` exemplars in ``blocks[s]`` (NaN-padded),
+    their labels in ``labels[s]`` and the child reached through each in
+    ``children[s]``.
+
+    Built from ``leaves`` (node → prediction) and ``splits`` (node →
+    (exemplar labels, exemplars, children)); any other node is OPEN."""
+
+    def __init__(self, n_nodes: int, leaves: dict, splits: dict) -> None:
+        ids = sorted(splits)
+        self.width = len(splits[ids[0]][1][0]) if ids else None
+        self.state = np.full(n_nodes, OPEN, dtype=np.int8)
+        self.prediction = np.full(n_nodes, np.nan)
+        self.slot = np.full(n_nodes, -1, dtype=np.int64)
+        self.blocks, self.counts = padded_blocks([splits[i][1] for i in ids], self.width or 0)
+        self.labels = np.zeros(self.blocks.shape[:2], dtype=np.int64)
+        self.children = np.zeros(self.blocks.shape[:2], dtype=np.int64)
+        for s, nid in enumerate(ids):
+            labels, _, children = splits[nid]
+            self.state[nid], self.slot[nid] = SPLIT, s
+            self.labels[s, : len(labels)] = labels
+            self.children[s, : len(children)] = children
+        for nid, p in leaves.items():
+            self.state[nid] = LEAF
+            self.prediction[nid] = np.nan if p is None else p
+
+    def __len__(self) -> int:
+        return len(self.state)
+
+    def route(self, X: np.ndarray, metric: str = "euclidean", window: int | None = None) -> np.ndarray:
+        """The node every row of ``X`` reaches from the root through the
+        split nodes: a leaf, or an OPEN node during the global fit. All
+        rows at one depth move together."""
+        cur = np.zeros(len(X), dtype=np.int64)
+        while True:
+            mv = np.flatnonzero(self.state[cur] == SPLIT)
+            if not len(mv):
+                return cur
+            s = self.slot[cur[mv]]
+            b = nearest_exemplar(X[mv], self.blocks, self.counts, s[:, None], metric, window)
+            cur[mv] = self.children[s, b[:, 0]]
+
+    def depth(self) -> int:
+        """Number of levels from the root to the deepest node."""
+        level, depth = np.zeros(1, dtype=np.int64), 0
+        while len(level):
+            depth += 1
+            s = self.slot[level[self.state[level] == SPLIT]]
+            level = self.children[s][np.arange(self.children.shape[1]) < self.counts[s][:, None]]
+        return depth
+
+    def to_nodes(self, leaf_exemplars=None) -> dict:
+        """The per-node JSON: ``{id: {is_leaf, prediction,
+        exemplar_labels, exemplars, children}}``. Non-split nodes carry
+        ``leaf_exemplars`` as their exemplars."""
+        nodes = {}
+        for nid, (state, p, s) in enumerate(zip(self.state, self.prediction.tolist(), self.slot)):
+            k = self.counts[s] if state == SPLIT else 0
+            nodes[str(nid)] = {
+                "is_leaf": bool(state == LEAF),
+                "prediction": None if np.isnan(p) else int(p),
+                "exemplar_labels": self.labels[s, :k].tolist() if k else [],
+                "exemplars": self.blocks[s, :k].tolist() if k else leaf_exemplars,
+                "children": {str(b): c for b, c in enumerate(self.children[s, :k].tolist())} if k else {},
+            }
+        return nodes
+
+    @classmethod
+    def from_nodes(cls, nodes: dict) -> "FlatTree":
+        """The tree of a ``to_nodes`` JSON, from either model."""
+        leaves, splits = {}, {}
+        for key, n in nodes.items():
+            if n["is_leaf"]:
+                leaves[int(key)] = n["prediction"]
+            else:
+                children = [n["children"][str(b)] for b in range(len(n["children"]))]
+                exemplars = np.asarray(n["exemplars"], dtype=np.float64)
+                splits[int(key)] = (n["exemplar_labels"], exemplars, children)
+        return cls(max(map(int, nodes)) + 1, leaves, splits)

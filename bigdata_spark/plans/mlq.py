@@ -71,7 +71,7 @@ def ml_global_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = classification_metrics(preds)
     preds.unpersist()
     return spark.createDataFrame(
-        [(tree.depth, len(tree.nodes), round(m["accuracy"], 6))],
+        [(tree.depth, len(tree.tree), round(m["accuracy"], 6))],
         "depth long, n_nodes long, accuracy double",
     )
 

@@ -110,7 +110,7 @@ def run_pipeline(
             n_splitters=n_splitters, max_depth=max_depth, seed=seed
         ).fit(train, label_col, features_col)
         complexity["depth"] = m.depth
-        complexity["n_nodes"] = len(m.nodes)
+        complexity["n_nodes"] = len(m.tree)
     timings["training_time"] = time.time() - t0
     mem_after_train = _memory_snapshot(spark)
 

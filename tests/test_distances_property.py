@@ -22,7 +22,7 @@ from bigdata_spark.functions.distances import (
     manhattan_distance,
     nearest_exemplar_index,
 )
-from bigdata_spark.ml.global_tree import nearest_exemplar
+from bigdata_spark.ml.tree_core import nearest_exemplar
 
 finite = st.floats(
     min_value=-1e6, max_value=1e6, allow_nan=False, allow_infinity=False, width=32
@@ -85,7 +85,7 @@ tie_prone = st.sampled_from([0.0, 1.0, -1.0, 2.0, 0.5, float("nan")])
     )
 )
 def test_level_kernel_nearest_matches_spark(spark, case):
-    """The global tree's numpy kernel picks the same exemplar as the
+    """The proximity trees' one numpy kernel picks the same exemplar as the
     Spark expression on every row, duplicate exemplars and NaN padding
     included."""
     distinct, picks, rows = case

@@ -12,6 +12,7 @@ import pytest
 
 from bigdata_spark.ml.global_tree import GlobalProximityTree
 from bigdata_spark.ml.proximity import ProximityTree
+from bigdata_spark.ml.tree_core import LEAF, SPLIT
 
 
 def _series(n: int, d: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
@@ -70,8 +71,11 @@ def test_max_depth_none_grows_until_no_node_splits(spark):
     df = _frame(spark, X, y, 2)
     full = GlobalProximityTree(n_splitters=2, max_depth=None, min_samples_split=2, seed=4).fit(df)
     deep = GlobalProximityTree(n_splitters=2, max_depth=10_000, min_samples_split=2, seed=4).fit(df)
-    assert full.nodes == deep.nodes and full.majority_class == deep.majority_class
-    assert full.depth > 4 and all(n.is_leaf or n.children for n in full.nodes.values())
+    assert full.to_state()["nodes"] == deep.to_state()["nodes"]
+    assert full.majority_class == deep.majority_class
+    # every node is a leaf or a split with children: none is left open
+    assert full.depth > 4 and set(full.tree.state.tolist()) == {LEAF, SPLIT}
+    assert (full.tree.counts > 0).all()
     pred = [r["prediction"] for r in full.predict(df).collect()]
     assert len(pred) == len(y)
     df.unpersist()

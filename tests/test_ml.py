@@ -44,17 +44,22 @@ def test_numpy_proximity_tree():
 
 def test_local_forest_end_to_end(spark, tmp_path):
     train, test = _clusters2d(spark, True), _clusters2d(spark, False, seed=9)
-    forest = LocalProximityForest(num_partitions=3, n_splitters=3, seed=5).fit(train)
-    assert len(forest.trees) == 3
-    preds = forest.predict(test)
-    acc = preds.filter(F.col("label") == F.col("prediction")).count() / preds.count()
-    assert acc == 1.0  # well-separated clusters
-    # JSON persistence round-trip (S5/S6)
-    p = str(tmp_path / "forest.json")
-    forest.save(p)
-    reloaded = LocalProximityForest.load(p)
-    preds2 = reloaded.predict(test)
-    assert preds2.filter(F.col("label") == F.col("prediction")).count() == preds.count()
+    for metric, window in (("euclidean", None), ("dtw", 3)):
+        forest = LocalProximityForest(
+            num_partitions=3, n_splitters=3, seed=5, metric=metric, dtw_window=window
+        ).fit(train)
+        assert len(forest.trees) == 3
+        preds = forest.predict(test)
+        acc = preds.filter(F.col("label") == F.col("prediction")).count() / preds.count()
+        assert acc == 1.0  # well-separated clusters
+        # JSON persistence round-trip (S5/S6), the distance kernel included
+        p = str(tmp_path / f"forest-{metric}.json")
+        forest.save(p)
+        reloaded = LocalProximityForest.load(p)
+        assert (reloaded.metric, reloaded.dtw_window) == (metric, window)
+        assert [t.to_state() for t in reloaded.trees] == [t.to_state() for t in forest.trees]
+        preds2 = reloaded.predict(test)
+        assert preds2.filter(F.col("label") == F.col("prediction")).count() == preds.count()
 
 
 def test_global_tree_end_to_end(spark, tmp_path):
