@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
+from ..worker import stat_checked_zipimport
+
 
 def dtw_distance(a: np.ndarray, b: np.ndarray, window: int | None = None) -> float:
     """Exact DTW distance (euclidean point cost, full DP), optional
@@ -154,6 +156,7 @@ def fast_dtw_pairwise_udf(radius: int = 1):
 
     @F.pandas_udf(DoubleType())
     def _fdtw(a: pd.Series, b: pd.Series) -> pd.Series:
+        stat_checked_zipimport()
         return pd.Series(
             [fast_dtw(np.asarray(x), np.asarray(y), radius=radius) for x, y in zip(a, b)]
         )
@@ -168,6 +171,7 @@ def dtw_distance_udf(exemplar: list[float], window: int | None = None):
 
     @F.pandas_udf(DoubleType())
     def _dtw(series: pd.Series) -> pd.Series:
+        stat_checked_zipimport()
         return series.apply(lambda ts: dtw_distance(np.asarray(ts), ex, window=window))
 
     return _dtw
@@ -178,6 +182,7 @@ def dtw_pairwise_udf(window: int | None = None):
 
     @F.pandas_udf(DoubleType())
     def _dtw(a: pd.Series, b: pd.Series) -> pd.Series:
+        stat_checked_zipimport()
         return pd.Series(
             [dtw_distance(np.asarray(x), np.asarray(y), window=window) for x, y in zip(a, b)]
         )

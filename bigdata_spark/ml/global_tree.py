@@ -50,7 +50,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import IntegerType
 
-from .tree_core import OPEN, FlatTree, feature_matrix, nearest_exemplar, padded_blocks, weighted_gini
+from ..worker import stat_checked_zipimport
+from .tree_core import (
+    OPEN, FlatTree, feature_matrix, nearest_exemplar, padded_blocks, training_width, weighted_gini
+)
 
 # constructor arguments, in the order the state lists them
 _PARAMS = (
@@ -130,6 +133,7 @@ def _level_kernel(bc, k: int, metric: str, window: int | None):
     """mapInArrow body of one level job (see the module docstring)."""
 
     def run(batches):
+        stat_checked_zipimport()
         from pyspark import TaskContext
 
         t = bc.value
@@ -279,14 +283,7 @@ class GlobalProximityTree:
         wt = tbl.filter(kind == _WIDTH)
         for w, n in zip(wt.column("width").to_pylist(), wt.column("n").to_pylist()):
             widths[w] = widths.get(w, 0) + n
-        total = sum(widths.values())
-        expect = dim if dim >= 0 else max((w for w in widths if w >= 0), key=widths.get, default=-1)
-        bad = total - (widths.get(expect, 0) if expect >= 0 else 0)
-        if bad:
-            raise ValueError(
-                f"{bad} of {total} training rows have a null label, null features, a null "
-                f"feature value, or a features length other than {expect}"
-            )
+        expect = training_width(widths, dim)
 
         et = tbl.filter(kind == _ENTRY)
         cols = ("node", "cand", "branch", "label", "n", "h", "row")
@@ -421,6 +418,7 @@ class GlobalProximityTree:
 
         @F.pandas_udf(IntegerType())
         def traverse(features: pd.Series) -> pd.Series:
+            stat_checked_zipimport()
             tree = bc.value
             ok = features.notna().to_numpy()
             out = np.full(len(features), np.nan)

@@ -18,6 +18,7 @@ shuffle, same as the reference's predict path.
 from __future__ import annotations
 
 import json
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -26,8 +27,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
 from ..operators.preprocess import balanced_stratified_repartition
+from ..worker import stat_checked_zipimport
 from .proximity import ProximityTree
-from .tree_core import feature_matrix
+from .tree_core import feature_matrix, training_width
 
 # constructor arguments, in the order ``save`` writes them
 _PARAMS = ("num_partitions", "n_splitters", "max_depth", "use_weighting", "seed", "metric", "dtw_window")
@@ -71,8 +73,17 @@ class LocalProximityForest:
         keyed = df.select(label_col, features_col).withColumn(
             "_row_key", F.xxhash64(F.lit(self.seed), label_col, features_col)
         )
+        # _bad: a null label, null features or a null element (Arrow
+        # would hand the element to pandas as NaN). Added after the
+        # placement, which hashes every column of `keyed`; the projection
+        # keeps the placement's partitioning, so it costs no job.
         parted = balanced_stratified_repartition(
             keyed, label_col, self.num_partitions, seed=self.seed, keep_partition_col=True
+        ).withColumn(
+            "_bad",
+            F.col(label_col).isNull()
+            | F.col(features_col).isNull()
+            | F.exists(features_col, lambda x: x.isNull()),
         )
 
         params = dict(
@@ -82,7 +93,14 @@ class LocalProximityForest:
         seed, use_weighting = self.seed, self.use_weighting
 
         def train_partition(key, pdf):
+            stat_checked_zipimport()
             pid = int(key[0])
+            # row counts by features length (-1: unusable) go back to the
+            # driver; a partition with unusable or ragged rows trains nothing
+            widths = Counter(-1 if bad else len(f) for f, bad in zip(pdf[features_col], pdf["_bad"]))
+            out = {"partition_id": pid, "tree_json": None, "oob_score": None, "widths": json.dumps(list(widths.items()))}
+            if len(widths) > 1 or -1 in widths:
+                return pd.DataFrame([out])
             pdf = pdf.sort_values("_row_key", kind="mergesort")
             X = np.stack(pdf[features_col].to_numpy())
             y = pdf[label_col].to_numpy().astype(np.int64)
@@ -95,15 +113,18 @@ class LocalProximityForest:
                 t = ProximityTree(seed=seed + pid, **params).fit(X[tr], y[tr])
                 oob = float((t.predict(X[va]) == y[va]).mean()) if len(va) else 1.0
             tree = ProximityTree(seed=seed + pid, **params).fit(X, y)
-            return pd.DataFrame(
-                [{"partition_id": pid, "tree_json": json.dumps(tree.to_state()), "oob_score": oob}]
-            )
+            return pd.DataFrame([out | {"tree_json": json.dumps(tree.to_state()), "oob_score": oob}])
 
         rows = (
             parted.groupBy("_partition_id")
-            .applyInPandas(train_partition, "partition_id int, tree_json string, oob_score double")
+            .applyInPandas(train_partition, "partition_id int, tree_json string, oob_score double, widths string")
             .collect()
         )
+        # one features length across all partitions, else a count of the bad rows
+        widths: Counter = Counter()
+        for r in rows:
+            widths.update(dict(json.loads(r["widths"])))
+        training_width(widths)
         rows.sort(key=lambda r: r["partition_id"])
         self.trees = [ProximityTree.from_state(json.loads(r["tree_json"])) for r in rows]
         self.weights = [r["oob_score"] if self.use_weighting else 1.0 for r in rows]
@@ -123,6 +144,7 @@ class LocalProximityForest:
 
         @F.pandas_udf(IntegerType())
         def forest_predict(features: pd.Series) -> pd.Series:
+            stat_checked_zipimport()
             trees_, weights_, classes_ = bc.value
             X = feature_matrix(features, width)
             votes = np.zeros((len(X), len(classes_)))

@@ -80,6 +80,22 @@ def weighted_gini(counts: np.ndarray) -> float:
     return float(np.cumsum(n[keep] / n.sum() * impurity)[-1])
 
 
+def training_width(widths: dict[int, int], dim: int = -1) -> int:
+    """The features length of a training set from its row counts by
+    length (-1: a null label, null features or a null element): ``dim``
+    when given, else the most common length. Raises ``ValueError``, with
+    the count, if any row is unusable or of another length."""
+    total = sum(widths.values())
+    expect = dim if dim >= 0 else max((w for w in widths if w >= 0), key=widths.get, default=-1)
+    bad = total - (widths.get(expect, 0) if expect >= 0 else 0)
+    if bad:
+        raise ValueError(
+            f"{bad} of {total} training rows have a null label, null features, a null "
+            f"feature value, or a features length other than {expect}"
+        )
+    return expect
+
+
 def feature_matrix(rows, width: int | None) -> np.ndarray:
     """``rows`` as one (m, width) float matrix. A row of another length
     raises ``ValueError``; a tree without splits (``width`` None) reads

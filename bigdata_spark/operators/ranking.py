@@ -77,6 +77,16 @@ def range_rank(
     )
 
 
+def _join_null_safe(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:
+    """``left.join(right, keys)`` — inner, same output columns — with a
+    null key matching a null key, as a window's PARTITION BY groups
+    nulls together."""
+    r = right.select(*[F.col(k).alias(f"_r_{k}") for k in keys], *[c for c in right.columns if c not in keys])
+    rest = [c for c in left.columns if c not in keys] + [c for c in right.columns if c not in keys]
+    joined = left.join(r, [left[k].eqNullSafe(r[f"_r_{k}"]) for k in keys])
+    return joined.select(*[left[k] for k in keys], *rest)
+
+
 def grouped_range_rank(
     df: DataFrame,
     group_cols: list[str],
@@ -152,7 +162,7 @@ def grouped_range_rank(
         off_cols.append(F.sum("_s").over(w_off).alias("_soff"))
     offsets = counts.select("_pid", *group_cols, *off_cols)
     out = (
-        ranked_local.join(F.broadcast(offsets), ["_pid", *group_cols])
+        _join_null_safe(ranked_local, F.broadcast(offsets), ["_pid", *group_cols])
         .withColumn(rank_col, (F.col("_lr") + F.col("_off")).cast("long"))
         .drop("_lr", "_off")
     )
@@ -169,7 +179,7 @@ def grouped_range_rank(
         if sum_col is not None:
             tot_cols.append(F.sum("_s").alias(total_col))
         totals = counts.groupBy(*group_cols).agg(*tot_cols)
-        out = out.join(F.broadcast(totals), list(group_cols))
+        out = _join_null_safe(out, F.broadcast(totals), list(group_cols))
     return out
 
 

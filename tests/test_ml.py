@@ -62,6 +62,23 @@ def test_local_forest_end_to_end(spark, tmp_path):
         assert preds2.filter(F.col("label") == F.col("prediction")).count() == preds.count()
 
 
+@pytest.mark.parametrize(
+    "bad_row, n_bad",
+    [([0.5], 1), ([0.5, None], 1), (None, 2)],
+    ids=["ragged", "null-element", "null-label"],
+)
+def test_local_forest_malformed_rows_fail_with_count(spark, bad_row, n_bad):
+    """A ragged row or a null element fails the fit with the count of
+    bad rows (Arrow would turn the null element into NaN, and
+    ``np.stack`` would fail on the ragged row, without naming either);
+    so do null labels, which the stratified placement used to drop."""
+    train = _clusters2d(spark, True)
+    extra = [(1, bad_row)] if bad_row is not None else [(None, [0.5, 0.5]), (None, [1.5, 1.5])]
+    df = train.union(spark.createDataFrame(extra, "label int, features array<double>"))
+    with pytest.raises(ValueError, match=rf"^{n_bad} of {45 + n_bad} training rows .* other than 2$"):
+        LocalProximityForest(num_partitions=3, n_splitters=3, seed=5).fit(df)
+
+
 def test_global_tree_end_to_end(spark, tmp_path):
     train, test = _clusters2d(spark, True), _clusters2d(spark, False, seed=11)
     tree = GlobalProximityTree(n_splitters=3, max_depth=6, seed=3).fit(train)

@@ -26,6 +26,16 @@ def test_run_pipeline_local(spark):
     assert all(t >= 0 for t in rep["timing"].values())
 
 
+def test_run_pipeline_rows_total_is_train_plus_test(spark):
+    """``rows.total`` counts the rows left after dropping all-null rows,
+    duplicates included, as the two sides of the split."""
+    df = _clusters(spark, n_per=20)
+    df = df.union(df.limit(5)).union(spark.createDataFrame([(None, None)], df.schema))
+    rep = run_pipeline(df, model="global", max_depth=4)
+    assert rep["rows"]["total"] == 65
+    assert rep["rows"]["train"] + rep["rows"]["test"] == 65
+
+
 def test_partition_sweep_report(spark, tmp_path):
     p = str(tmp_path / "report.json")
     reports = run_partition_sweep(

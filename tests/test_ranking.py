@@ -184,6 +184,23 @@ def test_grouped_range_rank_matches_grouped_row_number(spark):
     assert got == want
 
 
+def test_grouped_range_rank_keeps_null_group(spark):
+    """A null group key is one group, as in row_number() OVER
+    (PARTITION BY g): its rows are ranked, not dropped by the offset
+    join."""
+    from bigdata_spark.operators.ranking import grouped_range_rank
+
+    df = spark.range(0, 300).select(
+        F.when(F.col("id") % 5 == 0, None).otherwise(F.col("id") % 3).alias("g"),
+        F.col("id").alias("tie"),
+    )
+    out = grouped_range_rank(df, ["g"], ["tie"], "rn", count_col="n", num_partitions=4)
+    assert out.columns == ["g", "tie", "rn", "n"]
+    nulls = sorted((r["rn"], r["n"]) for r in out.filter(F.col("g").isNull()).collect())
+    assert nulls == [(i, 60) for i in range(1, 61)]
+    assert out.count() == 300
+
+
 def test_grouped_range_rank_multi_group_cols_and_empty(spark):
     from bigdata_spark.operators.ranking import grouped_range_rank
 
