@@ -1,10 +1,12 @@
-"""Global proximity tree as a level-wise Spark pass (SURVEY §3.2;
-reference global_model_manager.py:168-402).
+"""Global proximity tree as a level-wise Spark pass that finishes in
+driver memory (SURVEY §3.2; reference global_model_manager.py:168-402).
 
 The reference's BFS level loop costs O(k·open_nodes) Spark actions per
 level (one weighted-Gini job per candidate split — the reason its
 global training takes 1,900-5,300 s). This implementation grows the
-same tree with ONE Spark job per level, in the shape of Spark ML's
+same tree in two phases.
+
+Distributed phase: ONE Spark job per level, in the shape of Spark ML's
 level-wise ``RandomForest.findBestSplits``:
 
   - the training frame (label, features) is persisted once; each job
@@ -13,24 +15,53 @@ level-wise ``RandomForest.findBestSplits``:
   - the tree grown so far (a ``FlatTree``, rebuilt each level from the
     decided leaves and splits) and every open node's candidate exemplar
     blocks travel as one broadcast;
-  - each partition routes its rows from the root (``FlatTree.route``),
-    drops rows that reach a leaf, scores every candidate of every open
-    node (``nearest_exemplar``) and returns mergeable partials: per
-    (node, cand, branch, label) group the row count and the
-    ``exemplar_pool_k`` rows of smallest hash, each pooled series
-    shipped once by row id;
+  - each partition runs ``level_partials`` on its rows: route them from
+    the root (``FlatTree.route``), drop rows that reach a leaf, score
+    every candidate of every open node (``nearest_exemplar``), and
+    return mergeable partials: per (node, cand, branch, label) group the
+    row count and the ``exemplar_pool_k`` rows of smallest hash, each
+    pooled series shipped once by row id;
   - the driver merges the partials (counts summed, the k smallest
     hashes kept in order — exactly a ``row_number()`` window's ranks),
     picks each node's split by ``weighted_gini`` over its (branch ×
     label) counts, leafs children from the winning branch counts, and
     draws the next level's candidates from the winning branches' pools.
 
+Local phase: before each level the driver knows the live rows exactly —
+the sum of the open nodes' label counts. Once live rows × width × 8 B
+fit ``_LOCAL_BYTES``, that level's job returns the live rows themselves
+(label, features, and the open node each reached), and the driver grows
+every remaining level from them: ``FlatTree.route`` moves each held row
+on from its node, ``level_partials`` scores the held rows ranked by
+``spark_xxhash64(seed + depth + 1, features)``, bit for bit the Spark
+column, and rows that reach a leaf are dropped. The decide step is the
+same code and cannot tell which phase made its partials, so the tree is
+byte-identical either way. This is PLANET's rule (Panda et al., VLDB
+2009): build a node in memory once its rows fit one machine.
+
 The bootstrap (root label counts and exemplar pool) is the same job run
 as a level with one empty root candidate, ranked by
 xxhash64(seed, features). The ranking hashes row CONTENT, so the
 fitted tree does not depend on partitioning or row order. A fit of
-depth d costs at most d + 1 Spark jobs and no shuffle (plus one shuffle
-job when an under-partitioned input is first spread out).
+depth d costs at most d + 1 Spark jobs while it stays distributed; one
+that goes local at depth L costs L + 2 (the bootstrap, L level jobs and
+the job that returns the rows), however deep it grows. No fit shuffles,
+except for one shuffle job when an under-partitioned input is first
+spread out.
+
+Why 8 MiB, ~7,500 series of 140 doubles: the budget bounds what the
+driver holds, not its speed. The held rows, one copy of them per local
+level and the kernel's per-step temporaries (see ``nearest_exemplar``)
+stay a few tens of MB, small beside any driver heap and far under
+``spark.driver.maxResultSize``; the 2,000-row benchmark pass grows its
+driver's peak RSS by ~3 %. The paper's ECG5000 (5,000 × 140) still fits
+whole, while a set too large for one machine keeps its wide top levels,
+where the row work is, in parallel Spark jobs. On 4 vCPUs in local
+mode, where the jobs share the driver's cores, a larger budget is
+faster still (a 20,000-row unbounded fit: 8.4 s at 8 MiB, 4.8 s when
+held from the root); on a cluster the jobs' parallelism is real. The
+rule is the same for both metrics; DTW's scalar kernel makes a DTW fit
+slow beyond test sizes in either phase.
 
 Prediction broadcasts the same ``FlatTree`` and routes each Arrow batch
 of rows through it in one pandas UDF pass (U3 parity; reference
@@ -52,9 +83,19 @@ from pyspark.sql.types import IntegerType
 
 from ..worker import stat_checked_zipimport
 from .tree_core import (
-    OPEN, FlatTree, feature_matrix, nearest_exemplar, padded_blocks, training_width, weighted_gini
+    OPEN,
+    FlatTree,
+    feature_matrix,
+    nearest_exemplar,
+    padded_blocks,
+    spark_xxhash64,
+    training_width,
+    weighted_gini,
 )
 
+# the fit goes local once its live rows × width × 8 B fit this (see the
+# module docstring for the value)
+_LOCAL_BYTES = 8 << 20
 # constructor arguments, in the order the state lists them
 _PARAMS = (
     "n_splitters", "max_depth", "min_samples_split", "exemplar_pool_k", "seed", "metric", "dtw_window"
@@ -62,8 +103,9 @@ _PARAMS = (
 # Partial rows a level job returns, by kind: ENTRY, one pool entry of a
 # (node, cand, branch, label) group — its hash h, its series' row id,
 # and on the group's first entry the group's row count n; SERIES, the
-# features of one pooled row; WIDTH, n input rows of features length
-# `width` (-1: null label, null features or a null element).
+# features of one pooled row (of one live row, with its label and
+# node, in a hold job); WIDTH, n input rows of features length `width` (-1: null
+# label, null features or a null element).
 _ENTRY, _SERIES, _WIDTH = 0, 1, 2
 _PARTIAL_ARROW = pa.schema(
     [
@@ -118,15 +160,55 @@ def _count_tables(entries: dict[str, np.ndarray], open_ids: np.ndarray, n_cand: 
     return tables
 
 
-def _branch_pools(entries: dict[str, np.ndarray], row_ix: dict[int, int], winners: dict[int, int]):
-    """(node, branch) → label → pooled series indexes in ascending hash
-    order, for each node's winning candidate only."""
+def _branch_pools(entries: dict[str, np.ndarray], winners: dict[int, int]):
+    """(node, branch) → label → pooled series indexes (``entries["row"]``)
+    in ascending hash order, for each node's winning candidate only."""
     pools: dict[tuple[int, int], dict[int, list[int]]] = {}
     cols = (entries[c].tolist() for c in ("node", "cand", "branch", "label", "row"))
     for nid, cand, branch, lbl, row in zip(*cols):
         if winners.get(nid) == cand:
-            pools.setdefault((nid, branch), {}).setdefault(lbl, []).append(row_ix[row])
+            pools.setdefault((nid, branch), {}).setdefault(lbl, []).append(row)
     return pools
+
+
+def _level_spec(tree: FlatTree, candidates: dict, dim: int) -> dict:
+    """What a level needs besides the rows: the tree so far, the open
+    nodes, the width, and every open node's candidate exemplar blocks.
+    ``hold`` is set for the job that returns the live rows instead of
+    partials."""
+    open_ids = np.array(sorted(candidates))
+    cand = padded_blocks([ex for nid in open_ids for _labels, ex in candidates[nid]], max(dim, 0))
+    return {
+        "tree": tree, "open": open_ids, "dim": dim, "n_cand": len(candidates[open_ids[0]]),
+        "cand": cand, "hold": False,
+    }
+
+
+def level_partials(X, y, h, rows, cur, level: dict, k: int, metric: str, window: int | None):
+    """Score one level over the rows ``X`` with labels ``y``, rank hashes
+    ``h``, ids ``rows`` and the node ``cur`` each reached by
+    ``FlatTree.route``: drop rows at a leaf, and score every candidate
+    of every open node. Returns the merged pool entries (see
+    ``_reduce_entries``) and the indexes of the rows still live. The
+    Spark kernel runs it on each Arrow batch, the local phase on the
+    held rows."""
+    n_cand = level["n_cand"]
+    live = np.flatnonzero(level["tree"].state[cur] == OPEN)
+    slots = np.searchsorted(level["open"], cur[live])[:, None] * n_cand + np.arange(n_cand)
+    branch = nearest_exemplar(X[live], *level["cand"], slots, metric, window)
+    entries = _reduce_entries(
+        {
+            "node": np.repeat(cur[live], n_cand),
+            "cand": np.tile(np.arange(n_cand), len(live)),
+            "branch": branch.ravel(),
+            "label": np.repeat(y[live], n_cand),
+            "n": np.ones(branch.size, dtype=np.int64),
+            "h": np.repeat(h[live], n_cand),
+            "row": np.repeat(rows[live], n_cand),
+        },
+        k,
+    )
+    return entries, live
 
 
 def _level_kernel(bc, k: int, metric: str, window: int | None):
@@ -136,12 +218,12 @@ def _level_kernel(bc, k: int, metric: str, window: int | None):
         stat_checked_zipimport()
         from pyspark import TaskContext
 
-        t = bc.value
-        tree, dim, n_cand = t["tree"], t["dim"], t["n_cand"]
+        level = bc.value
+        dim, hold = level["dim"], level["hold"]
         base = TaskContext.get().partitionId() << 32
         offset = 0
         widths: dict[int, int] = {}
-        parts, kept_rows, kept_feats = [], [], []
+        parts, kept = [], []  # kept: (row ids, nodes, labels, features) to ship
         for batch in batches:
             label, feats, h = batch.column(0), batch.column(1), batch.column(2)
             rows = base + offset + np.arange(batch.num_rows, dtype=np.int64)
@@ -166,31 +248,17 @@ def _level_kernel(bc, k: int, metric: str, window: int | None):
                 continue  # ragged: only the width counts go back
             X = feats.flatten().to_numpy(zero_copy_only=False).reshape(int(ok.sum()), good.pop())
             y = label.to_numpy(zero_copy_only=False)[ok].astype(np.int64)
-            hh = h.to_numpy(zero_copy_only=False)[ok]
             rows = rows[ok]
 
-            cur = tree.route(X, metric, window)
-            live = np.flatnonzero(tree.state[cur] == OPEN)
-            if not len(live):
-                continue
-            slots = np.searchsorted(t["open"], cur[live])[:, None] * n_cand + np.arange(n_cand)
-            branch = nearest_exemplar(X[live], *t["cand"], slots, metric, window)
-            e = _reduce_entries(
-                {
-                    "node": np.repeat(cur[live], n_cand),
-                    "cand": np.tile(np.arange(n_cand), len(live)),
-                    "branch": branch.ravel(),
-                    "label": np.repeat(y[live], n_cand),
-                    "n": np.ones(branch.size, dtype=np.int64),
-                    "h": np.repeat(hh[live], n_cand),
-                    "row": np.repeat(rows[live], n_cand),
-                },
-                k,
-            )
-            parts.append(e)
-            pooled = np.isin(rows, e["row"])
-            kept_rows.append(rows[pooled])
-            kept_feats.append(X[pooled])
+            cur = level["tree"].route(X, metric, window)
+            if hold:  # ship every live row
+                keep = level["tree"].state[cur] == OPEN
+            else:
+                hh = h.to_numpy(zero_copy_only=False)[ok]
+                e, _ = level_partials(X, y, hh, rows, cur, level, k, metric, window)
+                parts.append(e)
+                keep = np.isin(rows, e["row"])
+            kept.append((rows[keep], cur[keep], y[keep], X[keep]))
 
         yield _partial_batch(
             _WIDTH,
@@ -198,28 +266,41 @@ def _level_kernel(bc, k: int, metric: str, window: int | None):
             n=pa.array(list(widths.values()), pa.int64()),
             width=pa.array(list(widths), pa.int32()),
         )
-        if len({w for w in widths if w >= 0}) != 1 or not parts:
+        if len({w for w in widths if w >= 0}) != 1 or not kept:
             return
-        e = _reduce_entries({key: np.concatenate([p[key] for p in parts]) for key in parts[0]}, k)
-        yield _partial_batch(
-            _ENTRY,
-            len(e["n"]),
-            **{c: pa.array(e[c].astype(np.int32)) for c in ("node", "cand", "branch", "label")},
-            **{c: pa.array(e[c].astype(np.int64)) for c in ("n", "h", "row")},
-        )
-        # each pooled series once, however many groups pool it
-        rows, feats = np.concatenate(kept_rows), np.concatenate(kept_feats)
-        ship = np.isin(rows, e["row"])
-        rows, feats = rows[ship], feats[ship]
+        rows, nodes, labels, feats = (np.concatenate(a) for a in zip(*kept))
+        cols = {"node": pa.array(nodes.astype(np.int32)), "label": pa.array(labels.astype(np.int32))}
+        if not hold:
+            e = _reduce_entries({key: np.concatenate([p[key] for p in parts]) for key in parts[0]}, k)
+            yield _partial_batch(
+                _ENTRY,
+                len(e["n"]),
+                **{c: pa.array(e[c].astype(np.int32)) for c in ("node", "cand", "branch", "label")},
+                **{c: pa.array(e[c].astype(np.int64)) for c in ("n", "h", "row")},
+            )
+            # each pooled series once, however many groups pool it
+            ship = np.isin(rows, e["row"])
+            rows, feats, cols = rows[ship], feats[ship], {}
         offsets = np.arange(len(rows) + 1, dtype=np.int32) * feats.shape[1]
         yield _partial_batch(
             _SERIES,
             len(rows),
             row=pa.array(rows),
+            **cols,
             features=pa.ListArray.from_arrays(pa.array(offsets), pa.array(feats.ravel())),
         )
 
     return run
+
+
+def _matrix(series: pa.Table, dim: int) -> np.ndarray:
+    feats = series.column("features").combine_chunks()
+    return feats.flatten().to_numpy().reshape(len(feats), max(dim, 0))
+
+
+def _group_jobs(sc) -> set[int]:
+    """Ids of the Spark jobs run so far in the caller's job group."""
+    return set(sc.statusTracker().getJobIdsForGroup(sc.getLocalProperty("spark.jobGroup.id")))
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -233,6 +314,12 @@ def _spread(df: DataFrame) -> DataFrame:
 
 
 class GlobalProximityTree:
+    """One proximity tree over a whole Spark frame (see the module
+    docstring). Feature values may be NaN: NaN ranks above every
+    distance, so a series whose distances to a node's exemplars are all
+    NaN, such as an all-NaN series, goes to the node's first exemplar,
+    in fit and predict alike."""
+
     def __init__(
         self,
         n_splitters: int = 5,
@@ -259,22 +346,16 @@ class GlobalProximityTree:
 
     # ------------------------------------------------------------------ fit
 
-    def _level(self, frame: DataFrame, depth: int, tree: FlatTree, candidates: dict, dim: int):
-        """One level job: ship the tree and the open nodes' candidates;
-        return the merged pool entries (with group counts), the pooled
-        series, their index by row id, and the features length. Raises
-        ValueError, with the count, on unusable training rows."""
-        open_ids = np.array(sorted(candidates))
-        n_cand = len(candidates[open_ids[0]])
-        cand = padded_blocks([ex for nid in open_ids for _labels, ex in candidates[nid]], max(dim, 0))
-        bc = frame.sparkSession.sparkContext.broadcast(
-            {"tree": tree, "open": open_ids, "dim": dim, "n_cand": n_cand, "cand": cand}
-        )
+    def _job(self, frame: DataFrame, depth: int, level: dict) -> tuple[pa.Table, pa.Table, int]:
+        """One level job: ship ``level`` (see ``_level_spec``) and return
+        the pool entries (none for a hold job), the shipped series, and
+        the features length. Raises ValueError, with the count, on
+        unusable training rows."""
+        bc = frame.sparkSession.sparkContext.broadcast(level)
         try:
             kernel = _level_kernel(bc, self.exemplar_pool_k, self.metric, self.dtw_window)
             rank = F.xxhash64(F.lit(self.seed + depth + 1), "features")
-            level = frame.select("label", "features", rank).mapInArrow(kernel, _PARTIAL_SCHEMA)
-            tbl = level.toArrow()
+            tbl = frame.select("label", "features", rank).mapInArrow(kernel, _PARTIAL_SCHEMA).toArrow()
         finally:
             bc.destroy()
         kind = tbl.column("kind").to_numpy()
@@ -283,18 +364,37 @@ class GlobalProximityTree:
         wt = tbl.filter(kind == _WIDTH)
         for w, n in zip(wt.column("width").to_pylist(), wt.column("n").to_pylist()):
             widths[w] = widths.get(w, 0) + n
-        expect = training_width(widths, dim)
+        dim = training_width(widths, level["dim"])
 
-        et = tbl.filter(kind == _ENTRY)
+        return tbl.filter(kind == _ENTRY), tbl.filter(kind == _SERIES), dim
+
+    def _level(self, frame: DataFrame, depth: int, level: dict):
+        """A distributed level: the merged pool entries, with ``row``
+        indexing the returned pooled series, and the features length."""
+        et, st, dim = self._job(frame, depth, level)
+        st = st.sort_by("row")
         cols = ("node", "cand", "branch", "label", "n", "h", "row")
         entries = _reduce_entries({c: et.column(c).to_numpy() for c in cols}, self.exemplar_pool_k)
-        st = tbl.filter(kind == _SERIES)
-        feats = st.column("features").combine_chunks()
-        series = feats.flatten().to_numpy().reshape(len(feats), max(expect, 0))
-        row_ix = dict(zip(st.column("row").to_pylist(), range(len(feats))))
-        return entries, series, row_ix, expect
+        entries["row"] = np.searchsorted(st.column("row").to_numpy(), entries["row"])
+        return entries, _matrix(st, dim), dim
+
+    def _hold(self, frame: DataFrame, depth: int, level: dict) -> tuple[np.ndarray, ...]:
+        """The hold job: the live rows of ``level``, as features, labels
+        and the open node each reached."""
+        _, st, dim = self._job(frame, depth, dict(level, hold=True))
+        return _matrix(st, dim), *(st.column(c).to_numpy().astype(np.int64) for c in ("label", "node"))
 
     def fit(self, df: DataFrame, label_col: str = "label", features_col: str = "features") -> "GlobalProximityTree":
+        """Fit on ``df``'s label and features columns. Every row must
+        have a label and a features array of one length without nulls;
+        otherwise the fit raises ``ValueError`` with the count.
+
+        ``fit_stats_`` then reports the Spark jobs the fit ran (in the
+        caller's job group), the depth at which it went local (None:
+        never), the rows it held on the driver, and ``_LOCAL_BYTES``."""
+        sc = df.sparkSession.sparkContext
+        before = _group_jobs(sc)
+        self.fit_stats_ = {"jobs": 0, "local_from_depth": None, "held_rows": 0, "local_bytes": _LOCAL_BYTES}
         rng = random.Random(self.seed)
         frame = _spread(
             df.select(
@@ -311,6 +411,7 @@ class GlobalProximityTree:
             self._grow(frame, rng)
         finally:
             frame._jdf.logicalPlan().rdd().unpersist(False)
+            self.fit_stats_["jobs"] = len(_group_jobs(sc) - before)
         return self
 
     def _grow(self, frame: DataFrame, rng: random.Random) -> None:
@@ -318,13 +419,13 @@ class GlobalProximityTree:
         splits: dict[int, tuple] = {}  # split node → (labels, exemplars, children)
 
         # bootstrap: a level with one empty root candidate (branch 0)
-        entries, series, row_ix, dim = self._level(frame, -1, FlatTree(1, {}, {}), {0: [([], [])]}, -1)
+        entries, series, dim = self._level(frame, -1, _level_spec(FlatTree(1, {}, {}), {0: [([], [])]}, -1))
         labels = np.unique(entries["label"][entries["n"] > 0])
         # per-node label counts over `labels`: the root from the
         # bootstrap, every later node from its parent's winning branch
         # counts — so leaf decisions never need their own Spark job
         stats = {0: _count_tables(entries, np.array([0]), 1, labels)[0, 0, 0]}
-        pool = {0: _branch_pools(entries, row_ix, {0: 0}).get((0, 0), {})}
+        pool = {0: _branch_pools(entries, {0: 0}).get((0, 0), {})}
         self.majority_class = int(labels[np.argmax(stats[0])]) if len(labels) else None
 
         def leaf(nid: int) -> None:  # majority; ties to the smallest label
@@ -337,6 +438,7 @@ class GlobalProximityTree:
             leaf(0)
 
         depth, next_id = 0, 1
+        held = None  # the live rows (features, labels, nodes) once the fit is local
         while open_nodes and (self.max_depth is None or depth < self.max_depth):
             # candidate splits: per node, n_splitters random exemplar
             # sets drawn from the (winning-branch) pool of the previous
@@ -356,12 +458,26 @@ class GlobalProximityTree:
             if not candidates:
                 break
 
-            tree = FlatTree(next_id, leaves, splits)  # the tree so far, for routing
-            entries, series, row_ix, _ = self._level(frame, depth, tree, candidates, dim)
+            level = _level_spec(FlatTree(next_id, leaves, splits), candidates, dim)
+            # the open nodes' label counts add up to the live rows exactly
+            live_rows = sum(int(stats[nid].sum()) for nid in candidates)
+            if held is None and live_rows * dim * 8 <= _LOCAL_BYTES:
+                held = self._hold(frame, depth, level)
+                self.fit_stats_.update(local_from_depth=depth, held_rows=len(held[1]))
+            if held is None:
+                entries, series, _ = self._level(frame, depth, level)
+            else:
+                X, y, cur = held
+                cur = level["tree"].route(X, self.metric, self.dtw_window, start=cur)
+                h = spark_xxhash64(self.seed + depth + 1, X)
+                entries, live = level_partials(
+                    X, y, h, np.arange(len(X)), cur, level, self.exemplar_pool_k, self.metric, self.dtw_window
+                )
+                series, held = X, (X[live], y[live], cur[live])
 
             # branch counts per (node, cand): the Gini input, and the
             # would-be children's label counts
-            open_ids = np.array(sorted(candidates))
+            open_ids = level["open"]
             tables = _count_tables(entries, open_ids, self.n_splitters, labels)
             # a degenerate split (everything one way) scores 1.0; ties go
             # to the lowest cand id
@@ -372,7 +488,7 @@ class GlobalProximityTree:
                 ]
             )
             winners = dict(zip(open_ids.tolist(), np.argmin(ginis, axis=1).tolist()))
-            cand_pool = _branch_pools(entries, row_ix, winners)
+            cand_pool = _branch_pools(entries, winners)
 
             # materialize winners; each child's label counts are the
             # winning candidate's branch counts, so leaf checks happen now

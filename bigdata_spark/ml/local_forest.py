@@ -38,7 +38,11 @@ _PARAMS = ("num_partitions", "n_splitters", "max_depth", "use_weighting", "seed"
 class LocalProximityForest:
     """One proximity tree per partition, majority-vote ensemble with
     optional OOB-accuracy weighting (reference local_model_manager.py:
-    133-146,178-188)."""
+    133-146,178-188). A null label, null features or a null element
+    fails the fit with a count; NaN values are accepted and follow
+    ``ProximityTree``'s rule: a series whose distances to a node's
+    exemplars are all NaN, such as an all-NaN series, goes to the node's
+    first exemplar, in fit and predict alike."""
 
     def __init__(
         self,

@@ -22,7 +22,11 @@ _PARAMS = ("n_splitters", "max_depth", "min_samples_split", "seed", "metric", "d
 
 
 class ProximityTree:
-    """Distance-based decision tree over fixed-length series/vectors."""
+    """Distance-based decision tree over fixed-length series/vectors.
+    Feature values may be NaN: NaN ranks above every distance, so a
+    series whose distances to a node's exemplars are all NaN, such as an
+    all-NaN series, goes to the node's first exemplar, in fit and
+    predict alike."""
 
     def __init__(
         self,

@@ -6,8 +6,11 @@ series to its nearest exemplar, pick the split by weighted Gini.
   - ``FlatTree``, one tree as arrays, converted to and from the
     per-node JSON the models persist;
   - ``FlatTree.route``, the one traversal: it moves a whole batch of
-    rows from the root, all rows of a depth at once;
-  - ``weighted_gini``, the one split score.
+    rows from the root (or from given nodes), all rows of a depth at
+    once;
+  - ``weighted_gini``, the one split score;
+  - ``spark_xxhash64``, Spark's ``xxhash64`` of a literal and a double
+    array in numpy, the global fit's row rank on the driver.
 """
 
 from __future__ import annotations
@@ -16,9 +19,9 @@ import numpy as np
 
 # node states
 LEAF, SPLIT, OPEN = 0, 1, 2
-# rows per step of the euclidean kernel, which bounds its
-# (rows, cand, K, d) temporary
-_ROW_CHUNK = 256
+# elements of the euclidean kernel's (rows, cand, K, d) temporary per
+# step: 256 rows against one block of 5 exemplars of 140
+_CHUNK_ELEMS = 256 * 5 * 140
 
 
 def nearest_exemplar(
@@ -40,21 +43,25 @@ def nearest_exemplar(
     if blocks.shape[1] == 0 or X.shape[1] == 0:
         return out  # every distance is equal: the first exemplar
     valid = np.arange(blocks.shape[1]) < counts[slots][..., None]
-    for lo in range(0, m, _ROW_CHUNK):
-        x, s = X[lo : lo + _ROW_CHUNK], slots[lo : lo + _ROW_CHUNK]
+    step = max(1, _CHUNK_ELEMS // (c * blocks.shape[1] * X.shape[1]))
+    for lo in range(0, m, step):
+        x, s = X[lo : lo + step], slots[lo : lo + step]
         if metric == "dtw":
             from .dtw import dtw_distance
 
             dist = np.full(s.shape + blocks.shape[1:2], np.nan)
-            for r, j, e in zip(*np.nonzero(valid[lo : lo + _ROW_CHUNK])):
+            for r, j, e in zip(*np.nonzero(valid[lo : lo + step])):
                 dist[r, j, e] = dtw_distance(x[r], blocks[s[r, j], e], window=window)
         else:
-            d = x[:, None, None, :] - blocks[s]
-            dist = np.sqrt(np.cumsum(d * d, axis=-1)[..., -1])
-            dist[~valid[lo : lo + _ROW_CHUNK]] = np.nan
+            # one (rows, cand, K, d) buffer: difference, square, running sum
+            d = blocks[s]
+            np.subtract(x[:, None, None, :], d, out=d)
+            np.multiply(d, d, out=d)
+            dist = np.sqrt(np.cumsum(d, axis=-1, out=d)[..., -1])
+            dist[~valid[lo : lo + step]] = np.nan
         best = np.where(np.isnan(dist), np.inf, dist).min(axis=-1, keepdims=True)
         # no hit (every distance NaN) → argmax of all-False → 0
-        out[lo : lo + _ROW_CHUNK] = np.argmax(dist == best, axis=-1)
+        out[lo : lo + step] = np.argmax(dist == best, axis=-1)
     return out
 
 
@@ -78,6 +85,53 @@ def weighted_gini(counts: np.ndarray) -> float:
     # pow(p, 2) as Python's ``**`` squares; ``p * p`` can differ in the last bit
     impurity = 1.0 - np.cumsum(np.float_power(p, 2), axis=1)[:, -1]
     return float(np.cumsum(n[keep] / n.sum() * impurity)[-1])
+
+
+# XXH64's primes; uint64 arithmetic wraps like Java's long
+_P1, _P2, _P3, _P4, _P5 = (
+    np.uint64(p)
+    for p in (
+        0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9, 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+    )
+)
+
+
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _fmix(h: np.ndarray) -> np.ndarray:
+    h = (h ^ (h >> np.uint64(33))) * _P2
+    h = (h ^ (h >> np.uint64(29))) * _P3
+    return h ^ (h >> np.uint64(32))
+
+
+def _hash_long(x: np.ndarray, seed: np.ndarray) -> np.ndarray:
+    h = seed + _P5 + np.uint64(8)
+    h ^= _rotl(x * _P2, 31) * _P1
+    return _fmix(_rotl(h, 27) * _P1 + _P4)
+
+
+def _hash_int(x: np.ndarray, seed: np.ndarray) -> np.ndarray:
+    h = seed + _P5 + np.uint64(4)
+    h ^= (x & np.uint64(0xFFFFFFFF)) * _P1
+    return _fmix(_rotl(h, 23) * _P2 + _P3)
+
+
+def spark_xxhash64(lit: int, X: np.ndarray) -> np.ndarray:
+    """Spark's ``xxhash64(lit(lit), features)`` of every row of ``X`` (m,
+    d), bit for bit (Spark's ``XXH64``, seed 42): the literal is hashed
+    as an int when it fits 32 bits and as a long otherwise, as ``lit``
+    types it; then each element, in order, as the long bits of the
+    double, with -0.0 read as 0.0 and every NaN as the canonical NaN.
+    Null elements, which Spark skips, cannot occur in a matrix."""
+    lit_bits = np.full(len(X), lit & 0xFFFFFFFFFFFFFFFF, dtype=np.uint64)
+    h = np.full(len(X), 42, dtype=np.uint64)
+    h = _hash_int(lit_bits, h) if -(2**31) <= lit < 2**31 else _hash_long(lit_bits, h)
+    for col in X.T:
+        col = np.where(np.isnan(col), np.nan, col + 0.0)  # + 0.0: -0.0 → 0.0
+        h = _hash_long(col.view(np.uint64), h)
+    return h.view(np.int64)
 
 
 def training_width(widths: dict[int, int], dim: int = -1) -> int:
@@ -143,11 +197,14 @@ class FlatTree:
     def __len__(self) -> int:
         return len(self.state)
 
-    def route(self, X: np.ndarray, metric: str = "euclidean", window: int | None = None) -> np.ndarray:
-        """The node every row of ``X`` reaches from the root through the
-        split nodes: a leaf, or an OPEN node during the global fit. All
-        rows at one depth move together."""
-        cur = np.zeros(len(X), dtype=np.int64)
+    def route(
+        self, X: np.ndarray, metric: str = "euclidean", window: int | None = None, start: np.ndarray | None = None
+    ) -> np.ndarray:
+        """The node every row of ``X`` reaches through the split nodes
+        from the root, or from its node in ``start``: a leaf, or an OPEN
+        node during the global fit. All rows at one depth move
+        together."""
+        cur = np.zeros(len(X), dtype=np.int64) if start is None else start.copy()
         while True:
             mv = np.flatnonzero(self.state[cur] == SPLIT)
             if not len(mv):

@@ -98,6 +98,7 @@ def run_pipeline(
 
     t0 = time.time()
     complexity: dict[str, float] = {}
+    fit_stats: dict = {}  # the global fit's GlobalProximityTree.fit_stats_
     if model == "local":
         m = LocalProximityForest(
             num_partitions=num_partitions, n_splitters=n_splitters,
@@ -110,6 +111,7 @@ def run_pipeline(
         ).fit(train, label_col, features_col)
         complexity["depth"] = m.depth
         complexity["n_nodes"] = len(m.tree)
+        fit_stats = m.fit_stats_
     timings["training_time"] = time.time() - t0
     mem_after_train = _memory_snapshot(spark)
 
@@ -137,6 +139,7 @@ def run_pipeline(
         "performance": {k: round(v, 6) for k, v in performance.items()},
         "timing": {k: round(v, 3) for k, v in timings.items()},
         "complexity": complexity,
+        "fit": fit_stats,
         # reference evaluation.py:313-347 parity: memory sampled at the
         # stage boundaries that matter (start, post-train, end)
         "memory": {

@@ -1,18 +1,23 @@
 """Global proximity tree: the fitted model depends only on (data,
-params, seed), a fit costs one Spark job per level, the reference's
-``max_depth=None`` grows the full tree, and malformed feature rows fail
-loudly with a count."""
+params, seed) — not on the layout, nor on whether levels grow as Spark
+jobs or in driver memory —, a distributed fit costs one Spark job per
+level and a local one two, the reference's ``max_depth=None`` grows the
+full tree, and malformed feature rows fail loudly with a count."""
 
 from __future__ import annotations
 
+import math
 import random
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
+from pyspark.sql import functions as F
 
+from bigdata_spark.ml import global_tree
 from bigdata_spark.ml.global_tree import GlobalProximityTree
 from bigdata_spark.ml.proximity import ProximityTree
-from bigdata_spark.ml.tree_core import LEAF, SPLIT
+from bigdata_spark.ml.tree_core import LEAF, SPLIT, spark_xxhash64
 
 
 def _series(n: int, d: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
@@ -36,6 +41,11 @@ def _frame(spark, X, y, partitions: int, shuffled: bool = False):
     return df
 
 
+# every level a Spark job; the default, which holds these small sets on
+# the driver from depth 0
+BUDGETS = {"distributed": 0, "local": global_tree._LOCAL_BYTES}
+
+
 @pytest.mark.parametrize(
     "params,n,d",
     [
@@ -44,35 +54,53 @@ def _frame(spark, X, y, partitions: int, shuffled: bool = False):
     ],
     ids=["euclidean", "dtw"],
 )
-def test_fit_independent_of_layout_one_job_per_level(spark, params, n, d):
+def test_fit_independent_of_layout_one_job_per_level(spark, monkeypatch, params, n, d):
     sc = spark.sparkContext
     X, y = _series(n, d, seed=5)
     states = []
     for partitions, shuffled in ((1, False), (2, False), (4, False), (4, True)):
         df = _frame(spark, X, y, partitions, shuffled)
-        group = f"global-tree-fit-{params.get('metric')}-{partitions}-{shuffled}"
-        sc.setJobGroup(group, group)
-        try:
-            tree = GlobalProximityTree(seed=3, **params).fit(df)
-        finally:
-            sc.setJobGroup("", "")
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        # one job per level plus the bootstrap; a single input partition
-        # also pays the one shuffle that spreads the rows over two
-        assert jobs <= tree.depth + 1 + (partitions == 1), (partitions, jobs, tree.depth)
-        states.append(tree.to_state())
+        for name, budget in BUDGETS.items():
+            monkeypatch.setattr(global_tree, "_LOCAL_BYTES", budget)
+            group = f"global-tree-fit-{params.get('metric')}-{partitions}-{shuffled}-{name}"
+            sc.setJobGroup(group, group)
+            try:
+                tree = GlobalProximityTree(seed=3, **params).fit(df)
+            finally:
+                sc.setJobGroup("", "")
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            # one job per level plus the bootstrap, or the bootstrap and
+            # the job that returns the rows; a single input partition
+            # also pays the one shuffle that spreads the rows over two
+            bound = tree.depth + 1 if name == "distributed" else 2
+            assert jobs <= bound + (partitions == 1), (name, partitions, jobs, tree.depth)
+            assert tree.fit_stats_ == {
+                "jobs": jobs,
+                "local_from_depth": None if name == "distributed" else 0,
+                "held_rows": 0 if name == "distributed" else n,
+                "local_bytes": budget,
+            }
+            states.append(tree.to_state())
         df.unpersist()
     assert tree.depth >= 3
     assert all(s == states[0] for s in states[1:])
 
 
-def test_max_depth_none_grows_until_no_node_splits(spark):
+def test_max_depth_none_grows_until_no_node_splits(spark, monkeypatch):
     X, y = _series(60, 12, seed=8)
     df = _frame(spark, X, y, 2)
     full = GlobalProximityTree(n_splitters=2, max_depth=None, min_samples_split=2, seed=4).fit(df)
     deep = GlobalProximityTree(n_splitters=2, max_depth=10_000, min_samples_split=2, seed=4).fit(df)
     assert full.to_state()["nodes"] == deep.to_state()["nodes"]
     assert full.majority_class == deep.majority_class
+    # the same tree from every level as a Spark job, and from a fit that
+    # holds the live rows only once a third of them are left
+    for budget in (0, 60 * 12 * 8 // 3):
+        monkeypatch.setattr(global_tree, "_LOCAL_BYTES", budget)
+        other = GlobalProximityTree(n_splitters=2, max_depth=None, min_samples_split=2, seed=4).fit(df)
+        assert other.to_state() == full.to_state()
+        assert (other.fit_stats_["local_from_depth"] is None) == (budget == 0)
+        assert budget == 0 or other.fit_stats_["local_from_depth"] > 0
     # every node is a leaf or a split with children: none is left open
     assert full.depth > 4 and set(full.tree.state.tolist()) == {LEAF, SPLIT}
     assert (full.tree.counts > 0).all()
@@ -97,3 +125,38 @@ def test_malformed_feature_row_fails_with_count(spark, bad_row):
     df = spark.createDataFrame(rows, "label int, features array<double>")
     with pytest.raises(ValueError, match=r"^1 of 200 training rows"):
         GlobalProximityTree(n_splitters=2, max_depth=3).fit(df)
+
+
+# the literals around lit()'s switch from int to long, and a drawn one
+SEEDS = [-(2**31) - 1, -1, 0, 2**31 - 1, 2**31, 2**40]
+element = st.one_of(
+    st.sampled_from([0.0, -0.0, math.nan, math.inf, -math.inf, 1.5]), st.floats(width=64)
+)
+
+
+def _sql_double(v: float) -> str:
+    if math.isnan(v):
+        return "double('NaN')"
+    return f"double('{'-' if v < 0 else ''}Infinity')" if math.isinf(v) else f"double('{v!r}')"
+
+
+@settings(max_examples=20, deadline=None)
+@given(
+    st.integers(min_value=-(2**63), max_value=2**63 - 1),
+    st.integers(min_value=0, max_value=5).flatmap(
+        lambda d: st.lists(st.lists(element, min_size=d, max_size=d), min_size=1, max_size=6)
+    ),
+)
+def test_numpy_xxhash64_matches_spark(spark, seed, rows):
+    """The local phase's row rank is Spark's ``xxhash64(lit(s),
+    features)`` bit for bit, over arrays built in Spark SQL: -0.0, NaN,
+    ±Infinity and empty arrays included, int and long literals alike."""
+    values = ", ".join(
+        f"({i}, cast(array({', '.join(map(_sql_double, r))}) as array<double>))" for i, r in enumerate(rows)
+    )
+    df = spark.sql(f"select * from values {values} as t(id, features)")
+    seeds = SEEDS + [seed]
+    got = df.select("id", *(F.xxhash64(F.lit(s), "features") for s in seeds)).orderBy("id").collect()
+    X = np.array(rows, dtype=np.float64).reshape(len(rows), len(rows[0]))
+    for j, s in enumerate(seeds):
+        assert [r[j + 1] for r in got] == spark_xxhash64(s, X).tolist(), s

@@ -23,6 +23,7 @@ def test_run_pipeline_local(spark):
     assert rep["rows"]["train"] + rep["rows"]["test"] == rep["rows"]["total"] == 120
     assert rep["performance"]["accuracy"] > 0.9
     assert rep["complexity"]["n_trees"] == 3
+    assert rep["fit"] == {}
     assert all(t >= 0 for t in rep["timing"].values())
 
 
@@ -34,6 +35,10 @@ def test_run_pipeline_rows_total_is_train_plus_test(spark):
     rep = run_pipeline(df, model="global", max_depth=4)
     assert rep["rows"]["total"] == 65
     assert rep["rows"]["train"] + rep["rows"]["test"] == 65
+    # the global fit's own record: this small set is held from the root
+    assert rep["fit"]["local_from_depth"] == 0
+    assert rep["fit"]["held_rows"] == rep["rows"]["train"]
+    assert 2 <= rep["fit"]["jobs"] <= 3
 
 
 def test_partition_sweep_report(spark, tmp_path):
