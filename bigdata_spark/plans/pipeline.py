@@ -3,7 +3,8 @@ ingest → stats/split → preprocess → train → predict → evaluate →
 report, looped over partition counts for speedup analysis.
 
 Spark-first differences from the reference:
-- stratified split is one rand pass, not an all-columns anti-join,
+- stratified split is one content-hash pass
+  (``sampling.content_uniform``), not an all-columns anti-join,
 - local training is applyInPandas, not an RDD hop,
 - the report is the same nested shape (performance/timing/complexity →
   JSON sink, S7 parity with evaluation.py:313-347).

@@ -1,20 +1,21 @@
-"""Extended TPC-H coverage over the TPC-H-ish testdata.
+"""TPC-H Q2, Q8, Q11, Q15, Q16, Q17, Q19 and Q20 over the TPC-H-ish
+testdata.
 
-The driver schema has no ``partsupp`` table and trims several columns
-(no l_commitdate/l_receiptdate, no c_phone/o_comment), so the queries
-that reference them are ADAPTED — the adaptation is named per query.
-Join/aggregate shapes and the optimizer features each query exercises
-(correlated scalar subqueries, OR-of-ANDs predicate pushdown, count
-histograms, having-on-max, anti-join existence checks) are preserved.
+The driver schema has no ``partsupp`` table, so Q2/Q11/Q16/Q20 run
+over a partsupp DERIVED deterministically with the spec's own
+structure (see ``_derived_partsupp``). The optimizer features each
+query exercises (correlated scalar subqueries, OR-of-ANDs predicate
+pushdown, having-on-max, NOT-IN exclusion) are those of the spec.
 
 Scale notes: every dim side (region/nation/supplier/part + derived
 per-part aggregates) is broadcast explicitly; fact-side joins shuffle
 on their keys; all money sums are exact DECIMAL → DOUBLE at the edge
 (cross-engine float discipline, plans/__init__)."""
 
+
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
@@ -95,69 +96,6 @@ GROUP BY 1
 """
 
 
-# --- Q9 (adapted): revenue by supplier nation and year --------------------
-
-def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q9 adapted: the schema has no partsupp/ps_supplycost, so profit
-    degrades to discounted revenue; the join/aggregate shape (part-name
-    LIKE scan, supplier-nation rollup by year) is Q9's."""
-    l = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").contains("widget"))
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        l.join(p, l.l_partkey == p.p_partkey)
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(s, l.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .groupBy(F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year"))
-        .agg(F.sum(_vol()).cast("double").alias("sum_revenue"))
-    )
-
-
-TPCH_Q9_SQL = """
-SELECT n_name AS nation, year(o_orderdate) AS o_year,
-  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS sum_revenue
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-JOIN orders ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-WHERE p_name LIKE '%widget%'
-GROUP BY 1, 2
-"""
-
-
-# --- Q13 (adapted): customer order-count distribution ---------------------
-
-def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer distribution histogram: left join keeps zero-order
-    customers, the excluded class is an order attribute (adapted from
-    o_comment NOT LIKE to o_orderpriority <> '1-URGENT' — same
-    join-with-residual-condition shape)."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") != "1-URGENT"
-    )
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count("*").alias("custdist"))
-
-
-TPCH_Q13_SQL = """
-SELECT c_count, COUNT(*) AS custdist FROM (
-  SELECT c_custkey, COUNT(o_orderkey) AS c_count
-  FROM customer LEFT JOIN orders
-    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-  GROUP BY c_custkey
-) GROUP BY c_count
-"""
-
-
 # --- Q15: top supplier(s) by quarterly revenue ----------------------------
 
 def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -194,35 +132,6 @@ WITH revenue AS (
 SELECT s_suppkey, s_name, total_revenue
 FROM supplier JOIN revenue ON s_suppkey = l_suppkey
 WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-"""
-
-
-# --- Q16 (adapted): supplier counts by part attributes --------------------
-
-def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q16 adapted: no partsupp, so "suppliers offering the part" means
-    suppliers OBSERVED shipping it in lineitem. Same shape: negated
-    filters on the part dim, count-distinct rollup over three part
-    attributes."""
-    p = load_table(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#1")
-        & (~F.col("p_type").startswith("PROMO"))
-        & F.col("p_size").isin(1, 4, 9, 14, 19, 23, 36, 45)
-    )
-    l = load_table(spark, sf_dir, "lineitem")
-    return (
-        l.join(p, l.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
-    )
-
-
-TPCH_Q16_SQL = """
-SELECT p_brand, p_type, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE p_brand <> 'Brand#1' AND p_type NOT LIKE 'PROMO%'
-  AND p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
-GROUP BY 1, 2, 3
 """
 
 
@@ -303,318 +212,23 @@ WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 1 
 """
 
 
-# --- Q22 (adapted): dormant high-balance customers ------------------------
-
-def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q22 adapted: the schema has no c_phone, so the 'country code'
-    becomes c_nationkey % 10, and 'no orders' becomes 'no orders since
-    2000' (every synthetic customer has SOME order — the unfiltered
-    anti-join would be vacuously empty). Shape preserved: scalar
-    above-average balance threshold + NOT EXISTS anti-join + per-code
-    rollup."""
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        (F.col("c_nationkey") % 10).alias("cntrycode"),
-        F.col("c_acctbal"),
-    )
-    elig = c.filter(F.col("cntrycode").isin(1, 3, 5, 7))
-    avg_df = (
-        elig.filter(F.col("c_acctbal") > 0)
-        .agg(
-            (F.sum(_dec2("c_acctbal")).cast("double") / F.count("*")).alias("avg_bal")
-        )
-    )
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= F.to_timestamp(F.lit("2000-01-01"))
-    )
-    return (
-        elig.join(F.broadcast(avg_df))
-        .filter(F.col("c_acctbal") > F.col("avg_bal"))
-        .join(o, elig.c_custkey == o.o_custkey, "left_anti")
-        .groupBy("cntrycode")
-        .agg(
-            F.count("*").alias("numcust"),
-            F.sum(_dec2("c_acctbal")).cast("double").alias("totacctbal"),
-        )
-    )
-
-
-TPCH_Q22_SQL = """
-WITH elig AS (
-  SELECT c_custkey, c_nationkey % 10 AS cntrycode, c_acctbal
-  FROM customer WHERE c_nationkey % 10 IN (1, 3, 5, 7)
-),
-thresh AS (
-  SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_bal
-  FROM elig WHERE c_acctbal > 0
-)
-SELECT cntrycode, COUNT(*) AS numcust,
-  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-FROM elig, thresh
-WHERE c_acctbal > avg_bal
-  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-                  AND o_orderdate >= TIMESTAMP '2000-01-01')
-GROUP BY cntrycode
-"""
-
-
-# --- Q2: minimum-cost supplier (adapted: no partsupp) ---------------------
-
-def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2 adapted — the schema has no partsupp, so the part-supplier
-    cost relation is DERIVED from lineitem: cost(part, supp) = min unit
-    price ever charged (exact-decimal price/qty taken in double, same
-    op order as the oracle). The shape is preserved: correlated min
-    subquery per part over region-restricted suppliers, decorrelated
-    into a per-part min joined back on equality. Dims broadcast; the
-    derived ps table shuffles once on (part, supp)."""
-    l = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    p = load_table(spark, sf_dir, "part").filter(
-        (F.col("p_size") == 4) & (F.col("p_type") == "SMALL")
-    )
-    unit = _dec2("l_extendedprice").cast("double") / _dec2("l_quantity").cast("double")
-    ps = l.groupBy("l_partkey", "l_suppkey").agg(F.min(unit).alias("ps_cost"))
-    eu = (
-        ps.join(s, ps.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-    )
-    best = eu.groupBy(F.col("l_partkey").alias("bp_key")).agg(
-        F.min("ps_cost").alias("min_cost")
-    )
-    return (
-        eu.join(p, eu.l_partkey == p.p_partkey)
-        .join(best, eu.l_partkey == F.col("bp_key"))
-        .filter(F.col("ps_cost") == F.col("min_cost"))
-        .select(
-            "s_acctbal", "s_name", F.col("n_name"), "p_partkey",
-            F.round("ps_cost", 9).alias("supply_cost"),
-        )
-        .orderBy(F.desc("s_acctbal"), "n_name", "s_name", "p_partkey")
-        .limit(100)
-    )
-
-
-TPCH_Q2_SQL = """
-WITH ps AS (
-  SELECT l_partkey, l_suppkey,
-         MIN(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) AS DOUBLE)
-             / CAST(CAST(l_quantity AS DECIMAL(18,2)) AS DOUBLE)) AS ps_cost
-  FROM lineitem GROUP BY 1, 2
-),
-eu AS (
-  SELECT ps.*, s_acctbal, s_name, n_name
-  FROM ps
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation ON s_nationkey = n_nationkey
-  JOIN region ON n_regionkey = r_regionkey
-  WHERE r_name = 'EUROPE'
-),
-best AS (SELECT l_partkey AS bp_key, MIN(ps_cost) AS min_cost FROM eu GROUP BY 1)
-SELECT s_acctbal, s_name, n_name, p_partkey, ROUND(ps_cost, 9) AS supply_cost
-FROM eu
-JOIN part ON l_partkey = p_partkey
-JOIN best ON l_partkey = bp_key
-WHERE p_size = 4 AND p_type = 'SMALL' AND ps_cost = min_cost
-ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-LIMIT 100
-"""
-
-
-# --- Q11: important stock (adapted: no partsupp) --------------------------
-
-def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q11 adapted — part-supplier "stock value" is the exact-decimal
-    lineitem revenue of NATION_7 suppliers. The scalar-subquery
-    threshold (group value > 0.001 · total) survives: the total is a
-    1-row broadcast crossJoin, both sides exact DECIMAL cast to DOUBLE
-    for the compare in identical op order."""
-    l = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
-    base = (
-        l.join(s, l.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .select("l_partkey", _dec2("l_extendedprice").alias("v"))
-    )
-    per_part = base.groupBy("l_partkey").agg(F.sum("v").alias("value_dec"))
-    total = base.agg(F.sum("v").alias("total_dec"))
-    return (
-        per_part.crossJoin(F.broadcast(total))
-        .filter(
-            F.col("value_dec").cast("double")
-            > F.col("total_dec").cast("double") * 0.001
-        )
-        .select("l_partkey", F.col("value_dec").cast("double").alias("value"))
-        .orderBy(F.desc("value"), "l_partkey")
-    )
-
-
-TPCH_Q11_SQL = """
-WITH base AS (
-  SELECT l_partkey, CAST(l_extendedprice AS DECIMAL(18,2)) AS v
-  FROM lineitem
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation ON s_nationkey = n_nationkey
-  WHERE n_name = 'NATION_7'
-),
-per_part AS (SELECT l_partkey, SUM(v) AS value_dec FROM base GROUP BY 1),
-tot AS (SELECT SUM(v) AS total_dec FROM base)
-SELECT l_partkey, CAST(value_dec AS DOUBLE) AS value
-FROM per_part CROSS JOIN tot
-WHERE CAST(value_dec AS DOUBLE) > CAST(total_dec AS DOUBLE) * 0.001
-ORDER BY value DESC, l_partkey
-"""
-
-
-# --- Q20: potential part promotion (adapted) ------------------------------
-
-def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q20 adapted — no partsupp/availqty, so the inner threshold is on
-    shipped quantity directly: suppliers in NATION_5 who shipped more
-    than 100 units of 'small %'-named parts during 1997. The nested
-    semi-join chain (supplier ← qualifying-supplier set ← part set) is
-    the point of Q20 and is preserved: part filter broadcasts into the
-    fact scan, the qualifying set is a partial-aggregated groupBy, and
-    the outer supplier probe is a left-semi join."""
-    l = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.to_timestamp(F.lit("1997-01-01")))
-        & (F.col("l_shipdate") < F.to_timestamp(F.lit("1998-01-01")))
-    )
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").startswith("small"))
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_5")
-    qualifying = (
-        l.join(p, l.l_partkey == p.p_partkey)
-        .groupBy("l_suppkey")
-        .agg(F.sum(_dec2("l_quantity")).alias("qty"))
-        .filter(F.col("qty").cast("double") > 100.0)
-    )
-    return (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(qualifying, s.s_suppkey == qualifying.l_suppkey, "left_semi")
-        .select("s_name", "s_acctbal")
-        .orderBy("s_name")
-    )
-
-
-TPCH_Q20_SQL = """
-SELECT s_name, s_acctbal
-FROM supplier
-JOIN nation ON s_nationkey = n_nationkey
-WHERE n_name = 'NATION_5'
-  AND s_suppkey IN (
-    SELECT l_suppkey FROM lineitem
-    JOIN part ON l_partkey = p_partkey
-    WHERE p_name LIKE 'small%'
-      AND l_shipdate >= TIMESTAMP '1997-01-01'
-      AND l_shipdate < TIMESTAMP '1998-01-01'
-    GROUP BY l_suppkey
-    HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) > 100.0
-  )
-ORDER BY s_name
-"""
-
-
-# --- Q21: suppliers who kept orders waiting (adapted) ---------------------
-
-def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q21 adapted — no commit/receipt dates, so "late" means shipped
-    more than 60 days after the order date. For finished ('F') orders:
-    count, per NATION_3 supplier, the late lines in multi-supplier
-    orders where that supplier was the ONLY late one — the original's
-    EXISTS (another supplier in the order) + NOT EXISTS (another late
-    supplier) pair, expressed as a left-semi and a left-anti join on
-    the order key. All verdict sides are partial-aggregated before the
-    joins; dims broadcast."""
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    l = load_table(spark, sf_dir, "lineitem")
-    lo = l.join(o, l.l_orderkey == o.o_orderkey).select(
-        "l_orderkey", "l_suppkey",
-        (F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"))
-        .alias("late"),
-    )
-    l1 = (
-        lo.filter("late")
-        .join(s, F.col("l_suppkey") == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .select("l_orderkey", "l_suppkey", "s_name")
-    )
-    others = lo.select(
-        F.col("l_orderkey").alias("o2_key"), F.col("l_suppkey").alias("o2_supp"),
-        F.col("late").alias("o2_late"),
-    )
-    exists2 = l1.join(
-        others,
-        (l1.l_orderkey == F.col("o2_key")) & (l1.l_suppkey != F.col("o2_supp")),
-        "left_semi",
-    )
-    not3 = exists2.join(
-        others.filter("o2_late"),
-        (exists2.l_orderkey == F.col("o2_key"))
-        & (exists2.l_suppkey != F.col("o2_supp")),
-        "left_anti",
-    )
-    return (
-        not3.groupBy("s_name")
-        .agg(F.count("*").alias("numwait"))
-        .orderBy(F.desc("numwait"), "s_name")
-        .limit(100)
-    )
-
-
-TPCH_Q21_SQL = """
-WITH lo AS (
-  SELECT l_orderkey, l_suppkey,
-         l_shipdate > o_orderdate + INTERVAL 60 DAY AS late
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  WHERE o_orderstatus = 'F'
-),
-l1 AS (
-  SELECT lo.l_orderkey, lo.l_suppkey, s_name
-  FROM lo
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation ON s_nationkey = n_nationkey
-  WHERE late AND n_name = 'NATION_3'
-)
-SELECT s_name, COUNT(*) AS numwait
-FROM l1
-WHERE EXISTS (
-    SELECT 1 FROM lo o2
-    WHERE o2.l_orderkey = l1.l_orderkey AND o2.l_suppkey <> l1.l_suppkey
-  )
-  AND NOT EXISTS (
-    SELECT 1 FROM lo o3
-    WHERE o3.l_orderkey = l1.l_orderkey AND o3.l_suppkey <> l1.l_suppkey
-      AND o3.late
-  )
-GROUP BY s_name
-ORDER BY numwait DESC, s_name
-LIMIT 100
-"""
-
-
-# --- True Q2/Q11/Q16/Q20 over a DERIVED partsupp --------------------------
+# --- Q2/Q11/Q16/Q20 over a DERIVED partsupp ------------------------------
 #
-# The driver corpus has no partsupp table, so the four queries above
-# run ADAPTED shapes. Here partsupp is DERIVED deterministically with
-# the TPC-H spec's own structure (dbgen: 4 suppliers per part,
-# ps_suppkey = (p + i·(S/4 + p div S)) mod S, 0-based keys) and
-# md5-portable ps_availqty / ps_supplycost, so the UNADAPTED query
-# shapes — correlated min over partsupp, stock-value scalar subquery,
-# NOT-IN supplier exclusion, availqty-vs-shipped correlated threshold
-# — run against the same relation in both engines. At toy supplier
-# counts the spec stride can collide (S=10 → step ≡ 0 mod S for some
-# parts); the DISTINCT keeps (partkey, suppkey) a key, exactly like
-# the real table. ps_supplycost is carried as integer CENTS so every
-# aggregate is exact BIGINT math; division by 100 happens once, in
-# DOUBLE, at the output edge (cross-engine float discipline).
-# Scale shape: partsupp = part × explode(sequence(0,3)) — narrow, no
+# The driver corpus has no partsupp table. Here partsupp is DERIVED
+# deterministically with the TPC-H spec's own structure (dbgen: 4
+# suppliers per part, ps_suppkey = (p + i·(S/4 + p div S)) mod S,
+# 0-based keys) and md5-portable ps_availqty / ps_supplycost, so the
+# UNADAPTED query shapes — correlated min over partsupp, stock-value
+# scalar subquery, NOT-IN supplier exclusion, availqty-vs-shipped
+# correlated threshold — run against the same relation in both
+# engines. At toy supplier counts the spec stride can collide (S=10 →
+# step ≡ 0 mod S for some parts); the DISTINCT keeps (partkey, suppkey)
+# a key, exactly like the real table. ps_supplycost is carried as
+# integer CENTS so every aggregate is exact BIGINT math; division by
+# 100 happens once, in DOUBLE, at the output edge (cross-engine float
+# discipline). Scale shape: partsupp = part × explode(sequence(0,3)) —
+# narrow, no shuffle to build; one distinct on (pk, sk); the supplier
+# count S is a driver scalar (dim-table count, bounded).
 # shuffle to build; one distinct on (pk, sk); the supplier count S is
 # a driver scalar (dim-table count, bounded).
 
@@ -670,7 +284,7 @@ ps AS (
 """
 
 
-def tpch_q2_true(spark: SparkSession, sf_dir: str) -> DataFrame:
+def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE Q2 over the derived partsupp: minimum-cost EUROPE supplier
     per qualifying part — the correlated MIN subquery decorrelated
     into a per-part min joined back on equality. partsupp shuffles
@@ -703,7 +317,7 @@ def tpch_q2_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TPCH_Q2_TRUE_SQL = f"""
+TPCH_Q2_SQL = f"""
 WITH {_PS_SQL.strip()},
 eu AS (
   SELECT ps.*, s_acctbal, s_name, n_name
@@ -728,7 +342,7 @@ LIMIT 100
 """
 
 
-def tpch_q11_true(spark: SparkSession, sf_dir: str) -> DataFrame:
+def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE Q11: stock value = ps_supplycost · ps_availqty of NATION_7
     suppliers, per part, above 0.001 of the national total (the scalar
     subquery is a 1-row broadcast crossJoin). All sums are exact
@@ -761,7 +375,7 @@ def tpch_q11_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TPCH_Q11_TRUE_SQL = f"""
+TPCH_Q11_SQL = f"""
 WITH {_PS_SQL.strip()},
 base AS (
   SELECT ps_partkey, ps_cost_cents * ps_availqty AS v_cents
@@ -782,7 +396,7 @@ ORDER BY value DESC, ps_partkey
 """
 
 
-def tpch_q16_true(spark: SparkSession, sf_dir: str) -> DataFrame:
+def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE Q16: distinct partsupp suppliers per (brand, type, size)
     for non-excluded parts, minus the 'complaints' supplier set. The
     corpus has no s_comment, so the excluded set is a deterministic
@@ -813,7 +427,7 @@ def tpch_q16_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TPCH_Q16_TRUE_SQL = f"""
+TPCH_Q16_SQL = f"""
 WITH {_PS_SQL.strip()}
 SELECT p_brand, p_type, p_size,
        COUNT(DISTINCT ps_suppkey) AS supplier_cnt
@@ -830,7 +444,7 @@ ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
 """
 
 
-def tpch_q20_true(spark: SparkSession, sf_dir: str) -> DataFrame:
+def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE Q20: NATION_5 suppliers holding excess stock — partsupp
     rows for 'small%' parts where ps_availqty exceeds half the 1997
     shipped quantity of that (part, supplier). The correlated inner
@@ -868,7 +482,7 @@ def tpch_q20_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TPCH_Q20_TRUE_SQL = f"""
+TPCH_Q20_SQL = f"""
 WITH {_PS_SQL.strip()},
 shipped AS (
   SELECT l_partkey AS sq_part, l_suppkey AS sq_supp,
@@ -895,20 +509,12 @@ ORDER BY s_name
 
 
 QUERIES = {
-    "tpch_q2_adapted": (tpch_q2, TPCH_Q2_SQL),
-    "tpch_q2": (tpch_q2_true, TPCH_Q2_TRUE_SQL),
-    "tpch_q11": (tpch_q11_true, TPCH_Q11_TRUE_SQL),
-    "tpch_q16": (tpch_q16_true, TPCH_Q16_TRUE_SQL),
-    "tpch_q20": (tpch_q20_true, TPCH_Q20_TRUE_SQL),
-    "tpch_q11_adapted": (tpch_q11, TPCH_Q11_SQL),
-    "tpch_q20_adapted": (tpch_q20, TPCH_Q20_SQL),
-    "tpch_q21_adapted": (tpch_q21, TPCH_Q21_SQL),
+    "tpch_q2": (tpch_q2, TPCH_Q2_SQL),
     "tpch_q8": (tpch_q8, TPCH_Q8_SQL),
-    "tpch_q9_adapted": (tpch_q9, TPCH_Q9_SQL),
-    "tpch_q13_adapted": (tpch_q13, TPCH_Q13_SQL),
+    "tpch_q11": (tpch_q11, TPCH_Q11_SQL),
     "tpch_q15": (tpch_q15, TPCH_Q15_SQL),
-    "tpch_q16_adapted": (tpch_q16, TPCH_Q16_SQL),
+    "tpch_q16": (tpch_q16, TPCH_Q16_SQL),
     "tpch_q17": (tpch_q17, TPCH_Q17_SQL),
     "tpch_q19": (tpch_q19, TPCH_Q19_SQL),
-    "tpch_q22_adapted": (tpch_q22, TPCH_Q22_SQL),
+    "tpch_q20": (tpch_q20, TPCH_Q20_SQL),
 }

@@ -1,14 +1,13 @@
-"""TRUE TPC-H Q4/Q9/Q12/Q13/Q21/Q22 over derived columns.
+"""TPC-H Q4/Q9/Q12/Q13/Q21/Q22 over derived columns, plus Q7/Q10/Q14/Q18.
 
-The driver corpus lacks the columns these six queries predicate on
+The driver corpus lacks the columns six of these queries predicate on
 (``l_commitdate``/``l_receiptdate``/``l_shipmode``, ``o_comment``,
-``c_phone``), so until now they ran only as ADAPTED shapes
-(``plans/tpch_ext.py``). Here the missing columns are DERIVED
-deterministically — the same trick that de-adapted Q2/Q11/Q16/Q20 via a
-derived partsupp — so the UNADAPTED spec shapes (EXISTS over late
-lineitems, the Q21 exists/not-exists chain, Q13's comment anti-pattern,
-Q22's phone-prefix cohort) run against identical relations in both
-engines:
+``c_phone``). Here the missing columns are DERIVED deterministically —
+the same trick ``plans/tpch_ext.py`` uses for partsupp — so the spec
+shapes (EXISTS over late lineitems, the Q21 exists/not-exists chain,
+Q13's comment anti-pattern, Q22's phone-prefix cohort) run against
+identical relations in both engines. Q7/Q10/Q14/Q18 need no derived
+column. The derivations:
 
 - ``l_receiptdate`` = l_shipdate + 1..30 days, ``l_commitdate`` =
   l_shipdate - 30..+30 days, ``l_shipmode`` = one of the 7 spec modes —
@@ -30,8 +29,7 @@ Money math follows the package's cross-engine float discipline: Q9's
 profit is computed entirely in integer 1e-4-dollar units
 (cents × (100 - discount_bps)) summed as BIGINT, divided by 10⁴ once in
 DOUBLE at the output edge. Reference parity: the reference's engine
-runs the full TPC-H suite natively (see SURVEY.md §2); these six close
-the last adapted gaps so all 22 shapes exist unadapted.
+runs the full TPC-H suite natively (see SURVEY.md §2).
 
 Scale shape: every derived column is a narrow projection computed
 inside the scan stage (no shuffle, no UDF — whole-stage codegen md5),
@@ -44,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
-from .tpch_ext import _derived_partsupp, _PS_SQL
+from .tpch_ext import _dec2, _derived_partsupp, _PS_SQL
 
 _MODES = ("REG AIR", "AIR", "RAIL", "SHIP", "TRUCK", "MAIL", "FOB")
 
@@ -448,9 +446,8 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT-EXISTS leaves the result EMPTY (both engines agree on empty);
     the first genuinely order-less customers appear at sf0.1 — unlike
     dbgen, which leaves a third of custkeys order-less by
-    construction. The adapted twin (tpch_q22_adapted) stays the
-    non-degenerate small-SF test. Plan: customer anti-join orders,
-    broadcast scalar threshold."""
+    construction. Plan: customer anti-join orders, broadcast scalar
+    threshold."""
     cohort = _customer_ext(spark, sf_dir).filter(
         F.substring("c_phone", 1, 2).isin(*_Q22_CODES)
     )
@@ -500,11 +497,200 @@ ORDER BY cntrycode
 """
 
 
+# --- TPC-H Q7: volume shipping between two nations --------------------------
+
+def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bi-national shipping volume: lineitem ⋈ supplier ⋈ nation (supp
+    side) and ⋈ orders ⋈ customer ⋈ nation (cust side), grouped by
+    nation pair × ship year. Both nation joins broadcast; the only
+    fact-scale shuffles are the orderkey join and the final group."""
+    n1, n2 = "NATION_1", "NATION_2"
+    l = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    nat = load_table(spark, sf_dir, "nation")
+    supp_n = nat.select(
+        F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
+    )
+    cust_n = nat.select(
+        F.col("n_nationkey").alias("c_nkey"), F.col("n_name").alias("cust_nation")
+    )
+    volume = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")
+    joined = (
+        l.join(s, l.l_suppkey == s.s_suppkey)
+        .join(F.broadcast(supp_n), F.col("s_nationkey") == F.col("s_nkey"))
+        .join(o, l.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(F.broadcast(cust_n), F.col("c_nationkey") == F.col("c_nkey"))
+        .filter(
+            ((F.col("supp_nation") == n1) & (F.col("cust_nation") == n2))
+            | ((F.col("supp_nation") == n2) & (F.col("cust_nation") == n1))
+        )
+    )
+    return (
+        joined.groupBy(
+            "supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")
+        )
+        .agg(F.sum(volume).cast("double").alias("revenue"))
+        .orderBy("supp_nation", "cust_nation", "l_year")
+    )
+
+
+TPCH_Q7_SQL = """
+SELECT supp_nation, cust_nation, l_year,
+       CAST(SUM(volume) AS DOUBLE) AS revenue
+FROM (
+  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+         EXTRACT(year FROM l_shipdate) AS l_year,
+         CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6)) AS volume
+  FROM lineitem
+  JOIN supplier ON l_suppkey = s_suppkey
+  JOIN nation n1 ON s_nationkey = n1.n_nationkey
+  JOIN orders ON l_orderkey = o_orderkey
+  JOIN customer ON o_custkey = c_custkey
+  JOIN nation n2 ON c_nationkey = n2.n_nationkey
+  WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+     OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
+)
+GROUP BY supp_nation, cust_nation, l_year
+ORDER BY supp_nation, cust_nation, l_year
+"""
+
+
+# --- TPC-H Q10: returned-item reporting (reference join shapes J2/J3 at
+# star-schema scale; SURVEY §2.4) --------------------------------------------
+
+def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """customer ⋈ orders ⋈ lineitem(returnflag='R') ⋈ nation, top 20 by
+    revenue. nation is broadcast (25 rows at any sf); the fact-side
+    joins shuffle on their keys and AQE broadcasts the filtered
+    customer side when it fits."""
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= F.to_timestamp(F.lit("1997-01-01")))
+        & (F.col("o_orderdate") < F.to_timestamp(F.lit("1998-01-01")))
+    )
+    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    n = load_table(spark, sf_dir, "nation")
+    revenue = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")
+    return (
+        l.join(o, l.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .groupBy("c_custkey", "c_name", "n_name")
+        .agg(F.sum(revenue).cast("double").alias("revenue"))
+        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
+        .limit(20)
+    )
+
+
+TPCH_Q10_SQL = """
+SELECT c_custkey, c_name, n_name,
+  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+FROM lineitem
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN nation ON c_nationkey = n_nationkey
+WHERE l_returnflag = 'R'
+  AND o_orderdate >= TIMESTAMP '1997-01-01'
+  AND o_orderdate < TIMESTAMP '1998-01-01'
+GROUP BY c_custkey, c_name, n_name
+ORDER BY revenue DESC, c_custkey
+LIMIT 20
+"""
+
+
+# --- TPC-H Q14: promo revenue ratio (broadcast dim join + conditional
+# aggregate F4 over a fact scan) ---------------------------------------------
+
+def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lineitem ⋈ part (part joins by stats/AQE — broadcast while the
+    dim fits, shuffle beyond); conditional revenue ratio.
+    The testdata's p_type domain has no 'PROMO%', so 'ECONOMY' plays
+    the promo class — same shape, same plan."""
+    l = load_table(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= F.to_timestamp(F.lit("1997-09-01")))
+        & (F.col("l_shipdate") < F.to_timestamp(F.lit("1997-10-01")))
+    )
+    p = load_table(spark, sf_dir, "part")
+    revenue = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")
+    joined = l.join(p, l.l_partkey == p.p_partkey)
+    return joined.agg(
+        (
+            F.lit(100.0)
+            * F.sum(F.when(F.col("p_type") == "ECONOMY", revenue).otherwise(F.lit(0).cast("decimal(18,6)"))).cast("double")
+            / F.sum(revenue).cast("double")
+        ).alias("promo_revenue_pct")
+    )
+
+
+TPCH_Q14_SQL = """
+SELECT 100.0
+  * CAST(SUM(CASE WHEN p_type = 'ECONOMY'
+            THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))
+            ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
+  / CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE)
+  AS promo_revenue_pct
+FROM lineitem JOIN part ON l_partkey = p_partkey
+WHERE l_shipdate >= TIMESTAMP '1997-09-01' AND l_shipdate < TIMESTAMP '1997-10-01'
+"""
+
+
+# --- TPC-H Q18: large-volume orders (agg → self-semi-join on agg result) ----
+
+def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Orders whose total quantity exceeds a threshold: grouped-HAVING
+    subquery joined back to orders/customer. One shuffle for the
+    quantity agg (map-side partials), then key-joins; the HAVING
+    filter shrinks the build side so AQE broadcasts it."""
+    l = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    big = (
+        l.groupBy("l_orderkey")
+        .agg(F.sum(_dec2("l_quantity")).alias("sum_qty_dec"))
+        .filter(F.col("sum_qty_dec") > 180)
+    )
+    return (
+        big.join(o, big.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .select(
+            "c_name",
+            "c_custkey",
+            "o_orderkey",
+            "o_orderdate",
+            "o_totalprice",
+            F.col("sum_qty_dec").cast("double").alias("sum_qty"),
+        )
+        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
+        .limit(100)
+    )
+
+
+TPCH_Q18_SQL = """
+SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
+       CAST(sum_qty_dec AS DOUBLE) AS sum_qty
+FROM (
+  SELECT l_orderkey, SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sum_qty_dec
+  FROM lineitem GROUP BY l_orderkey HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 180
+) big
+JOIN orders ON big.l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+ORDER BY o_totalprice DESC, o_orderkey
+LIMIT 100
+"""
+
+
 QUERIES = {
     "tpch_q4": (tpch_q4, TPCH_Q4_SQL),
+    "tpch_q7": (tpch_q7, TPCH_Q7_SQL),
     "tpch_q9": (tpch_q9, TPCH_Q9_SQL),
+    "tpch_q10": (tpch_q10, TPCH_Q10_SQL),
     "tpch_q12": (tpch_q12, TPCH_Q12_SQL),
     "tpch_q13": (tpch_q13, TPCH_Q13_SQL),
+    "tpch_q14": (tpch_q14, TPCH_Q14_SQL),
+    "tpch_q18": (tpch_q18, TPCH_Q18_SQL),
     "tpch_q21": (tpch_q21, TPCH_Q21_SQL),
     "tpch_q22": (tpch_q22, TPCH_Q22_SQL),
 }

@@ -53,31 +53,3 @@ def test_registry_md_matches_live_registry():
         f"REGISTRY.md drift — missing: {missing} ghost: {ghost}; "
         "run: python tools/gen_registry.py"
     )
-
-
-def test_bench_exclusions_documented_in_bench_notes():
-    """VERDICT r7 #8: the bench excluded-list must match BENCH_NOTES.md's
-    documented set exactly — no undocumented exclusion drift."""
-    import bench
-
-    path = os.path.join(ROOT, "BENCH_NOTES.md")
-    with open(path) as f:
-        text = f.read()
-    m = re.search(
-        r"### Bench exclusions \(drift-checked\)\n(.*?)(?:\n### |\n## |\Z)",
-        text,
-        flags=re.S,
-    )
-    assert m, "BENCH_NOTES.md lost its '### Bench exclusions' section"
-    documented = set(re.findall(r"^- `(\w+)`", m.group(1), flags=re.M))
-    live = set(bench.EXCLUDED)
-    undocumented = sorted(live - documented)
-    ghost = sorted(documented - live)
-    assert not undocumented and not ghost, (
-        f"bench exclusion drift — undocumented: {undocumented} "
-        f"ghost: {ghost}; update BENCH_NOTES.md '### Bench exclusions'"
-    )
-    # every excluded name must still be a live registry member (gate-only)
-    from bigdata_spark.plans import all_queries
-
-    assert live <= set(all_queries())

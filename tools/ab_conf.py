@@ -3,13 +3,14 @@
 Usage:
     python tools/ab_conf.py <sf_dir> <query,query,...> '<json-conf>'
 
-Runs each query 3x with the bench methodology (noop sink) in ONE fresh
+Runs each query 3x with a noop sink in ONE fresh
 session built with the given conf overrides on top of the engine
 defaults, and prints per-query minima plus the subset total. Run once
 per conf in separate processes so JVM/session state never leaks
 between variants.
 
-Development probe only — the graded bench stays bench.py.
+Development probe only — the benchmark is perfbench/ (see
+perfbench/README.md).
 """
 
 from __future__ import annotations

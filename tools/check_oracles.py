@@ -10,10 +10,11 @@ from __future__ import annotations
 
 import decimal
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _norm_val(v):
@@ -98,7 +99,7 @@ def main() -> int:
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
+        "region nation customer supplier part orders lineitem embeddings"
     ).split():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 

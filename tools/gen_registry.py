@@ -1,17 +1,15 @@
 """Generate REGISTRY.md — the navigable index of every registry query:
-name → implementation (module:line) → oracle type → bench warm seconds
-(from bench_details.json, when present).
+name → implementation (module:line) → oracle type.
 
-Run after adding queries or refreshing the bench:
+Run after adding or removing queries:
     python tools/gen_registry.py
 A pytest (tests/test_registry_doc.py) drift-checks the NAME column
 against the live registry, so a query can't land without reappearing
-here; timing refreshes alone don't fail the gate.
+here.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 
@@ -22,40 +20,25 @@ sys.path.insert(0, ROOT)
 def build_lines() -> list[str]:
     from bigdata_spark.plans import all_queries
 
-    details_path = os.path.join(ROOT, "bench_details.json")
-    warm: dict[str, float] = {}
-    bench_sf = None
-    if os.path.exists(details_path):
-        with open(details_path) as f:
-            d = json.load(f)
-        warm = d.get("queries", {})
-        bench_sf = d.get("sf")
-
     registry = all_queries()
     lines = [
         "# Query registry",
         "",
         f"{len(registry)} queries; every row with a `value` oracle is",
         "hash-compared against DuckDB by the correctness gate",
-        "(`tools/check_oracles.py`). Warm seconds are the per-query",
-        f"minimum from `bench_details.json` (sf={bench_sf}).",
+        "(`tools/check_oracles.py`).",
         "",
         "GENERATED by `tools/gen_registry.py` — do not edit by hand.",
         "",
-        "| query | implementation | oracle | warm s |",
-        "|---|---|---|---|",
+        "| query | implementation | oracle |",
+        "|---|---|---|",
     ]
     for name in sorted(registry):
         fn, sql = registry[name]
         code = fn.__code__
         rel = os.path.relpath(code.co_filename, ROOT)
-        where = f"`{rel}:{code.co_firstlineno}`"
         oracle = "value" if sql else "rows-only"
-        t = warm.get(name)
-        lines.append(
-            f"| {name} | {where} | {oracle} | "
-            f"{t if t is not None else '—'} |"
-        )
+        lines.append(f"| {name} | `{rel}:{code.co_firstlineno}` | {oracle} |")
     lines.append("")
     return lines
 

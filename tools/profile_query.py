@@ -1,13 +1,14 @@
 """Per-query profiling probe for optimization rounds.
 
 Usage:
-    python tools/profile_query.py <sf_dir> <query>[,<query>...] [--explain plans/r11 --tag before]
+    python tools/profile_query.py <sf_dir> <query>[,<query>...] [--explain <dir> --tag before]
 
-Times each named registry query with the bench methodology (noop sink,
-3 passes, min + median reported) and optionally writes
+Times each named registry query with a noop sink (3 passes, min +
+median reported) and optionally writes
 ``.explain('formatted')`` to ``<dir>/<query>_<tag>.txt``.
 
-This is a development probe only — the graded bench stays bench.py.
+This is a development probe only — the benchmark is perfbench/ (see
+perfbench/README.md).
 """
 
 from __future__ import annotations
