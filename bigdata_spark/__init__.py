@@ -1,21 +1,24 @@
-"""bigdata_spark — a distance-based time-series classifier on Spark.
+"""bigdata_spark — a PySpark-native analytics engine.
 
-A from-scratch re-expression of the reference time-series/relational
-pipeline (KRudd-E/BigData, surveyed in SURVEY.md) as idiomatic Spark
-DataFrame code: a global proximity tree grown across the cluster, a
-local forest of per-partition proximity trees, batch scoring and
-evaluation, on top of TPC-H relational plans checked against DuckDB.
+A from-scratch re-expression of the capabilities of the reference
+time-series/relational pipeline (KRudd-E/BigData, surveyed in SURVEY.md)
+as an idiomatic Spark DataFrame/SQL engine, extended with the
+large-scale training-data-pipeline operators (dedup, similarity search,
+text analysis, multimodal plumbing) that a 100 TB corpus needs.
 
 Layout:
     session     — SparkSession factory with scale-tuned defaults
     worker      — keeps PySpark's Python worker from re-reading its zip
-    sources     — parquet scans of the testdata catalog
-    operators   — stratified split, preprocessing, balanced repartition
-    functions   — native distance / nearest-exemplar column expressions
-    ml          — proximity tree core, global tree, local forest, DTW,
-                  evaluation
-    plans       — the experiment pipeline and the query registry: the 22
-                  TPC-H queries and four proximity-model checks
+    sources     — schema'd scans (parquet/csv/tsv), catalog of testdata
+    operators   — sampling/splits, preprocessing, partitioning
+    functions   — native array/distance/text column expressions
+    plans       — composed relational queries (TPC-H-ish analytics)
+    streaming   — event-time windows (tumbling/sliding/session), streams
+    ml          — proximity tree/forest, prediction, evaluation
+    text        — language-ID, quality scoring, tokenization, fingerprints
+    dedup       — exact, minhash-LSH, simhash, n-gram jaccard near-dup
+    similarity  — brute-force + LSH-bucketed ANN over embeddings
+    multimodal  — binary payload columns, PPM/WAV/PNG/JPEG/MP4 codecs
 """
 
 __version__ = "0.1.0"

@@ -1,6 +1,22 @@
-from .distances import euclidean_distance, nearest_exemplar_index
+from .distances import (
+    cosine_distance,
+    cosine_similarity,
+    dot_product,
+    euclidean_distance,
+    l2_norm,
+    manhattan_distance,
+    nearest_exemplar_index,
+)
+from .hashing import portable_hash64, shingles
 
 __all__ = [
+    "cosine_distance",
+    "cosine_similarity",
+    "dot_product",
     "euclidean_distance",
+    "l2_norm",
+    "manhattan_distance",
     "nearest_exemplar_index",
+    "portable_hash64",
+    "shingles",
 ]

@@ -1,10 +1,11 @@
-from .dtw import dtw_distance, dtw_upper_bound
+from .dtw import dtw_distance, dtw_distance_udf, dtw_upper_bound
 from .evaluation import balanced_accuracy, classification_metrics, confusion_matrix
 from .global_tree import GlobalProximityTree
 from .local_forest import LocalProximityForest
 
 __all__ = [
     "dtw_distance",
+    "dtw_distance_udf",
     "dtw_upper_bound",
     "balanced_accuracy",
     "classification_metrics",

@@ -164,6 +164,19 @@ def fast_dtw_pairwise_udf(radius: int = 1):
     return _fdtw
 
 
+def dtw_distance_udf(exemplar: list[float], window: int | None = None):
+    """Column function: DTW distance of an array column to a fixed
+    exemplar, as an Arrow-batched pandas UDF."""
+    ex = np.asarray(exemplar, dtype=np.float64)
+
+    @F.pandas_udf(DoubleType())
+    def _dtw(series: pd.Series) -> pd.Series:
+        stat_checked_zipimport()
+        return series.apply(lambda ts: dtw_distance(np.asarray(ts), ex, window=window))
+
+    return _dtw
+
+
 def dtw_pairwise_udf(window: int | None = None):
     """pandas UDF over two array columns → DTW distance per row."""
 

@@ -1,19 +1,19 @@
-"""Stratified train/test split (SURVEY §2.2 P4).
+"""Sampling & split operators (SURVEY §2.2 P1-P6).
 
-The split is seeded — the reference left ``F.rand()`` unseeded in two
-hot paths (reference code/src/preprocessing.py:74,
-code/src/global_model_manager.py:225); here runs are reproducible
-end-to-end.
+Every operator here is seeded — the reference left ``F.rand()`` unseeded
+in two hot paths (reference code/src/preprocessing.py:74,
+code/src/global_model_manager.py:225); our engine seeds everything so
+runs are reproducible end-to-end.
 
-Scale notes: the split is map-side and collects nothing to the driver.
-``stratified_split`` avoids the reference's all-columns anti-join
-(utilities.py:74 — a full shuffle of every column at 100 TB) by
-splitting on a deterministic per-row hash.
+Scale notes: all operators are map-side or one-shuffle; none collects
+unbounded data to the driver. ``stratified_split`` avoids the
+reference's all-columns anti-join (utilities.py:74 — a full shuffle of
+every column at 100 TB) by splitting on a deterministic per-row hash.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -24,11 +24,42 @@ def content_uniform(cols: list[str], seed: int) -> Column:
     session's input splits and shuffle partition count — the same row
     can land on different sides of a split across sessions, AQE
     replans, or stage retries. Hashing the row content instead makes
-    the split a pure function of the data: byte-
+    every sampling/split operator a pure function of the data: byte-
     identical results on any cluster layout, which is the only
     reproducibility guarantee that survives a 1000-executor run."""
     h = F.xxhash64(F.lit(seed), *[F.col(c) for c in cols])
     return F.pmod(h, F.lit(1 << 30)).cast("double") / F.lit(float(1 << 30))
+
+
+def bernoulli_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
+    """P1 — Bernoulli sample (reference data_ingestion.py:61)."""
+    if not 0.0 < fraction <= 1.0:
+        raise ValueError(f"fraction must be in (0, 1], got {fraction}")
+    if fraction == 1.0:
+        return df
+    return df.sample(fraction=fraction, seed=seed)
+
+def stratified_sample(
+    df: DataFrame, label_col: str, fraction: float, seed: int = 42
+) -> DataFrame:
+    """P2 — per-class equal-fraction sample (reference utilities.py:52-72).
+
+    ``sampleBy`` is map-side: no shuffle, no driver round-trip beyond the
+    distinct-labels collect (bounded by class cardinality).
+    """
+    labels = [r[0] for r in df.select(label_col).distinct().collect()]
+    fractions = {lbl: fraction for lbl in labels}
+    return df.stat.sampleBy(label_col, fractions, seed)
+
+
+def random_split(
+    df: DataFrame, weight: float, seed: int = 42, rand_col: str = "_rand"
+) -> tuple[DataFrame, DataFrame]:
+    """P3 — threshold split on a seeded rand column (reference utilities.py:36-50)."""
+    with_rand = df.withColumn(rand_col, F.rand(seed))
+    train = with_rand.filter(F.col(rand_col) <= weight).drop(rand_col)
+    test = with_rand.filter(F.col(rand_col) > weight).drop(rand_col)
+    return train, test
 
 
 def stratified_split(
@@ -54,3 +85,39 @@ def stratified_split(
     train = with_rand.filter(F.col("_rand") < train_fraction).drop("_rand")
     test = with_rand.filter(F.col("_rand") >= train_fraction).drop("_rand")
     return train, test
+
+
+def anti_join_complement(df: DataFrame, taken: DataFrame) -> DataFrame:
+    """J1/O4 — set-difference via left-anti join on all columns, exact
+    parity with the reference (utilities.py:74). Kept for semantics
+    parity; prefer ``stratified_split`` at scale."""
+    return df.join(taken, on=df.columns, how="left_anti")
+
+
+def group_topk_random_sample(
+    df: DataFrame,
+    group_cols: list[str],
+    k: int,
+    seed: int = 42,
+    order_col: str | None = None,
+) -> DataFrame:
+    """P5/W2 — k rows per group via ranking window (reference
+    global_model_manager.py:225-233).
+
+    Collecting only k·|groups| rows bounds the driver round-trip no
+    matter the table size — this is the reference's own "P2" collect-
+    minimization lesson, kept as a first-class operator. The random
+    order key is a content hash (see ``content_uniform``) so the draw
+    is layout-independent.
+    """
+    order = (
+        F.xxhash64(F.lit(seed), *[F.col(c) for c in df.columns])
+        if order_col is None
+        else F.col(order_col)
+    )
+    w = Window.partitionBy(*group_cols).orderBy(order)
+    return (
+        df.withColumn("_rank", F.row_number().over(w))
+        .filter(F.col("_rank") <= k)
+        .drop("_rank")
+    )

@@ -2,9 +2,8 @@
 
 Each submodule exposes ``QUERIES: dict[str, tuple[callable, str | None]]``
 mapping query name → (spark_fn, oracle_sql). ``spark_fn(spark, sf_dir)``
-returns a DataFrame; ``oracle_sql`` is equivalent ANSI SQL for DuckDB.
-The registry holds the 22 TPC-H queries (``relational``, ``tpch_ext``,
-``tpch_full``) and the four proximity-model checks (``mlq``).
+returns a DataFrame; ``oracle_sql`` is equivalent ANSI SQL for DuckDB
+(None → rows-only check for non-SQL-expressible ops).
 
 Cross-engine float discipline (why results hash-match exactly):
 - Sums of 2-decimal doubles are aggregated as DECIMAL (exact, order-
@@ -25,10 +24,46 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
 def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
-    from . import mlq, relational, tpch_ext, tpch_full
+    from . import (
+        coverage,
+        dedupq,
+        erq,
+        events,
+        extended,
+        graphq,
+        mlq,
+        multimodalq,
+        relational,
+        samplingq,
+        scaleq,
+        simq,
+        textq,
+        tpch_ext,
+        tpch_full,
+        qualityq,
+        statsq,
+    )
 
     out: dict[str, tuple[QueryFn, str | None]] = {}
-    for mod in (relational, tpch_ext, tpch_full, mlq):
+    for mod in (
+        relational,
+        tpch_ext,
+        tpch_full,
+        coverage,
+        extended,
+        events,
+        textq,
+        dedupq,
+        simq,
+        samplingq,
+        scaleq,
+        mlq,
+        multimodalq,
+        graphq,
+        qualityq,
+        statsq,
+        erq,
+    ):
         overlap = set(out) & set(mod.QUERIES)
         if overlap:
             raise ValueError(f"duplicate query names: {overlap}")

@@ -2,8 +2,7 @@
 named ``queries()`` entry yet: F1/F5 null handling, F6/F8 array pack +
 casts, F7 synthetic-id invariants, A6 global scalar agg, A8
 collect_list, A13 per-class precision/recall/F1, O2/O3 repartition
-invariants, S2/S3 TSV + in-memory source round-trip, and three more
-TPC-H-shaped star-schema queries (Q10/Q14/Q18) for join/agg breadth.
+invariants, and S2/S3 TSV + in-memory source round-trip.
 
 Scale notes: every query here is either a single-shuffle aggregate, a
 broadcast-dim join, or a structural-invariant probe whose data volume
@@ -24,130 +23,6 @@ from ..sources.catalog import load_table
 
 def _dec2(c: str) -> F.Column:
     return F.col(c).cast("decimal(18,2)")
-
-
-# --- TPC-H Q10: returned-item reporting (reference join shapes J2/J3 at
-# star-schema scale; SURVEY §2.4) --------------------------------------------
-
-def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """customer ⋈ orders ⋈ lineitem(returnflag='R') ⋈ nation, top 20 by
-    revenue. nation is broadcast (25 rows at any sf); the fact-side
-    joins shuffle on their keys and AQE broadcasts the filtered
-    customer side when it fits."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.to_timestamp(F.lit("1997-01-01")))
-        & (F.col("o_orderdate") < F.to_timestamp(F.lit("1998-01-01")))
-    )
-    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = load_table(spark, sf_dir, "nation")
-    revenue = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.sum(revenue).cast("double").alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(20)
-    )
-
-
-TPCH_Q10_SQL = """
-SELECT c_custkey, c_name, n_name,
-  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-  AND o_orderdate >= TIMESTAMP '1997-01-01'
-  AND o_orderdate < TIMESTAMP '1998-01-01'
-GROUP BY c_custkey, c_name, n_name
-ORDER BY revenue DESC, c_custkey
-LIMIT 20
-"""
-
-
-# --- TPC-H Q14: promo revenue ratio (broadcast dim join + conditional
-# aggregate F4 over a fact scan) ---------------------------------------------
-
-def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lineitem ⋈ part (part joins by stats/AQE — broadcast while the
-    dim fits, shuffle beyond); conditional revenue ratio.
-    The testdata's p_type domain has no 'PROMO%', so 'ECONOMY' plays
-    the promo class — same shape, same plan."""
-    l = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.to_timestamp(F.lit("1997-09-01")))
-        & (F.col("l_shipdate") < F.to_timestamp(F.lit("1997-10-01")))
-    )
-    p = load_table(spark, sf_dir, "part")
-    revenue = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")
-    joined = l.join(p, l.l_partkey == p.p_partkey)
-    return joined.agg(
-        (
-            F.lit(100.0)
-            * F.sum(F.when(F.col("p_type") == "ECONOMY", revenue).otherwise(F.lit(0).cast("decimal(18,6)"))).cast("double")
-            / F.sum(revenue).cast("double")
-        ).alias("promo_revenue_pct")
-    )
-
-
-TPCH_Q14_SQL = """
-SELECT 100.0
-  * CAST(SUM(CASE WHEN p_type = 'ECONOMY'
-            THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))
-            ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
-  / CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE)
-  AS promo_revenue_pct
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE l_shipdate >= TIMESTAMP '1997-09-01' AND l_shipdate < TIMESTAMP '1997-10-01'
-"""
-
-
-# --- TPC-H Q18: large-volume orders (agg → self-semi-join on agg result) ----
-
-def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Orders whose total quantity exceeds a threshold: grouped-HAVING
-    subquery joined back to orders/customer. One shuffle for the
-    quantity agg (map-side partials), then key-joins; the HAVING
-    filter shrinks the build side so AQE broadcasts it."""
-    l = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    big = (
-        l.groupBy("l_orderkey")
-        .agg(F.sum(_dec2("l_quantity")).alias("sum_qty_dec"))
-        .filter(F.col("sum_qty_dec") > 180)
-    )
-    return (
-        big.join(o, big.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .select(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            "o_orderdate",
-            "o_totalprice",
-            F.col("sum_qty_dec").cast("double").alias("sum_qty"),
-        )
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(100)
-    )
-
-
-TPCH_Q18_SQL = """
-SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-       CAST(sum_qty_dec AS DOUBLE) AS sum_qty
-FROM (
-  SELECT l_orderkey, SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sum_qty_dec
-  FROM lineitem GROUP BY l_orderkey HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 180
-) big
-JOIN orders ON big.l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-ORDER BY o_totalprice DESC, o_orderkey
-LIMIT 100
-"""
 
 
 # --- F1 + F5: null creation → dropna / fillna / coalesce repair -------------
@@ -538,67 +413,6 @@ def s2_tsv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 S2_SQL = "SELECT TRUE AS rowcount_preserved, TRUE AS values_roundtrip"
-
-
-# --- TPC-H Q7: volume shipping between two nations --------------------------
-
-def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bi-national shipping volume: lineitem ⋈ supplier ⋈ nation (supp
-    side) and ⋈ orders ⋈ customer ⋈ nation (cust side), grouped by
-    nation pair × ship year. Both nation joins broadcast; the only
-    fact-scale shuffles are the orderkey join and the final group."""
-    n1, n2 = "NATION_1", "NATION_2"
-    l = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    nat = load_table(spark, sf_dir, "nation")
-    supp_n = nat.select(
-        F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
-    )
-    cust_n = nat.select(
-        F.col("n_nationkey").alias("c_nkey"), F.col("n_name").alias("cust_nation")
-    )
-    volume = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")
-    joined = (
-        l.join(s, l.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(supp_n), F.col("s_nationkey") == F.col("s_nkey"))
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(cust_n), F.col("c_nationkey") == F.col("c_nkey"))
-        .filter(
-            ((F.col("supp_nation") == n1) & (F.col("cust_nation") == n2))
-            | ((F.col("supp_nation") == n2) & (F.col("cust_nation") == n1))
-        )
-    )
-    return (
-        joined.groupBy(
-            "supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")
-        )
-        .agg(F.sum(volume).cast("double").alias("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    )
-
-
-TPCH_Q7_SQL = """
-SELECT supp_nation, cust_nation, l_year,
-       CAST(SUM(volume) AS DOUBLE) AS revenue
-FROM (
-  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-         EXTRACT(year FROM l_shipdate) AS l_year,
-         CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6)) AS volume
-  FROM lineitem
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation n1 ON s_nationkey = n1.n_nationkey
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation n2 ON c_nationkey = n2.n_nationkey
-  WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-     OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
-)
-GROUP BY supp_nation, cust_nation, l_year
-ORDER BY supp_nation, cust_nation, l_year
-"""
 
 
 # --- P6: partition-local sample via mapPartitionsWithIndex ------------------
@@ -1347,10 +1161,6 @@ ORDER BY abc
 QUERIES = {
     "wh_abc_analysis": (wh_abc_analysis, WH_ABC_SQL),
     "f15_higher_order_funcs": (f15_higher_order_funcs, F15_HOF_SQL),
-    "tpch_q7": (tpch_q7, TPCH_Q7_SQL),
-    "tpch_q10": (tpch_q10, TPCH_Q10_SQL),
-    "tpch_q14": (tpch_q14, TPCH_Q14_SQL),
-    "tpch_q18": (tpch_q18, TPCH_Q18_SQL),
     "f1_null_repair": (f1_null_repair, F1_NULL_SQL),
     "f6_array_pack_casts": (f6_array_pack_casts, F6_ARRAY_SQL),
     "f7_id_invariants": (f7_id_invariants, F7_ID_SQL),

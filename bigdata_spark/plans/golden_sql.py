@@ -1,11 +1,13 @@
 """Render pinned-literal DuckDB oracles for deterministic queries whose
 computation is not SQL-expressible (seeded iterative training, DP
-distances) but whose OUTPUT is a pure function of the input data.
+distances, binary decode) but whose OUTPUT is a pure function of the
+input data.
 
-The queries are seeded and layout-independent (content-hash splits),
-so their exact outputs can be pinned as VALUES literals — a full
-row/schema/value-hash gate row instead of a rows-only check. The
-literals live in ``_golden.py`` (regenerated by
+Round 2 left five queries "rows-only" in the driver's correctness gate.
+They are seeded and (after the content-hash determinism pass) layout-
+independent, so their exact outputs can be pinned as VALUES literals —
+turning the weak rows-only check into a full row/schema/value-hash
+gate row. The literals live in ``_golden.py`` (regenerated by
 ``tools/pin_golden.py``); this module turns them into SQL.
 
 Bit-exactness: the driver hashes pandas frames bit-exactly, so double
@@ -31,6 +33,9 @@ def _lit(v, typ: str) -> str:
         return f"CAST({int(v)} AS BIGINT)"
     if typ == "boolean":
         return "TRUE" if v else "FALSE"
+    if typ == "varchar":
+        escaped = str(v).replace("'", "''")
+        return f"'{escaped}'"
     raise ValueError(f"unknown literal type {typ}")
 
 
@@ -42,6 +47,16 @@ def _values(rows, types) -> str:
 
 
 _UNPINNED = "SELECT NULL WHERE FALSE  -- not pinned yet: run tools/pin_golden.py"
+
+
+def values_oracle(name: str, schema: list[tuple[str, str]]) -> str:
+    """SF-independent oracle: SELECT the pinned rows verbatim."""
+    if name not in GOLDEN:  # bootstrap: query exists, literals not yet pinned
+        return _UNPINNED
+    rows = GOLDEN[name]
+    cols = ", ".join(c for c, _ in schema)
+    types = [t for _, t in schema]
+    return f"SELECT {cols} FROM (VALUES {_values(rows, types)}) AS g({cols})"
 
 
 def keyed_values_oracle(name: str, schema: list[tuple[str, str]]) -> str:

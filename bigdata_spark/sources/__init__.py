@@ -1,3 +1,13 @@
-from .catalog import load_table
+from .catalog import TABLES, load_table, load_tables, register_views
+from .readers import read_csv, read_parquet, read_tsv, require_nonempty
 
-__all__ = ["load_table"]
+__all__ = [
+    "TABLES",
+    "load_table",
+    "load_tables",
+    "register_views",
+    "read_csv",
+    "read_parquet",
+    "read_tsv",
+    "require_nonempty",
+]

@@ -1,5 +1,5 @@
-"""Catalog over the driver testdata (TPC-H-ish star schema +
-embeddings; TESTDATA.md)."""
+"""Catalog over the driver testdata (TPC-H-ish star schema + events +
+documents + embeddings; TESTDATA.md)."""
 
 from __future__ import annotations
 
@@ -7,6 +7,46 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+TABLES = (
+    "region",
+    "nation",
+    "customer",
+    "supplier",
+    "part",
+    "orders",
+    "lineitem",
+    "events",
+    "documents",
+    "embeddings",
+)
+
+DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if name == "events":
+        # events.ts has shipped as both parquet TIMESTAMP(NANOS) (no
+        # native Spark type — read nanos as long, truncate to µs exactly
+        # the way DuckDB/Arrow downcast ns → µs) and plain TIMESTAMP
+        # (MICROS). Branch on what the file actually contains rather
+        # than hard-coding one vintage of the generator.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        from pyspark.sql import functions as F
+        from pyspark.sql.types import LongType
+
+        df = spark.read.parquet(path)
+        if isinstance(df.schema["ts"].dataType, LongType):
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        return df
+    return spark.read.parquet(path)
+
+
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    return {name: load_table(spark, sf_dir, name) for name in TABLES}
+
+
+def register_views(spark: SparkSession, sf_dir: str) -> None:
+    """Register every table as a temp view for spark.sql queries."""
+    for name in TABLES:
+        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -2,11 +2,17 @@
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
 from bigdata_spark.functions.distances import (
+    cosine_distance,
+    cosine_similarity,
+    dot_product,
     euclidean_distance,
+    manhattan_distance,
     nearest_exemplar_index,
 )
 
@@ -21,6 +27,49 @@ def ts_df(spark):
     return spark.createDataFrame(
         rows, "id int, time_series array<double>, exemplars array<array<double>>"
     )
+
+
+def test_manhattan_hand_checked(ts_df):
+    out = (
+        ts_df.select(
+            "id",
+            *[
+                manhattan_distance("time_series", F.col("exemplars")[i]).alias(f"exemplar_{i}")
+                for i in range(2)
+            ],
+        )
+        .orderBy("id")
+        .collect()
+    )
+    # row 1: identical → 0; shifted by 1 in 4 dims → 4
+    assert out[0]["exemplar_0"] == 0.0
+    assert out[0]["exemplar_1"] == 4.0
+    # row 2: |0-1|*4 = 4 ; |0-3|*4 = 12
+    assert out[1]["exemplar_0"] == 4.0
+    assert out[1]["exemplar_1"] == 12.0
+
+
+def test_euclidean_and_dot(ts_df):
+    r = ts_df.filter(F.col("id") == 2).select(
+        euclidean_distance("time_series", F.col("exemplars")[0]).alias("e"),
+        dot_product(F.col("exemplars")[0], F.col("exemplars")[1]).alias("d"),
+    ).first()
+    assert r["e"] == pytest.approx(2.0)  # sqrt(4*1)
+    assert r["d"] == pytest.approx(12.0)  # 1*3*4
+
+
+def test_cosine(spark):
+    df = spark.createDataFrame(
+        [([1.0, 0.0], [0.0, 1.0]), ([1.0, 1.0], [2.0, 2.0]), ([0.0, 0.0], [1.0, 1.0])],
+        "a array<double>, b array<double>",
+    )
+    out = df.select(
+        cosine_similarity("a", "b").alias("sim"), cosine_distance("a", "b").alias("dist")
+    ).collect()
+    assert out[0]["sim"] == pytest.approx(0.0)
+    assert out[1]["sim"] == pytest.approx(1.0)
+    assert out[2]["sim"] == 0.0  # zero-norm guard
+    assert out[1]["dist"] == pytest.approx(0.0)
 
 
 def test_nearest_exemplar_index(ts_df):

@@ -1,24 +1,56 @@
-"""Property-based check of the native nearest-exemplar expression
-against numpy ground truth and the proximity trees' numpy kernel
-(hypothesis-generated vectors).
+"""Property-based check of the native Catalyst distance kernels against
+numpy ground truth (hypothesis-generated vectors).
 
 The reference computes these distances in Python per row
 (global_model_manager.py:60-85, distance_measures.py:16-88); our
-engine's zip_with/aggregate expressions must agree with numpy on
-arbitrary inputs, including negatives, zeros, and magnitude
-extremes."""
+engine's zip_with/aggregate expressions must agree with numpy to float
+tolerance on arbitrary inputs, including negatives, zeros, and
+magnitude extremes."""
 
 from __future__ import annotations
 
-import numpy as np
-from hypothesis import given, settings, strategies as st
+import math
 
-from bigdata_spark.functions.distances import nearest_exemplar_index
+import numpy as np
+import pytest
+from hypothesis import given, settings, strategies as st
+from pyspark.sql import functions as F
+
+from bigdata_spark.functions.distances import (
+    cosine_similarity,
+    euclidean_distance,
+    manhattan_distance,
+    nearest_exemplar_index,
+)
 from bigdata_spark.ml.tree_core import nearest_exemplar
 
 finite = st.floats(
     min_value=-1e6, max_value=1e6, allow_nan=False, allow_infinity=False, width=32
 )
+same_len_pair = st.integers(min_value=1, max_value=16).flatmap(
+    lambda n: st.tuples(
+        st.lists(finite, min_size=n, max_size=n),
+        st.lists(finite, min_size=n, max_size=n),
+    )
+)
+
+
+@settings(max_examples=12, deadline=None)
+@given(same_len_pair)
+def test_kernels_match_numpy(spark, pair):
+    a, b = pair
+    df = spark.createDataFrame([(a, b)], "a array<double>, b array<double>")
+    row = df.select(
+        euclidean_distance("a", "b").alias("euc"),
+        manhattan_distance("a", "b").alias("man"),
+        cosine_similarity("a", "b").alias("cos"),
+    ).first()
+    na, nb = np.asarray(a), np.asarray(b)
+    assert math.isclose(row["euc"], float(np.sqrt(((na - nb) ** 2).sum())), rel_tol=1e-9, abs_tol=1e-9)
+    assert math.isclose(row["man"], float(np.abs(na - nb).sum()), rel_tol=1e-9, abs_tol=1e-9)
+    den = float(np.linalg.norm(na) * np.linalg.norm(nb))
+    want_cos = float(na @ nb) / den if den != 0.0 else 0.0
+    assert math.isclose(row["cos"], want_cos, rel_tol=1e-9, abs_tol=1e-9)
 
 
 @settings(max_examples=8, deadline=None)
@@ -72,3 +104,21 @@ def test_level_kernel_nearest_matches_spark(spark, case):
         np.zeros((len(rows), 1), dtype=np.int64),
     )[:, 0]
     assert got == want.tolist()
+
+
+@pytest.mark.parametrize(
+    "a,b",
+    [
+        ([0.0, 0.0], [0.0, 0.0]),  # zero norm → cosine defined as 0
+        ([1.0], [1.0]),
+        ([1e-300, 1e-300], [1e-300, 1e-300]),  # denormal-range norms
+    ],
+)
+def test_kernel_edge_cases(spark, a, b):
+    df = spark.createDataFrame([(a, b)], "a array<double>, b array<double>")
+    row = df.select(
+        euclidean_distance("a", "b").alias("euc"),
+        cosine_similarity("a", "b").alias("cos"),
+    ).first()
+    assert row["euc"] == 0.0
+    assert math.isfinite(row["cos"])

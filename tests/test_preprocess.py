@@ -60,3 +60,23 @@ def test_balanced_stratified_repartition(spark):
     # every row lands in a real spark partition matching its id
     spread = out.withColumn("actual", F.spark_partition_id()).select("_partition_id", "actual").distinct()
     assert spread.groupBy("_partition_id").count().agg(F.max("count")).first()[0] == 1
+
+
+def test_compact_head(spark):
+    from bigdata_spark.operators.display import compact_head
+
+    df = spark.createDataFrame(
+        [(1, 2.0, "a", 4, 5), (10, 20.0, "bb", 40, 50)],
+        "c1 int, c2 double, c3 string, c4 int, c5 int",
+    )
+    out = compact_head(df, n=2, first_cols=2, last_cols=1)
+    lines = out.splitlines()
+    # header shows first 2 + ellipsis + last 1, footer reports elision
+    assert "c1" in lines[0] and "c5" in lines[0] and "..." in lines[0]
+    assert "c3" not in lines[0]
+    assert "(5 columns, showing 3)" in lines[-1]
+    assert any("10" in ln for ln in lines)
+
+    # narrow frame: no elision
+    narrow = compact_head(df.select("c1", "c2"), n=1)
+    assert "..." not in narrow

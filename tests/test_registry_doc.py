@@ -1,8 +1,6 @@
 """REGISTRY.md drift check: every live registry query must appear in
-the generated index (and no ghost rows may linger). Timing columns are
-informational and don't gate — only the name set does, so a bench
-refresh never fails this while a forgotten `tools/gen_registry.py`
-after adding/removing a query does."""
+the generated index (and no ghost rows may linger), so a forgotten
+`tools/gen_registry.py` after adding/removing a query fails."""
 
 from __future__ import annotations
 
@@ -53,3 +51,4 @@ def test_registry_md_matches_live_registry():
         f"REGISTRY.md drift — missing: {missing} ghost: {ghost}; "
         "run: python tools/gen_registry.py"
     )
+

@@ -2,12 +2,34 @@
 
 from __future__ import annotations
 
-from bigdata_spark.operators.sampling import stratified_split
+from bigdata_spark.operators.sampling import (
+    anti_join_complement,
+    bernoulli_sample,
+    group_topk_random_sample,
+    random_split,
+    stratified_sample,
+    stratified_split,
+)
 
 
 def _wide(spark, n=300):
     rows = [(i % 3 + 1, float(i), float(i * 2)) for i in range(n)]
     return spark.createDataFrame(rows, "label int, _c1 double, _c2 double")
+
+
+def test_bernoulli_sample_seeded_reproducible(spark):
+    df = _wide(spark)
+    a = bernoulli_sample(df, 0.5, seed=7).count()
+    b = bernoulli_sample(df, 0.5, seed=7).count()
+    assert a == b
+    assert 0.3 * 300 < a < 0.7 * 300
+
+
+def test_random_split_partition(spark):
+    df = _wide(spark)
+    train, test = random_split(df, 0.8, seed=1)
+    assert train.count() + test.count() == 300
+    assert train.columns == df.columns  # _rand dropped
 
 
 def test_stratified_split_partition_and_balance(spark):
@@ -18,6 +40,31 @@ def test_stratified_split_partition_and_balance(spark):
     per = {r["label"]: r["count"] for r in train.groupBy("label").count().collect()}
     for label, cnt in per.items():
         assert 0.6 < cnt / 200 < 0.95, (label, cnt)
+
+
+def test_anti_join_complement_reference_parity(spark):
+    df = _wide(spark, 50)
+    taken = df.limit(20)
+    rest = anti_join_complement(df, taken)
+    assert rest.count() == 30
+
+
+def test_stratified_sample_seeded(spark):
+    df = _wide(spark, 600)
+    s1 = stratified_sample(df, "label", 0.25, seed=9).count()
+    s2 = stratified_sample(df, "label", 0.25, seed=9).count()
+    assert s1 == s2
+
+
+def test_group_topk_random_sample_bounds(spark):
+    df = _wide(spark, 300)
+    out = group_topk_random_sample(df, ["label"], k=5, seed=3)
+    counts = {r["label"]: r["count"] for r in out.groupBy("label").count().collect()}
+    assert all(c == 5 for c in counts.values())
+    # deterministic order column variant
+    out2 = group_topk_random_sample(df, ["label"], k=2, order_col="_c1")
+    vals = sorted(r["_c1"] for r in out2.collect())
+    assert vals == [0.0, 1.0, 2.0, 3.0, 4.0, 5.0]
 
 
 def test_split_and_repartition_layout_invariant(spark):
@@ -39,3 +86,44 @@ def test_split_and_repartition_layout_invariant(spark):
         else:
             assert got == want_train
             assert pids == want_pids
+
+
+def test_group_topk_layout_invariant(spark):
+    base = _wide(spark, 200)
+    draws = []
+    for nparts in (1, 5):
+        got = group_topk_random_sample(base.repartition(nparts), ["label"], 3, seed=7)
+        draws.append(sorted(tuple(r) for r in got.collect()))
+    assert draws[0] == draws[1]
+    assert len(draws[0]) == 9
+
+
+def test_pps_systematic_properties(spark):
+    """PPS draw: exactly k rows, ticks strictly increase, and any item
+    with weight >= W/k is selected with certainty."""
+    from bigdata_spark.plans.samplingq import p7_pps_systematic
+
+    sf = "/root/testdata/sf0.001"
+    rows = p7_pps_systematic(spark, sf).collect()
+    # one row per DISTINCT item hit: an item with w > W/k consumes
+    # several ticks but is emitted once, so len <= k with equality when
+    # no item spans two ticks
+    assert 0 < len(rows) <= 200
+    ticks = [r["tick"] for r in rows]
+    assert ticks == sorted(ticks) and len(set(ticks)) == len(ticks)
+    assert ticks[-1] == 200  # the full weight line is consumed
+    total_w = sum(
+        r["weight_cents"]
+        for r in spark.read.parquet(f"{sf}/part.parquet")
+        .selectExpr("CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS weight_cents")
+        .collect()
+    )
+    certain = total_w // 200
+    picked = {r["p_partkey"] for r in rows}
+    for r in (
+        spark.read.parquet(f"{sf}/part.parquet")
+        .selectExpr("p_partkey", "CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS w")
+        .collect()
+    ):
+        if r["w"] >= certain:
+            assert r["p_partkey"] in picked

@@ -33,4 +33,4 @@ def test_ship_package_zips_importable_tree(spark):
     assert "bigdata_spark/session.py" in names
     # subpackages ride along (executors need the whole import tree)
     assert any(n.startswith("bigdata_spark/ml/") for n in names)
-    assert any(n.startswith("bigdata_spark/plans/") for n in names)
+    assert any(n.startswith("bigdata_spark/dedup/") for n in names)

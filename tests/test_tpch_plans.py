@@ -1,5 +1,5 @@
-"""The 22 TPC-H plans against their DuckDB oracles, and the registry's
-key set.
+"""The 22 TPC-H plans against their DuckDB oracles, and the registry
+entries the benchmark relies on.
 
 The corpus is the benchmark's own generator,
 ``perfbench/tpch_gen.write_corpus(dir, 0.01, seed)``. At sf0.001 six
@@ -49,10 +49,10 @@ def corpus(tmp_path_factory):
     con.close()
 
 
-def test_registry_is_the_tpch_queries_and_the_ml_checks():
+def test_registry_holds_the_tpch_queries_and_the_ml_checks():
     registry = all_queries()
-    assert sorted(registry) == sorted(TPCH + ML)
-    assert all(sql is not None for _, sql in registry.values())
+    assert set(TPCH + ML) <= set(registry)
+    assert all(registry[name][1] is not None for name in TPCH + ML)
 
 
 @pytest.mark.parametrize("name", TPCH)

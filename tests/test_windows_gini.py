@@ -1,13 +1,11 @@
-"""Event-time windows, weighted Gini, similarity search tests."""
+"""Event-time windows and similarity search tests."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import functions as F
 
-from bigdata_spark.operators.gini import weighted_gini, weighted_gini_df
 from bigdata_spark.similarity.ann import brute_force_topk
 from bigdata_spark.streaming.windows import session_windows, sliding_window_agg, tumbling_window_agg
 
@@ -49,16 +47,6 @@ def test_session_window_gap(spark):
     assert [(r["user_id"], r["n"]) for r in out] == [(1, 2), (1, 1), (2, 1)]
     # session_end = last event + gap
     assert out[0]["session_end"] - out[0]["session_start"] == dt.timedelta(minutes=15)
-
-
-def test_weighted_gini_hand_computed(spark):
-    # branch A: pure (gini 0); branch B: 50/50 (gini .5); equal sizes → 0.25
-    rows = [("A", 1)] * 4 + [("B", 1)] * 2 + [("B", 2)] * 2
-    df = spark.createDataFrame(rows, "branch string, label int")
-    assert weighted_gini(df, "branch", "label") == pytest.approx(0.25)
-    per = {r["branch"]: r["gini"] for r in weighted_gini_df(df, "branch", "label").collect()}
-    assert per["A"] == pytest.approx(0.0)
-    assert per["B"] == pytest.approx(0.5)
 
 
 def test_brute_force_topk_exact(spark):

@@ -99,7 +99,7 @@ def main() -> int:
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in (
-        "region nation customer supplier part orders lineitem embeddings"
+        "region nation customer supplier part orders lineitem events documents embeddings"
     ).split():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 

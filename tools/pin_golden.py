@@ -1,16 +1,17 @@
 """Regenerate ``bigdata_spark/plans/_golden.py`` — the pinned literal
 outputs for the seeded/deterministic queries whose computation is not
-SQL-expressible (iterative tree training, DP distances).
+SQL-expressible (iterative tree training, DP distances, binary decode).
 
 The queries are pure functions of the input data (content-hash splits,
 sorted driver collects, seeded numpy), so their outputs are stable
 across sessions, cluster layouts, and retries — which is what makes a
 literal-value oracle legitimate. The embeddings-dependent queries are
 keyed by a cheap per-SF discriminator (``sum(vec_id*label)``) so ONE
-oracle string serves every scale factor.
+oracle string serves every scale factor; the synthetic-media queries
+are SF-independent.
 
 Run after any change that alters these outputs (new seed, new split
-recipe): python tools/pin_golden.py && git diff
+recipe, new codec): python tools/pin_golden.py && git diff
 """
 
 from __future__ import annotations
@@ -36,11 +37,11 @@ OUT = os.path.join(
 HEADER = '''"""GENERATED by tools/pin_golden.py — do not edit by hand.
 
 Pinned literal outputs for the deterministic non-SQL-expressible
-queries (seeded ML fits, DTW distances). Keys of the per-SF dicts are
-the DuckDB discriminator ``CAST(sum(vec_id*label) AS BIGINT)`` over
-the embeddings table, so the rendered oracle (plans/golden_sql.py)
-picks the right literal rows for whatever scale factor the driver
-runs."""
+queries (seeded ML fits, DTW distances, multimodal decode). Keys of
+the per-SF dicts are the DuckDB discriminator
+``CAST(sum(vec_id*label) AS BIGINT)`` over the embeddings table, so
+the rendered oracle (plans/golden_sql.py) picks the right literal rows
+for whatever scale factor the driver runs."""
 
 GOLDEN = '''
 
@@ -51,14 +52,37 @@ def main() -> None:
         ml_global_tree,
         ml_local_forest,
     )
+    from bigdata_spark.plans.multimodalq import (
+        mm_audio_spectral,
+        mm_decode_features,
+        mm_metadata,
+        mm_phash_dedup,
+    )
+    from bigdata_spark.plans.textq import llm_bpe_tokenize, llm_bpe_train
 
     spark = get_spark("pin_golden", extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
 
+    from bigdata_spark.plans.mlq import (
+        ml_als_factorize,
+        ml_isotonic_calibration,
+        ml_linear_probe,
+        ml_pca_embeddings,
+    )
+
+    from bigdata_spark.plans.simq import sim_knn_classify
+
     per_sf = {
+        "sim_knn_classify": sim_knn_classify,
+        "ml_isotonic_calibration": ml_isotonic_calibration,
+        "ml_pca_embeddings": ml_pca_embeddings,
+        "ml_als_factorize": ml_als_factorize,
         "ml_global_tree": ml_global_tree,
+        "ml_linear_probe": ml_linear_probe,
         "ml_local_forest": ml_local_forest,
         "ml_dtw_distances": ml_dtw_distances,
+        "llm_bpe_train": llm_bpe_train,
+        "llm_bpe_tokenize": llm_bpe_tokenize,
     }
     out: dict[str, object] = {}
     for name, fn in per_sf.items():
@@ -71,6 +95,23 @@ def main() -> None:
             rows = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
             by_key[int(key)] = rows
         out[name] = by_key
+
+    from bigdata_spark.plans.multimodalq import (
+        mm_audio_silence,
+        mm_mp4_frames,
+        mm_scene_cut,
+    )
+
+    for name, fn in (
+        ("mm_metadata", mm_metadata),
+        ("mm_decode_features", mm_decode_features),
+        ("mm_audio_spectral", mm_audio_spectral),
+        ("mm_phash_dedup", mm_phash_dedup),
+        ("mm_mp4_frames", mm_mp4_frames),
+        ("mm_scene_cut", mm_scene_cut),
+        ("mm_audio_silence", mm_audio_silence),
+    ):
+        out[name] = sorted(tuple(r) for r in fn(spark, "/root/testdata/sf0.01").collect())
 
     with open(OUT, "w") as f:
         f.write(HEADER)

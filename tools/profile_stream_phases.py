@@ -1,9 +1,10 @@
-"""Phase breakdown probe for the streaming bench entries.
+"""Phase breakdown probe for the streaming registry queries.
 
 Times the sub-phases of evt_stream_checkpoint_recovery-shaped queries
 (staging write vs stream run(s) vs final read) by re-implementing the
 query body with timers. Development probe only — results guide where
-optimization effort goes (guide §1.1); the graded bench stays bench.py.
+optimization effort goes (guide §1.1); the benchmark is perfbench/
+(see perfbench/README.md).
 
 Usage: python tools/profile_stream_phases.py <sf_dir>
 """
