@@ -13,7 +13,7 @@ Layout:
     operators   — sampling/splits, preprocessing, partitioning
     functions   — native array/distance/text column expressions
     plans       — composed relational queries (TPC-H-ish analytics)
-    streaming   — event-time windows (tumbling/sliding/session), streams
+    streaming   — stateful stream operators, keyed-upsert parquet sink
     ml          — proximity tree/forest, prediction, evaluation
     text        — language-ID, quality scoring, tokenization, fingerprints
     dedup       — exact, minhash-LSH, simhash, n-gram jaccard near-dup

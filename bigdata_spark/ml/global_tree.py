@@ -85,6 +85,7 @@ from ..worker import stat_checked_zipimport
 from .tree_core import (
     OPEN,
     FlatTree,
+    check_metric,
     feature_matrix,
     nearest_exemplar,
     padded_blocks,
@@ -330,8 +331,7 @@ class GlobalProximityTree:
         metric: str = "euclidean",
         dtw_window: int | None = None,
     ) -> None:
-        if metric not in ("euclidean", "dtw"):
-            raise ValueError(f"metric must be 'euclidean' or 'dtw', got {metric!r}")
+        check_metric(metric)
         if exemplar_pool_k < 1:
             raise ValueError(f"exemplar_pool_k must be >= 1, got {exemplar_pool_k}")
         self.n_splitters = n_splitters

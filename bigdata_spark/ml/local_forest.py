@@ -29,7 +29,7 @@ from pyspark.sql.types import IntegerType
 from ..operators.preprocess import balanced_stratified_repartition
 from ..worker import stat_checked_zipimport
 from .proximity import ProximityTree
-from .tree_core import feature_matrix, training_width
+from .tree_core import check_metric, feature_matrix, training_width
 
 # constructor arguments, in the order ``save`` writes them
 _PARAMS = ("num_partitions", "n_splitters", "max_depth", "use_weighting", "seed", "metric", "dtw_window")
@@ -54,6 +54,7 @@ class LocalProximityForest:
         metric: str = "euclidean",
         dtw_window: int | None = None,
     ) -> None:
+        check_metric(metric)
         self.num_partitions = num_partitions
         self.n_splitters = n_splitters
         self.max_depth = max_depth
@@ -139,7 +140,9 @@ class LocalProximityForest:
     def predict(self, df: DataFrame, features_col: str = "features") -> DataFrame:
         """Append a ``prediction`` column via broadcast forest + one
         Arrow-batched pandas UDF pass (reference prediction_manager.py:
-        84-98 shape); ties break to the smallest class id."""
+        84-98 shape); ties break to the smallest class id. A null
+        features row fails the job with a ``ValueError`` that counts the
+        null rows of its batch."""
         spark = df.sparkSession
         trees = [(t.tree, t.metric, t.dtw_window) for t in self.trees]
         width = next((tree.width for tree, _, _ in trees if tree.width is not None), None)

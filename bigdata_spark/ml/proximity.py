@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .tree_core import FlatTree, feature_matrix, nearest_exemplar, weighted_gini
+from .tree_core import FlatTree, check_metric, feature_matrix, nearest_exemplar, weighted_gini
 
 # constructor arguments, in the order the state lists them
 _PARAMS = ("n_splitters", "max_depth", "min_samples_split", "seed", "metric", "dtw_window")
@@ -37,8 +37,7 @@ class ProximityTree:
         metric: str = "euclidean",
         dtw_window: int | None = None,
     ) -> None:
-        if metric not in ("euclidean", "dtw"):
-            raise ValueError(f"metric must be 'euclidean' or 'dtw', got {metric!r}")
+        check_metric(metric)
         self.n_splitters = n_splitters
         self.max_depth = max_depth  # None: grow until no node splits
         self.min_samples_split = min_samples_split

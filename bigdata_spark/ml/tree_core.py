@@ -24,6 +24,12 @@ LEAF, SPLIT, OPEN = 0, 1, 2
 _CHUNK_ELEMS = 256 * 5 * 140
 
 
+def check_metric(metric: str) -> None:
+    """Raise ``ValueError`` unless ``nearest_exemplar`` computes ``metric``."""
+    if metric not in ("euclidean", "dtw"):
+        raise ValueError(f"metric must be 'euclidean' or 'dtw', got {metric!r}")
+
+
 def nearest_exemplar(
     X: np.ndarray, blocks: np.ndarray, counts: np.ndarray, slots: np.ndarray,
     metric: str = "euclidean", window: int | None = None,
@@ -151,11 +157,14 @@ def training_width(widths: dict[int, int], dim: int = -1) -> int:
 
 
 def feature_matrix(rows, width: int | None) -> np.ndarray:
-    """``rows`` as one (m, width) float matrix. A row of another length
-    raises ``ValueError``; a tree without splits (``width`` None) reads
-    no feature."""
+    """``rows`` as one (m, width) float matrix. A null row or a row of
+    another length raises ``ValueError`` (the former with the count of
+    null rows); a tree without splits (``width`` None) reads no feature."""
     if width is None:
         return np.empty((len(rows), 0))
+    nulls = sum(r is None for r in rows)
+    if nulls:
+        raise ValueError(f"{nulls} of {len(rows)} rows have null features")
     lengths = {len(r) for r in rows}
     if lengths - {width}:
         raise ValueError(

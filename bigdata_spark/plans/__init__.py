@@ -28,7 +28,6 @@ def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
         coverage,
         dedupq,
         erq,
-        events,
         extended,
         graphq,
         mlq,
@@ -51,7 +50,6 @@ def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
         tpch_full,
         coverage,
         extended,
-        events,
         textq,
         dedupq,
         simq,

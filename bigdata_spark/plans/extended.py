@@ -815,14 +815,14 @@ def approx_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("pass", F.expr(" AND ".join(tests)))
     )
     # ONE pass over the fact side: o_orderkey is unique (orders PK), so
-    # a broadcast LEFT join marks matches without changing row count
-    # and every census folds into a single aggregate. The old shape
-    # evaluated the 3-hash probe expression over lineitem TWICE (once
-    # under the survivors semi-join, once under the stats aggregate).
+    # a LEFT join marks matches without changing row count and every
+    # census folds into a single aggregate. The old shape evaluated the
+    # 3-hash probe expression over lineitem TWICE (once under the
+    # survivors semi-join, once under the stats aggregate). No broadcast
+    # hint: the filtered orders grow with SF, so stats/AQE choose the
+    # join strategy.
     matched = F.col("pass") & F.col("o_orderkey").isNotNull()
-    stats = l.join(
-        F.broadcast(o), l.l_orderkey == o.o_orderkey, "left"
-    ).agg(
+    stats = l.join(o, l.l_orderkey == o.o_orderkey, "left").agg(
         F.count("*").alias("n_fact"),
         F.sum(F.col("pass").cast("long")).alias("n_pass"),
         F.sum(matched.cast("long")).alias("n_match"),

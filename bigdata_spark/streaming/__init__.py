@@ -1,3 +1,2 @@
-from .windows import session_windows, sliding_window_agg, tumbling_window_agg
-
-__all__ = ["session_windows", "sliding_window_agg", "tumbling_window_agg"]
+"""Structured Streaming operators: per-key state (``stateful``) and the
+keyed-upsert parquet sink (``upsert_sink``)."""

@@ -1,42 +1,11 @@
-"""Regression tests for the round-4 ADVICE findings: NULL-transition
-SCD2 boundaries, upsert-sink order-col validation + batch-wins
-tiebreak, and profile_columns with hostile column names."""
+"""Regression tests for the round-4 ADVICE findings: upsert-sink
+order-col validation + batch-wins tiebreak, and profile_columns with
+hostile column names."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-
-def test_scd2_null_attribute_runs_are_boundaries(spark):
-    """A transition to/from NULL is a run boundary (null-SAFE compare),
-    and consecutive NULLs collapse into one run."""
-    from bigdata_spark.operators.scd import scd2_from_changes
-
-    df = spark.createDataFrame(
-        [
-            (1, "a", "2024-01-01 00:00:00", 1),
-            (1, None, "2024-01-02 00:00:00", 2),   # a -> NULL: boundary
-            (1, None, "2024-01-03 00:00:00", 3),   # NULL run continues
-            (1, "b", "2024-01-04 00:00:00", 4),    # NULL -> b: boundary
-            (2, None, "2024-01-01 00:00:00", 5),   # first row NULL
-            (2, "x", "2024-01-02 00:00:00", 6),
-        ],
-        "user_id long, status string, ts_s string, event_id long",
-    ).withColumn("ts", F.to_timestamp("ts_s")).drop("ts_s")
-    out = scd2_from_changes(df, ["user_id"], "status", "ts", "event_id")
-    u1 = sorted(
-        [r for r in out.collect() if r["user_id"] == 1],
-        key=lambda r: r["valid_from"],
-    )
-    assert [r["status"] for r in u1] == ["a", None, "b"]
-    assert u1[0]["valid_to"] == u1[1]["valid_from"]
-    assert u1[1]["valid_to"] == u1[2]["valid_from"]
-    u2 = sorted(
-        [r for r in out.collect() if r["user_id"] == 2],
-        key=lambda r: r["valid_from"],
-    )
-    assert [r["status"] for r in u2] == [None, "x"]
 
 
 def test_upsert_order_cols_must_survive_projection(spark, tmp_path):

@@ -1,23 +1,10 @@
-"""Invariant tests for the round-4 analytics additions (transition
-matrix, skyline, quantile bins, PSI, attribution). Cross-engine value
-equality lives in the oracle gate; these pin the semantic properties."""
+"""Invariant tests for the round-4 analytics additions (skyline,
+quantile bins, PSI, MAD outliers). Cross-engine value equality lives in
+the oracle gate; these pin the semantic properties."""
 
 from __future__ import annotations
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_transition_probabilities_sum_to_one(spark):
-    from bigdata_spark.plans.events import evt_transitions
-
-    rows = evt_transitions(spark, SF).collect()
-    assert rows
-    by_prev: dict[str, float] = {}
-    for r in rows:
-        assert r["n"] > 0 and 0.0 < r["p"] <= 1.0
-        by_prev[r["prev_type"]] = by_prev.get(r["prev_type"], 0.0) + r["p"]
-    for prev, tot in by_prev.items():
-        assert abs(tot - 1.0) < 1e-9, (prev, tot)
 
 
 def test_skyline_dominance_bruteforce(spark):
@@ -76,58 +63,6 @@ def test_psi_identical_windows_is_zero(spark):
     assert total["psi_contrib"] < 1.0
 
 
-def test_attribution_models_conserve_conversions(spark):
-    from bigdata_spark.plans.events import evt_attribution
-
-    rows = evt_attribution(spark, SF).collect()
-    n_first = sum(r["n_conversions"] for r in rows if r["model"] == "first_touch")
-    n_last = sum(r["n_conversions"] for r in rows if r["model"] == "last_touch")
-    # both models attribute exactly the same set of conversions
-    assert n_first == n_last > 0
-    rev_first = sum(r["revenue"] for r in rows if r["model"] == "first_touch")
-    rev_last = sum(r["revenue"] for r in rows if r["model"] == "last_touch")
-    assert abs(rev_first - rev_last) < 1e-6
-
-
-def test_islands_rle_matches_bruteforce(spark):
-    from collections import defaultdict
-
-    from bigdata_spark.plans.events import w8_islands_rle
-    from bigdata_spark.sources.catalog import load_table
-
-    sf = "/root/testdata/sf0.001"
-    rows = (
-        load_table(spark, sf, "events")
-        .select("user_id", "ts", "event_id", "event_type")
-        .collect()
-    )
-    per_user = defaultdict(list)
-    for r in rows:
-        per_user[r["user_id"]].append((r["ts"], r["event_id"], r["event_type"]))
-    stats = defaultdict(lambda: [0, 0, 0, 0])  # islands, max, events, streaks3
-    for evs in per_user.values():
-        evs.sort()
-        prev, run = None, 0
-        for _, _, et in evs + [(None, None, None)]:
-            if et == prev:
-                run += 1
-                continue
-            if prev is not None:
-                s = stats[prev]
-                s[0] += 1
-                s[1] = max(s[1], run)
-                s[2] += run
-                s[3] += run >= 3
-            prev, run = et, 1
-    got = {r["event_type"]: r for r in w8_islands_rle(spark, sf).collect()}
-    assert set(got) == set(stats)
-    for et, (ni, mx, ne, s3) in stats.items():
-        g = got[et]
-        assert (g["n_islands"], g["max_run"], g["n_events"], g["n_streaks_3plus"]) == (
-            ni, mx, ne, s3,
-        )
-
-
 def test_locf_impute_matches_bruteforce(spark):
     from collections import defaultdict
 
@@ -160,25 +95,6 @@ def test_locf_impute_matches_bruteforce(spark):
         assert r["imputed"] == exp_flag
 
 
-def test_calendar_dim_covers_gap_days(spark):
-    """Spine must be a contiguous daily range; zero-event days appear
-    with zeroed measures; totals reconcile with the raw table."""
-    import datetime
-
-    from bigdata_spark.plans.events import evt_calendar_dim
-    from bigdata_spark.sources.catalog import load_table
-
-    sf = "/root/testdata/sf0.001"
-    out = evt_calendar_dim(spark, sf).collect()
-    days = [r["d"] for r in out]
-    assert days == [days[0] + datetime.timedelta(days=i) for i in range(len(days))]
-    total = sum(r["n_events"] for r in out)
-    assert total == load_table(spark, sf, "events").count()
-    for r in out:
-        assert r["is_weekend"] == (r["dow"] in (0, 6))
-        assert r["dow"] == (r["d"].toordinal() - datetime.date(1970, 1, 1).toordinal() + 4) % 7
-
-
 def test_rake_scores_positive_and_stopword_free(spark):
     from bigdata_spark.plans.textq import _RAKE_STOPS, txt_rake_keyphrases
 
@@ -191,37 +107,6 @@ def test_rake_scores_positive_and_stopword_free(spark):
         assert len(words) == r["n_words"]
         assert not set(words) & set(_RAKE_STOPS)
         assert r["score"] > 0
-
-
-def test_rolling_wau_matches_bruteforce(spark):
-    import datetime
-    from collections import defaultdict
-
-    from bigdata_spark.plans.events import evt_rolling_wau
-    from bigdata_spark.sources.catalog import load_table
-
-    sf = "/root/testdata/sf0.001"
-    rows = (
-        load_table(spark, sf, "events")
-        .selectExpr("CAST(ts AS DATE) AS d", "user_id")
-        .collect()
-    )
-    du = {(r["d"], r["user_id"]) for r in rows}
-    dmax = max(d for d, _ in du)
-    wau = defaultdict(set)
-    dau = defaultdict(set)
-    for d, u in du:
-        dau[d].add(u)
-        for off in range(7):
-            day = d + datetime.timedelta(days=off)
-            if day <= dmax:
-                wau[day].add(u)
-    got = evt_rolling_wau(spark, sf).collect()
-    assert len(got) == len(wau)
-    for r in got:
-        assert r["wau"] == len(wau[r["day"]])
-        assert r["dau"] == len(dau.get(r["day"], set()))
-        assert r["wau"] >= r["dau"]
 
 
 def test_mad_outliers_matches_bruteforce(spark):
@@ -250,38 +135,6 @@ def test_mad_outliers_matches_bruteforce(spark):
         ), (g, statistics.median(vals))
 
 
-def test_decay_score_matches_bruteforce(spark):
-    from collections import defaultdict
-    from decimal import Decimal
-    from fractions import Fraction
-
-    from bigdata_spark.plans.events import _DECAY_CAP, evt_decay_score
-    from bigdata_spark.sources.catalog import load_table
-
-    sf = "/root/testdata/sf0.001"
-    rows = (
-        load_table(spark, sf, "events")
-        .selectExpr(
-            "user_id",
-            "unix_micros(CAST(ts AS TIMESTAMP)) AS ts_us",
-            "CAST(CAST(value AS DECIMAL(18,3)) * 1000 AS BIGINT) AS v_mill",
-        )
-        .collect()
-    )
-    tmax = max(r["ts_us"] for r in rows)
-    acc = defaultdict(Fraction)
-    for r in rows:
-        age = (tmax - r["ts_us"]) // 86_400_000_000
-        if age <= _DECAY_CAP:
-            acc[r["user_id"]] += Fraction(int(r["v_mill"]), 1000 * (1 << age))
-    got = {r["user_id"]: r["decay_score"] for r in evt_decay_score(spark, sf).collect()}
-    assert set(got) == set(acc) | {
-        r["user_id"] for r in rows
-    }  # zero-score users still present
-    for u, frac in acc.items():
-        assert abs(got[u] - float(frac)) < 1e-9
-
-
 def test_dp_count_noise_properties(spark):
     """Noise must be nonzero, mean-bounded, and dp_count == true_n + noise."""
     from bigdata_spark.plans.textq import llm_dp_count
@@ -293,50 +146,6 @@ def test_dp_count_noise_properties(spark):
     for r in rows:
         assert abs(r["dp_count"] - (r["true_n"] + r["laplace_noise"])) < 2e-6
         assert abs(r["laplace_noise"]) < 50  # Laplace(1) tail sanity
-
-
-def test_peak_concurrency_matches_global_sweep(spark):
-    """The two-level (per-day + offsets) sweep must equal a plain
-    global Python sweep over the same sessions."""
-    from collections import defaultdict
-
-    from bigdata_spark.plans.events import evt_peak_concurrency
-    from bigdata_spark.sources.catalog import load_table
-
-    sf = "/root/testdata/sf0.001"
-    rows = (
-        load_table(spark, sf, "events")
-        .selectExpr("user_id", "unix_micros(CAST(ts AS TIMESTAMP)) AS ts_us")
-        .collect()
-    )
-    gap = 600_000_000
-    per_user = defaultdict(list)
-    for r in rows:
-        per_user[r["user_id"]].append(r["ts_us"])
-    deltas = []
-    n_sessions = 0
-    for ts in per_user.values():
-        ts.sort()
-        start = prev = ts[0]
-        for t in ts[1:]:
-            if t - prev >= gap:
-                deltas += [(start, 1), (prev + gap, -1)]
-                n_sessions += 1
-                start = t
-            prev = t
-        deltas += [(start, 1), (prev + gap, -1)]
-        n_sessions += 1
-    deltas.sort()  # (t, -1) before (t, +1): ends free before starts
-    cur = peak = 0
-    first_peak = None
-    for t, d in deltas:
-        cur += d
-        if cur > peak:
-            peak, first_peak = cur, t
-    got = evt_peak_concurrency(spark, sf).collect()[0]
-    assert got["n_sessions"] == n_sessions
-    assert got["peak_concurrency"] == peak
-    assert got["first_peak_us"] == first_peak
 
 
 def test_percentile_cont_matches_numpy(spark):

@@ -1,0 +1,24 @@
+"""The source-level audits of ``tools/explain_audit.py``: every forced
+broadcast hint, every window without ``partitionBy`` and every window
+partition key in the package must match its reviewed allowlist
+exactly, with no stale entry. They read the source only; no Spark."""
+
+from __future__ import annotations
+
+import importlib.util
+from pathlib import Path
+
+import pytest
+
+ROOT = Path(__file__).resolve().parent.parent
+_spec = importlib.util.spec_from_file_location("explain_audit", ROOT / "tools" / "explain_audit.py")
+explain_audit = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(explain_audit)
+
+
+@pytest.mark.parametrize(
+    "audit", ["audit_broadcast_hints", "audit_zero_partition_windows", "audit_window_partition_grains"]
+)
+def test_source_audit_matches_its_allowlist(audit, capsys):
+    failures = getattr(explain_audit, audit)()
+    assert failures == 0, capsys.readouterr().out

@@ -86,29 +86,6 @@ def test_keep_one_drops_only_duplicates(spark, tmp_path):
     assert a["n_docs"] == 10 and a["n_survivors"] == 3 and a["n_dropped"] == 7
 
 
-def test_resample_gapfill_interpolates(spark):
-    from datetime import datetime
-
-    from bigdata_spark.operators.timeseries import resample_gapfill
-
-    rows = [
-        ("a", datetime(2024, 1, 1, 0, 30), 10.0),
-        ("a", datetime(2024, 1, 1, 3, 10), 40.0),   # 2 empty hours between
-        ("b", datetime(2024, 1, 1, 5, 0), 7.0),     # single-point series
-    ]
-    df = spark.createDataFrame(rows, "k string, ts timestamp, value double")
-    out = {
-        (r["k"], r["bucket"].hour): (r["value_interp"], r["observed"])
-        for r in resample_gapfill(df, ["k"], "ts", "value", "1 hour", "hour").collect()
-    }
-    assert out[("a", 0)] == (10.0, True)
-    assert out[("a", 1)] == (20.0, False)   # linear: 10 + (40-10)*1/3
-    assert out[("a", 2)] == (30.0, False)
-    assert out[("a", 3)] == (40.0, True)
-    assert out[("b", 5)] == (7.0, True)
-    assert len(out) == 5  # grid spans only [min, max] per key
-
-
 def test_bpe_learns_reference_merges(spark):
     from bigdata_spark.text.bpe import learn_bpe, tokenize_with_merges
 

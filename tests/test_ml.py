@@ -60,6 +60,9 @@ def test_local_forest_end_to_end(spark, tmp_path):
         assert [t.to_state() for t in reloaded.trees] == [t.to_state() for t in forest.trees]
         preds2 = reloaded.predict(test)
         assert preds2.filter(F.col("label") == F.col("prediction")).count() == preds.count()
+    # an unknown metric fails on the driver, before any job
+    with pytest.raises(ValueError, match=r"^metric must be 'euclidean' or 'dtw', got 'manhattan'$"):
+        LocalProximityForest(metric="manhattan")
 
 
 @pytest.mark.parametrize(

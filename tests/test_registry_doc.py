@@ -36,6 +36,34 @@ def test_readme_covers_every_registry_query():
         )
 
 
+def _exists(path: str) -> bool:
+    return any(os.path.exists(os.path.join(ROOT, base, path)) for base in ("", "bigdata_spark"))
+
+
+def test_readme_names_no_retired_code():
+    """No ghost entries: every path in README's layout and every
+    backticked file path exists, and every coverage-map row that names
+    code names a live registry query or an existing file, so a row for
+    a retired query or module fails."""
+    from bigdata_spark.plans import all_queries
+
+    with open(os.path.join(ROOT, "README.md")) as f:
+        text = f.read()
+    live = set(all_queries())
+    layout = re.search(r"## Layout\n\n```\n(.*?)```", text, flags=re.S).group(1)
+    paths = re.findall(r"^ {0,2}(\S+(?:/|\.py))(?:\s|$)", layout, flags=re.M)
+    prose = re.sub(r"```.*?```", "", text, flags=re.S)
+    paths += [t for t in re.findall(r"`([^`\n]+)`", prose) if re.fullmatch(r"[\w.]+(?:/[\w.]*)+|\w+\.py", t)]
+    missing = sorted({p for p in paths if not _exists(p)})
+    assert not missing, f"README.md names paths that do not exist: {missing}"
+    ghost = [
+        row
+        for row in re.findall(r"^\|.*\|$", prose, flags=re.M)
+        if (names := re.findall(r"`([^`]+)`", row)) and not any(n in live or _exists(n) for n in names)
+    ]
+    assert not ghost, f"README.md coverage-map rows name no live query or file: {ghost}"
+
+
 def test_registry_md_matches_live_registry():
     from bigdata_spark.plans import all_queries
 

@@ -1,6 +1,5 @@
 """Unit tests for the round-4 session additions: duplicated-substring
-windows, training-mixture sampling, SCD2, SemDeDup, fixed-point
-PageRank."""
+windows, training-mixture sampling, SemDeDup, fixed-point PageRank."""
 
 from __future__ import annotations
 
@@ -91,50 +90,6 @@ def test_mixture_saturates_at_one(spark):
     kept = mixture_sample(df, {"src0": 1, "src1": 1000}).collect()
     n_src1 = sum(1 for r in kept if r["source"] == "src1")
     assert n_src1 == 10
-
-
-# --- SCD2 ----------------------------------------------------------------
-
-def test_scd2_runs_and_intervals(spark):
-    from bigdata_spark.operators.scd import scd2_from_changes
-
-    df = spark.createDataFrame(
-        [
-            (1, "a", "2024-01-01 00:00:00", 10),
-            (1, "a", "2024-01-02 00:00:00", 11),  # no change → collapsed
-            (1, "b", "2024-01-03 00:00:00", 12),
-            (1, "a", "2024-01-04 00:00:00", 13),  # back to a → new run
-            (2, "x", "2024-01-01 00:00:00", 14),
-        ],
-        "user_id long, status string, ts_s string, event_id long",
-    ).withColumn("ts", F.to_timestamp("ts_s")).drop("ts_s")
-    out = scd2_from_changes(df, ["user_id"], "status", "ts", "event_id")
-    u1 = sorted(
-        [r for r in out.collect() if r["user_id"] == 1],
-        key=lambda r: r["valid_from"],
-    )
-    assert [r["status"] for r in u1] == ["a", "b", "a"]
-    # intervals chain: each valid_to equals the next valid_from
-    assert u1[0]["valid_to"] == u1[1]["valid_from"]
-    assert u1[1]["valid_to"] == u1[2]["valid_from"]
-    assert u1[2]["valid_to"] is None and u1[2]["is_current"]
-    assert not u1[0]["is_current"]
-
-
-def test_scd2_tiebreak_deterministic(spark):
-    from bigdata_spark.operators.scd import scd2_from_changes
-
-    # two observations at the SAME ts — event_id orders them
-    df = spark.createDataFrame(
-        [
-            (1, "a", "2024-01-01 00:00:00", 2),
-            (1, "b", "2024-01-01 00:00:00", 1),
-        ],
-        "user_id long, status string, ts_s string, event_id long",
-    ).withColumn("ts", F.to_timestamp("ts_s")).drop("ts_s")
-    out = scd2_from_changes(df, ["user_id"], "status", "ts", "event_id")
-    rows = sorted(out.collect(), key=lambda r: not r["is_current"])
-    assert rows[0]["status"] == "a"  # event_id 2 is the later version
 
 
 # --- SemDeDup ------------------------------------------------------------

@@ -197,51 +197,6 @@ def test_pipe_syntax_matches_standard_form(spark):
     assert got == ref
 
 
-def test_seq_pattern_counts_on_known_sequences(spark):
-    # hand-check regexp_count semantics on a constructed frame wired
-    # through the same expressions the query uses
-    df = spark.createDataFrame(
-        [("vvcpvp",), ("sevp",), ("ppp",)], "seq string"
-    )
-    counts = [
-        r["k"]
-        for r in df.select(F.expr("regexp_count(seq, 'vc*p')").alias("k")).collect()
-    ]
-    # 'vvcpvp': matches vcp (pos 1) and vp (pos 4) = 2; 'sevp': vp = 1; 'ppp': 0
-    assert counts == [2, 1, 0]
-
-
-def test_table_checksum_detects_any_row_change(spark):
-    # flipping one key must flip the xor checksum; permuting rows must not
-    from bigdata_spark.plans.events import dq_table_checksum
-
-    base = {r["table_name"]: r["checksum"] for r in dq_table_checksum(spark, SF).collect()}
-    assert len(base) == 3
-    h = (
-        "CAST(conv(substring(md5(concat(CAST(o_orderkey AS STRING), '|', "
-        "CAST(o_totalprice AS STRING))), 1, 15), 16, 10) AS BIGINT)"
-    )
-    from bigdata_spark.sources.catalog import load_table
-
-    o = load_table(spark, SF, "orders")
-    direct = o.select(F.expr(h).alias("h")).agg(F.expr("bit_xor(h)").alias("c")).first()["c"]
-    assert direct == base["orders"]
-    perm = (
-        o.repartition(7)
-        .select(F.expr(h).alias("h"))
-        .agg(F.expr("bit_xor(h)").alias("c"))
-        .first()["c"]
-    )
-    assert perm == base["orders"]  # order/partitioning free
-    mutated = (
-        o.withColumn("o_orderkey", F.when(F.col("o_orderkey") == 1, 999999).otherwise(F.col("o_orderkey")))
-        .select(F.expr(h).alias("h"))
-        .agg(F.expr("bit_xor(h)").alias("c"))
-        .first()["c"]
-    )
-    assert mutated != base["orders"]
-
-
 def test_kmv_distinct_small_set_is_exact_and_bounded(spark):
     # at sf0.001 every sketch holds fewer than k distinct users, so the
     # KMV small-set rule must return the exact count (err == 0); the

@@ -229,34 +229,6 @@ def test_audio_silence_matches_gate_pattern(spark):
         assert r["first_silence_ms"] == first
 
 
-def test_markov_stationary_matches_python_iteration(spark):
-    from bigdata_spark.plans.events import (
-        _MKV_ITERS,
-        _MKV_SCALE,
-        evt_markov_stationary,
-    )
-    from bigdata_spark.plans.events import evt_transitions
-
-    trans = evt_transitions(spark, SF).collect()
-    counts = {(r["prev_type"], r["next_type"]): r["n"] for r in trans}
-    tot: dict[str, int] = {}
-    for (p, _nx), n in counts.items():
-        tot[p] = tot.get(p, 0) + n
-    states = sorted(tot)
-    pi = {s: _MKV_SCALE for s in states}
-    for _ in range(_MKV_ITERS):
-        nxt = {s: 0 for s in states}
-        for (p, nx), n in counts.items():
-            nxt[nx] += (pi[p] * n) // tot[p]
-        pi = nxt
-    rows = evt_markov_stationary(spark, SF).collect()
-    assert {r["event_type"]: r["mass"] for r in rows} == pi
-    # fixed-point mass is conserved up to integer-division leakage
-    assert sum(pi.values()) <= len(states) * _MKV_SCALE
-    masses = [r["mass"] for r in rows]
-    assert masses == sorted(masses, reverse=True)
-
-
 def test_manifest_time_travel_snapshot_isolation(spark):
     from bigdata_spark.plans.scaleq import s34_manifest_time_travel
     from bigdata_spark.sources.catalog import load_table
@@ -712,52 +684,6 @@ def test_trimmed_mean_drops_exact_tails(spark):
         )
 
 
-def test_rising_streaks_match_python_scan(spark):
-    import math
-
-    from bigdata_spark.plans.events import _STREAK_TOPK, w13_rising_streaks
-    from bigdata_spark.sources.catalog import load_table
-
-    raw = load_table(spark, SF, "orders").select(
-        "o_orderdate", "o_totalprice"
-    ).collect()
-    daily: dict = {}
-    for r in raw:
-        d = r["o_orderdate"].date()
-        daily[d] = daily.get(d, 0) + math.floor(r["o_totalprice"] * 100 + 0.5)
-    days = sorted(daily)
-    streaks = []
-    start = days[0]
-    for prev, cur in zip(days, days[1:]):
-        rising = (cur - prev).days == 1 and daily[cur] > daily[prev]
-        if not rising:
-            streaks.append((start, prev))
-            start = cur
-    streaks.append((start, days[-1]))
-    expect = sorted(
-        (
-            (
-                -( (e - s).days + 1 ),
-                -(daily[e] - daily[s]),
-                s,
-                e,
-            )
-            for s, e in streaks
-            if (e - s).days + 1 >= 2
-        )
-    )[:_STREAK_TOPK]
-    got = [
-        (
-            -r["len_days"],
-            -r["climb_cents"],
-            r["start_day"],
-            r["end_day"],
-        )
-        for r in w13_rising_streaks(spark, SF).collect()
-    ]
-    assert got == expect
-
-
 def test_anova_matches_python_sums(spark):
     import math
 
@@ -785,84 +711,6 @@ def test_anova_matches_python_sums(spark):
     assert math.isclose(row["ss_between"], ssb, rel_tol=1e-12)
     assert math.isclose(row["ss_total"], sst, rel_tol=1e-12)
     assert math.isclose(row["f_stat"], f, rel_tol=1e-9)
-
-
-def test_cohort_ltv_triangle_invariants(spark):
-    import math
-
-    from bigdata_spark.plans.events import evt_cohort_ltv
-    from bigdata_spark.sources.catalog import load_table
-
-    rows = evt_cohort_ltv(spark, SF).collect()
-    assert rows
-    e = load_table(spark, SF, "events")
-    total_rev = sum(
-        math.floor(r["value"] * 1_000_000 + 0.5)
-        for r in e.filter(F.col("event_type") == "purchase")
-        .select("value")
-        .collect()
-    )
-    assert sum(r["rev_micro"] for r in rows) == total_rev
-    by_cohort: dict = {}
-    for r in rows:
-        by_cohort.setdefault(r["cohort_w"], []).append(r)
-    for rs in by_cohort.values():
-        ages = [r["age_weeks"] for r in rs]
-        assert ages == sorted(ages) and all(a >= 0 for a in ages)
-        cum = 0
-        for r in rs:
-            cum += r["rev_micro"]
-            assert r["cum_rev_micro"] == cum
-            assert r["ltv_micro_per_user"] == cum // r["cohort_users"]
-
-
-def test_top_paths_match_python(spark):
-    from bigdata_spark.plans.events import _PATH_LEN, _PATH_TOPK, evt_top_paths
-    from bigdata_spark.sources.catalog import load_table
-
-    evs = load_table(spark, SF, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    ).collect()
-    by_ud: dict = {}
-    for r in evs:
-        by_ud.setdefault((r["user_id"], r["ts"].date()), []).append(
-            (r["ts"], r["event_id"], r["event_type"])
-        )
-    from collections import Counter
-
-    counts = Counter(
-        ">".join(t for _, _, t in sorted(v)[:_PATH_LEN]) for v in by_ud.values()
-    )
-    expect = sorted(((-n, p) for p, n in counts.items()))[:_PATH_TOPK]
-    got = [
-        (-r["n_user_days"], r["path"]) for r in evt_top_paths(spark, SF).collect()
-    ]
-    assert got == expect
-
-
-def test_growth_accounting_identities(spark):
-    from bigdata_spark.plans.events import evt_growth_accounting
-    from bigdata_spark.sources.catalog import load_table
-
-    rows = evt_growth_accounting(spark, SF).collect()
-    assert rows
-    weeks = [r["w"] for r in rows]
-    assert weeks == sorted(weeks)
-    by_w = {r["w"]: r for r in rows}
-    for i, r in enumerate(rows):
-        # actives decompose exactly
-        assert r["actives"] == r["n_new"] + r["n_retained"] + r["n_resurrected"]
-        if i == 0:
-            assert r["n_retained"] == 0 and r["n_resurrected"] == 0
-            assert r["n_churned"] == 0
-        else:
-            prev = rows[i - 1]
-            # last week's actives = this week's retained + churned
-            assert prev["actives"] == r["n_retained"] + r["n_churned"]
-    n_users = (
-        load_table(spark, SF, "events").select("user_id").distinct().count()
-    )
-    assert sum(r["n_new"] for r in rows) == n_users
 
 
 def test_roc_auc_matches_mann_whitney_direction(spark):
@@ -944,42 +792,6 @@ def test_assortativity_matches_python_pearson(spark):
     )
     assert math.isclose(row["assortativity_r"], r, rel_tol=1e-12)
     assert -1.0 <= row["assortativity_r"] <= 1.0
-
-
-def test_seasonal_anomaly_zscores(spark):
-    import math
-
-    from bigdata_spark.plans.events import evt_seasonal_anomaly
-    from bigdata_spark.sources.catalog import load_table
-
-    e = load_table(spark, SF, "events").filter(
-        F.col("event_type") == "purchase"
-    ).select("ts", "value").collect()
-    hourly: dict = {}
-    for r in e:
-        h = r["ts"].replace(minute=0, second=0, microsecond=0)
-        hourly[h] = hourly.get(h, 0) + math.floor(r["value"] * 1e6 + 0.5)
-    season: dict = {}
-    for h, vm in hourly.items():
-        key = ((h.weekday() + 1) % 7 + 1, h.hour)  # Spark dow: Sunday=1
-        season.setdefault(key, []).append(vm)
-    means = {k: sum(v) // len(v) for k, v in season.items()}
-    resid = {
-        h: vm - means[((h.weekday() + 1) % 7 + 1, h.hour)]
-        for h, vm in hourly.items()
-    }
-    g_n = len(resid)
-    g_r2 = sum(r * r for r in resid.values())
-    sd = math.sqrt(g_r2 / g_n / 1e12)
-    expect = {
-        h: (r / 1e6) / sd for h, r in resid.items() if abs((r / 1e6) / sd) > 3.0
-    }
-    rows = evt_seasonal_anomaly(spark, SF).collect()
-    got = {r["h"]: r["z"] for r in rows}
-    assert set(got) == set(expect)
-    for h, z in got.items():
-        assert math.isclose(z, expect[h], rel_tol=1e-9)
-        assert abs(z) > 3.0
 
 
 def test_mix_diversity_bounds(spark):

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
 SF = "/root/testdata/sf0.001"
 
 
@@ -130,36 +128,6 @@ def test_sprt_decision_is_monotone_once_stopped(spark):
         run = r["llr_nano"]
         assert isinstance(run, int)
         del run_prev
-
-
-def test_changepoint_score_is_the_argmax(spark):
-    """Recompute every split's CUSUM² score in Python; the operator's
-    (t*, score) must be the exact argmax with earliest-day tie-break."""
-    from bigdata_spark.plans.events import evt_changepoint
-    from bigdata_spark.sources.catalog import load_table
-
-    row = evt_changepoint(spark, SF).collect()[0]
-    e = load_table(spark, SF, "events")
-    daily = sorted(
-        (r["d"], r["c"])
-        for r in e.select(F.expr("CAST(ts AS DATE)").alias("d"))
-        .groupBy("d")
-        .agg(F.count("*").alias("c"))
-        .collect()
-    )
-    n = len(daily)
-    s_n = sum(c for _, c in daily)
-    best = None
-    s_t = 0
-    for t, (_, c) in enumerate(daily, start=1):
-        s_t += c
-        if t >= n:
-            break
-        score = (n * s_t - t * s_n) ** 2 / (n * t * (n - t))
-        if best is None or score > best[0] + 1e-12:
-            best = (score, t)
-    assert row["t_star"] == best[1]
-    assert abs(row["cusum_score"] - round(best[0], 6)) < 1e-6
 
 
 def test_winsorized_mean_is_between_trim_bounds(spark):

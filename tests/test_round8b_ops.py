@@ -1,54 +1,9 @@
 """Round-8 second-wave invariants: cross-entry identities the value
-oracle can't express (Shapley efficiency, absorption lower bounds,
-motif consistency, DeLong bounds)."""
+oracle can't express (motif consistency, DeLong bounds)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 SF = "/root/testdata/sf0.001"
-
-
-def test_shapley_efficiency_identity(spark):
-    """Σ_i shapley_i = v(grand coalition) − v(empty) — the efficiency
-    axiom, recomputed from the same coalition values."""
-    from bigdata_spark.plans.events import evt_shapley_attribution
-    from bigdata_spark.sources.catalog import load_table
-
-    rows = evt_shapley_attribution(spark, SF).collect()
-    total_x24 = sum(r["shap_x24_ppm"] for r in rows)
-    e = load_table(spark, SF, "events")
-    users = e.groupBy("user_id").agg(
-        F.max((F.col("event_type") == "purchase").cast("int")).alias("conv"),
-        (
-            F.max((F.col("event_type") == "click").cast("int")) * 1
-            + F.max((F.col("event_type") == "error").cast("int")) * 2
-            + F.max((F.col("event_type") == "signup").cast("int")) * 4
-            + F.max((F.col("event_type") == "view").cast("int")) * 8
-        ).alias("mask"),
-    ).collect()
-    n_all = len(users)
-    c_all = sum(u["conv"] for u in users)
-    v_grand = c_all * 1_000_000 // n_all
-    empty = [u for u in users if u["mask"] == 0]
-    v_empty = (
-        (sum(u["conv"] for u in empty) * 1_000_000 // len(empty))
-        if empty
-        else 0
-    )
-    assert total_x24 == 24 * (v_grand - v_empty)
-
-
-def test_markov_absorption_bounds(spark):
-    from bigdata_spark.plans.events import evt_markov_absorption, _ABS_ITERS
-
-    rows = {r["state"]: r for r in evt_markov_absorption(spark, SF).collect()}
-    assert rows["purchase"]["expected_steps_nano"] == 0
-    for s, r in rows.items():
-        if s == "purchase":
-            continue
-        # at least one step away, and bounded by the iteration budget
-        assert 1.0 <= r["expected_steps"] <= float(_ABS_ITERS)
 
 
 def test_rectangles_consistency(spark):

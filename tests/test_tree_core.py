@@ -131,9 +131,12 @@ def test_predict_rejects_a_row_of_another_width(spark):
         with pytest.raises(Exception, match=wrong):
             model.predict(bad).collect()
 
-    # a null features row gets the majority class
+    # a null features row gets the majority class from the global tree
+    # and fails the forest's predict with a count
     null = spark.createDataFrame([(0, 0, None)], "id int, label int, features array<double>")
     assert _predictions(tree.predict(null)) == [tree.majority_class]
+    with pytest.raises(Exception, match=r"1 of 1 rows have null features"):
+        forest.predict(null).collect()
 
 
 # ---------------------------------------------------------------- old models
