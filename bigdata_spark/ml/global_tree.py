@@ -387,7 +387,8 @@ class GlobalProximityTree:
     def fit(self, df: DataFrame, label_col: str = "label", features_col: str = "features") -> "GlobalProximityTree":
         """Fit on ``df``'s label and features columns. Every row must
         have a label and a features array of one length without nulls;
-        otherwise the fit raises ``ValueError`` with the count.
+        otherwise the fit raises ``ValueError`` with the count. An empty
+        ``df`` raises ``ValueError`` too.
 
         ``fit_stats_`` then reports the Spark jobs the fit ran (in the
         caller's job group), the depth at which it went local (None:

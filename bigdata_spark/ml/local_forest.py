@@ -70,7 +70,7 @@ class LocalProximityForest:
     def fit(self, df: DataFrame, label_col: str = "label", features_col: str = "features") -> "LocalProximityForest":
         """df: (label int, features array<double>). Assigns balanced
         stratified partitions (W1+O3) then trains one tree per partition
-        via applyInPandas."""
+        via applyInPandas. An empty ``df`` raises ``ValueError``."""
         # _row_key: content hash carried into the pandas group so each
         # partition's rows can be sorted deterministically before
         # training — applyInPandas delivers rows in shuffle-fetch order,

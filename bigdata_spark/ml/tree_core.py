@@ -143,9 +143,12 @@ def spark_xxhash64(lit: int, X: np.ndarray) -> np.ndarray:
 def training_width(widths: dict[int, int], dim: int = -1) -> int:
     """The features length of a training set from its row counts by
     length (-1: a null label, null features or a null element): ``dim``
-    when given, else the most common length. Raises ``ValueError``, with
-    the count, if any row is unusable or of another length."""
+    when given, else the most common length. Raises ``ValueError`` if
+    there are no rows, and, with the count, if any row is unusable or of
+    another length."""
     total = sum(widths.values())
+    if not total:
+        raise ValueError("the training set has no rows")
     expect = dim if dim >= 0 else max((w for w in widths if w >= 0), key=widths.get, default=-1)
     bad = total - (widths.get(expect, 0) if expect >= 0 else 0)
     if bad:

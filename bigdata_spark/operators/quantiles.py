@@ -6,9 +6,9 @@ A per-group rank selection spelled as ``row_number() OVER (PARTITION BY
 g ORDER BY v)`` caps sort parallelism at the number of groups: with 3
 return flags, one task sorts a third of the fact table at any scale
 (the committed sf1 soaks show 3.7–7.2× wall for 10× data on exactly
-this shape, vs 0.7× for the bucketed twin). The scalable plan — the
-`stat_mood_median` pattern, generalized here per group and per target
-rank — is:
+this shape, vs 0.7× for the bucketed twin). The scalable plan — a
+bucketed-histogram median selection, generalized here per group and
+per target rank — is:
 
 1. collapse the fact table ONCE to the (group, value) → count
    histogram (one partial-agg shuffle; output grain is the VALUE

@@ -40,7 +40,6 @@ def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
         tpch_ext,
         tpch_full,
         qualityq,
-        statsq,
     )
 
     out: dict[str, tuple[QueryFn, str | None]] = {}
@@ -59,7 +58,6 @@ def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
         multimodalq,
         graphq,
         qualityq,
-        statsq,
         erq,
     ):
         overlap = set(out) & set(mod.QUERIES)

@@ -1308,7 +1308,7 @@ GRAPH_HITS_SQL = _hits_sql()
 
 # Pearson over the (deg_src, deg_dst) pairs of every directed edge —
 # the standard Newman assortativity; one shared IEEE expression over
-# exact decimal sufficient statistics (the stat_reg_group discipline)
+# exact decimal sufficient statistics, so both engines round alike
 _ASSORT_R = (
     "(CAST(m AS DOUBLE) * CAST(sxy AS DOUBLE)"
     " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"

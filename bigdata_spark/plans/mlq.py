@@ -825,7 +825,7 @@ def ml_linear_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers (1e-3 units, 16 dims + bias), so the normal-equation
     Gram X'X and moment X'y are exact BIGINT aggregates — ONE
     map-side-combined pass shuffling 170 cells regardless of corpus
-    size (the statsq Gram pattern at d=17). The driver solves
+    size (a 17 × 17 Gram matrix of exact sums). The driver solves
     (X'X + lambda·I) w = X'y in exact RATIONALS (Fractions — no float
     linear algebra, no conditioning questions), and prediction is the
     sign of an exact integer dot product evaluated with Python
@@ -1873,8 +1873,8 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The portable hash splits rows into train/calibration/test
     (engine-reproducible, leakage-free by construction); the fit is
-    the exact-decimal normal-equation solve (statsq's shared
-    closed-form text); q-hat is the ceil((1-alpha)(n+1))-th smallest
+    the exact-decimal normal-equation solve (one closed-form
+    expression both engines evaluate alike); q-hat is the ceil((1-alpha)(n+1))-th smallest
     absolute calibration residual, selected by rank under a total
     order (residual, orderkey, linenumber) — the w6 selection pattern,
     partitioned per group so no global sort exists; and coverage is an

@@ -1,11 +1,13 @@
 """End-to-end experiment pipeline (reference controller_loop.py §3.1):
 ingest → stats/split → preprocess → train → predict → evaluate →
-report, looped over partition counts for speedup analysis.
+report, with train → evaluate looped over partition counts for
+speedup analysis.
 
 Spark-first differences from the reference:
 - stratified split is one content-hash pass
   (``sampling.content_uniform``), not an all-columns anti-join,
 - local training is applyInPandas, not an RDD hop,
+- the partition sweep ingests and splits once, not once per count,
 - the report is the same nested shape (performance/timing/complexity →
   JSON sink, S7 parity with evaluation.py:313-347).
 """
@@ -70,6 +72,96 @@ def _memory_snapshot(spark: SparkSession) -> dict:
     return snap
 
 
+def _run(
+    df: DataFrame,
+    model: str,
+    partition_counts: list[int],
+    n_splitters: int = 3,
+    max_depth: int = 10,
+    train_fraction: float = 0.8,
+    seed: int = 42,
+    label_col: str = "label",
+    features_col: str = "features",
+) -> list[dict]:
+    """Ingest and split ``df`` once, then train, predict and evaluate
+    ``model`` once per partition count; returns one report per count.
+    Every report carries the one split's rows and ingest/split times."""
+    spark = df.sparkSession
+    mem_start = _memory_snapshot(spark)
+    split_timings: dict[str, float] = {}
+
+    t0 = time.time()
+    df = drop_all_null_rows(df)
+    split_timings["ingestion_time"] = time.time() - t0
+
+    t0 = time.time()
+    train, test = stratified_split(df, label_col, train_fraction, seed=seed)
+    train = train.persist()
+    test = test.persist()
+    n_train, n_test = train.count(), test.count()
+    split_timings["split_time"] = time.time() - t0
+
+    reports = []
+    for i, num_partitions in enumerate(partition_counts):
+        if i:  # the first count's pass started before the ingest
+            mem_start = _memory_snapshot(spark)
+        timings = dict(split_timings)
+        t0 = time.time()
+        complexity: dict[str, float] = {}
+        fit_stats: dict = {}  # the global fit's GlobalProximityTree.fit_stats_
+        if model == "local":
+            m = LocalProximityForest(
+                num_partitions=num_partitions, n_splitters=n_splitters,
+                max_depth=max_depth, seed=seed,
+            ).fit(train, label_col, features_col)
+            complexity["n_trees"] = len(m.trees)
+        else:
+            m = GlobalProximityTree(
+                n_splitters=n_splitters, max_depth=max_depth, seed=seed
+            ).fit(train, label_col, features_col)
+            complexity["depth"] = m.depth
+            complexity["n_nodes"] = len(m.tree)
+            fit_stats = m.fit_stats_
+        timings["training_time"] = time.time() - t0
+        mem_after_train = _memory_snapshot(spark)
+
+        t0 = time.time()
+        preds = m.predict(test, features_col).persist()
+        preds.count()
+        timings["prediction_time"] = time.time() - t0
+
+        t0 = time.time()
+        # one confusion-counts job feeds every metric (ml/evaluation.py)
+        counts = _confusion_counts(preds, label_col, "prediction")
+        performance = metrics_from_counts(counts)
+        performance["balanced_accuracy"] = balanced_accuracy_from_counts(counts)
+        timings["evaluation_time"] = time.time() - t0
+
+        preds.unpersist()
+        if i == len(partition_counts) - 1:
+            train.unpersist()
+            test.unpersist()
+        reports.append({
+            "model": model,
+            "num_partitions": num_partitions,
+            # the split is an exact complement (a never-null content hash
+            # puts each row on one side), so the sides add up to the total
+            "rows": {"total": n_train + n_test, "train": n_train, "test": n_test},
+            "performance": {k: round(v, 6) for k, v in performance.items()},
+            "timing": {k: round(v, 3) for k, v in timings.items()},
+            "complexity": complexity,
+            "fit": fit_stats,
+            # reference evaluation.py:313-347 parity: memory sampled at the
+            # stage boundaries that matter (start, post-train, end)
+            "memory": {
+                "start": mem_start,
+                "after_training": mem_after_train,
+                "end": _memory_snapshot(spark),
+            },
+        })
+    return reports
+
+
 def run_pipeline(
     df: DataFrame,
     model: str = "local",
@@ -82,73 +174,10 @@ def run_pipeline(
     features_col: str = "features",
 ) -> dict:
     """One experiment iteration; returns the report dict."""
-    timings: dict[str, float] = {}
-    spark = df.sparkSession
-    mem_start = _memory_snapshot(spark)
-
-    t0 = time.time()
-    df = drop_all_null_rows(df)
-    timings["ingestion_time"] = time.time() - t0
-
-    t0 = time.time()
-    train, test = stratified_split(df, label_col, train_fraction, seed=seed)
-    train = train.persist()
-    test = test.persist()
-    n_train, n_test = train.count(), test.count()
-    timings["split_time"] = time.time() - t0
-
-    t0 = time.time()
-    complexity: dict[str, float] = {}
-    fit_stats: dict = {}  # the global fit's GlobalProximityTree.fit_stats_
-    if model == "local":
-        m = LocalProximityForest(
-            num_partitions=num_partitions, n_splitters=n_splitters,
-            max_depth=max_depth, seed=seed,
-        ).fit(train, label_col, features_col)
-        complexity["n_trees"] = len(m.trees)
-    else:
-        m = GlobalProximityTree(
-            n_splitters=n_splitters, max_depth=max_depth, seed=seed
-        ).fit(train, label_col, features_col)
-        complexity["depth"] = m.depth
-        complexity["n_nodes"] = len(m.tree)
-        fit_stats = m.fit_stats_
-    timings["training_time"] = time.time() - t0
-    mem_after_train = _memory_snapshot(spark)
-
-    t0 = time.time()
-    preds = m.predict(test, features_col).persist()
-    preds.count()
-    timings["prediction_time"] = time.time() - t0
-
-    t0 = time.time()
-    # one confusion-counts job feeds every metric (ml/evaluation.py)
-    counts = _confusion_counts(preds, label_col, "prediction")
-    performance = metrics_from_counts(counts)
-    performance["balanced_accuracy"] = balanced_accuracy_from_counts(counts)
-    timings["evaluation_time"] = time.time() - t0
-
-    train.unpersist()
-    test.unpersist()
-    preds.unpersist()
-    return {
-        "model": model,
-        "num_partitions": num_partitions,
-        # the split is an exact complement (a never-null content hash
-        # puts each row on one side), so the sides add up to the total
-        "rows": {"total": n_train + n_test, "train": n_train, "test": n_test},
-        "performance": {k: round(v, 6) for k, v in performance.items()},
-        "timing": {k: round(v, 3) for k, v in timings.items()},
-        "complexity": complexity,
-        "fit": fit_stats,
-        # reference evaluation.py:313-347 parity: memory sampled at the
-        # stage boundaries that matter (start, post-train, end)
-        "memory": {
-            "start": mem_start,
-            "after_training": mem_after_train,
-            "end": _memory_snapshot(spark),
-        },
-    }
+    return _run(
+        df, model, [num_partitions], n_splitters, max_depth,
+        train_fraction, seed, label_col, features_col,
+    )[0]
 
 
 def run_partition_sweep(
@@ -160,10 +189,12 @@ def run_partition_sweep(
 ) -> dict:
     """Reference controller loop (controller_loop.py:135-158): sweep
     partition counts, accumulate one report per iteration, compute
-    speedup vs. the first iteration, optionally JSON-sink (S7)."""
-    reports: dict[str, dict] = {}
-    for n in partition_counts:
-        reports[str(n)] = run_pipeline(df, model=model, num_partitions=n, **kwargs)
+    speedup vs. the first iteration, optionally JSON-sink (S7). The
+    ingest and split run once; only training onwards repeats per count.
+    ``kwargs`` are ``run_pipeline``'s model and split parameters."""
+    reports = {
+        str(n): rep for n, rep in zip(partition_counts, _run(df, model, partition_counts, **kwargs))
+    }
     base = reports[str(partition_counts[0])]["timing"]["training_time"]
     for n in partition_counts:
         t = reports[str(n)]["timing"]["training_time"]

@@ -1,13 +1,8 @@
 from .catalog import TABLES, load_table, load_tables, register_views
-from .readers import read_csv, read_parquet, read_tsv, require_nonempty
 
 __all__ = [
     "TABLES",
     "load_table",
     "load_tables",
     "register_views",
-    "read_csv",
-    "read_parquet",
-    "read_tsv",
-    "require_nonempty",
 ]

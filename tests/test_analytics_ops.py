@@ -1,5 +1,5 @@
 """Invariant tests for the round-4 analytics additions (skyline,
-quantile bins, PSI, MAD outliers). Cross-engine value equality lives in
+quantile bins, PSI, imputation). Cross-engine value equality lives in
 the oracle gate; these pin the semantic properties."""
 
 from __future__ import annotations
@@ -107,32 +107,6 @@ def test_rake_scores_positive_and_stopword_free(spark):
         assert len(words) == r["n_words"]
         assert not set(words) & set(_RAKE_STOPS)
         assert r["score"] > 0
-
-
-def test_mad_outliers_matches_bruteforce(spark):
-    import statistics
-
-    from bigdata_spark.plans.statsq import stat_mad_outliers
-    from bigdata_spark.sources.catalog import load_table
-
-    sf = "/root/testdata/sf0.001"
-    rows = (
-        load_table(spark, sf, "lineitem")
-        .select("l_returnflag", "l_quantity")
-        .collect()
-    )
-    got = {r["l_returnflag"]: r for r in stat_mad_outliers(spark, sf).collect()}
-    for g in ("A", "N", "R"):
-        vals = sorted(int(r["l_quantity"]) for r in rows if r["l_returnflag"] == g)
-        n = len(vals)
-        med = vals[(n + 1) // 2 - 1]  # lower median
-        devs = sorted(abs(v - med) for v in vals)
-        mad = devs[(n + 1) // 2 - 1]
-        outliers = sum(1 for v in vals if abs(v - med) > 3 * mad)
-        r = got[g]
-        assert (r["n"], r["median_qty"], r["mad"], r["n_outliers"]) == (
-            n, med, mad, outliers,
-        ), (g, statistics.median(vals))
 
 
 def test_dp_count_noise_properties(spark):

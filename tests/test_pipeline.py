@@ -6,6 +6,7 @@ import json
 
 import numpy as np
 
+from bigdata_spark.plans import pipeline
 from bigdata_spark.plans.pipeline import run_partition_sweep, run_pipeline
 
 
@@ -41,12 +42,23 @@ def test_run_pipeline_rows_total_is_train_plus_test(spark):
     assert 2 <= rep["fit"]["jobs"] <= 3
 
 
-def test_partition_sweep_report(spark, tmp_path):
+def test_partition_sweep_report(spark, tmp_path, monkeypatch):
+    split, splits = pipeline.stratified_split, []
+
+    def counted_split(*args, **kwargs):
+        splits.append(args)
+        return split(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "stratified_split", counted_split)
     p = str(tmp_path / "report.json")
     reports = run_partition_sweep(
         _clusters(spark), [2, 4], model="local", report_path=p
     )
     assert set(reports) == {"2", "4"}
     assert reports["2"]["speedup"] == 1.0
+    # the sweep splits once and every count trains on that split
+    assert len(splits) == 1
+    assert reports["2"]["rows"] == reports["4"]["rows"]
+    assert reports["4"]["complexity"]["n_trees"] == 4
     on_disk = json.load(open(p))
     assert on_disk["4"]["performance"]["accuracy"] > 0.9

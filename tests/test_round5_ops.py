@@ -1,12 +1,10 @@
 """Invariant tests for the round-5 additions (ER linkage, CMS, GBT,
-logreg, URL dedup, perplexity buckets, ACF/EWMA/Theil-Sen/Gini).
+logreg, URL dedup, perplexity buckets, quadkeys).
 
 The cross-engine value check lives in the oracle gate; these assert
 the mathematical invariants a hash match alone would not explain."""
 
 from __future__ import annotations
-
-import math
 
 SF = "/root/testdata/sf0.001"
 
@@ -134,93 +132,3 @@ def test_quadkey_parents_are_contiguous_z_ranges(spark):
         assert r["z_range_contiguous"] is True
         assert r["n_points"] >= r["n_leaf_cells"] >= 1
         assert 0 <= r["parent_cell"] < 4**6
-
-
-def test_power_analysis_monotone_in_mde(spark):
-    from bigdata_spark.plans.statsq import stat_power_analysis
-
-    rows = sorted(
-        stat_power_analysis(spark, SF).collect(), key=lambda r: r["mde_abs"]
-    )
-    assert [round(r["mde_abs"], 2) for r in rows] == [0.01, 0.02, 0.05]
-    ns = [r["n_per_arm"] for r in rows]
-    # bigger detectable effects need fewer samples
-    assert ns == sorted(ns, reverse=True)
-    p0 = rows[0]["baseline_rate"]
-    assert 0.0 < p0 < 1.0
-    # closed form sanity at the first delta
-    za, zb = 1.959963984540054, 0.8416212335729143
-    p1 = p0 + 0.01
-    expect = math.ceil(
-        (za + zb) ** 2 * (p0 * (1 - p0) + p1 * (1 - p1)) / 0.01**2
-    )
-    assert abs(ns[0] - expect) <= 1
-
-
-# --- time-series stats -------------------------------------------------------
-
-
-def test_acf_values_in_range(spark):
-    from bigdata_spark.plans.statsq import stat_acf
-
-    rows = stat_acf(spark, SF).collect()
-    assert [r["lag"] for r in rows] == [1, 2, 3, 4, 5]
-    for r in rows:
-        assert -1.0 - 1e-9 <= r["acf"] <= 1.0 + 1e-9
-
-
-def test_ewma_between_min_max_of_window(spark):
-    from bigdata_spark.plans.statsq import stat_ewma
-
-    rows = stat_ewma(spark, SF).collect()
-    assert rows
-    revs = [r["revenue"] for r in rows]
-    for i, r in enumerate(rows):
-        window = revs[max(0, i - 9) : i + 1]
-        assert min(window) - 1e-6 <= r["ewma"] <= max(window) + 1e-6
-
-
-def test_theil_sen_agrees_with_numpy(spark):
-    import numpy as np
-
-    from bigdata_spark.plans.statsq import stat_theil_sen
-    from bigdata_spark.sources.catalog import load_table
-    from pyspark.sql import functions as F
-
-    row = stat_theil_sen(spark, SF).first()
-    o = load_table(spark, SF, "orders")
-    monthly = (
-        o.groupBy(F.date_trunc("month", "o_orderdate").alias("m"))
-        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("rev"))
-        .orderBy("m")
-        .collect()
-    )
-    ys = np.array([r["rev"] for r in monthly])
-    slopes = []
-    for i in range(len(ys)):
-        for j in range(i + 1, len(ys)):
-            slopes.append((ys[j] - ys[i]) / (j - i))
-    assert math.isclose(
-        row["theil_sen_slope"], float(np.median(slopes)), rel_tol=1e-9, abs_tol=1e-6
-    )
-    assert row["n_pairs"] == len(slopes)
-
-
-def test_gini_matches_definition(spark):
-    from bigdata_spark.plans.statsq import stat_gini_lorenz
-    from bigdata_spark.sources.catalog import load_table
-    from pyspark.sql import functions as F
-
-    row = stat_gini_lorenz(spark, SF).first()
-    o = load_table(spark, SF, "orders")
-    spend = sorted(
-        r["s"]
-        for r in o.groupBy("o_custkey")
-        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("s"))
-        .collect()
-    )
-    n = len(spend)
-    mean_abs = sum(abs(a - b) for a in spend for b in spend) / (n * n)
-    gini_def = mean_abs / (2 * sum(spend) / n)
-    assert 0.0 <= row["gini"] <= 1.0
-    assert math.isclose(row["gini"], gini_def, rel_tol=0, abs_tol=1.5 / n)

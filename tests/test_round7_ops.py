@@ -166,17 +166,6 @@ def test_embedding_drift_ranked_and_bounded(spark):
         assert abs(r["mean_cur"] - r["mean_ref"]) < 1.0
 
 
-def test_permutation_test_pvalue_bounds_and_determinism(spark):
-    from bigdata_spark.plans.statsq import _PERM_B, stat_permutation_test
-
-    r1 = stat_permutation_test(spark, SF).collect()[0]
-    r2 = stat_permutation_test(spark, SF).collect()[0]
-    assert tuple(r1) == tuple(r2)  # portable-hash perms: bit-deterministic
-    assert 0 < r1["p_value"] <= 1.0
-    assert 0 <= r1["n_exceed"] <= _PERM_B
-    assert r1["obs_abs_diff"] >= 0.0
-
-
 def test_pipe_syntax_matches_standard_form(spark):
     from bigdata_spark.plans.scaleq import sql_pipe_syntax
     from bigdata_spark.sources.catalog import load_table
@@ -241,37 +230,6 @@ def test_kmv_estimator_within_3_sigma_when_full(spark):
     assert abs(est - true_n) / true_n <= 3 / (_KMV_K - 2) ** 0.5
 
 
-def test_spearman_rank_sums_and_rho_bounds(spark):
-    # sum of doubled tie-averaged ranks over all rows is exactly
-    # n*(n+1) for ANY tie structure — a closed-form invariant
-    from bigdata_spark.plans.statsq import stat_spearman
-    from bigdata_spark.sources.catalog import load_table
-
-    row = stat_spearman(spark, SF).first()
-    n = load_table(spark, SF, "lineitem").count()
-    assert row["n"] == n
-    assert row["sum_rank2_q"] == n * (n + 1)
-    assert row["sum_rank2_d"] == n * (n + 1)
-    assert -1.0 <= row["spearman_rho"] <= 1.0
-
-
-def test_spearman_matches_bruteforce_ranking(spark):
-    # rankless contingency formulation == brute-force average-rank
-    # Pearson computed with plain windows on the raw rows
-    import math
-
-    from bigdata_spark.plans.statsq import stat_spearman
-    from bigdata_spark.sources.catalog import load_table
-
-    li = load_table(spark, SF, "lineitem").select("l_quantity", "l_discount")
-    pdf = li.toPandas()
-    rx = pdf["l_quantity"].rank(method="average")
-    ry = pdf["l_discount"].rank(method="average")
-    expected = rx.corr(ry)  # pandas Pearson over average ranks
-    got = stat_spearman(spark, SF).first()["spearman_rho"]
-    assert math.isclose(got, expected, rel_tol=1e-9)
-
-
 def test_fairness_ratios_invariants(spark):
     from bigdata_spark.plans.qualityq import dq_fairness_ratios
 
@@ -283,51 +241,6 @@ def test_fairness_ratios_invariants(spark):
             assert 0 <= r[c] <= 1_000_000
         assert r["di_ppm"] <= 1_000_000
         assert r["passes_80pct_rule"] == int(r["di_ppm"] >= 800_000)
-
-
-def test_kendall_pair_count_identity(spark):
-    # C + D + n1 + n2 - tied_both == n(n-1)/2 — exact pair bookkeeping
-    from bigdata_spark.plans.statsq import stat_kendall_tau
-    from bigdata_spark.sources.catalog import load_table
-
-    r = stat_kendall_tau(spark, SF).first()
-    li = load_table(spark, SF, "lineitem").select("l_quantity", "l_discount")
-    joint = li.groupBy("l_quantity", "l_discount").count()
-    tied_both = joint.selectExpr("SUM(count * (count - 1) div 2) AS t").first()["t"]
-    n0 = r["n"] * (r["n"] - 1) // 2
-    assert (
-        r["concordant"] + r["discordant"]
-        + r["tied_q_pairs"] + r["tied_d_pairs"] - tied_both
-        == n0
-    )
-    assert -1.0 <= r["kendall_tau_b"] <= 1.0
-
-
-def test_kendall_matches_bruteforce_on_small_sample(spark):
-    # contingency formulation == O(n^2) brute force on a small slice
-    from bigdata_spark.plans.statsq import stat_kendall_tau
-    from bigdata_spark.sources.catalog import load_table
-
-    pdf = (
-        load_table(spark, SF, "lineitem")
-        .select("l_quantity", "l_discount")
-        .toPandas()
-    )
-    got = stat_kendall_tau(spark, SF).first()
-    import numpy as np
-
-    q = pdf["l_quantity"].to_numpy()
-    dd = pdf["l_discount"].to_numpy()
-    n = len(q)
-    c = d = 0
-    for i in range(0, n, 512):  # blocked full n×n sign matrix
-        s = np.sign(q[i : i + 512, None] - q[None, :]) * np.sign(
-            dd[i : i + 512, None] - dd[None, :]
-        )
-        c += int((s > 0).sum())
-        d += int((s < 0).sum())
-    # the full matrix counts every unordered pair twice
-    assert got["concordant"] == c // 2 and got["discordant"] == d // 2
 
 
 def test_modularity_contributions_sum_and_bounds(spark):

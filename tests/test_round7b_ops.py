@@ -1,5 +1,5 @@
-"""Round-7 second-batch operators: weighted SSSP, HITS, exact moment
-statistics, and the stratified survival life table."""
+"""Round-7 second-batch operators: weighted SSSP, HITS, allocation,
+isotonic fits, point-in-time joins and manifest pruning."""
 
 from __future__ import annotations
 
@@ -76,46 +76,6 @@ def test_hits_matches_python_integer_iteration(spark):
     assert _HITS_SCALE // 2 <= sum(auth.values()) <= 2 * _HITS_SCALE
 
 
-def test_skew_kurtosis_matches_python_moments(spark):
-    from bigdata_spark.plans.statsq import stat_skew_kurtosis
-    from bigdata_spark.sources.catalog import load_table
-
-    raw = load_table(spark, SF, "orders").select(
-        "o_orderpriority", "o_totalprice"
-    ).collect()
-    groups: dict[str, list[int]] = {}
-    for r in raw:
-        groups.setdefault(r["o_orderpriority"], []).append(
-            math.floor(r["o_totalprice"] + 0.5)
-        )
-
-    rows = {r["o_orderpriority"]: r for r in stat_skew_kurtosis(spark, SF).collect()}
-    assert set(rows) == set(groups)
-    for k, qs in groups.items():
-        n = float(len(qs))
-        s1 = float(sum(qs))
-        s2 = float(sum(q * q for q in qs))
-        s3 = float(sum(q * q * q for q in qs))
-        s4 = float(sum(q * q * q * q for q in qs))
-        mean = s1 / n
-        m2 = s2 / n - mean * mean
-        m3 = s3 / n - 3.0 * mean * (s2 / n) + 2.0 * mean * mean * mean
-        m4 = (
-            s4 / n
-            - 4.0 * mean * (s3 / n)
-            + 6.0 * mean * mean * (s2 / n)
-            - 3.0 * mean * mean * mean * mean
-        )
-        r = rows[k]
-        assert r["n"] == len(qs) and r["sum_units"] == sum(qs)
-        assert math.isclose(r["mean_units"], mean, rel_tol=1e-12)
-        assert math.isclose(r["var_units"], m2, rel_tol=1e-12)
-        assert math.isclose(
-            r["skewness"], m3 / (m2 * math.sqrt(m2)), rel_tol=1e-9
-        )
-        assert math.isclose(r["kurtosis_excess"], m4 / (m2 * m2) - 3.0, rel_tol=1e-9)
-
-
 def test_neyman_allocation_exhausts_budget(spark):
     from bigdata_spark.plans.samplingq import _ALLOC_N, p9_neyman_allocation
     from bigdata_spark.sources.catalog import load_table
@@ -129,59 +89,6 @@ def test_neyman_allocation_exhausts_budget(spark):
     # Neyman must differ from proportional when stddevs differ... or at
     # minimum never allocate more than the budget to one stratum
     assert max(r["alloc_neyman"] for r in rows) < _ALLOC_N
-
-
-def test_cem_att_matches_python_replication(spark):
-    import math
-
-    from bigdata_spark.plans.statsq import _CEM_BAL_BIN, _CEM_TREATMENT, stat_cem_att
-    from bigdata_spark.sources.catalog import load_table
-
-    o = load_table(spark, SF, "orders")
-    c = load_table(spark, SF, "customer")
-    n = load_table(spark, SF, "nation")
-    joined = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(n, c.c_nationkey == n.n_nationkey)
-        .select("n_regionkey", "c_acctbal", "o_orderpriority",
-                "c_mktsegment", "o_totalprice")
-        .collect()
-    )
-    strata: dict[tuple, list] = {}
-    for r in joined:
-        key = (
-            r["n_regionkey"],
-            math.floor(r["c_acctbal"] / _CEM_BAL_BIN),
-            r["o_orderpriority"],
-        )
-        t = 1 if r["c_mktsegment"] == _CEM_TREATMENT else 0
-        cents = math.floor(r["o_totalprice"] * 100 + 0.5)
-        strata.setdefault(key, []).append((t, cents))
-    att_num = m_t = m_c = n_strata = unmatched = 0
-    for units in strata.values():
-        nt = sum(t for t, _ in units)
-        nc = len(units) - nt
-        if nt > 0 and nc == 0:
-            unmatched += nt
-        if nt == 0 or nc == 0:
-            continue
-        sum_t = sum(ce for t, ce in units if t == 1)
-        sum_c = sum(ce for t, ce in units if t == 0)
-        mc_micro = (10000 * sum_c) // nc  # nonneg: trunc == floor
-        att_num += 10000 * sum_t - nt * mc_micro
-        m_t += nt
-        m_c += nc
-        n_strata += 1
-    row = stat_cem_att(spark, SF).collect()[0]
-    assert row["n_strata_matched"] == n_strata
-    assert row["n_treated_matched"] == m_t
-    assert row["n_control_matched"] == m_c
-    assert row["n_treated_unmatched"] == unmatched
-    expect_micro = (
-        att_num // m_t if att_num >= 0 else -((-att_num) // m_t)
-    )  # SQL div truncates toward zero
-    assert row["att_micro_cents"] == expect_micro
-    assert math.isclose(row["att_dollars"], att_num / m_t / 1e6, rel_tol=1e-12)
 
 
 def test_quantile_hist_brackets_exact_percentile(spark):
@@ -309,48 +216,6 @@ def test_pava_rational_and_isotonic_fit(spark):
     assert all(0 <= p <= 1_000_000 for p in ppm)
 
 
-def test_qini_uplift_curve_invariants(spark):
-    from bigdata_spark.plans.statsq import stat_qini_uplift
-    from bigdata_spark.sources.catalog import load_table
-
-    rows = stat_qini_uplift(spark, SF).collect()
-    assert [r["decile"] for r in rows] == list(range(1, 11))
-    n_users = (
-        load_table(spark, SF, "events").select("user_id").distinct().count()
-    )
-    # ntile buckets differ by at most 1 and partition the users
-    sizes = [r["n_t"] + r["n_c"] for r in rows]
-    assert sum(sizes) == n_users and max(sizes) - min(sizes) <= 1
-    ct = cc = yt = yc = 0
-    for r in rows:
-        ct += r["n_t"]; cc += r["n_c"]; yt += r["y_t"]; yc += r["y_c"]
-        assert (r["n_t_cum"], r["n_c_cum"], r["y_t_cum"], r["y_c_cum"]) == (
-            ct, cc, yt, yc,
-        )
-        if cc == 0:
-            assert r["qini"] is None
-        else:
-            assert abs(r["qini"] - (yt - yc * ct / cc)) < 1e-9
-        if ct == 0 or cc == 0:
-            assert r["uplift_cum"] is None
-        else:
-            assert abs(r["uplift_cum"] - (yt / ct - yc / cc)) < 1e-12
-
-
-def test_eb_shrinkage_pulls_toward_prior(spark):
-    from bigdata_spark.plans.statsq import _EB_ALPHA, _EB_BETA, stat_eb_shrinkage
-
-    rows = stat_eb_shrinkage(spark, SF).collect()
-    assert len(rows) == 25
-    prior_ppm = 1_000_000 * _EB_ALPHA // (_EB_ALPHA + _EB_BETA)
-    for r in rows:
-        assert r["raw_ppm"] == (1_000_000 * r["y"]) // r["n"]
-        lo, hi = sorted((r["raw_ppm"], prior_ppm))
-        assert lo - 1 <= r["shrunk_ppm"] <= hi + 1  # trunc-div slack
-    assert sorted(r["rank_raw"] for r in rows) == list(range(1, 26))
-    assert sorted(r["rank_shrunk"] for r in rows) == list(range(1, 26))
-
-
 def test_readability_matches_python_regex(spark):
     import re
 
@@ -438,29 +303,6 @@ def test_pseudonymize_join_is_referentially_intact(spark):
     assert row["n_orders"] == load_table(spark, SF, "orders").count()
     assert row["n_joined_raw"] == row["n_orders"]  # every order has a customer
     assert row["n_tokens"] == row["n_keys"] <= row["n_orders"]
-
-
-def test_control_chart_zscores(spark):
-    import math
-
-    from bigdata_spark.plans.statsq import stat_control_chart
-    from bigdata_spark.sources.catalog import load_table
-
-    rows = stat_control_chart(spark, SF).collect()
-    n_orders = load_table(spark, SF, "orders").count()
-    assert sum(r["n"] for r in rows) == n_orders
-    g_n = sum(r["n"] for r in rows)
-    g_c1 = sum(r["sum_cents"] for r in rows)
-    # rebuild the global second moment from the raw table
-    raw = load_table(spark, SF, "orders").select("o_totalprice").collect()
-    cents = [math.floor(r["o_totalprice"] * 100 + 0.5) for r in raw]
-    g_c2 = sum(c * c for c in cents)
-    mu = g_c1 / g_n
-    sd = math.sqrt(g_c2 / g_n - mu * mu)
-    for r in rows:
-        z = (r["sum_cents"] / r["n"] - mu) / (sd / math.sqrt(r["n"]))
-        assert math.isclose(r["z"], z, rel_tol=1e-9)
-        assert r["out_of_control"] == (abs(r["z"]) > 3.0)
 
 
 def test_quantized_recall_bounds_and_replication(spark):
@@ -655,64 +497,6 @@ def test_jl_projection_audit_exact_replication(spark):
     assert near / total > 0.9
 
 
-def test_trimmed_mean_drops_exact_tails(spark):
-    import math
-
-    from bigdata_spark.plans.statsq import _TRIM_PCT, stat_trimmed_mean
-    from bigdata_spark.sources.catalog import load_table
-
-    raw = load_table(spark, SF, "orders").select(
-        "o_orderpriority", "o_orderkey", "o_totalprice"
-    ).collect()
-    groups: dict[str, list] = {}
-    for r in raw:
-        groups.setdefault(r["o_orderpriority"], []).append(
-            (math.floor(r["o_totalprice"] * 100 + 0.5), r["o_orderkey"])
-        )
-    rows = {r["o_orderpriority"]: r for r in stat_trimmed_mean(spark, SF).collect()}
-    for prio, vals in groups.items():
-        vals.sort()
-        n = len(vals)
-        k = n * _TRIM_PCT // 100
-        kept = [c for c, _ in vals[k : n - k]]
-        r = rows[prio]
-        assert r["n"] == n and r["n_trimmed_each_side"] == k
-        assert r["n_kept"] == len(kept)
-        assert r["sum_kept_cents"] == sum(kept)
-        assert math.isclose(
-            r["trimmed_mean_cents"], sum(kept) / len(kept), rel_tol=1e-12
-        )
-
-
-def test_anova_matches_python_sums(spark):
-    import math
-
-    from bigdata_spark.plans.statsq import stat_anova_oneway
-    from bigdata_spark.sources.catalog import load_table
-
-    raw = load_table(spark, SF, "orders").select(
-        "o_orderpriority", "o_totalprice"
-    ).collect()
-    groups: dict[str, list[int]] = {}
-    for r in raw:
-        groups.setdefault(r["o_orderpriority"], []).append(
-            math.floor(r["o_totalprice"] + 0.5)
-        )
-    k = len(groups)
-    n = sum(len(v) for v in groups.values())
-    s1 = sum(sum(v) for v in groups.values())
-    s2 = sum(x * x for v in groups.values() for x in v)
-    ssq_n = sum(sum(v) ** 2 // len(v) for v in groups.values())
-    row = stat_anova_oneway(spark, SF).collect()[0]
-    assert (row["k"], row["n"], row["sum_sq_over_n_units"]) == (k, n, ssq_n)
-    ssb = ssq_n - s1 * s1 / n
-    sst = s2 - s1 * s1 / n
-    f = (ssb / (k - 1)) / ((sst - ssb) / (n - k))
-    assert math.isclose(row["ss_between"], ssb, rel_tol=1e-12)
-    assert math.isclose(row["ss_total"], sst, rel_tol=1e-12)
-    assert math.isclose(row["f_stat"], f, rel_tol=1e-9)
-
-
 def test_roc_auc_matches_mann_whitney_direction(spark):
     import math
 
@@ -803,30 +587,6 @@ def test_mix_diversity_bounds(spark):
     # dominance is at least the uniform share
     assert row["doc_dominance_ppm"] >= 1_000_000 // row["n_sources"]
     assert row["tok_dominance_ppm"] >= 1_000_000 // row["n_sources"]
-
-
-def test_survival_lifetable_invariants(spark):
-    from bigdata_spark.plans.statsq import stat_survival_lifetable
-
-    rows = stat_survival_lifetable(spark, SF).collect()
-    assert rows
-    by_type: dict[str, list] = {}
-    for r in rows:
-        by_type.setdefault(r["event_type"], []).append(r)
-    for et, rs in by_type.items():
-        durs = [r["dur_days"] for r in rs]
-        assert durs == sorted(durs)
-        # risk set shrinks as duration grows; events+censored exhaust it
-        risks = [r["n_risk"] for r in rs]
-        assert risks == sorted(risks, reverse=True)
-        assert risks[0] == sum(r["n_event"] + r["n_censored"] for r in rs)
-        cum = 0
-        for r in rs:
-            assert 0 <= r["n_event"] <= r["n_risk"]
-            assert 0.0 <= r["hazard"] <= 1.0
-            assert r["hazard_ppm"] == (1_000_000 * r["n_event"]) // r["n_risk"]
-            cum += r["hazard_ppm"]
-            assert r["cum_hazard_ppm"] == cum
 
 
 def test_manifest_stats_pruning_api(spark, tmp_path):

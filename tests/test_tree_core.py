@@ -1,6 +1,7 @@
 """The proximity-tree core behind the global tree, the local tree and the
 forest: fit and predict route every row the same way, predict checks
-the row width, and models saved by earlier versions still load."""
+the row width, fit rejects an empty training set, and models saved by
+earlier versions still load."""
 
 from __future__ import annotations
 
@@ -137,6 +138,20 @@ def test_predict_rejects_a_row_of_another_width(spark):
     assert _predictions(tree.predict(null)) == [tree.majority_class]
     with pytest.raises(Exception, match=r"1 of 1 rows have null features"):
         forest.predict(null).collect()
+
+
+@pytest.mark.parametrize(
+    "model",
+    [
+        GlobalProximityTree(n_splitters=2, max_depth=3, seed=1),
+        LocalProximityForest(num_partitions=2, n_splitters=2, max_depth=3, seed=1),
+    ],
+    ids=["global", "forest"],
+)
+def test_fit_rejects_an_empty_training_set(spark, model):
+    empty = spark.createDataFrame([], "id int, label int, features array<double>")
+    with pytest.raises(ValueError, match=r"^the training set has no rows$"):
+        model.fit(empty)
 
 
 # ---------------------------------------------------------------- old models

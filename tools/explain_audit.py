@@ -136,11 +136,6 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
         ("top-k is a bounded TakeOrdered, not a full sort", r"TakeOrderedAndProject"),
         ("no Python evaluation", r"^(?![\s\S]*(BatchEvalPython|ArrowEvalPython|MapInPandas))"),
     ],
-    "stat_permutation_test": [
-        ("click filter pushed to scan", r"PushedFilters: \[.*EqualTo\(event_type,click\)"),
-        ("per-perm sums map-side combine", r"partial_sum\("),
-        ("no Python evaluation (portable-hash relabeling)", r"^(?![\s\S]*(BatchEvalPython|ArrowEvalPython|MapInPandas))"),
-    ],
     "sql_pipe_syntax": [
         ("pipe-form filter still pushes to scan", r"PushedFilters: \[.*LessThanOrEqual\(l_shipdate"),
         ("pipe-form aggregate still map-side combines", r"partial_sum\("),
@@ -228,15 +223,6 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
         ("representative selection is a group limit, not a full sort per key", r"WindowGroupLimit|window"),
         ("survivor counts partially aggregated", r"partial_count"),
     ],
-    "stat_reg_multi": [
-        ("map-side partial decimal Gram sums", r"partial_sum\(cast\(l_quantity"),
-        ("scan pruned to the regression columns", r"ReadSchema: (?![^\n]*l_shipdate)(?![^\n]*l_tax)"),
-        ("no Python in the solve (pure codegen projection)", r"^(?![\s\S]*BatchEvalPython)"),
-    ],
-    "stat_ab_welch": [
-        ("one conditional aggregation, no self-join", r"^(?![\s\S]*SortMergeJoin)(?![\s\S]*BroadcastHashJoin)"),
-        ("map-side partials for both arms", r"partial_sum"),
-    ],
     "p7_pps_systematic": [
         ("bucket offsets broadcast onto fact rows", r"BroadcastHashJoin"),
         ("fact window is bucket-partitioned (no global sort of facts)", r"Window[\s\S]*partitionBy|windowspecdefinition\(bucket"),
@@ -310,11 +296,6 @@ AUDITS.update({
         ("single scan via Expand for multi-distinct", r"Expand"),
         ("scan pruned to the four profiled columns", r"ReadSchema: struct<o_orderkey:bigint,o_custkey:bigint,o_orderstatus:string,o_orderdate:timestamp"),
     ],
-    "stat_mannwhitney": [
-        ("fact collapses via map-side partial agg", r"partial_sum"),
-        ("rankless: no window over fact rows, only the value domain", NO_PYTHON),
-        ("scan pruned to (returnflag, quantity)", r"ReadSchema: struct<l_quantity:double,l_returnflag:string>"),
-    ],
     "txt_rake_keyphrases": [
         ("word stats broadcast onto phrase words", r"BroadcastHashJoin"),
         ("all-native expressions", NO_PYTHON),
@@ -337,18 +318,8 @@ AUDITS.update({
         ("top-3 neighbors is a group limit", r"WindowGroupLimit"),
         ("all-native expressions", NO_PYTHON),
     ],
-    "stat_bootstrap_ci": [
-        ("all 20 replicates in ONE partial-agg pass", r"partial_sum"),
-        ("replicate fanout stays native (constant-folded Generate)", r"(?s)Generate\b.*Arguments: explode"),
-        ("no Python evaluation", NO_PYTHON),
-    ],
     "graph_cc_distributed": [
         ("census is a partial-agg groupBy over the star forest", r"partial_count|partial_min"),
-        ("no Python evaluation", NO_PYTHON),
-    ],
-    "stat_mad_outliers": [
-        ("both medians selected on the value DOMAIN (partial-agg collapse)", r"partial_count"),
-        ("median/MAD tables broadcast back", r"BroadcastHashJoin"),
         ("no Python evaluation", NO_PYTHON),
     ],
     "er_blocked_linkage": [
@@ -360,16 +331,6 @@ AUDITS.update({
     "geo_quadkey_rollup": [
         ("leaf-cell census partial-aggregates map-side", r"partial_count"),
         ("only the two embedding dims feed the key (no label read)", r"ReadSchema: (?![^\n]*label)"),
-        ("no Python evaluation", NO_PYTHON),
-    ],
-    "stat_acf": [
-        ("daily census is a partial-agg groupBy", r"partial_count"),
-        ("global stats broadcast to the per-lag rows", r"BroadcastNestedLoopJoin|BroadcastExchange"),
-        ("no Python evaluation", NO_PYTHON),
-    ],
-    "stat_gini_lorenz": [
-        ("per-customer spend partial-aggregates before the rank", r"partial_sum"),
-        ("rank·spend reduced with exact decimal sums", r"partial_sum\(.*decimal"),
         ("no Python evaluation", NO_PYTHON),
     ],
     "approx_cms_topk": [
@@ -387,22 +348,10 @@ AUDITS.update({
         ("distinct pre-aggregate is map-side partial", r"partial_count|HashAggregate"),
         ("pure BIGINT estimator, no Python", NO_PYTHON),
     ],
-    "stat_spearman": [
-        ("scan pruned to the two rank columns", r"ReadSchema: struct<l_quantity:double,l_discount:double>"),
-        ("joint contingency count partial-aggregated", r"partial_count"),
-        ("tiny marginal rank tables broadcast", r"BroadcastHashJoin"),
-        ("decimal sufficient stats native, no Python", NO_PYTHON),
-    ],
     "dq_fairness_ratios": [
         ("customer dim broadcast onto orders", r"BroadcastHashJoin"),
         ("per-segment counts partial-aggregated", r"partial_count|partial_sum"),
         ("integer ppm arithmetic native, no Python", NO_PYTHON),
-    ],
-    "stat_kendall_tau": [
-        ("scan pruned to the two columns", r"ReadSchema: struct<l_quantity:double,l_discount:double>"),
-        ("joint contingency partial-aggregated", r"partial_count"),
-        ("cell-pair join broadcast (no shuffle of pairs)", r"BroadcastNestedLoopJoin|BroadcastHashJoin"),
-        ("pure integer pair counting, no Python", NO_PYTHON),
     ],
     "graph_modularity": [
         ("brand dimension broadcast", r"BroadcastHashJoin"),
@@ -419,20 +368,6 @@ AUDITS.update({
         ("nation dimension broadcast onto the mass tables", r"BroadcastHashJoin"),
         ("integer renormalization native, no Python", NO_PYTHON),
     ],
-    "stat_skew_kurtosis": [
-        (
-            "scan pruned to (o_orderpriority, o_totalprice)",
-            r"ReadSchema: struct<o_orderpriority:string,o_totalprice:double>"
-            r"|ReadSchema: struct<o_totalprice:double,o_orderpriority:string>",
-        ),
-        ("power sums partial-aggregate as exact decimals", r"partial_sum\(.*decimal"),
-        ("closed-form moments native, no Python", NO_PYTHON),
-    ],
-    "stat_survival_lifetable": [
-        ("per-span min/max partial-aggregates", r"partial_min|partial_max"),
-        ("life-table windows over the tiny span relation", r"RunningWindowFunction|Window"),
-        ("ppm hazard integers native, no Python", NO_PYTHON),
-    ],
     "p9_neyman_allocation": [
         (
             "scan pruned to (o_orderpriority, o_totalprice)",
@@ -441,11 +376,6 @@ AUDITS.update({
         ),
         ("stratum cent sums partial-aggregate as decimals", r"partial_sum\(.*decimal"),
         ("integer Hamilton apportionment native, no Python", NO_PYTHON),
-    ],
-    "stat_cem_att": [
-        ("customer and nation dims broadcast", r"BroadcastHashJoin"),
-        ("stratum cells partial-aggregated", r"partial_sum|partial_count"),
-        ("exact BIGINT ATT numerator, no Python", NO_PYTHON),
     ],
     "approx_quantile_hist": [
         (
@@ -459,15 +389,6 @@ AUDITS.update({
     "mm_audio_silence": [
         ("decode is Arrow-batched mapInPandas (never per-row Python)", r"MapInPandas"),
         ("run/total aggregates partial-aggregate after decode", r"partial_count|partial_min"),
-    ],
-    "stat_qini_uplift": [
-        ("user-grain rollup partial-aggregates", r"partial_sum|partial_max"),
-        ("exact cumulative arms native, no Python", NO_PYTHON),
-    ],
-    "stat_eb_shrinkage": [
-        ("customer and nation dims broadcast", r"BroadcastHashJoin"),
-        ("per-nation counts partial-aggregated", r"partial_count|partial_sum"),
-        ("ppm shrinkage integers native, no Python", NO_PYTHON),
     ],
     "txt_readability": [
         (
@@ -487,15 +408,6 @@ AUDITS.update({
     "dq_pseudonymize_join": [
         ("stateless token projection + hash join, no Python", NO_PYTHON),
     ],
-    "stat_control_chart": [
-        (
-            "scan pruned to (o_orderdate, o_totalprice)",
-            r"ReadSchema: struct<o_totalprice:double,o_orderdate:timestamp"
-            r"|ReadSchema: struct<o_orderdate:timestamp[^,]*,o_totalprice:double",
-        ),
-        ("monthly cent sums partial-aggregate as decimals", r"partial_sum\(.*decimal"),
-        ("z-scores native, no Python", NO_PYTHON),
-    ],
     # scratch-backed entries return an eager localCheckpoint (executor-
     # resident blocks; the scratch dir dies in the finally) — the visible
     # plan must be exactly the checkpoint scan, proving no driver collect
@@ -511,11 +423,6 @@ AUDITS.update({
     "s14_orc_roundtrip": [
         ("rollup is an executor checkpoint", r"Scan ExistingRDD"),
     ],
-    "stat_friedman": [
-        ("month-priority rollup partial-aggregates", r"partial_sum"),
-        ("rank window partitions BY BLOCK", r"hashpartitioning\(day"),
-        ("closed-form chi2 native, no Python", NO_PYTHON),
-    ],
     "approx_theta_ops": [
         ("distinct collapse partial-aggregates before the sketch", r"partial_|HashAggregate"),
         ("set algebra joins run on sketch-sized tables", r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin"),
@@ -524,16 +431,6 @@ AUDITS.update({
     "ml_feature_hashing": [
         ("32-bucket census partial-aggregates", r"partial_count|HashAggregate"),
         ("portable hash native, no Python", NO_PYTHON),
-    ],
-    "stat_influence_diag": [
-        ("sufficient stats broadcast back onto rows", r"BroadcastNestedLoopJoin|BroadcastExchange"),
-        ("top-10 is a bounded TakeOrdered", r"TakeOrderedAndProject"),
-        ("closed-form diagnostics native, no Python", NO_PYTHON),
-    ],
-    "stat_runs_test": [
-        ("day rollup partial-aggregates", r"partial_sum"),
-        ("runs windows over the day-grain table only", r"Window"),
-        ("integer run counting native, no Python", NO_PYTHON),
     ],
     "llm_ngram_novelty": [
         ("first-seen index is a map-side-combinable min", r"partial_min"),
@@ -597,26 +494,6 @@ AUDITS.update({
     "s36_manifest_compaction": [
         ("snapshot rollups are an executor checkpoint", r"Scan ExistingRDD"),
     ],
-    "stat_cohens_kappa": [
-        ("scan pruned to the two rater inputs", r"ReadSchema: struct<o_orderkey:bigint,o_orderstatus:string>"),
-        ("margin counts partial-aggregate", r"partial_count|partial_sum"),
-        ("margin tables broadcast for the pe join", r"BroadcastHashJoin|BroadcastNestedLoopJoin"),
-        ("exact integer kappa numerators, no Python", NO_PYTHON),
-    ],
-    "stat_cramers_v": [
-        (
-            "scan pruned to the two categorical columns",
-            r"ReadSchema: struct<o_orderstatus:string,o_orderpriority:string>"
-            r"|ReadSchema: struct<o_orderpriority:string,o_orderstatus:string>",
-        ),
-        ("contingency cells partial-aggregate", r"partial_count"),
-        ("chi2/V fold native, no Python", NO_PYTHON),
-    ],
-    "stat_levene_bf": [
-        ("group medians broadcast onto the fact", r"BroadcastHashJoin"),
-        ("value histogram partial-aggregates", r"partial_count"),
-        ("exact integer deviations, no Python", NO_PYTHON),
-    ],
     "ml_pr_auc": [
         (
             "scan pruned to (o_orderstatus, o_totalprice)",
@@ -666,22 +543,6 @@ AUDITS.update({
         ("projection sums partial-aggregate", r"partial_sum"),
         ("integer distortion ratios native, no Python", NO_PYTHON),
     ],
-    "stat_trimmed_mean": [
-        # grouped_range_rank's eager localCheckpoint cuts lineage, so
-        # the pruned scan is invisible here; pin the post-rank shape
-        ("no single-partition exchange after the grouped rank", r"^(?:(?!Exchange SinglePartition)[\s\S])*$"),
-        ("broadcast offset join from the grouped rank", r"BroadcastHashJoin"),
-        ("trimmed sums partial-aggregate, no Python", NO_PYTHON),
-    ],
-    "stat_anova_oneway": [
-        (
-            "scan pruned to (o_orderpriority, o_totalprice)",
-            r"ReadSchema: struct<o_orderpriority:string,o_totalprice:double>"
-            r"|ReadSchema: struct<o_totalprice:double,o_orderpriority:string>",
-        ),
-        ("group sufficient stats partial-aggregate as decimals", r"partial_sum\(.*decimal"),
-        ("F statistic native, no Python", NO_PYTHON),
-    ],
     "ml_roc_auc": [
         (
             "scan pruned to (o_orderstatus, o_totalprice)",
@@ -715,16 +576,6 @@ AUDITS.update({
 # discipline — bounded-domain aggregation before any window, broadcast
 # for small sides, no Python in the pipeline.
 AUDITS.update({
-    "stat_wilcoxon_signed": [
-        ("fact table collapses to the |d| domain first", r"partial_count|partial_sum"),
-        ("scan pruned to the two paired columns", r"ReadSchema: struct<l_tax:double,l_discount:double>|ReadSchema: struct<l_discount:double,l_tax:double>"),
-        ("no Python anywhere", NO_PYTHON),
-    ],
-    "stat_weighted_median": [
-        ("grain rollup partial-aggregated before the window", r"partial_sum"),
-        ("scan pruned to 3 columns", r"ReadSchema: (?![^\n]*l_orderkey)"),
-        ("no Python", NO_PYTHON),
-    ],
     "graph_adamic_adar": [
         ("degree table broadcast onto the wedge join", r"BroadcastHashJoin"),
         ("existing edges dropped via anti join", r"LeftAnti"),
@@ -768,14 +619,6 @@ AUDITS.update({
         ("single keyed window (no per-row subquery)", r"Window"),
         ("no Python", NO_PYTHON),
     ],
-    "ml_adversarial_validation": [
-        ("domain rollup partial-aggregated", r"partial_count|partial_sum"),
-        ("no Python (md5 split is native)", NO_PYTHON),
-    ],
-    "stat_mann_kendall": [
-        ("day-grain rollup before the pair join", r"partial_count"),
-        ("no Python", NO_PYTHON),
-    ],
     "sim_contrastive_pairs": [
         ("query-side cap pushed to the scan", r"PushedFilters: \[.*LessThan\(vec_id,24\)"),
         ("no Python (native cosine kernel)", NO_PYTHON),
@@ -788,11 +631,6 @@ AUDITS.update({
     "dedup_sorted_neighborhood": [
         ("window deltas broadcast (rank+δ equi-join)", r"BroadcastHashJoin|BroadcastNestedLoopJoin"),
         ("native shingle intersection, no Python", NO_PYTHON),
-    ],
-    "ml_auc_delong": [
-        ("bounded-domain rollup partial-aggregated", r"partial_sum"),
-        ("scan pruned to 2 columns", r"ReadSchema: struct<l_quantity:double,l_returnflag:string>|ReadSchema: struct<l_returnflag:string,l_quantity:double>"),
-        ("no Python", NO_PYTHON),
     ],
     "graph_rectangles": [
         ("wedge counts fold map-side", r"partial_count|partial_sum"),
@@ -888,35 +726,6 @@ BROADCAST_HINT_ALLOWLIST = {
     ("simq.py", "sim_maxsim_multivector", "q"),
     ("simq.py", "sim_quantized_recall", "qq"),
     ("simq.py", "sim_topk_pq", "qv"),
-    ("statsq.py", "stat_acf", "glob"),
-    ("statsq.py", "stat_anova_twoway", "cells"),
-    ("statsq.py", "stat_anova_twoway", "marg_a"),
-    ("statsq.py", "stat_anova_twoway", "marg_b"),
-    ("statsq.py", "stat_bootstrap_ci", "band"),
-    ("statsq.py", "stat_cem_att", "n"),
-    ("statsq.py", "stat_cem_att", "unmatched"),
-    ("statsq.py", "stat_cohens_kappa", "cols"),
-    ("statsq.py", "stat_cohens_kappa", "pe"),
-    ("statsq.py", "stat_cuped", "cut"),
-    ("statsq.py", "stat_eb_shrinkage", "n"),
-    ("statsq.py", "stat_hodges_lehmann", "b"),
-    ("statsq.py", "stat_influence_diag", "stats"),
-    ("statsq.py", "stat_jonckheere", "sizes"),
-    ("statsq.py", "stat_kendall_tau", "b"),
-    ("statsq.py", "stat_ks_test", "tot"),
-    ("statsq.py", "stat_levene_bf", "med"),
-    ("statsq.py", "stat_ljung_box", "glob"),
-    ("statsq.py", "stat_mad_outliers", "mad"),
-    ("statsq.py", "stat_mad_outliers", "med"),
-    ("statsq.py", "stat_mann_kendall", "ties"),
-    ("statsq.py", "ml_pinball_eval", "qsel"),
-    ("statsq.py", "stat_mood_median", "gmed_row"),
-    ("statsq.py", "stat_mood_median", "sel"),
-    ("statsq.py", "stat_mood_median", "tot"),
-    ("statsq.py", "stat_spearman", "rx"),
-    ("statsq.py", "stat_winsorized_mean", "clamp"),
-    ("statsq.py", "stat_spearman", "ry"),
-    ("statsq.py", "stat_survival_lifetable", "horizon"),
     ("textq.py", "llm_kl_drift", "totals"),
     ("textq.py", "llm_mix_temperature", "tot"),
     ("textq.py", "llm_oov_rate", "vocab"),
@@ -1013,10 +822,10 @@ def audit_broadcast_hints() -> int:
 # ``Window.orderBy`` spelling), so every construction site of a
 # no-partitionBy WindowSpec must be registered here with its reviewed
 # grain; a new site fails until its input grain is reviewed. The
-# round-10 sweep converted the six SF-grown offenders this rule
-# surfaced (wh_rfm_segments, stat_qini_uplift, stat_gini_lorenz,
-# ml_calibration_bins, llm_perplexity_buckets, llm_kl_drift) to
-# range_rank / range_ntile / agg+broadcast shapes.
+# round-10 sweep converted the SF-grown offenders this rule surfaced
+# (wh_rfm_segments, ml_calibration_bins, llm_perplexity_buckets,
+# llm_kl_drift and two retired statistics queries) to range_rank /
+# range_ntile / agg+broadcast shapes.
 ZERO_PARTITION_WINDOW_ALLOWLIST = {
     ("coverage.py", "o7_skyline_pareto"),      # distinct (price, size) catalog pairs
     ("coverage.py", "o8_range_partition_sort"),  # #partitions grain (pid census)
@@ -1037,30 +846,6 @@ ZERO_PARTITION_WINDOW_ALLOWLIST = {
     ("ranking.py", "range_rank"),              # #partitions offset table (the operator's own bounded pass)
     ("samplingq.py", "p7_pps_systematic"),     # stratum/offset grain
     ("samplingq.py", "p9_neyman_allocation"),  # stratum grain
-    ("statsq.py", "ml_adversarial_validation"),  # quantity value-domain (≤50 distinct)
-    ("statsq.py", "ml_auc_delong"),            # score value-domain bands
-    ("statsq.py", "stat_acf"),                 # day grain (time-span-bounded)
-    ("statsq.py", "stat_anova_twoway"),        # ≤15 cells
-    ("statsq.py", "stat_bh_fdr"),              # hypothesis grain (etype × dow)
-    ("statsq.py", "stat_chi2_independence"),   # contingency cells
-    ("statsq.py", "stat_control_chart"),       # month grain (time-span-bounded)
-    ("statsq.py", "stat_cramers_v"),           # contingency cells
-    ("statsq.py", "stat_eb_shrinkage"),        # nation grain (25)
-    ("statsq.py", "stat_ewma"),                # month grain (time-span-bounded)
-    ("statsq.py", "stat_friedman"),            # 5-treatment grain
-    ("statsq.py", "stat_hodges_lehmann"),      # Walsh-sum value domain (bounded)
-    ("statsq.py", "stat_ks_test"),             # quantity value-domain (≤50 distinct)
-    ("statsq.py", "stat_levene_bf"),           # 5-group grain
-    ("statsq.py", "stat_ljung_box"),           # day grain (time-span-bounded)
-    ("statsq.py", "stat_mannwhitney"),         # value-domain rank table
-    ("statsq.py", "stat_mood_median"),         # bucket grid + selected-bucket value domain
-    ("statsq.py", "stat_nelson_aalen"),        # lifetime-days grain (time-span-bounded)
-    ("statsq.py", "stat_qini_uplift"),         # 10-decile cumulative window
-    ("statsq.py", "stat_runs_test"),           # day grain (time-span-bounded)
-    ("statsq.py", "stat_spearman"),            # value-domain rank table
-    ("statsq.py", "stat_sprt"),                # day grain (time-span-bounded)
-    ("statsq.py", "stat_theil_sen"),           # month-pair grain (time-span-bounded)
-    ("statsq.py", "stat_wilcoxon_signed"),     # |diff| value-domain (bounded)
     ("textq.py", "llm_budget_waterfill"),      # source grain (~20 rows)
     ("textq.py", "llm_shard_assign"),          # 16-shard census
     ("textq.py", "txt_zipf_fit"),              # post-LIMIT top-k ranks
@@ -1218,16 +1003,6 @@ WINDOW_PARTITION_GRAIN_ALLOWLIST = {
     ("simq.py", "sim_maxsim_multivector", "query_id"),  # data-grown
     ("simq.py", "sim_quantized_recall", "query_id"),  # data-grown
     ("simq.py", "sim_topk_pq", "query_id"),      # data-grown
-    ("statsq.py", "_domain_median", "grp"),      # bounded-input: (grp, value, count) domain table
-    ("statsq.py", "stat_chi2_independence", "o_orderpriority"),  # bounded-input: contingency cells
-    ("statsq.py", "stat_chi2_independence", "o_orderstatus"),  # bounded-input: contingency cells
-    ("statsq.py", "stat_cramers_v", "o_orderpriority"),  # bounded-input: contingency cells
-    ("statsq.py", "stat_cramers_v", "o_orderstatus"),  # bounded-input: contingency cells
-    ("statsq.py", "stat_friedman", "day"),       # bounded-input: (block, 5 treatments) rollup
-    ("statsq.py", "stat_jonckheere", "g"),       # bounded-input: quantity value-domain pair table
-    ("statsq.py", "stat_levene_bf", "g"),        # bounded-input: cents histogram
-    ("statsq.py", "stat_survival_lifetable", "event_type"),  # bounded-input: (stratum, dur_days) life table
-    ("statsq.py", "stat_weighted_median", "flag"),  # bounded-input: (flag, quantity) grain, ≤3×50 rows
     ("textq.py", "llm_cdc_chunk_dedup", "doc_id"),  # data-grown: chunks per doc
     ("textq.py", "llm_ngram_novelty", "s"),      # data-grown: shingle hash, one group per distinct shingle
     ("textq.py", "txt_rake_keyphrases", "doc_id"),  # data-grown: words per doc
