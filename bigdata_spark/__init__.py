@@ -3,8 +3,8 @@
 A from-scratch re-expression of the capabilities of the reference
 time-series/relational pipeline (KRudd-E/BigData, surveyed in SURVEY.md)
 as an idiomatic Spark DataFrame/SQL engine, extended with the
-large-scale training-data-pipeline operators (dedup, similarity search,
-text analysis, multimodal plumbing) that a 100 TB corpus needs.
+large-scale training-data-pipeline operators (dedup, text analysis,
+multimodal plumbing) that a 100 TB corpus needs.
 
 Layout:
     session     — SparkSession factory with scale-tuned defaults
@@ -17,7 +17,7 @@ Layout:
     ml          — proximity tree/forest, prediction, evaluation
     text        — language-ID, quality scoring, tokenization, fingerprints
     dedup       — exact, minhash-LSH, simhash, n-gram jaccard near-dup
-    similarity  — brute-force + LSH-bucketed ANN over embeddings
+    similarity  — hyperplane recipe and IVF coarse quantizer for dedup
     multimodal  — binary payload columns, PPM/WAV/PNG/JPEG/MP4 codecs
 """
 

@@ -527,26 +527,27 @@ class GlobalProximityTree:
     def predict(self, df: DataFrame, features_col: str = "features") -> DataFrame:
         """Broadcast-tree pandas UDF traversal (reference :405-483):
         single distributed pass, no shuffle. A null features row gets
-        the majority class via coalesce (reference :475); a row of
-        another length than the fitted one fails the job with a
-        ``ValueError``."""
+        the majority class via coalesce (reference :475); a row with a
+        null value, or of another length than the fitted one, fails the
+        job with a ``ValueError`` (the former with its batch's count)."""
         bc = df.sparkSession.sparkContext.broadcast(self.tree)
         metric, window = self.metric, self.dtw_window
 
         @F.pandas_udf(IntegerType())
-        def traverse(features: pd.Series) -> pd.Series:
+        def traverse(features: pd.Series, null_value: pd.Series) -> pd.Series:
             stat_checked_zipimport()
             tree = bc.value
             ok = features.notna().to_numpy()
             out = np.full(len(features), np.nan)
-            X = feature_matrix(features[ok], tree.width)
+            X = feature_matrix(features[ok], tree.width, null_value[ok])
             out[ok] = tree.prediction[tree.route(X, metric, window)]
             return pd.Series(out).astype("Int32")
 
+        feats = F.col(features_col).cast("array<double>")
         return _spread(df).withColumn(
             "prediction",
             F.coalesce(
-                traverse(F.col(features_col).cast("array<double>")), F.lit(self.majority_class)
+                traverse(feats, F.exists(feats, lambda x: x.isNull())), F.lit(self.majority_class)
             ).cast("int"),
         )
 

@@ -141,8 +141,8 @@ class LocalProximityForest:
         """Append a ``prediction`` column via broadcast forest + one
         Arrow-batched pandas UDF pass (reference prediction_manager.py:
         84-98 shape); ties break to the smallest class id. A null
-        features row fails the job with a ``ValueError`` that counts the
-        null rows of its batch."""
+        features row or a row with a null value fails the job with a
+        ``ValueError`` that counts such rows in its batch."""
         spark = df.sparkSession
         trees = [(t.tree, t.metric, t.dtw_window) for t in self.trees]
         width = next((tree.width for tree, _, _ in trees if tree.width is not None), None)
@@ -150,17 +150,19 @@ class LocalProximityForest:
         bc = spark.sparkContext.broadcast((trees, list(self.weights), classes))
 
         @F.pandas_udf(IntegerType())
-        def forest_predict(features: pd.Series) -> pd.Series:
+        def forest_predict(features: pd.Series, null_value: pd.Series) -> pd.Series:
             stat_checked_zipimport()
             trees_, weights_, classes_ = bc.value
-            X = feature_matrix(features, width)
+            X = feature_matrix(features, width, null_value)
             votes = np.zeros((len(X), len(classes_)))
             for (tree, metric, window), w in zip(trees_, weights_):
                 pred = tree.prediction[tree.route(X, metric, window)]
                 votes[np.arange(len(X)), np.searchsorted(classes_, pred)] += w
             return pd.Series(classes_[np.argmax(votes, axis=1)], dtype="int32")
 
-        return df.withColumn("prediction", forest_predict(F.col(features_col)))
+        return df.withColumn(
+            "prediction", forest_predict(F.col(features_col), F.exists(features_col, lambda x: x.isNull()))
+        )
 
     # -- persistence (S5/S6: JSON model sink/source) -----------------------
 

@@ -159,15 +159,21 @@ def training_width(widths: dict[int, int], dim: int = -1) -> int:
     return expect
 
 
-def feature_matrix(rows, width: int | None) -> np.ndarray:
-    """``rows`` as one (m, width) float matrix. A null row or a row of
-    another length raises ``ValueError`` (the former with the count of
-    null rows); a tree without splits (``width`` None) reads no feature."""
+def feature_matrix(rows, width: int | None, null_values=None) -> np.ndarray:
+    """``rows`` as one (m, width) float matrix. A null row, a row with a
+    null value or a row of another length raises ``ValueError`` (the
+    first two with their count). ``null_values`` flags, per row, a null
+    value: Arrow hands one to pandas as NaN, so the Spark predicts
+    compute the flag in the projection that feeds their UDF. A tree
+    without splits (``width`` None) reads no feature."""
     if width is None:
         return np.empty((len(rows), 0))
     nulls = sum(r is None for r in rows)
     if nulls:
         raise ValueError(f"{nulls} of {len(rows)} rows have null features")
+    bad = 0 if null_values is None else int(np.count_nonzero(np.asarray(null_values, dtype=bool)))
+    if bad:
+        raise ValueError(f"{bad} of {len(rows)} rows have a null feature value")
     lengths = {len(r) for r in rows}
     if lengths - {width}:
         raise ValueError(

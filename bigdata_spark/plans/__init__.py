@@ -25,6 +25,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
     from . import (
+        classifierq,
         coverage,
         dedupq,
         erq,
@@ -35,8 +36,6 @@ def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
         relational,
         samplingq,
         scaleq,
-        simq,
-        textq,
         tpch_ext,
         tpch_full,
         qualityq,
@@ -47,11 +46,10 @@ def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
         relational,
         tpch_ext,
         tpch_full,
+        classifierq,
         coverage,
         extended,
-        textq,
         dedupq,
-        simq,
         samplingq,
         scaleq,
         mlq,

@@ -640,8 +640,8 @@ WHERE CASE WHEN len(a.shingles) + len(b.shingles) - len(list_intersect(a.shingle
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (dedup/semantic.py): seeded k-means clusters + within-
     cluster keep-lowest-id cosine dedup. The quantizer isn't
-    SQL-expressible, so the oracle pins structural invariants (same
-    pattern as sim_topk_ivf) plus the SQL-exact corpus count; the
+    SQL-expressible, so the oracle pins structural invariants
+    (every one a TRUE column) plus the SQL-exact corpus count; the
     invariants are recomputed from the actual result, not assumed."""
     from ..dedup.semantic import semantic_dedup, semantic_dup_pairs
 

@@ -2094,8 +2094,8 @@ def graph_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree-distribution power-law check on the co-purchase graph:
     the (degree, node-count) histogram fit by log-log OLS over
     degrees ≥ 2 — slope ≈ −2…−3 is the scale-free signature; a flat
-    or convex fit flags an artificial/templated graph (the structural
-    sibling of txt_zipf_fit).
+    or convex fit flags an artificial/templated graph (the graph
+    analogue of a Zipf fit over word frequencies).
 
     The histogram is two linear aggregations (degree per node, nodes
     per degree); the regression runs over the ≤max-degree histogram

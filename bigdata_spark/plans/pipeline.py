@@ -84,8 +84,14 @@ def _run(
     features_col: str = "features",
 ) -> list[dict]:
     """Ingest and split ``df`` once, then train, predict and evaluate
-    ``model`` once per partition count; returns one report per count.
-    Every report carries the one split's rows and ingest/split times."""
+    ``model`` (``"global"`` or ``"local"``) once per partition count;
+    returns one report per count. Every report carries the one split's
+    rows and ingest/split times. Bad arguments raise ``ValueError``
+    before any Spark work."""
+    if model not in ("global", "local"):
+        raise ValueError(f"model must be 'global' or 'local', got {model!r}")
+    if not partition_counts:
+        raise ValueError("partition_counts is empty")
     spark = df.sparkSession
     mem_start = _memory_snapshot(spark)
     split_timings: dict[str, float] = {}
@@ -98,67 +104,74 @@ def _run(
     train, test = stratified_split(df, label_col, train_fraction, seed=seed)
     train = train.persist()
     test = test.persist()
-    n_train, n_test = train.count(), test.count()
-    split_timings["split_time"] = time.time() - t0
+    preds = None
+    try:
+        n_train, n_test = train.count(), test.count()
+        split_timings["split_time"] = time.time() - t0
 
-    reports = []
-    for i, num_partitions in enumerate(partition_counts):
-        if i:  # the first count's pass started before the ingest
-            mem_start = _memory_snapshot(spark)
-        timings = dict(split_timings)
-        t0 = time.time()
-        complexity: dict[str, float] = {}
-        fit_stats: dict = {}  # the global fit's GlobalProximityTree.fit_stats_
-        if model == "local":
-            m = LocalProximityForest(
-                num_partitions=num_partitions, n_splitters=n_splitters,
-                max_depth=max_depth, seed=seed,
-            ).fit(train, label_col, features_col)
-            complexity["n_trees"] = len(m.trees)
-        else:
-            m = GlobalProximityTree(
-                n_splitters=n_splitters, max_depth=max_depth, seed=seed
-            ).fit(train, label_col, features_col)
-            complexity["depth"] = m.depth
-            complexity["n_nodes"] = len(m.tree)
-            fit_stats = m.fit_stats_
-        timings["training_time"] = time.time() - t0
-        mem_after_train = _memory_snapshot(spark)
+        reports = []
+        for i, num_partitions in enumerate(partition_counts):
+            if i:  # the first count's pass started before the ingest
+                mem_start = _memory_snapshot(spark)
+            timings = dict(split_timings)
+            t0 = time.time()
+            complexity: dict[str, float] = {}
+            fit_stats: dict = {}  # the global fit's GlobalProximityTree.fit_stats_
+            if model == "local":
+                m = LocalProximityForest(
+                    num_partitions=num_partitions, n_splitters=n_splitters,
+                    max_depth=max_depth, seed=seed,
+                ).fit(train, label_col, features_col)
+                complexity["n_trees"] = len(m.trees)
+            else:
+                m = GlobalProximityTree(
+                    n_splitters=n_splitters, max_depth=max_depth, seed=seed
+                ).fit(train, label_col, features_col)
+                complexity["depth"] = m.depth
+                complexity["n_nodes"] = len(m.tree)
+                fit_stats = m.fit_stats_
+            timings["training_time"] = time.time() - t0
+            mem_after_train = _memory_snapshot(spark)
 
-        t0 = time.time()
-        preds = m.predict(test, features_col).persist()
-        preds.count()
-        timings["prediction_time"] = time.time() - t0
+            t0 = time.time()
+            preds = m.predict(test, features_col).persist()
+            preds.count()
+            timings["prediction_time"] = time.time() - t0
 
-        t0 = time.time()
-        # one confusion-counts job feeds every metric (ml/evaluation.py)
-        counts = _confusion_counts(preds, label_col, "prediction")
-        performance = metrics_from_counts(counts)
-        performance["balanced_accuracy"] = balanced_accuracy_from_counts(counts)
-        timings["evaluation_time"] = time.time() - t0
+            t0 = time.time()
+            # one confusion-counts job feeds every metric (ml/evaluation.py)
+            counts = _confusion_counts(preds, label_col, "prediction")
+            performance = metrics_from_counts(counts)
+            performance["balanced_accuracy"] = balanced_accuracy_from_counts(counts)
+            timings["evaluation_time"] = time.time() - t0
 
-        preds.unpersist()
-        if i == len(partition_counts) - 1:
-            train.unpersist()
-            test.unpersist()
-        reports.append({
-            "model": model,
-            "num_partitions": num_partitions,
-            # the split is an exact complement (a never-null content hash
-            # puts each row on one side), so the sides add up to the total
-            "rows": {"total": n_train + n_test, "train": n_train, "test": n_test},
-            "performance": {k: round(v, 6) for k, v in performance.items()},
-            "timing": {k: round(v, 3) for k, v in timings.items()},
-            "complexity": complexity,
-            "fit": fit_stats,
-            # reference evaluation.py:313-347 parity: memory sampled at the
-            # stage boundaries that matter (start, post-train, end)
-            "memory": {
-                "start": mem_start,
-                "after_training": mem_after_train,
-                "end": _memory_snapshot(spark),
-            },
-        })
+            preds.unpersist()
+            if i == len(partition_counts) - 1:
+                train.unpersist()
+                test.unpersist()
+            reports.append({
+                "model": model,
+                "num_partitions": num_partitions,
+                # the split is an exact complement (a never-null content hash
+                # puts each row on one side), so the sides add up to the total
+                "rows": {"total": n_train + n_test, "train": n_train, "test": n_test},
+                "performance": {k: round(v, 6) for k, v in performance.items()},
+                "timing": {k: round(v, 3) for k, v in timings.items()},
+                "complexity": complexity,
+                "fit": fit_stats,
+                # reference evaluation.py:313-347 parity: memory sampled at the
+                # stage boundaries that matter (start, post-train, end)
+                "memory": {
+                    "start": mem_start,
+                    "after_training": mem_after_train,
+                    "end": _memory_snapshot(spark),
+                },
+            })
+    finally:
+        # a failed fit or predict must not leave the split cached
+        for frame in (train, test, preds):
+            if frame is not None:
+                frame.unpersist()
     return reports
 
 

@@ -80,8 +80,8 @@ def p7_pps_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
     with certainty. Everything is BIGINT arithmetic, so the draw is
     deterministic and identical in any engine (no RNG, unlike P1/P2).
 
-    Scale shape: the cumulative weight uses the two-phase prefix-sum
-    pattern (same as llm_seq_pack): per-range-bucket partial sums (a
+    Scale shape: the cumulative weight uses a two-phase prefix sum:
+    per-range-bucket partial sums (a
     tiny aggregate), an exclusive prefix over the bucket totals (a
     window over O(n/bucket_size) rows), then a bucket-local window.
     No global ordering over the fact rows anywhere.

@@ -1,3 +1,1 @@
-from .ann import brute_force_topk, cosine_pairs, lsh_bucketed_topk
-
-__all__ = ["brute_force_topk", "cosine_pairs", "lsh_bucketed_topk"]
+"""Similarity helpers over embedding columns; see ``ann``."""

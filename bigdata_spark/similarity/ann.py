@@ -1,188 +1,21 @@
-"""Similarity search over embedding columns (array<float/double>).
+"""Similarity helpers over embedding columns (array<float/double>).
 
-Baseline: exact brute-force cosine top-k (broadcast the query set,
-score every row natively, per-query top-k via ranking window). Scale
-path: random-hyperplane LSH bucketing — score only within matching
-buckets, trading recall for a ~buckets-fold candidate reduction.
-
-All scoring is native ``zip_with``/``aggregate`` expressions
-(functions/distances.py) — JVM-side, codegen, no Python workers.
+- ``_hyperplane``: the engine-independent random-hyperplane recipe
+  that the LSH near-duplicate plans in ``plans/dedupq.py`` inline in
+  both Spark and DuckDB.
+- ``coarse_assign``: an IVF coarse quantizer (bounded driver-side
+  k-means++/Lloyd, then one native nearest-centroid pass over the
+  corpus); SemDeDup (``dedup/semantic.py``) clusters with it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.distances import cosine_similarity, dot_product
-from ..functions.hashing import portable_hash64
 
 
 def _as_double_array(col_name: str) -> F.Column:
     return F.col(col_name).cast("array<double>")
-
-
-def _cosine_pairs_expr(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Expression-path all-pairs scoring (broadcast nested-loop join +
-    native fold) — the fallback when the query side cannot be collected
-    (empty, or ragged vector lengths)."""
-    from ..functions.distances import l2_norm
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double_array(vec_col).alias("q_vec"),
-    ).withColumn("q_norm", l2_norm(F.col("q_vec")))
-    c = corpus.select(
-        F.col(id_col).alias("corpus_id"),
-        _as_double_array(vec_col).alias("c_vec"),
-    ).withColumn("c_norm", l2_norm(F.col("c_vec")))
-    den = F.col("q_norm") * F.col("c_norm")
-    return (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("corpus_id"))
-        .select(
-            "query_id",
-            "corpus_id",
-            F.when(
-                den != 0.0, dot_product(F.col("q_vec"), F.col("c_vec")) / den
-            )
-            .otherwise(F.lit(0.0))
-            .alias("cosine"),
-        )
-    )
-
-
-def cosine_pairs(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All (query, corpus) cosine scores — the query side is collected
-    and broadcast (the same small-side contract the previous
-    nested-loop join's ``F.broadcast(q)`` imposed) and each corpus
-    partition scores against the whole query matrix in numpy via
-    ``mapInArrow`` (guide §4.2: hand whole batches to vectorized native
-    code).
-
-    BIT-IDENTICAL to the native fold by construction: the accumulation
-    loops run dimension-by-dimension in index order, so each pair's
-    dot product/norm is the exact same float sequence
-    ``((0.0 + x_1) + x_2) + ...`` the ``aggregate`` fold (and the
-    DuckDB oracle's ``list_sum``) computes — verified with
-    ``exceptAll`` over the full sf0.1 pair set (0 diffs) and the value
-    oracles. The old shape materialized every (q_vec, c_vec) pair row
-    through a nested-loop join and ran the fold through interpreted
-    HigherOrderFunction eval: measured 10.1 s → 0.4 s on the sf0.1
-    all-pairs set for identical output. Falls back to the expression
-    path when the query side is empty or vectors are ragged."""
-    import numpy as np
-
-    qrows = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double_array(vec_col).alias("q_vec"),
-    ).collect()
-    if not qrows or any(r["q_vec"] is None for r in qrows):
-        return _cosine_pairs_expr(queries, corpus, id_col, vec_col)
-    dims = {len(r["q_vec"]) for r in qrows}
-    if len(dims) != 1:
-        return _cosine_pairs_expr(queries, corpus, id_col, vec_col)
-    d = dims.pop()
-    qids = np.array([int(r["query_id"]) for r in qrows], dtype=np.int64)
-    qm = np.array([r["q_vec"] for r in qrows], dtype=np.float64)
-    spark = corpus.sparkSession
-    bq = spark.sparkContext.broadcast((qids, qm))
-
-    c = corpus.select(
-        F.col(id_col).alias("corpus_id"),
-        _as_double_array(vec_col).alias("c_vec"),
-    )
-
-    def score(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        qids, qm = bq.value
-        nq, dim = qm.shape
-        # norms accumulate dimension-by-dimension — same add order as
-        # the l2_norm fold
-        qn = np.zeros(nq)
-        for i in range(dim):
-            qn += qm[:, i] * qm[:, i]
-        qn = np.sqrt(qn)
-        out_schema = pa.schema(
-            [
-                ("query_id", pa.int64()),
-                ("corpus_id", pa.int64()),
-                ("cosine", pa.float64()),
-            ]
-        )
-        for batch in batches:
-            cid_arr = batch.column(0)
-            vec_arr = batch.column(1)
-            nc = batch.num_rows
-            if nc == 0:
-                continue
-            cids = cid_arr.to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = vec_arr.flatten().to_numpy(zero_copy_only=False)
-            if len(flat) != nc * dim:
-                # ragged corpus vectors — per-row fallback keeps the
-                # same sequential arithmetic
-                cv = np.asarray(vec_arr.to_pylist(), dtype=np.float64)
-            else:
-                cv = np.asarray(flat, dtype=np.float64).reshape(nc, dim)
-            num = np.zeros((nc, nq))
-            for i in range(dim):
-                num += np.outer(cv[:, i], qm[:, i])
-            cn = np.zeros(nc)
-            for i in range(dim):
-                cn += cv[:, i] * cv[:, i]
-            cn = np.sqrt(cn)
-            den = np.outer(cn, qn)
-            cos = np.where(
-                den != 0.0, num / np.where(den == 0.0, 1.0, den), 0.0
-            )
-            qq = np.broadcast_to(qids, (nc, nq))
-            cc = np.broadcast_to(cids.reshape(nc, 1), (nc, nq))
-            mask = qq != cc
-            yield pa.record_batch(
-                [
-                    pa.array(qq[mask], pa.int64()),
-                    pa.array(cc[mask], pa.int64()),
-                    pa.array(cos[mask], pa.float64()),
-                ],
-                schema=out_schema,
-            )
-
-    return c.mapInArrow(
-        score, "query_id long, corpus_id long, cosine double"
-    )
-
-
-def brute_force_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k nearest by cosine for each query vector.
-
-    Deterministic: ties break on corpus_id. The only shuffle is the
-    per-query ranking window, keyed on query_id (small side).
-    """
-    scored = cosine_pairs(queries, corpus, id_col, vec_col)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
-    )
 
 
 def _hyperplane(dim: int, seed: int) -> list[float]:
@@ -196,58 +29,6 @@ def _hyperplane(dim: int, seed: int) -> list[float]:
         # map first 8 hex chars to [-1, 1)
         vals.append(int(h[:8], 16) / float(1 << 31) - 1.0)
     return vals
-
-
-def lsh_bucketed_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate top-k: random-hyperplane signature buckets, exact
-    cosine within bucket. Recall < 1.0 by design; candidates shrink
-    ~2^n_planes-fold, which is what makes 100 TB ANN feasible."""
-    if dim is None:
-        first = corpus.select(F.size(vec_col).alias("d")).first()
-        dim = int(first["d"])
-
-    def signature(vec: F.Column) -> F.Column:
-        bits = []
-        for p in range(n_planes):
-            plane = F.array(*[F.lit(v) for v in _hyperplane(dim, p)])
-            bits.append(F.when(dot_product(vec, plane) >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
-        out = F.lit(0)
-        for b in bits:
-            out = out + b
-        return out
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double_array(vec_col).alias("q_vec"),
-    ).withColumn("bucket", signature(F.col("q_vec")))
-    c = corpus.select(
-        F.col(id_col).alias("corpus_id"),
-        _as_double_array(vec_col).alias("c_vec"),
-    ).withColumn("bucket", signature(F.col("c_vec")))
-
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("query_id") != F.col("corpus_id"))
-        .select(
-            "query_id",
-            "corpus_id",
-            cosine_similarity(F.col("q_vec"), F.col("c_vec")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
-    )
 
 
 def _lloyd_numpy(X, k: int, seed: int, max_iter: int):
@@ -350,82 +131,3 @@ def coarse_assign(
         .withColumn("list_id", nearest_exemplar_index(F.col("c_vec"), F.col("cents")))
     )
     return lists, centroids
-
-
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 10,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k — the other standard ANN
-    scale path next to LSH:
-
-    1. train an n_lists coarse quantizer (MLlib KMeans, seeded),
-    2. assign every corpus vector to its nearest centroid — a native
-       ``nearest_exemplar_index`` over a broadcast centroid table (the
-       inverted lists; the assignment is the ONLY full-corpus pass),
-    3. each query probes its ``n_probe`` nearest lists and scores
-       exactly (cosine) within them: candidates shrink
-       ~n_lists/n_probe-fold.
-
-    Deterministic for fixed seed. Recall < 1 by design; raise n_probe
-    to trade speed back for recall."""
-    from ..functions.distances import euclidean_distance
-
-    spark = corpus.sparkSession
-    # coarse-quantizer training + inverted-list assignment (shared with
-    # dedup/semantic.py SemDeDup): bounded driver-side training, one
-    # full-corpus assignment pass, broadcast centroid table
-    lists, centroids = coarse_assign(
-        corpus, n_lists, id_col, vec_col, seed, max_iter
-    )
-    cents = spark.createDataFrame([(centroids,)], "cents array<array<double>>")
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double_array(vec_col).alias("q_vec")
-    )
-    # n_probe nearest lists per query: sort (distance, index) structs —
-    # array_sort orders by field position, ties to the lower index
-    probe_ids = F.slice(
-        F.transform(
-            F.array_sort(
-                F.transform(
-                    F.col("cents"),
-                    lambda cc, i: F.struct(
-                        euclidean_distance(F.col("q_vec"), cc).alias("d"),
-                        i.alias("i"),
-                    ),
-                )
-            ),
-            lambda s: s["i"],
-        ),
-        1,
-        n_probe,
-    )
-    q_probed = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("list_id", F.explode(probe_ids))
-        .select("query_id", "q_vec", "list_id")
-    )
-
-    scored = (
-        lists.join(F.broadcast(q_probed), "list_id")
-        .filter(F.col("query_id") != F.col("corpus_id"))
-        .select(
-            "query_id",
-            "corpus_id",
-            cosine_similarity(F.col("q_vec"), F.col("c_vec")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
-    )

@@ -8,7 +8,6 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_skyline_dominance_bruteforce(spark):
-    from bigdata_spark.plans.graphq import QUERIES as _  # noqa: F401  (import path sanity)
     from bigdata_spark.plans.coverage import o7_skyline_pareto
 
     sky = {(r["p_retailprice"], r["p_size"]) for r in o7_skyline_pareto(spark, SF).collect()}
@@ -93,33 +92,6 @@ def test_locf_impute_matches_bruteforce(spark):
         exp_v, exp_flag = expected[r["event_id"]]
         assert r["value_filled"] == exp_v
         assert r["imputed"] == exp_flag
-
-
-def test_rake_scores_positive_and_stopword_free(spark):
-    from bigdata_spark.plans.textq import _RAKE_STOPS, txt_rake_keyphrases
-
-    rows = txt_rake_keyphrases(spark, "/root/testdata/sf0.001").collect()
-    assert 0 < len(rows) <= 20
-    scores = [r["score"] for r in rows]
-    assert scores == sorted(scores, reverse=True)
-    for r in rows:
-        words = r["phrase"].split(" ")
-        assert len(words) == r["n_words"]
-        assert not set(words) & set(_RAKE_STOPS)
-        assert r["score"] > 0
-
-
-def test_dp_count_noise_properties(spark):
-    """Noise must be nonzero, mean-bounded, and dp_count == true_n + noise."""
-    from bigdata_spark.plans.textq import llm_dp_count
-
-    rows = llm_dp_count(spark, "/root/testdata/sf0.01").collect()
-    assert len(rows) > 1
-    noises = [r["laplace_noise"] for r in rows]
-    assert any(n > 0 for n in noises) and any(n < 0 for n in noises)
-    for r in rows:
-        assert abs(r["dp_count"] - (r["true_n"] + r["laplace_noise"])) < 2e-6
-        assert abs(r["laplace_noise"]) < 50  # Laplace(1) tail sanity
 
 
 def test_percentile_cont_matches_numpy(spark):

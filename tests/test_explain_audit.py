@@ -1,7 +1,8 @@
 """The source-level audits of ``tools/explain_audit.py``: every forced
 broadcast hint, every window without ``partitionBy`` and every window
 partition key in the package must match its reviewed allowlist
-exactly, with no stale entry. They read the source only; no Spark."""
+exactly, with no stale entry; and every plan assertion in ``AUDITS``
+names a live registry query. They read the source only; no Spark."""
 
 from __future__ import annotations
 
@@ -22,3 +23,10 @@ _spec.loader.exec_module(explain_audit)
 def test_source_audit_matches_its_allowlist(audit, capsys):
     failures = getattr(explain_audit, audit)()
     assert failures == 0, capsys.readouterr().out
+
+
+def test_every_plan_audit_names_a_live_query():
+    from bigdata_spark.plans import all_queries
+
+    stale = sorted(set(explain_audit.AUDITS) - set(all_queries()))
+    assert not stale, f"AUDITS keys with no registry query: {stale}"

@@ -84,40 +84,3 @@ def test_keep_one_drops_only_duplicates(spark, tmp_path):
     a = out["srcA"]
     # 9 docs + 1 dup-wave copy (doc_id 0) = 10; 3 distinct texts survive
     assert a["n_docs"] == 10 and a["n_survivors"] == 3 and a["n_dropped"] == 7
-
-
-def test_bpe_learns_reference_merges(spark):
-    from bigdata_spark.text.bpe import learn_bpe, tokenize_with_merges
-
-    df = spark.createDataFrame(
-        [(0, "low low low lower lowest"), (1, "new newer newest low")],
-        "doc_id long, text string",
-    )
-    merges = learn_bpe(df, n_merges=6, min_freq=2)
-    # 'l'+'o' dominates (6 weighted occurrences), then 'lo'+'w'
-    assert merges[0] == ("l", "o", 6)
-    assert merges[1] == ("lo", "w", 6)
-    assert all(n >= 2 for _, _, n in merges)
-    counts = {
-        r["doc_id"]: r["n_bpe_tokens"]
-        for r in tokenize_with_merges(df, merges).collect()
-    }
-    # doc0: low|low|low|low,er|low,es,t = 8; doc1: new|new,er|new,es,t|low = 7
-    assert counts == {0: 8, 1: 7}
-
-
-def test_bpe_local_equals_distributed(spark):
-    from bigdata_spark.text import bpe
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(["ab ab abc", "abc abc b", "ba ab"])],
-        "doc_id long, text string",
-    )
-    local = bpe.learn_bpe(df, n_merges=4, min_freq=1)
-    cap = bpe._DRIVER_VOCAB_CAP
-    bpe._DRIVER_VOCAB_CAP = 0  # force the distributed loop
-    try:
-        dist = bpe.learn_bpe(df, n_merges=4, min_freq=1)
-    finally:
-        bpe._DRIVER_VOCAB_CAP = cap
-    assert local == dist

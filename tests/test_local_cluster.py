@@ -31,7 +31,7 @@ _SCRIPT = textwrap.dedent(
     assert spark.conf.get("spark.master") == "local-cluster[2,2,2048]"
     # the applyInPandas trainer's closure imports bigdata_spark on the
     # executors — the canonical shipped-package consumer
-    from bigdata_spark.plans.mlq import ml_local_forest
+    from bigdata_spark.plans.classifierq import ml_local_forest
     rows = ml_local_forest(spark, "/root/testdata/sf0.001").collect()
     assert len(rows) > 0, "forest produced no rows on local-cluster"
     # a plain distributed closure too (no Arrow path)

@@ -5,6 +5,7 @@ from __future__ import annotations
 import json
 
 import numpy as np
+import pytest
 
 from bigdata_spark.plans import pipeline
 from bigdata_spark.plans.pipeline import run_partition_sweep, run_pipeline
@@ -62,3 +63,22 @@ def test_partition_sweep_report(spark, tmp_path, monkeypatch):
     assert reports["4"]["complexity"]["n_trees"] == 4
     on_disk = json.load(open(p))
     assert on_disk["4"]["performance"]["accuracy"] > 0.9
+
+
+def test_bad_arguments_and_a_failed_fit_leave_nothing_cached(spark):
+    """An unknown model or an empty count list fails before any Spark
+    work; a fit that fails (a ragged row) releases the cached split."""
+    df = _clusters(spark, n_per=10)
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    with pytest.raises(ValueError, match=r"model must be 'global' or 'local', got 'forest'"):
+        run_pipeline(df, model="forest")
+    with pytest.raises(ValueError, match=r"partition_counts is empty"):
+        run_partition_sweep(df, [])
+    assert cache.isEmpty()
+
+    ragged = df.union(spark.createDataFrame([(1, [0.0, 0.0, 0.0])], df.schema))
+    for model in ("global", "local"):
+        with pytest.raises(ValueError, match=r"1 of \d+ training rows"):
+            run_pipeline(ragged, model=model, train_fraction=0.99)
+        assert cache.isEmpty()

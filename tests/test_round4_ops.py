@@ -1,10 +1,10 @@
 """Unit tests for the round-4 session additions: duplicated-substring
-windows, training-mixture sampling, SemDeDup, fixed-point PageRank."""
+windows, SemDeDup, fixed-point PageRank, versioned deletes, data-quality
+expectations and column profiles."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 
 
 # --- duplicated-substring windows ----------------------------------------
@@ -45,51 +45,6 @@ def test_substring_within_doc_repeat_counts(spark):
     row = duplicate_window_stats(df, k=3).collect()[0]
     # windows: xyz yzq zqx qxy xyz → the two xyz occurrences are dups
     assert row["n_windows"] == 5 and row["n_dup"] == 2
-
-
-# --- training-mixture sampling -------------------------------------------
-
-def _mix_corpus(spark):
-    rows = [(i, "tok " * 12, f"src{i % 2}") for i in range(200)]
-    return spark.createDataFrame(rows, "doc_id long, text string, source string")
-
-
-def test_mixture_sample_deterministic_and_budgeted(spark):
-    from bigdata_spark.operators.mixture import mixture_sample
-
-    df = _mix_corpus(spark)
-    w = {"src0": 3, "src1": 1}
-    kept1 = sorted(r["doc_id"] for r in mixture_sample(df, w).collect())
-    kept2 = sorted(
-        r["doc_id"]
-        for r in mixture_sample(df.repartition(7), w).collect()
-    )
-    assert kept1 == kept2  # partition-layout independent
-    assert 0 < len(kept1) < 200
-
-
-def test_mixture_rates_follow_weights(spark):
-    from bigdata_spark.operators.mixture import mixture_rates
-
-    df = _mix_corpus(spark)
-    rates = {
-        r["source"]: (float(r["num"]) / float(r["den"]))
-        for r in mixture_rates(df, {"src0": 3, "src1": 1}).collect()
-    }
-    # equal-sized sources: rate ratio == weight ratio
-    assert rates["src0"] / rates["src1"] == pytest.approx(3.0, rel=1e-6)
-
-
-def test_mixture_saturates_at_one(spark):
-    from bigdata_spark.operators.mixture import mixture_sample
-
-    # a tiny source with a huge weight: its token target exceeds its
-    # size, so the rate saturates at 1 and every doc is kept
-    rows = [(i, "tok " * 12, "src0" if i < 190 else "src1") for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    kept = mixture_sample(df, {"src0": 1, "src1": 1000}).collect()
-    n_src1 = sum(1 for r in kept if r["source"] == "src1")
-    assert n_src1 == 10
 
 
 # --- SemDeDup ------------------------------------------------------------
@@ -184,44 +139,6 @@ def test_versioned_delete_null_predicate_retains(spark, tmp_path):
     versioned_delete_where(t, F.col("v") == "x")
     # row 2's predicate is NULL → retained, SQL DELETE semantics
     assert [r["k"] for r in t.read().collect()] == [2]
-
-
-# --- product quantization ------------------------------------------------
-
-def test_pq_encode_shape_and_determinism(spark):
-    from bigdata_spark.similarity.pq import pq_encode, train_pq_codebooks
-
-    import random
-    rng = random.Random(7)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(50)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    c = df.select(F.col("vec_id").alias("corpus_id"),
-                  F.col("embedding").cast("array<double>").alias("c_vec"))
-    books = train_pq_codebooks(c, m_subspaces=4, k_codes=4, dim=8, seed=1)
-    assert len(books) == 4 and all(len(b) == 4 for b in books)
-    assert all(len(cw) == 2 for b in books for cw in b)
-    enc1 = {r["corpus_id"]: r["codes"] for r in pq_encode(df, books).collect()}
-    enc2 = {r["corpus_id"]: r["codes"] for r in pq_encode(df, books).collect()}
-    assert enc1 == enc2
-    assert all(0 <= code < 4 for codes in enc1.values() for code in codes)
-
-
-def test_pq_topk_identical_vector_is_top1(spark):
-    from bigdata_spark.similarity.pq import pq_topk
-
-    import random
-    rng = random.Random(3)
-    base = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
-    # vec 100 is an exact copy of vec 0 → ADC distance 0, must be its top-1
-    rows = base + [(100, list(base[0][1]))]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = df.filter(F.col("vec_id") == 0)
-    out = pq_topk(q, df, k=3, m_subspaces=4, k_codes=8, seed=5).collect()
-    top1 = [r for r in out if r["rank"] == 1][0]
-    # ADC distance to the exact copy equals the QUERY's own quantization
-    # residual (both share the same codes), so it is minimal but not 0
-    assert top1["corpus_id"] == 100
-    assert all(top1["adc_dist"] <= r["adc_dist"] for r in out)
 
 
 # --- data-quality expectations -------------------------------------------

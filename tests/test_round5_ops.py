@@ -1,5 +1,5 @@
 """Invariant tests for the round-5 additions (ER linkage, CMS, GBT,
-logreg, URL dedup, perplexity buckets, quadkeys).
+logreg).
 
 The cross-engine value check lives in the oracle gate; these assert
 the mathematical invariants a hash match alone would not explain."""
@@ -84,51 +84,3 @@ def test_logreg_beats_majority_class(spark):
     assert 0.0 <= row["train_acc"] <= 1.0
     assert any(abs(row[f"w{j}"]) > 0 for j in range(5))
     assert row["train_acc"] >= majority - 0.25
-
-
-# --- text pipeline -----------------------------------------------------------
-
-
-def test_url_dedup_collapses_noise_variants(spark):
-    from bigdata_spark.plans.textq import llm_url_dedup
-
-    rows = llm_url_dedup(spark, SF).collect()
-    assert rows
-    for r in rows:
-        assert r["n_urls"] >= r["n_canonical"]
-        assert r["dup_factor"] >= 1.0
-        # canonical hosts are normalized: lowercase, no www.
-        assert r["host"] == r["host"].lower()
-        assert not r["host"].startswith("www.")
-
-
-def test_perplexity_buckets_partition_docs(spark):
-    from bigdata_spark.plans.textq import llm_perplexity_buckets
-    from bigdata_spark.sources.catalog import load_table
-
-    rows = sorted(
-        llm_perplexity_buckets(spark, SF).collect(), key=lambda r: r["bucket"]
-    )
-    assert [r["bucket"] for r in rows] == [1, 2, 3]
-    d = load_table(spark, SF, "documents")
-    n_scorable = d.filter("length(trim(text)) > 0").count()
-    assert sum(r["n_docs"] for r in rows) <= n_scorable
-    # tertiles ordered by construction: per-bucket mean surprisal rises
-    means = [r["sum_surprisal_micro"] / r["sum_bigrams"] for r in rows]
-    assert means == sorted(means)
-    for r in rows:
-        assert r["bucket_perplexity"] > 1.0
-
-
-# --- spatial / planning ------------------------------------------------------
-
-
-def test_quadkey_parents_are_contiguous_z_ranges(spark):
-    from bigdata_spark.plans.simq import geo_quadkey_rollup
-
-    rows = geo_quadkey_rollup(spark, SF).collect()
-    assert rows
-    for r in rows:
-        assert r["z_range_contiguous"] is True
-        assert r["n_points"] >= r["n_leaf_cells"] >= 1
-        assert 0 <= r["parent_cell"] < 4**6

@@ -1,5 +1,5 @@
 """Round-7 operator additions: native recursive CTE, lateral top-N,
-content-defined chunking dedup, personalized PageRank."""
+personalized PageRank."""
 
 from __future__ import annotations
 
@@ -47,63 +47,6 @@ def test_lateral_topn_matches_window_formulation(spark):
         .collect()
     )
     assert got == ref
-
-
-def test_cdc_chunks_reassemble_documents(spark):
-    # chunk boundaries partition the token stream: joining each doc's
-    # chunk texts back in chunk order must reproduce the original text
-    from pyspark.sql import Window
-
-    from bigdata_spark.functions.hashing import portable_hash64
-    from bigdata_spark.plans.textq import _CDC_BOUNDARY_SEED, _CDC_DIV
-    from bigdata_spark.sources.catalog import load_table
-
-    d = load_table(spark, SF, "documents").select("doc_id", "text").limit(20)
-    toks = d.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "word")
-    ).withColumn(
-        "bflag",
-        (portable_hash64("word", _CDC_BOUNDARY_SEED) % _CDC_DIV == 0).cast("int"),
-    )
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    chunks = (
-        toks.withColumn("chunk_id", F.sum("bflag").over(w))
-        .groupBy("doc_id", "chunk_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "word"))),
-                    lambda x: x["word"],
-                ),
-                " ",
-            ).alias("chunk_text")
-        )
-    )
-    rebuilt = chunks.groupBy("doc_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("chunk_id", "chunk_text"))),
-                lambda x: x["chunk_text"],
-            ),
-            " ",
-        ).alias("rebuilt")
-    )
-    joined = d.join(rebuilt, "doc_id")
-    assert joined.filter(F.col("text") != F.col("rebuilt")).count() == 0
-
-
-def test_cdc_dedup_fractions_bounded(spark):
-    from bigdata_spark.plans.textq import llm_cdc_chunk_dedup
-
-    rows = llm_cdc_chunk_dedup(spark, SF).collect()
-    assert rows
-    for r in rows:
-        assert 0 <= r["n_dup_instances"] <= r["n_chunks"]
-        assert 0.0 <= r["dup_frac"] <= 1.0
 
 
 def test_ppr_concentrates_mass_on_seeds(spark):

@@ -216,37 +216,6 @@ def test_pava_rational_and_isotonic_fit(spark):
     assert all(0 <= p <= 1_000_000 for p in ppm)
 
 
-def test_readability_matches_python_regex(spark):
-    import re
-
-    from bigdata_spark.plans.textq import txt_readability
-    from bigdata_spark.sources.catalog import load_table
-
-    docs = load_table(spark, SF, "documents").select("lang", "text").collect()
-    agg: dict[str, list[int]] = {}
-    for d in docs:
-        words = len(re.findall(r"[A-Za-z]+", d["text"]))
-        if words == 0:
-            continue
-        sents = max(1, len(re.findall(r"[.!?]+", d["text"])))
-        sylls = len(re.findall(r"[aeiouAEIOUyY]+", d["text"]))
-        a = agg.setdefault(d["lang"], [0, 0, 0, 0, 0, 0])
-        a[0] += 1; a[1] += words; a[2] += sents; a[3] += sylls
-        score = 206.835 - 1.015 * (words / sents) - 84.6 * (sylls / words)
-        a[4] += score >= 60
-        a[5] += score < 30
-    rows = {r["lang"]: r for r in txt_readability(spark, SF).collect()}
-    assert set(rows) == set(agg)
-    for lang, (nd, w, s, sy, easy, hard) in agg.items():
-        r = rows[lang]
-        assert (r["n_docs"], r["words"], r["sents"], r["sylls"]) == (nd, w, s, sy)
-        assert (r["n_easy"], r["n_difficult"]) == (easy, hard)
-        expect = 206.835 - 1.015 * (w / s) - 84.6 * (sy / w)
-        import math
-
-        assert math.isclose(r["flesch_lang"], expect, rel_tol=1e-12)
-
-
 def test_pit_embargo_join_matches_python(spark):
     import datetime as dt
 
@@ -303,59 +272,6 @@ def test_pseudonymize_join_is_referentially_intact(spark):
     assert row["n_orders"] == load_table(spark, SF, "orders").count()
     assert row["n_joined_raw"] == row["n_orders"]  # every order has a customer
     assert row["n_tokens"] == row["n_keys"] <= row["n_orders"]
-
-
-def test_quantized_recall_bounds_and_replication(spark):
-    import math
-
-    from bigdata_spark.plans.simq import (
-        _SQR_K,
-        _SQR_MOD,
-        _SQR_QCAP,
-        _SQR_RES,
-        _SQR_SCALE,
-        sim_quantized_recall,
-    )
-    from bigdata_spark.sources.catalog import load_table
-
-    vecs = {
-        r["vec_id"]: list(r["embedding"])
-        for r in load_table(spark, SF, "embeddings").collect()
-    }
-
-    def quant(v):
-        return [math.floor(float(x) * _SQR_SCALE + 0.5) for x in v]
-
-    qv = {i: quant(v) for i, v in vecs.items()}
-
-    def cos(a, b):
-        d = sum(float(x) * float(y) for x, y in zip(a, b))
-        na = math.sqrt(sum(float(x) * float(x) for x in a))
-        nb = math.sqrt(sum(float(y) * float(y) for y in b))
-        return d / (na * nb) if na * nb != 0 else 0.0
-
-    rows = sim_quantized_recall(spark, SF).collect()
-    queries = sorted(
-        i for i in vecs if i % _SQR_MOD == _SQR_RES and i < _SQR_QCAP
-    )
-    assert [r["query_id"] for r in rows] == queries
-    for r in rows[:5]:  # replicate a few queries end-to-end
-        qid = r["query_id"]
-        others = [i for i in vecs if i != qid]
-        exact = sorted(others, key=lambda i: (-cos(vecs[qid], vecs[i]), i))[:_SQR_K]
-        approx = sorted(
-            others,
-            key=lambda i: (
-                -sum(a * b for a, b in zip(qv[qid], qv[i])),
-                i,
-            ),
-        )[:_SQR_K]
-        overlap = len(set(exact) & set(approx))
-        assert r["n_overlap"] == overlap
-        assert r["recall_ppm"] == (1_000_000 * overlap) // _SQR_K
-    # int8-ish quantization should preserve most of the ranking
-    mean_recall = sum(r["n_overlap"] for r in rows) / (len(rows) * _SQR_K)
-    assert mean_recall >= 0.5
 
 
 def test_resource_allocation_degree_discount(spark):
@@ -431,70 +347,6 @@ def test_source_dedup_priority_policy(spark):
         (r["winner_source"], r["loser_source"]): r["n_displaced"] for r in rows
     }
     assert got == matrix
-
-
-def test_jl_projection_audit_exact_replication(spark):
-    import hashlib
-    import math
-
-    from bigdata_spark.plans.simq import (
-        _JL_K,
-        _JL_NVEC,
-        _SQR_SCALE,
-        sim_jl_projection_audit,
-    )
-    from bigdata_spark.sources.catalog import load_table
-
-    vecs = {
-        r["vec_id"]: [
-            math.floor(float(x) * _SQR_SCALE + 0.5) for x in r["embedding"]
-        ]
-        for r in load_table(spark, SF, "embeddings")
-        .filter(F.col("vec_id") < _JL_NVEC)
-        .collect()
-    }
-
-    def sign(i, j):
-        h = int(hashlib.md5(f"jl|{i}|{j}".encode()).hexdigest()[:15], 16)
-        return 1 if h % 2 == 0 else -1
-
-    mat = {(i, j): sign(i, j) for i in range(1, 65) for j in range(1, _JL_K + 1)}
-    proj = {
-        vid: [
-            sum(q[i - 1] * mat[(i, j)] for i in range(1, 65))
-            for j in range(1, _JL_K + 1)
-        ]
-        for vid, q in vecs.items()
-    }
-    from collections import Counter
-
-    hist = Counter()
-    mins: dict[int, int] = {}
-    maxs: dict[int, int] = {}
-    ids = sorted(vecs)
-    for ai, a in enumerate(ids):
-        for b in ids[ai + 1 :]:
-            d2p = sum((x - y) ** 2 for x, y in zip(proj[a], proj[b]))
-            d2o = sum((x - y) ** 2 for x, y in zip(vecs[a], vecs[b]))
-            r2 = (100 * d2p) // (_JL_K * d2o)
-            bucket = (r2 // 10) * 10
-            hist[bucket] += 1
-            mins[bucket] = min(mins.get(bucket, r2), r2)
-            maxs[bucket] = max(maxs.get(bucket, r2), r2)
-    rows = sim_jl_projection_audit(spark, SF).collect()
-    got = {
-        r["ratio2_bucket"]: (
-            r["n_pairs"],
-            r["min_ratio2_pct"],
-            r["max_ratio2_pct"],
-        )
-        for r in rows
-    }
-    assert got == {b: (hist[b], mins[b], maxs[b]) for b in hist}
-    # JL contract: most mass near ratio² = 100 (undistorted)
-    total = sum(hist.values())
-    near = sum(n for b, n in hist.items() if 50 <= b <= 150)
-    assert near / total > 0.9
 
 
 def test_roc_auc_matches_mann_whitney_direction(spark):
@@ -576,17 +428,6 @@ def test_assortativity_matches_python_pearson(spark):
     )
     assert math.isclose(row["assortativity_r"], r, rel_tol=1e-12)
     assert -1.0 <= row["assortativity_r"] <= 1.0
-
-
-def test_mix_diversity_bounds(spark):
-    from bigdata_spark.plans.textq import llm_mix_diversity
-
-    row = llm_mix_diversity(spark, SF).collect()[0]
-    assert 1.0 <= row["doc_eff_sources"] <= row["n_sources"]
-    assert 1.0 <= row["tok_eff_sources"] <= row["n_sources"]
-    # dominance is at least the uniform share
-    assert row["doc_dominance_ppm"] >= 1_000_000 // row["n_sources"]
-    assert row["tok_dominance_ppm"] >= 1_000_000 // row["n_sources"]
 
 
 def test_manifest_stats_pruning_api(spark, tmp_path):

@@ -242,29 +242,6 @@ def test_salted_join_rejects_outer(spark):
         salted_join(df, df, "k", how="full_outer")
 
 
-def test_ivf_topk_recall_on_separated_clusters(spark):
-    from bigdata_spark.similarity.ann import brute_force_topk, ivf_topk
-
-    # 4 well-separated clusters in 8-d: IVF with enough probes must
-    # reproduce the exact top-k almost perfectly
-    import random
-
-    rng = random.Random(7)
-    rows = []
-    for i in range(200):
-        c = i % 4
-        base = [10.0 * (c == j) for j in range(4)] * 2
-        rows.append((i, [v + rng.uniform(-0.5, 0.5) for v in base]))
-    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = corpus.filter("vec_id < 4")
-
-    exact = brute_force_topk(queries, corpus, k=5)
-    approx = ivf_topk(queries, corpus, k=5, n_lists=4, n_probe=2, seed=42)
-    hits = approx.join(exact, ["query_id", "corpus_id"], "left_semi").count()
-    assert exact.count() == 20
-    assert hits >= 18  # ≥0.9 recall on separated clusters
-
-
 def test_z2_matches_python_morton(spark):
     from bigdata_spark.operators.zorder import z2
     from pyspark.sql import functions as F

@@ -139,6 +139,14 @@ def test_predict_rejects_a_row_of_another_width(spark):
     with pytest.raises(Exception, match=r"1 of 1 rows have null features"):
         forest.predict(null).collect()
 
+    # a null value (Arrow hands it to pandas as NaN) fails both predicts
+    # with a count, as it fails both fits
+    for row in ([1.0, None, 2.0, 3.0, 4.0, 5.0], [None] * 6):
+        holed = spark.createDataFrame([(0, 0, row)], "id int, label int, features array<double>")
+        for model in (tree, forest):
+            with pytest.raises(Exception, match=r"1 of 1 rows have a null feature value"):
+                model.predict(holed).collect()
+
 
 @pytest.mark.parametrize(
     "model",

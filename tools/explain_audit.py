@@ -53,10 +53,6 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
     "range_join_price_bands": [
         ("bands broadcast (fact side never shuffles for the join)", r"BroadcastNestedLoopJoin|BroadcastHashJoin"),
     ],
-    "sim_topk_bruteforce": [
-        ("query side broadcast", r"BroadcastExchange|BroadcastNestedLoopJoin"),
-        ("vec_id filter pushed", r"PushedFilters: \[.*LessThan\(vec_id,5\)"),
-    ],
     "tpch_q7": [
         ("nation dims broadcast", r"BroadcastHashJoin"),
         ("returnflag-free scan pruned to join+agg columns", r"ReadSchema: (?![^\n]*l_returnflag)"),
@@ -116,11 +112,6 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
         ("lateral decorrelated to a group limit (no per-row subquery)", r"WindowGroupLimit"),
         ("customer filter pushed to scan", r"PushedFilters: \[.*LessThan\(c_custkey,20\)"),
     ],
-    "llm_cdc_chunk_dedup": [
-        ("chunk ids from one per-doc window", r"Window"),
-        ("census map-side combines", r"partial_count\("),
-        ("no Python evaluation (native split/hash/array ops)", r"^(?![\s\S]*(BatchEvalPython|ArrowEvalPython|MapInPandas))"),
-    ],
     "graph_ppr": [
         ("seed set broadcast onto the node table", r"BroadcastExchange"),
         ("no Python evaluation (integer fixed-point expressions)", r"^(?![\s\S]*(BatchEvalPython|ArrowEvalPython|MapInPandas))"),
@@ -174,11 +165,6 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
         ("positive-balance filter pushed", r"PushedFilters: \[.*GreaterThan\(c_acctbal,0\.0\)"),
         ("exact decimal balance sums", r"partial_sum\(cast\(c_acctbal[^\n]*decimal"),
     ],
-    "sim_topk_lsh": [
-        ("query side broadcast", r"BroadcastExchange"),
-        ("per-query top-k became a group limit (no full sort of scores)", r"WindowGroupLimit"),
-        ("query filter pushed", r"PushedFilters: \[.*LessThan\(vec_id,5\)"),
-    ],
     "skew_salted_agg": [
         ("phase 1 shuffles on (key, salt) — hot key spread over salts", r"hashpartitioning\(event_type#\d+, _salt#\d+"),
         ("phase 2 merges per-key over the tiny partial table", r"hashpartitioning\(event_type#\d+, \d+\)"),
@@ -202,23 +188,6 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
         ("inverted index aggregates pair counts (no per-pair array ops)", r"partial_count|HashAggregate"),
         ("size-ratio prune inside the join condition", r"join[^\n]*threshold|\(cast\(sz#\d+ as double\) >="),
     ],
-    "llm_seq_pack": [
-        ("running offsets partition by shard, not global", r"hashpartitioning\(lang#\d+"),
-        ("block explosion stays native (Generate, no Python)", r"explode\(sequence\("),
-    ],
-    "txt_tfidf": [
-        ("df table broadcast onto per-doc terms", r"BroadcastHashJoin"),
-        ("per-doc top-3 is a group limit, not a global sort", r"WindowGroupLimit"),
-    ],
-    "llm_decontaminate": [
-        ("benchmark gram set broadcast (corpus side never shuffles for the join)", r"BroadcastHashJoin"),
-        ("hit counts partially aggregated before the shuffle", r"partial_count"),
-        ("n-gram expansion stays native (Generate, no Python)", r"(?s)Generate\b.*Arguments: explode"),
-    ],
-    "txt_repetition": [
-        ("no agg/join shuffle (only the round-robin parallelism spread)", r"(?s)\A(?!.*hashpartitioning)"),
-        ("no Python evaluation in the row path", r"(?s)\A(?!.*(BatchEvalPython|ArrowEvalPython))"),
-    ],
     "dedup_keep_one": [
         ("representative selection is a group limit, not a full sort per key", r"WindowGroupLimit|window"),
         ("survivor counts partially aggregated", r"partial_count"),
@@ -231,14 +200,6 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
         ("no cartesian/self-join pair expansion", r"^(?![\s\S]*CartesianProduct)"),
         ("basket-local HOF pair generation", r"Generate[\s\S]*explode\(flatten\(transform"),
         ("item counts broadcast onto edges", r"BroadcastHashJoin"),
-    ],
-    "geo_radius_join": [
-        ("equi-join on grid cells, not a cross join", r"^(?![\s\S]*CartesianProduct)(?![\s\S]*BroadcastNestedLoopJoin)"),
-        ("neighbor-cell explode present", r"Generate[\s\S]*explode\("),
-    ],
-    "llm_bigram_lm": [
-        ("LM join is a hash/merge join on the bigram key", r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin"),
-        ("no Python UDFs anywhere", r"^(?![\s\S]*BatchEvalPython)(?![\s\S]*ArrowEvalPython)"),
     ],
     "dedup_symspell_join": [
         ("deletion-key blocking is an equi-join", r"^(?![\s\S]*CartesianProduct)(?![\s\S]*BroadcastNestedLoopJoin)"),
@@ -268,18 +229,9 @@ AUDITS.update({
         ("map-side partial aggregation", r"partial_count|partial_sum"),
         ("scan pruned to id+text", r"ReadSchema: struct<doc_id:bigint,text:string>"),
     ],
-    "llm_mix_sample": [
-        ("rate/weight tables broadcast", r"BroadcastHashJoin"),
-        ("exact-integer keep decision, no Python", NO_PYTHON),
-    ],
     "graph_pagerank": [
         ("nation dim broadcast in the final join", r"BroadcastHashJoin"),
         ("integer mass arithmetic native", NO_PYTHON),
-    ],
-    "sim_topk_pq": [
-        ("ADC scoring native (no Python eval)", NO_PYTHON),
-        ("recall check via semi join", r"LeftSemi"),
-        ("query-side filter pushed", r"PushedFilters: \[.*LessThan\(vec_id,5\)"),
     ],
     "w6_exact_median": [
         ("fact collapses via map-side partial agg (histogram, no fact-row window)", r"partial_count"),
@@ -296,19 +248,10 @@ AUDITS.update({
         ("single scan via Expand for multi-distinct", r"Expand"),
         ("scan pruned to the four profiled columns", r"ReadSchema: struct<o_orderkey:bigint,o_custkey:bigint,o_orderstatus:string,o_orderdate:timestamp"),
     ],
-    "txt_rake_keyphrases": [
-        ("word stats broadcast onto phrase words", r"BroadcastHashJoin"),
-        ("all-native expressions", NO_PYTHON),
-    ],
     "approx_bloom_semijoin": [
         ("bitmap rides as a literal: the one join is the exact verify, broadcast by stats", r"BroadcastHashJoin LeftOuter"),
         ("no shuffle join anywhere", r"^(?:(?!SortMergeJoin)[\s\S])*$"),
         ("all-native expressions", NO_PYTHON),
-    ],
-    "sim_maxsim_multivector": [
-        ("queries broadcast to the corpus", r"BroadcastNestedLoopJoin"),
-        ("top-k is a group limit, not a global sort", r"WindowGroupLimit"),
-        ("MaxSim kernel stays native", NO_PYTHON),
     ],
     "graph_bfs_hops": [
         ("frontier joins stay shuffle-hash/broadcast scale shape", NO_PYTHON),
@@ -328,19 +271,9 @@ AUDITS.update({
         ("only key+name columns read from customer", r"ReadSchema: (?![^\n]*c_acctbal)"),
         ("no Python evaluation", NO_PYTHON),
     ],
-    "geo_quadkey_rollup": [
-        ("leaf-cell census partial-aggregates map-side", r"partial_count"),
-        ("only the two embedding dims feed the key (no label read)", r"ReadSchema: (?![^\n]*label)"),
-        ("no Python evaluation", NO_PYTHON),
-    ],
     "approx_cms_topk": [
         ("sketch grid is a partial-agg groupBy (mergeable cells)", r"partial_count"),
         ("sketch broadcast to the probe side", r"BroadcastHashJoin"),
-        ("no Python evaluation", NO_PYTHON),
-    ],
-    "llm_url_dedup": [
-        ("scan pruned to doc_id only (text never read)", r"ReadSchema: struct<doc_id:bigint>"),
-        ("per-canonical counts partial-aggregate", r"partial_count"),
         ("no Python evaluation", NO_PYTHON),
     ],
     "approx_kmv_distinct": [
@@ -390,15 +323,6 @@ AUDITS.update({
         ("decode is Arrow-batched mapInPandas (never per-row Python)", r"MapInPandas"),
         ("run/total aggregates partial-aggregate after decode", r"partial_count|partial_min"),
     ],
-    "txt_readability": [
-        (
-            "scan pruned to (lang, text)",
-            r"ReadSchema: struct<lang:string,text:string>"
-            r"|ReadSchema: struct<text:string,lang:string>",
-        ),
-        ("per-language sums partial-aggregate", r"partial_sum"),
-        ("regex counters JVM-native, no Python", NO_PYTHON),
-    ],
     "j10_pit_embargo_join": [
         ("one running-sum window serves all probes (no per-label subquery)",
          r"RunningWindowFunction|Window"),
@@ -427,15 +351,6 @@ AUDITS.update({
         ("distinct collapse partial-aggregates before the sketch", r"partial_|HashAggregate"),
         ("set algebra joins run on sketch-sized tables", r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin"),
         ("integer theta estimators native, no Python", NO_PYTHON),
-    ],
-    "ml_feature_hashing": [
-        ("32-bucket census partial-aggregates", r"partial_count|HashAggregate"),
-        ("portable hash native, no Python", NO_PYTHON),
-    ],
-    "llm_ngram_novelty": [
-        ("first-seen index is a map-side-combinable min", r"partial_min"),
-        ("join back on the shingle key (no pairwise join)", r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin"),
-        ("shingling native, no Python", NO_PYTHON),
     ],
     "graph_local_clustering": [
         ("wedge closure is an equi-join, never a cross join", r"^(?![\s\S]*CartesianProduct)"),
@@ -471,25 +386,11 @@ AUDITS.update({
         ("argmax is a bounded TakeOrdered over the cells", r"TakeOrderedAndProject"),
         ("exact integer KS numerator, no Python", NO_PYTHON),
     ],
-    "llm_shard_assign": [
-        (
-            "scan pruned to (doc_id, n_chars)",
-            r"ReadSchema: struct<doc_id:bigint,n_chars:(int|bigint)>",
-        ),
-        ("16-shard census partial-aggregates", r"partial_count|partial_sum"),
-        ("portable-hash assignment native, no Python", NO_PYTHON),
-    ],
     "graph_jaccard_linkpred": [
         ("degree tables broadcast onto the pair table", r"BroadcastHashJoin"),
         ("existing edges drop via anti-join", r"LeftAnti"),
         ("top-k is a bounded TakeOrdered, not a full sort", r"TakeOrderedAndProject"),
         ("integer Jaccard ppm native, no Python", NO_PYTHON),
-    ],
-    "txt_word_lift": [
-        ("frequent-vocab table broadcast before the pair join", r"BroadcastHashJoin"),
-        ("pair counts partial-aggregate", r"partial_count"),
-        ("top-k is a bounded TakeOrdered", r"TakeOrderedAndProject"),
-        ("integer lift ppm native, no Python", NO_PYTHON),
     ],
     "s36_manifest_compaction": [
         ("snapshot rollups are an executor checkpoint", r"Scan ExistingRDD"),
@@ -523,10 +424,6 @@ AUDITS.update({
         ("fitted step function broadcast back", r"BroadcastHashJoin"),
         ("no Python on the data path", NO_PYTHON),
     ],
-    "sim_quantized_recall": [
-        ("query side broadcast onto the corpus", r"BroadcastNestedLoopJoin|BroadcastExchange"),
-        ("integer dot products native (zip_with fold), no Python", NO_PYTHON),
-    ],
     "graph_resource_allocation": [
         ("midpoint degrees broadcast onto the wedge join", r"BroadcastHashJoin"),
         ("ppm contributions partial-aggregated", r"partial_sum"),
@@ -537,11 +434,6 @@ AUDITS.update({
         ("one window over content_key (the exact-dedup shuffle)", r"Window"),
         ("displacement matrix partial-aggregates", r"partial_count"),
         ("priority policy native, no Python", NO_PYTHON),
-    ],
-    "sim_jl_projection_audit": [
-        ("sign matrix broadcast onto the unnested vectors", r"BroadcastHashJoin"),
-        ("projection sums partial-aggregate", r"partial_sum"),
-        ("integer distortion ratios native, no Python", NO_PYTHON),
     ],
     "ml_roc_auc": [
         (
@@ -561,15 +453,6 @@ AUDITS.update({
         ("decimal sufficient stats partial-aggregate", r"partial_sum\(.*decimal"),
         ("closed-form r native, no Python", NO_PYTHON),
     ],
-    "llm_mix_diversity": [
-        (
-            "scan pruned to (source, text)",
-            r"ReadSchema: struct<source:string,text:string>"
-            r"|ReadSchema: struct<text:string,source:string>",
-        ),
-        ("per-source sums partial-aggregate", r"partial_sum|partial_count"),
-        ("integer diversity sums native, no Python", NO_PYTHON),
-    ],
 })
 
 # Round-8 additions: the new operator families must keep the same plan
@@ -579,16 +462,6 @@ AUDITS.update({
     "graph_adamic_adar": [
         ("degree table broadcast onto the wedge join", r"BroadcastHashJoin"),
         ("existing edges dropped via anti join", r"LeftAnti"),
-        ("no Python", NO_PYTHON),
-    ],
-    "ml_ranking_metrics": [
-        ("query-side cap pushed to the scan", r"PushedFilters: \[.*LessThan\(vec_id,32\)"),
-        ("label totals broadcast", r"BroadcastHashJoin|BroadcastNestedLoopJoin|BroadcastExchange"),
-        ("no Python (integer AP/NDCG natively)", NO_PYTHON),
-    ],
-    "ml_silhouette": [
-        ("centroid table broadcast onto the dim join", r"BroadcastHashJoin"),
-        ("partial aggregation of the dim sums", r"partial_sum"),
         ("no Python", NO_PYTHON),
     ],
     "ml_learning_curve": [
@@ -604,28 +477,9 @@ AUDITS.update({
         ("bounded sides broadcast onto the checkpointed cumsum", r"BroadcastNestedLoopJoin|BroadcastHashJoin"),
         ("no Python", NO_PYTHON),
     ],
-    "llm_budget_waterfill": [
-        ("per-source availability partial-aggregated", r"partial_sum"),
-        ("scan pruned to (source, text)", r"ReadSchema: struct<source:string,text:string>|ReadSchema: struct<text:string,source:string>"),
-        ("no Python", NO_PYTHON),
-    ],
-    "llm_boilerplate_sentences": [
-        ("sentences explode via native Generate", r"Generate"),
-        ("census partial-aggregated", r"partial_count"),
-        ("no Python", NO_PYTHON),
-    ],
     "asof_forward_tolerance": [
         ("event-type filters pushed to parquet", r"PushedFilters: \[.*EqualTo\(event_type,"),
         ("single keyed window (no per-row subquery)", r"Window"),
-        ("no Python", NO_PYTHON),
-    ],
-    "sim_contrastive_pairs": [
-        ("query-side cap pushed to the scan", r"PushedFilters: \[.*LessThan\(vec_id,24\)"),
-        ("no Python (native cosine kernel)", NO_PYTHON),
-    ],
-    "llm_oov_rate": [
-        # the token stream is localCheckpointed (reused by vocab + census)
-        ("vocab head broadcast onto the token stream", r"BroadcastHashJoin"),
         ("no Python", NO_PYTHON),
     ],
     "dedup_sorted_neighborhood": [
@@ -669,6 +523,7 @@ AUDITS.update({
 # F.broadcast(<name>) in the plans package must appear below as
 # (file, function, name); a new hint fails until its grain is reviewed.
 BROADCAST_HINT_ALLOWLIST = {
+    ("classifierq.py", "nearest_exemplar", "ex"),
     ("coverage.py", "f12_quantile_bins", "bnd"),
     ("coverage.py", "w9_percentile_cont", "n_df"),
     ("coverage.py", "wh_abc_analysis", "tot_df"),
@@ -719,22 +574,6 @@ BROADCAST_HINT_ALLOWLIST = {
     ("scaleq.py", "s37_incremental_mv", "counters"),
     ("scaleq.py", "s38_mv_retraction", "counters"),
     ("scaleq.py", "s41_metadata_only_count", "per_file"),
-    ("simq.py", "ml_ranking_metrics", "lab_tot"),
-    ("simq.py", "ml_silhouette", "cent"),
-    ("simq.py", "nearest_exemplar", "ex"),
-    ("simq.py", "sim_jl_projection_audit", "matrix"),
-    ("simq.py", "sim_maxsim_multivector", "q"),
-    ("simq.py", "sim_quantized_recall", "qq"),
-    ("simq.py", "sim_topk_pq", "qv"),
-    ("textq.py", "llm_kl_drift", "totals"),
-    ("textq.py", "llm_mix_temperature", "tot"),
-    ("textq.py", "llm_oov_rate", "vocab"),
-    ("textq.py", "txt_bm25", "stats"),
-    ("textq.py", "txt_heaps_law", "base"),
-    ("textq.py", "txt_heaps_law", "ks"),
-    ("textq.py", "txt_langid_eval", "w_pred"),
-    ("textq.py", "txt_langid_eval", "w_true"),
-    ("textq.py", "txt_word_lift", "frequent"),
     ("tpch_ext.py", "tpch_q11", "n"),
     ("tpch_ext.py", "tpch_q11", "total"),
     ("tpch_ext.py", "tpch_q15", "mx"),
@@ -823,9 +662,8 @@ def audit_broadcast_hints() -> int:
 # no-partitionBy WindowSpec must be registered here with its reviewed
 # grain; a new site fails until its input grain is reviewed. The
 # round-10 sweep converted the SF-grown offenders this rule surfaced
-# (wh_rfm_segments, ml_calibration_bins, llm_perplexity_buckets,
-# llm_kl_drift and two retired statistics queries) to range_rank /
-# range_ntile / agg+broadcast shapes.
+# (wh_rfm_segments, ml_calibration_bins and four queries since
+# retired) to range_rank / range_ntile / agg+broadcast shapes.
 ZERO_PARTITION_WINDOW_ALLOWLIST = {
     ("coverage.py", "o7_skyline_pareto"),      # distinct (price, size) catalog pairs
     ("coverage.py", "o8_range_partition_sort"),  # #partitions grain (pid census)
@@ -846,9 +684,6 @@ ZERO_PARTITION_WINDOW_ALLOWLIST = {
     ("ranking.py", "range_rank"),              # #partitions offset table (the operator's own bounded pass)
     ("samplingq.py", "p7_pps_systematic"),     # stratum/offset grain
     ("samplingq.py", "p9_neyman_allocation"),  # stratum grain
-    ("textq.py", "llm_budget_waterfill"),      # source grain (~20 rows)
-    ("textq.py", "llm_shard_assign"),          # 16-shard census
-    ("textq.py", "txt_zipf_fit"),              # post-LIMIT top-k ranks
 }
 
 
@@ -950,12 +785,9 @@ def audit_zero_partition_windows() -> int:
 # the grain is re-reviewed. SF-grown bounded-key windows over fact rows
 # are NOT allowlistable — convert to operators/ranking.
 # grouped_range_rank / grouped_range_lead or operators/quantiles.
-# grouped_order_statistics (see the w6/w9/f12/w1/w5/ml_conformal/
-# llm_seq_pack conversions, r10 verdict task #1).
+# grouped_order_statistics (see the w6/w9/f12/w1/w5/ml_conformal
+# conversions).
 WINDOW_PARTITION_GRAIN_ALLOWLIST = {
-    ("ann.py", "brute_force_topk", "query_id"),  # data-grown: per-query candidate set
-    ("ann.py", "ivf_topk", "query_id"),          # data-grown: probed-list candidates per query
-    ("ann.py", "lsh_bucketed_topk", "query_id"),  # data-grown: bucket-joined candidates per query
     ("coverage.py", "f13_locf_impute", "user_id"),  # data-grown: events per user
     ("coverage.py", "o8_range_partition_sort", "pid"),  # data-grown: partition id — group size bounded by the range partitioner (#partitions grows with data)
     ("coverage.py", "w6_exact_median", "l_returnflag"),  # bounded-input: (flag, quantity) value-domain histogram, ≤50 rows/flag
@@ -982,7 +814,6 @@ WINDOW_PARTITION_GRAIN_ALLOWLIST = {
     ("multimodalq.py", "mm_audio_silence", "media_id"),  # data-grown: frames per clip (duration-bounded)
     ("multimodalq.py", "mm_scene_cut", "media_id"),  # data-grown: frames per clip (duration-bounded)
     ("ngram.py", "ngram_jaccard_pairs", "_bucket,tok"),  # data-grown: salted token bucket
-    ("pq.py", "pq_topk", "query_id"),            # data-grown: ADC candidates per query
     ("quantiles.py", "grouped_order_statistics", "*group_cols"),  # operator-internal: coarse-bucket census per group
     ("quantiles.py", "grouped_order_statistics", "*group_cols,tgt_id"),  # operator-internal: one selected bucket's value domain
     ("ranking.py", "grouped_range_lead", "*group_cols"),  # operator-internal: per-(pid, group) firsts stitch table
@@ -996,18 +827,6 @@ WINDOW_PARTITION_GRAIN_ALLOWLIST = {
     ("relational.py", "w4_moving_avg", "user_id"),  # data-grown
     ("sampling.py", "group_topk_random_sample", "*group_cols"),  # group-limit: rank<=k filter → WindowGroupLimit
     ("samplingq.py", "p7_pps_systematic", "bucket"),  # bounded-input: stratum offset table
-    ("simq.py", "ml_ranking_metrics", "query_id"),  # data-grown: ranked list per query
-    ("simq.py", "sim_ann_index_incremental", "query_id"),  # group-limit: rank<=5 filter → WindowGroupLimit
-    ("simq.py", "sim_contrastive_pairs", "query_id"),  # data-grown
-    ("simq.py", "sim_knn_classify", "query_id"),  # data-grown
-    ("simq.py", "sim_maxsim_multivector", "query_id"),  # data-grown
-    ("simq.py", "sim_quantized_recall", "query_id"),  # data-grown
-    ("simq.py", "sim_topk_pq", "query_id"),      # data-grown
-    ("textq.py", "llm_cdc_chunk_dedup", "doc_id"),  # data-grown: chunks per doc
-    ("textq.py", "llm_ngram_novelty", "s"),      # data-grown: shingle hash, one group per distinct shingle
-    ("textq.py", "txt_rake_keyphrases", "doc_id"),  # data-grown: words per doc
-    ("textq.py", "txt_rake_keyphrases", "doc_id,g"),  # data-grown: phrase runs per doc
-    ("textq.py", "txt_tfidf", "doc_id"),         # data-grown: terms per doc
     ("upsert_sink.py", "keyed_upsert_batch", "*key_cols"),  # data-grown: versions per key
 }
 

@@ -47,7 +47,7 @@ GOLDEN = '''
 
 
 def main() -> None:
-    from bigdata_spark.plans.mlq import (
+    from bigdata_spark.plans.classifierq import (
         ml_dtw_distances,
         ml_global_tree,
         ml_local_forest,
@@ -58,7 +58,6 @@ def main() -> None:
         mm_metadata,
         mm_phash_dedup,
     )
-    from bigdata_spark.plans.textq import llm_bpe_tokenize, llm_bpe_train
 
     spark = get_spark("pin_golden", extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
@@ -70,10 +69,7 @@ def main() -> None:
         ml_pca_embeddings,
     )
 
-    from bigdata_spark.plans.simq import sim_knn_classify
-
     per_sf = {
-        "sim_knn_classify": sim_knn_classify,
         "ml_isotonic_calibration": ml_isotonic_calibration,
         "ml_pca_embeddings": ml_pca_embeddings,
         "ml_als_factorize": ml_als_factorize,
@@ -81,8 +77,6 @@ def main() -> None:
         "ml_linear_probe": ml_linear_probe,
         "ml_local_forest": ml_local_forest,
         "ml_dtw_distances": ml_dtw_distances,
-        "llm_bpe_train": llm_bpe_train,
-        "llm_bpe_tokenize": llm_bpe_tokenize,
     }
     out: dict[str, object] = {}
     for name, fn in per_sf.items():
