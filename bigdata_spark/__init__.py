@@ -13,9 +13,9 @@ Layout:
     operators   — sampling/splits, preprocessing, partitioning
     functions   — native array/distance/text column expressions
     plans       — composed relational queries (TPC-H-ish analytics)
-    streaming   — stateful stream operators, keyed-upsert parquet sink
+    streaming   — cross-batch stream dedup, keyed-upsert parquet sink
     ml          — proximity tree/forest, prediction, evaluation
-    text        — language-ID, quality scoring, tokenization, fingerprints
+    text        — tokens, quality features, language-ID, fingerprints
     dedup       — exact, minhash-LSH, simhash, n-gram jaccard near-dup
     similarity  — hyperplane recipe and IVF coarse quantizer for dedup
     multimodal  — binary payload columns, PPM/WAV/PNG/JPEG/MP4 codecs

@@ -142,20 +142,3 @@ def balanced_accuracy_from_counts(
         recalls.append(counts.get((c, c), 0) / tot if tot else 0.0)
     return sum(recalls) / len(recalls)
 
-
-def evaluation_report(
-    preds: DataFrame, label_col: str = "label", pred_col: str = "prediction"
-) -> dict:
-    """Full report dict (shape parity with reference
-    evaluation.py:313-347). ONE Spark job: every metric and the
-    confusion matrix derive from the same collected counts table."""
-    counts = _confusion_counts(preds, label_col, pred_col)
-    metrics = metrics_from_counts(counts)
-    metrics["balanced_accuracy"] = balanced_accuracy_from_counts(counts)
-    return {
-        "performance": metrics,
-        "confusion_matrix": [
-            {"label": l, "prediction": p, "n": n}
-            for (l, p), n in sorted(counts.items())
-        ],
-    }

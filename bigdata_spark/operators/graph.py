@@ -51,11 +51,11 @@ def connected_components(
 
     Below ``driver_threshold`` edges, the COMPACT pair list (two longs
     per edge — never payloads) is collected and closed with union-find
-    on the driver: one job instead of ~3 jobs × diameter rounds. Above
-    it, the distributed min-label propagation runs. Same hybrid shape
-    as the IVF coarse quantizer: the data that must be global is tiny,
-    so ship it to the driver while it is; the distributed path exists
-    for when it is not."""
+    on the driver: one job instead of a signature job per star round.
+    Above it, the distributed large-star/small-star rounds run. Same
+    hybrid shape as the IVF coarse quantizer: the data that must be
+    global is tiny, so ship it to the driver while it is; the
+    distributed path exists for when it is not."""
     # materialize the edge list ONCE — candidate-pair generation (LSH
     # join, cosine verify) is the expensive part and must not re-execute
     # on every propagation round. Null endpoints are dropped up front so
@@ -275,180 +275,3 @@ def dedup_cluster_stats(
         (F.col("vertex") == F.col("component")).alias("is_keeper"),
     )
 
-
-def pagerank_fixed_point(
-    nodes: DataFrame,
-    edges: DataFrame,
-    iterations: int = 10,
-    scale: int = 1_000_000_000_000,
-    damping_num: int = 17,
-    damping_den: int = 20,
-    seeds: DataFrame | None = None,
-) -> DataFrame:
-    """Weighted PageRank in FIXED-POINT integer arithmetic — every
-    engine (and every partitioning) produces the bit-identical result,
-    which is what lets an iterative float algorithm carry a hash-exact
-    SQL oracle.
-
-    ``nodes``: (node); ``edges``: (src, dst, w). Rank mass starts at
-    ``scale`` per node; each round a node keeps nothing, teleports
-    base = scale·(1-d) = scale·(den-num)//den, and ships
-    ((mass·num)//den · w)//out_w along each out-edge — all integer
-    div/mod, truncation exactly mirrored in SQL (`//`). Truncation
-    remainders and dangling-node mass simply vanish (total mass decays
-    ~(rounding + dangling)/round), which is harmless for RANKING and
-    keeps the arithmetic exact; classic float PageRank redistributes
-    them, at the price of engine-dependent float sums.
-
-    Plan shape per round: ranks ⋈ edges on src (edges pre-joined with
-    their out-degree — computed once), partial-aggregated groupBy dst,
-    left join back onto the node set. ``localCheckpoint`` truncates
-    lineage so 10 rounds don't compound into one mega-plan. Overflow
-    regime: mass·num ≤ scale·num and the per-edge product stays under
-    2^63 for edge weights up to ~10^5 at this scale; shrink ``scale``
-    or move to DECIMAL(38,0) beyond that.
-
-    ``seeds`` switches the teleport to PERSONALIZED PageRank: the
-    restart mass (and the initial mass) lands only on the seed nodes,
-    so the fixed point measures proximity TO THE SEED SET instead of
-    global centrality — the recommender/"related items" variant. Same
-    integer arithmetic, same per-round plan; the only change is a
-    per-node base column (seed·base) carried on the node table."""
-    out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    # lazy: the RDD materializes once under the caller's first action
-    # and is reused by all ``iterations`` round joins (RDD-level cache)
-    e = edges.join(out_w, "src").localCheckpoint(eager=False)
-    base = scale * (damping_den - damping_num) // damping_den
-    if seeds is None:
-        nodes_b = nodes.select("node", F.lit(base).cast("long").alias("base"))
-    else:
-        s = seeds.select("node").distinct().withColumn("_s", F.lit(1))
-        nodes_b = (
-            nodes.join(F.broadcast(s), "node", "left")
-            .select(
-                "node",
-                (F.coalesce("_s", F.lit(0)) * F.lit(base)).cast("long").alias("base"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    ranks = nodes_b.select(
-        "node",
-        F.when(F.col("base") > 0, F.lit(scale))
-        .otherwise(F.lit(0 if seeds is not None else scale))
-        .cast("long")
-        .alias("mass"),
-    )
-    for i in range(iterations):
-        contribs = (
-            ranks.join(e, ranks.node == e.src)
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(
-                    f"(((mass * {damping_num}) div {damping_den}) * w) div out_w"
-                ).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        ranks = nodes_b.join(contribs, "node", "left").select(
-            "node",
-            (F.col("base") + F.coalesce("in_mass", F.lit(0))).alias("mass"),
-        )
-        # truncate lineage every third round (and before returning):
-        # the 3-round stride keeps the plan shallow, and LAZY
-        # checkpoints chain the strides' RDDs so all rounds pipeline
-        # into the caller's single action — zero per-stride scheduler
-        # round-trips (the RDD chain still materializes exactly once)
-        if i % 3 == 2 or i == iterations - 1:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
-
-
-def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int) -> DataFrame:
-    """Multi-source breadth-first shortest hop distance.
-
-    ``edges`` is a DIRECTED (src, dst) list (symmetrize before calling
-    for undirected graphs); ``seeds`` is (node). Returns (node, dist)
-    for every node within ``max_hops`` of a seed — the exact minimum
-    hop count, independent of execution order.
-
-    Scale shape: classic *delta iteration*. Each round joins only the
-    newly-settled frontier against the edge list (never the full
-    settled set), anti-joins out already-settled nodes, and
-    ``localCheckpoint``s both tables so lineage stays O(1) deep. Rounds
-    = graph diameter (capped), shuffles per round = one join + one
-    anti-join on frontier-sized data — the standard Pregel-without-
-    Pregel BFS that survives a 100 TB edge list because the frontier,
-    not the graph, bounds per-round work.
-    """
-    from pyspark.sql import functions as F
-
-    settled = (
-        seeds.select("node", F.lit(0).alias("dist"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    frontier = settled.select("node")
-    for h in range(1, max_hops + 1):
-        neighbors = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-        )
-        # lazy checkpoints: the frontier count is the round's ONE job
-        # and materializes the checkpoint as it runs (the eager
-        # checkpoint + isEmpty + eager settled-union shape was three
-        # jobs per hop); the settled union materializes under the next
-        # round's anti-join
-        new = (
-            neighbors.join(settled.select("node"), "node", "left_anti")
-            .select("node", F.lit(h).alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        if new.count() == 0:
-            break
-        settled = settled.unionAll(new).localCheckpoint(eager=False)
-        frontier = new.select("node")
-    return settled
-
-
-def ancestor_closure(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
-    """Transitive ancestor closure of a forest by recursive doubling.
-
-    ``edges`` is (node, parent) — each node's single parent (roots
-    absent). Returns (node, anc, dist) for every proper ancestor.
-    Round r composes the closure with itself (dist adds), so known
-    path length doubles each round: O(log depth) Spark jobs instead of
-    the O(depth) rounds a naive parent-at-a-time walk needs — the
-    standard recursive-CTE replacement shape at 100 TB, where a
-    10-level hierarchy closes in 4 shuffles. In a forest each (node,
-    anc) pair has exactly one path, so the dedup after composition is
-    a plain distinct on identical rows.
-    """
-    from pyspark.sql import functions as F
-
-    closure = edges.select(
-        F.col("node"), F.col("parent").alias("anc"), F.lit(1).alias("dist")
-    ).localCheckpoint()
-    # one job per round: the previous round's size carries over (the
-    # old shape recounted the prior closure every round), and the
-    # checkpoint is lazy so the count action materializes it — no
-    # dedicated materialization job
-    n_before = closure.count()
-    for _ in range(max_rounds):
-        a = closure.alias("a")
-        b = closure.alias("b")
-        composed = a.join(b, F.col("a.anc") == F.col("b.node")).select(
-            F.col("a.node").alias("node"),
-            F.col("b.anc").alias("anc"),
-            (F.col("a.dist") + F.col("b.dist")).alias("dist"),
-        )
-        grown = (
-            closure.unionAll(composed).distinct().localCheckpoint(eager=False)
-        )
-        n_after = grown.count()
-        closure = grown
-        if n_after == n_before:
-            break
-        n_before = n_after
-    return closure

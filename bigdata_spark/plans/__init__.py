@@ -30,7 +30,6 @@ def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
         dedupq,
         erq,
         extended,
-        graphq,
         mlq,
         multimodalq,
         relational,
@@ -54,7 +53,6 @@ def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
         scaleq,
         mlq,
         multimodalq,
-        graphq,
         qualityq,
         erq,
     ):

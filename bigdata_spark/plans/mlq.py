@@ -241,11 +241,11 @@ _KM_SCALE = 1_000_000  # float32 coords -> exact integer micro-units
 
 
 def ml_kmeans_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed k-means with INTEGER fixed-point arithmetic — the
-    same trick that made PageRank oracle-exact (operators/graph):
-    coordinates scale to exact integer micro-units, distances are
-    exact BIGINT sums of squares, and each Lloyd step's centroid is
-    the element-wise integer mean (floor division). Every quantity is
+    """Distributed k-means with INTEGER fixed-point arithmetic, which
+    makes an iterative float algorithm oracle-exact: coordinates
+    scale to exact integer micro-units, distances are exact BIGINT
+    sums of squares, and each Lloyd step's centroid is the
+    element-wise integer mean (floor division). Every quantity is
     therefore engine-independent, so 3 full iterations unroll into
     chained CTEs in DuckDB and hash-match bit-for-bit — a correctness
     standard float k-means cannot meet.

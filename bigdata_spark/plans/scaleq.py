@@ -1423,11 +1423,11 @@ def s33_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop, no localCheckpoint bookkeeping — and the per-depth census
     (count, key range, exact-decimal balance sum) comes from the SAME
     SQL text DuckDB executes as the oracle, so the parity check is
-    literal. Complements hier_rollup_closure (which builds the closure
-    by hand with recursive doubling for engines/versions without
-    native recursion) — this entry proves the engine-native path.
-    Scale note: each recursion level is one distributed join against
-    the full table, exactly what the hand-rolled loop would run; depth
+    literal. Engines/versions without native recursion have to build
+    the closure by hand (e.g. with recursive doubling) — this entry
+    proves the engine-native path. Scale note: each recursion level is
+    one distributed join against the full table, exactly what a
+    hand-rolled loop would run; depth
     is log3(n), so a 10^9-supplier tree is ~19 levels."""
     load_table(spark, sf_dir, "supplier").createOrReplaceTempView("supplier")
     return spark.sql(S33_RECURSIVE_SQL)

@@ -1,12 +1,10 @@
-"""Custom stateful streaming operators via ``applyInPandasWithState``
+"""Custom stateful streaming operator via ``applyInPandasWithState``
 (SURVEY §2.9 — the reference has no streaming; this is the
 training-pipeline surface's "custom stateful operator" slot).
 
 State lives per group key in Spark's state store, survives across
-micro-batches, and is bounded by key cardinality (plus optional
-timeouts) — the scalable pattern for running aggregates, sessionization
-with custom rules, or online feature accumulation at 100 TB stream
-volume."""
+micro-batches, and is bounded by key cardinality — the scalable
+pattern for ingest-time dedup at 100 TB stream volume."""
 
 from __future__ import annotations
 
@@ -15,38 +13,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-
-def running_totals_stream(
-    stream_df: DataFrame,
-    key_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
-    """Per-key running (count, sum) maintained in GroupState across
-    micro-batches; emits the updated totals for every key seen in the
-    batch (output mode ``update``).
-
-    Output: (key string, n_events long, total double) — n_events is
-    monotonically non-decreasing per key, so the latest row per key is
-    the current running state."""
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf[value_col].sum())
-        state.update((n, total))
-        yield pd.DataFrame([{"key": key[0], "n_events": n, "total": total}])
-
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType="key string, n_events long, total double",
-        stateStructType="n long, total double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def stream_dedup(
@@ -106,218 +72,3 @@ def stream_dedup(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def timeout_evicted_rollup(
-    stream_df: DataFrame,
-    key_col: str,
-    subkey_col: str,
-    value_col: str = "vm",
-    timeout_ms: int = 1,
-) -> DataFrame:
-    """Per-(key, subkey) (count, sum) rollups held in PER-KEY GroupState
-    and emitted on eviction — the TTL-cache shape (idle sessions flush,
-    hot keys keep accumulating; reference has no streaming, SURVEY §2.9
-    extension surface).
-
-    Two eviction paths produce the same day-grain emission set:
-    (1) EAGER CHRONOLOGICAL FLUSH — on a data batch, accumulated
-    subkeys ABSENT from that batch are closed (the stream stages
-    chronologically, so a subkey never reappears after a gap) and emit
-    immediately; (2) PROCESSING-TIME TIMEOUT — a key whose every
-    subkey went idle re-arms a TTL each data batch, and the timeout
-    branch fires in the first later micro-batch after expiry, flushing
-    everything it still holds. Keys still holding state when the
-    stream stops are NOT flushed (their rows surface on restart).
-
-    State is KEY-bounded (one GroupState per key, holding only the
-    in-flight subkeys — closed subkeys leave state immediately), not
-    (key × subkey)-bounded: at 500 users × 30 days that is 30× fewer
-    state groups and 30× fewer per-key Python invocations per batch —
-    the difference between a 46 s and a ~5 s bench entry, and at
-    100 TB the difference between a state store keyed by live sessions
-    and one keyed by every session-day ever seen.
-
-    Output (append mode): key, subkey, n_events, v_micros — exact
-    integers (``value_col`` must be micro-units prepared upstream).
-    Subkeys serialize as ISO strings in state (DATE round-trips).
-    """
-    import datetime
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        def emit(items: list[tuple[str, int, int]]) -> pd.DataFrame:
-            return pd.DataFrame(
-                [
-                    {
-                        key_col: key[0],
-                        subkey_col: datetime.date.fromisoformat(d),
-                        "n_events": n,
-                        "v_micros": v,
-                    }
-                    for d, n, v in items
-                ]
-            )
-
-        if state.hasTimedOut:
-            days, ns, vs = state.get
-            state.remove()
-            yield emit(sorted(zip(days, ns, vs)))
-            return
-        days, ns, vs = state.get if state.exists else ([], [], [])
-        acc = {d: (n, v) for d, n, v in zip(days, ns, vs)}
-        batch_days: set[str] = set()
-        for pdf in pdfs:
-            g = pdf.groupby(subkey_col)[value_col].agg(["count", "sum"])
-            for d, row in g.iterrows():
-                iso = d.isoformat()
-                batch_days.add(iso)
-                n0, v0 = acc.get(iso, (0, 0))
-                acc[iso] = (n0 + int(row["count"]), v0 + int(row["sum"]))
-        closed = sorted(
-            (d, *acc.pop(d)) for d in list(acc) if d not in batch_days
-        )
-        live = sorted(acc)
-        state.update(
-            (live, [acc[d][0] for d in live], [acc[d][1] for d in live])
-        )
-        state.setTimeoutDuration(timeout_ms)
-        if closed:
-            yield emit(closed)
-
-    key_type = dict(stream_df.dtypes)[key_col]
-    sub_type = dict(stream_df.dtypes)[subkey_col]
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} {key_type}, {subkey_col} {sub_type},"
-            " n_events long, v_micros long"
-        ),
-        stateStructType="days array<string>, ns array<long>, vs array<long>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def event_time_sessionize(
-    stream_df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "vm",
-    gap_us: int = 6 * 3600 * 1_000_000,
-) -> DataFrame:
-    """Gap-based sessionization with EVENT-TIME timeout eviction — the
-    watermark-driven twin of timeout_evicted_rollup's processing-time
-    TTL, completing the GroupStateTimeout matrix (SURVEY §2.9; the
-    reference is batch-only).
-
-    Per-key GroupState holds exactly ONE in-flight session
-    (start, last, count, value-sum in exact integer micro-units). Two
-    eviction paths:
-
-    (1) DATA-DRIVEN — an arriving event more than ``gap_us`` past the
-        session's last event closes and emits it, then opens a fresh
-        one (events sort by event time inside the batch, so several
-        sessions can close in one invocation);
-    (2) EVENT-TIME TIMEOUT — ``setTimeoutTimestamp(last + gap)`` arms
-        the state clock against the WATERMARK, not wall time: when the
-        watermark (min over inputs of max event time − delay) passes
-        the session's gap horizon, ``hasTimedOut`` fires in the next
-        micro-batch and flushes the idle session — the semantics that
-        close abandoned sessions deterministically under replay, which
-        a processing-time TTL cannot promise.
-
-    The two paths agree by construction on a chronologically staged
-    stream: if the timeout horizon precedes the key's next event, that
-    event would have opened a new session anyway (watermark ≤ any
-    later event's time minus delay).
-
-    Strictly-chronological staging is the determinism contract, not a
-    correctness precondition: a LATE-but-within-watermark event (u ≤
-    the session's last timestamp) merges by CLAMPING — start = min,
-    last = max — so it can extend a session backward but never move
-    its end backward or corrupt the gap test, and the timeout is armed
-    at max(horizon, watermark + 1 ms) so a late-key update can never
-    arm a clock at or below the current watermark (which Spark
-    rejects). Events late enough to belong to an ALREADY-CLOSED
-    session fold into the current one — exactly the watermark
-    semantics (beyond the delay, attribution is best-effort).
-
-    Timestamps ride as exact epoch-microsecond BIGINTs end to end
-    (the watermark itself is millisecond-grain inside Spark; session
-    arithmetic never divides). State is LIVE-KEY-bounded — one row per
-    key with an armed eviction clock — the production sessionization
-    shape at 100 TB stream volume.
-
-    Output (append mode): key, start_us, end_us, n_events, v_micros.
-    """
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        def row(st: int, la: int, n: int, vm: int) -> dict:
-            return {
-                key_col: key[0],
-                "start_us": st,
-                "end_us": la,
-                "n_events": n,
-                "v_micros": vm,
-            }
-
-        if state.hasTimedOut:
-            st, la, n, vm = state.get
-            state.remove()
-            yield pd.DataFrame([row(st, la, n, vm)])
-            return
-        ev: list[tuple[int, int]] = []
-        for pdf in pdfs:
-            if len(pdf):
-                us = pdf[ts_col].astype("int64") // 1000
-                ev.extend(zip(us.tolist(), pdf[value_col].tolist()))
-        if not ev:
-            return
-        ev.sort()
-        st, la, n, vm = state.get if state.exists else (None, 0, 0, 0)
-        closed: list[dict] = []
-        for u, v in ev:
-            if st is None:
-                st, la, n, vm = u, u, 1, int(v)
-            elif u - la > gap_us:
-                closed.append(row(st, la, n, vm))
-                st, la, n, vm = u, u, 1, int(v)
-            else:
-                # clamped merge: a late (u ≤ la) in-watermark event may
-                # extend the session start backward but never its end
-                st, la, n, vm = min(st, u), max(la, u), n + 1, vm + int(v)
-        # arm the event-time clock at the CEILING millisecond of the
-        # microsecond horizon (truncation would fire a session one ms
-        # early relative to the µs contract). If the horizon is already
-        # at or below the current watermark — reachable only via a late
-        # in-watermark event on a non-chronological input — the session
-        # is CLOSED by definition (any future in-watermark event has
-        # ts > wm ≥ la + gap, so it starts a new session): emit it now
-        # instead of arming a wm+1 clock that only fires if the
-        # watermark later advances and would strand the session should
-        # the stream end first.
-        horizon_ms = (la + gap_us + 999) // 1000
-        wm_ms = state.getCurrentWatermarkMs()
-        if horizon_ms <= wm_ms:
-            state.remove()
-            closed.append(row(st, la, n, vm))
-        else:
-            state.update((st, la, n, vm))
-            state.setTimeoutTimestamp(horizon_ms)
-        if closed:
-            yield pd.DataFrame(closed)
-
-    key_type = dict(stream_df.dtypes)[key_col]
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} {key_type}, start_us long, end_us long,"
-            " n_events long, v_micros long"
-        ),
-        stateStructType="start_us long, last_us long, n long, vm long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )

@@ -29,21 +29,6 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def bound(col: Column, f) -> Column:
-    """Evaluate ``col`` ONCE per row and pass it to ``f`` as a lambda
-    variable (transform over a one-element array).
-
-    Catalyst's projection collapse inlines a derived array expression
-    into EVERY reference — including references inside higher-order-
-    function lambdas, where the whole construction then re-executes per
-    element (e.g. ``slice(split(text), i, n)`` re-tokenizes the document
-    once per n-gram: measured 2.8 s vs 0.5 s over the sf0.1 corpus for
-    the identical shingle output). Binding the array as a lambda
-    variable pins one evaluation regardless of how many times the body
-    references it."""
-    return F.element_at(F.transform(F.array(col), f), 1)
-
-
 def tokens(text: Column | str) -> Column:
     """Whitespace tokenization of lowercased text → array<string>.
     Empty/blank text yields an empty array (not [''])."""
@@ -54,15 +39,6 @@ def tokens(text: Column | str) -> Column:
 def token_count(text: Column | str) -> Column:
     """Whitespace token count (long)."""
     return F.size(tokens(text)).cast("long")
-
-
-def bpe_ish_token_count(text: Column | str) -> Column:
-    """Regex sub-word token count — approximates BPE tokenizers by
-    splitting words, numbers, and punctuation runs (GPT-2-style
-    pre-tokenization pattern, simplified to RE2-safe form)."""
-    t = _c(text)
-    pieces = F.regexp_extract_all(t, F.lit(r"([A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+)"), 1)
-    return F.size(pieces).cast("long")
 
 
 def quality_features(text: Column | str) -> dict[str, Column]:
@@ -117,102 +93,3 @@ def doc_fingerprint(text: Column | str) -> Column:
     normalized = F.regexp_replace(F.trim(F.lower(_c(text))), r"\s+", " ")
     return portable_hash64(normalized)
 
-
-def word_ngrams(text: Column | str, n: int = 4) -> Column:
-    """Distinct word n-grams of the tokenized text (array<string>,
-    space-joined). Texts with fewer than n tokens yield an empty array.
-    All native: sequence + transform + slice stay in codegen — the
-    per-row cost is O(tokens), no Python, no shuffle."""
-    def _grams(w: Column) -> Column:
-        grams = F.transform(
-            F.sequence(F.lit(1), F.size(w) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(w, i, n)),
-        )
-        # sequence(1, k) DESCENDS when k < 1 — guard short texts explicitly
-        return F.when(F.size(w) >= n, F.array_distinct(grams)).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    # bound: the slice-per-gram lambda must reference the token array as
-    # a lambda variable, not re-tokenize the text per gram (see bound())
-    return bound(tokens(text), _grams)
-
-
-def repetition_features(text: Column | str) -> dict[str, Column]:
-    """Repetition/boilerplate signals (Gopher-/C4-style quality
-    filters): fraction of duplicate tokens, and the fraction of all
-    bigrams taken by the single most frequent bigram. Both are pure
-    per-row array expressions — O(tokens**2) worst case for the bigram
-    scan, bounded by the row's own length, zero shuffle at any corpus
-    scale."""
-    toks = tokens(text)
-    n_tokens = F.size(toks).cast("long")
-
-    def _dup(w: Column) -> Column:
-        n = F.size(w).cast("long")
-        return F.when(
-            n > 0, (n - F.size(F.array_distinct(w))) / n
-        ).otherwise(F.lit(0.0))
-
-    # token array and bigram array are BOUND as lambda variables so each
-    # builds once per row (see bound(): inlined, the bigram construction
-    # re-tokenized the document per bigram and then re-built the bigram
-    # list under every reference)
-    dup_token_frac = bound(toks, _dup)
-
-    def _bigrams(w: Column) -> Column:
-        grams = F.transform(
-            F.sequence(F.lit(1), F.size(w) - 1),
-            lambda i: F.concat_ws(" ", F.slice(w, i, 2)),
-        )
-        return F.when(F.size(w) >= 2, grams).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    # max multiplicity = longest equal-run of the SORTED bigram list —
-    # an O(n log n) aggregate scan per row (the distinct×filter form is
-    # O(n^2) and measured 10x slower on real documents)
-    def _run(acc, x):
-        run = F.when(x == acc.prev, acc.run + 1).otherwise(F.lit(1))
-        return F.struct(
-            x.alias("prev"), run.alias("run"), F.greatest(acc.best, run).alias("best")
-        )
-
-    def _top(bg: Column) -> Column:
-        top_count = F.aggregate(
-            F.array_sort(bg),
-            F.struct(
-                F.lit("").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")
-            ),
-            _run,
-            lambda acc: acc.best,
-        )
-        return F.when(
-            F.size(bg) > 0, top_count.cast("double") / F.size(bg)
-        ).otherwise(F.lit(0.0))
-
-    top_bigram_frac = bound(toks, lambda w: bound(_bigrams(w), _top))
-    return {
-        "n_tokens": n_tokens,
-        "dup_token_frac": dup_token_frac,
-        "top_bigram_frac": top_bigram_frac,
-    }
-
-
-# PII patterns kept RE2-simple so Spark (Java regex) and DuckDB (RE2)
-# agree byte-for-byte on the same inputs.
-PII_EMAIL_RE = r"[A-Za-z0-9._]+@[A-Za-z0-9.]+\.[A-Za-z]+"
-PII_PHONE_RE = r"[0-9]{3}-[0-9]{3}-[0-9]{4}"
-
-
-def redact_pii(text: Column | str) -> dict[str, Column]:
-    """Scrub emails/phone numbers (the standard pre-training PII pass):
-    returns the redacted text plus per-row match counts. Native
-    regexp_replace/regexp_extract_all — JVM-side at corpus scale."""
-    t = _c(text)
-    n_emails = F.size(F.regexp_extract_all(t, F.lit(PII_EMAIL_RE), 0)).cast("long")
-    n_phones = F.size(F.regexp_extract_all(t, F.lit(PII_PHONE_RE), 0)).cast("long")
-    redacted = F.regexp_replace(
-        F.regexp_replace(t, PII_EMAIL_RE, "<EMAIL>"), PII_PHONE_RE, "<PHONE>"
-    )
-    return {"redacted": redacted, "n_emails": n_emails, "n_phones": n_phones}

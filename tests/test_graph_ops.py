@@ -1,211 +1,7 @@
-"""Brute-force cross-checks for the co-purchase graph queries
-(plans/graphq.py): the Spark triangle census vs an itertools
-enumeration of the same edge set, and lift sanity for frequent pairs."""
+"""Connected components (operators/graph.py): the driver path for
+small edge sets and convergence of the distributed star loop."""
 
 from __future__ import annotations
-
-from itertools import combinations
-
-SF = "/root/testdata/sf0.001"
-
-
-def test_triangle_census_matches_bruteforce(spark):
-    from bigdata_spark.plans.graphq import _copurchase_pairs, graph_triangles
-
-    edges = {
-        (r["pa"], r["pb"]) for r in _copurchase_pairs(spark, SF).collect()
-    }
-    nodes = {n for e in edges for n in e}
-    adj: dict[int, set[int]] = {n: set() for n in nodes}
-    for a, b in edges:
-        adj[a].add(b)
-        adj[b].add(a)
-    tri = 0
-    for a, b in edges:
-        tri += len(adj[a] & adj[b])
-    tri //= 3  # each triangle counted once per edge
-    wedges = sum(len(v) * (len(v) - 1) // 2 for v in adj.values())
-
-    row = graph_triangles(spark, SF).collect()[0]
-    assert row["n_nodes"] == len(nodes)
-    assert row["n_edges"] == len(edges)
-    assert row["n_wedges"] == wedges
-    assert row["n_triangles"] == tri
-    if wedges:
-        assert abs(row["global_clustering"] - 3.0 * tri / wedges) < 1e-12
-
-
-def test_frequent_pairs_support_and_lift(spark):
-    from bigdata_spark.plans.graphq import mb_frequent_pairs
-
-    rows = mb_frequent_pairs(spark, SF).collect()
-    assert rows, "sf0.001 must yield at least one frequent pair"
-    baskets: dict[int, set[int]] = {}
-    for r in (
-        spark.read.parquet(f"{SF}/lineitem.parquet")
-        .select("l_orderkey", "l_partkey")
-        .collect()
-    ):
-        baskets.setdefault(r["l_orderkey"], set()).add(r["l_partkey"])
-    for r in rows[:50]:
-        want = sum(
-            1 for items in baskets.values() if {r["pa"], r["pb"]} <= items
-        )
-        assert r["support"] == want >= 2
-        assert r["pa"] < r["pb"]
-        assert r["lift"] > 0
-
-
-def test_ancestor_closure_doubling(spark):
-    """Closure of a known 15-node binary tree: exact pair set, and the
-    doubling loop converges in log rounds (depth 3 -> all dists 1..3)."""
-    from bigdata_spark.operators.graph import ancestor_closure
-
-    edges = spark.createDataFrame(
-        [(k, (k - 1) // 2) for k in range(1, 15)], "node long, parent long"
-    )
-    got = {(r["node"], r["anc"], r["dist"]) for r in ancestor_closure(edges).collect()}
-    want = set()
-    for k in range(1, 15):
-        a, d = k, 0
-        while a > 0:
-            a = (a - 1) // 2
-            d += 1
-            want.add((k, a, d))
-    assert got == want
-
-
-def test_bfs_hops_matches_bruteforce(spark):
-    from collections import deque
-
-    from bigdata_spark.plans.graphq import (
-        _BFS_MAX_HOPS,
-        _BFS_SEED_MOD,
-        _copurchase_pairs,
-        graph_bfs_hops,
-    )
-
-    edges = {
-        (r["pa"], r["pb"]) for r in _copurchase_pairs(spark, SF).collect()
-    }
-    adj: dict[int, set[int]] = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    seeds = [n for n in adj if n % _BFS_SEED_MOD == 0]
-    dist = {n: 0 for n in seeds}
-    q = deque(seeds)
-    while q:
-        u = q.popleft()
-        if dist[u] >= _BFS_MAX_HOPS:
-            continue
-        for v in adj[u]:
-            if v not in dist:
-                dist[v] = dist[u] + 1
-                q.append(v)
-    expected: dict[int, int] = {}
-    for n in adj:
-        d = dist.get(n, -1)
-        expected[d] = expected.get(d, 0) + 1
-
-    got = {r["dist"]: r["n_nodes"] for r in graph_bfs_hops(spark, SF).collect()}
-    assert got == expected
-
-
-def test_bfs_hops_small_graph(spark):
-    """Path graph 1-2-3-4-5 plus isolated 9; seed {1}: exact hop
-    distances, cap honored, unreached absent from the result."""
-    from bigdata_spark.operators.graph import bfs_hops
-
-    edges = spark.createDataFrame(
-        [(a, b) for a, b in [(1, 2), (2, 3), (3, 4), (4, 5)]]
-        + [(b, a) for a, b in [(1, 2), (2, 3), (3, 4), (4, 5)]],
-        "src long, dst long",
-    )
-    seeds = spark.createDataFrame([(1,), (1,)], "node long")  # dup seed
-    out = {r["node"]: r["dist"] for r in bfs_hops(edges, seeds, 2).collect()}
-    assert out == {1: 0, 2: 1, 3: 2}
-
-
-def test_label_propagation_matches_bruteforce(spark):
-    from collections import Counter, defaultdict
-
-    from bigdata_spark.plans.graphq import (
-        _LPA_ROUNDS,
-        _copurchase_pairs,
-        graph_label_propagation,
-    )
-
-    edges = {
-        (r["pa"], r["pb"]) for r in _copurchase_pairs(spark, SF).collect()
-    }
-    adj = defaultdict(set)
-    for a, b in edges:
-        adj[a].add(b)
-        adj[b].add(a)
-    lbl = {n: n for n in adj}
-    for _ in range(_LPA_ROUNDS):
-        nxt = {}
-        for v in adj:
-            counts = Counter(lbl[u] for u in adj[v])
-            best = min(counts, key=lambda c: (-counts[c], c))
-            nxt[v] = best
-        lbl = nxt
-    expected = Counter(lbl.values())
-    got = {r["community"]: r["n_members"] for r in graph_label_propagation(spark, SF).collect()}
-    assert got == dict(expected)
-
-
-def test_kcore_converges_within_cap(spark):
-    """Python peel to TRUE fixpoint must match the 10-round query, and
-    must converge in <= 10 rounds (the cap is a proof, not a trim)."""
-    from collections import defaultdict
-
-    from bigdata_spark.plans.graphq import (
-        _KCORE_K,
-        _KCORE_ROUNDS,
-        _copurchase_pairs,
-        graph_kcore,
-    )
-
-    edges = {
-        (r["pa"], r["pb"]) for r in _copurchase_pairs(spark, SF).collect()
-    }
-    adj = defaultdict(set)
-    for a, b in edges:
-        adj[a].add(b)
-        adj[b].add(a)
-    kept = set(adj)
-    rounds = 0
-    while True:
-        nxt = {v for v in kept if sum(1 for u in adj[v] if u in kept) >= _KCORE_K}
-        rounds += 1
-        if nxt == kept:
-            break
-        kept = nxt
-    assert rounds <= _KCORE_ROUNDS
-    core_edges = [(a, b) for a, b in edges if a in kept and b in kept]
-    got = graph_kcore(spark, SF).collect()[0]
-    assert got["n_core_nodes"] == len(kept)
-    assert got["n_core_edges"] == len(core_edges)
-    assert got["edge_checksum"] == sum(a + b for a, b in core_edges)
-
-
-def test_cc_distributed_path_runs_star_rounds(spark):
-    """graph_cc_distributed must take the DISTRIBUTED alternating-star
-    path (driver_threshold=0) and need multiple rewiring rounds on the
-    high-diameter chain graph — this is the gate entry that keeps the
-    100 TB code path exercised, not just unit-tested."""
-    from bigdata_spark.operators import graph as G
-    from bigdata_spark.plans.graphq import _CC_CHAIN, graph_cc_distributed
-
-    out = graph_cc_distributed(spark, "/root/testdata/sf0.001")
-    assert G.last_run_info["path"] == "distributed"
-    assert G.last_run_info["rounds"] >= 3  # chain diameter forces real rounds
-    rows = {r["component"]: r for r in out.collect()}
-    # components are contiguous blocks of the dense o_orderkey domain
-    assert rows[0]["cluster_size"] == _CC_CHAIN
-    assert rows[0]["max_vertex"] == _CC_CHAIN - 1
 
 
 def test_cc_driver_path_reported(spark):
@@ -216,52 +12,6 @@ def test_cc_driver_path_reported(spark):
     out = {r["vertex"]: r["component"] for r in connected_components(e).collect()}
     assert G.last_run_info["path"] == "driver"
     assert out == {1: 1, 2: 1, 3: 1, 9: 9}
-
-
-def test_sssp_frontier_matches_full_relaxation(spark):
-    """Frontier (delta) relaxation must equal full synchronous
-    Bellman-Ford round-for-round, and the per-round frontier must
-    actually shrink once the graph settles (the 100 TB point of the
-    rewrite: converged regions never re-join the edges)."""
-    from bigdata_spark.plans.graphq import (
-        _SSSP_INF,
-        _sssp_frontier_relax,
-        _trade_edges,
-        graph_sssp_weighted,
-    )
-    from pyspark.sql import functions as F
-
-    # brute-force replay of FULL relaxation on the driver
-    nodes, edges = _trade_edges(spark, SF)
-    ec = {
-        (r["src"], r["dst"]): 1 + 1_000_000 // r["w"] for r in edges.collect()
-    }
-    dist = {r["node"]: (0 if r["node"] == 0 else _SSSP_INF) for r in nodes.collect()}
-    for _ in range(6):
-        cand: dict[int, int] = {}
-        for (s, d), c in ec.items():
-            v = dist[s] + c
-            if v < cand.get(d, _SSSP_INF):
-                cand[d] = v
-        dist = {n: min(dv, cand.get(n, _SSSP_INF)) for n, dv in dist.items()}
-
-    got = {r["n_nationkey"]: r["dist"] for r in graph_sssp_weighted(spark, SF).collect()}
-    assert got == dist
-
-    # instrumented run: frontier sizes are non-trivial and settle
-    d0 = nodes.select(
-        "node",
-        F.when(F.col("node") == 0, F.lit(0)).otherwise(F.lit(_SSSP_INF)).cast("long").alias("dist"),
-    )
-    ecdf = edges.select(
-        "src", "dst", (F.lit(1) + F.expr("1000000 div w")).alias("cost")
-    )
-    _final, sizes = _sssp_frontier_relax(d0, ecdf, 6, track_sizes=True)
-    assert sizes[0] == 1  # round 1 relaxes only the seed
-    assert len(sizes) == 6
-    # once distances stabilize the frontier empties — strictly smaller
-    # than the node count in the tail rounds
-    assert sizes[-1] < nodes.count()
 
 
 def test_cc_converges_with_small_iteration_budget(spark):

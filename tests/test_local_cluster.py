@@ -21,10 +21,12 @@ import subprocess
 import sys
 import textwrap
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 _SCRIPT = textwrap.dedent(
     """
     import sys
-    sys.path.insert(0, "/root/repo")  # driver-side only
+    sys.path.insert(0, sys.argv[1])  # the checkout under test, driver-side only
     from bigdata_spark.session import get_spark
     spark = get_spark("lc-parity", master="local-cluster[2,2,2048]",
                       shuffle_partitions=4)
@@ -55,7 +57,7 @@ def test_local_cluster_ships_package_and_runs_forest(tmp_path):
         if k not in ("PYTHONPATH", "SPARK_MASTER")
     }
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT],
+        [sys.executable, "-c", _SCRIPT, ROOT],
         cwd=str(tmp_path),  # not the repo: cwd must not satisfy the import
         env=env,
         capture_output=True,

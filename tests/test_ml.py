@@ -82,6 +82,30 @@ def test_local_forest_malformed_rows_fail_with_count(spark, bad_row, n_bad):
         LocalProximityForest(num_partitions=3, n_splitters=3, seed=5).fit(df)
 
 
+def test_local_forest_fit_ignores_input_layout(spark):
+    """The forest depends only on (data, params, seed): neither the
+    input's partition count nor its row order may change a tree or its
+    weight, plain or with ``use_weighting``'s holdout draw."""
+    rng = np.random.default_rng(17)
+    centers = rng.normal(0.0, 2.0, (3, 8))
+    rows = [
+        (int(c) + 1, (centers[c] + rng.normal(0.0, 1.0, 8)).tolist())
+        for c in np.repeat([0, 1, 2], 100)
+    ]
+    shuffled = [rows[i] for i in rng.permutation(len(rows))]
+    for use_weighting in (False, True):
+        fits = []
+        for order in (rows, shuffled):
+            df = spark.createDataFrame(order, "label int, features array<double>")
+            for n_in in (1, 3, 7):
+                forest = LocalProximityForest(
+                    num_partitions=3, n_splitters=3, use_weighting=use_weighting, seed=5
+                ).fit(df.repartition(n_in))
+                fits.append(([t.to_state() for t in forest.trees], forest.weights))
+        assert len(fits[0][0]) == 3
+        assert all(fit == fits[0] for fit in fits[1:])
+
+
 def test_global_tree_end_to_end(spark, tmp_path):
     train, test = _clusters2d(spark, True), _clusters2d(spark, False, seed=11)
     tree = GlobalProximityTree(n_splitters=3, max_depth=6, seed=3).fit(train)

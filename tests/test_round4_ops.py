@@ -1,5 +1,5 @@
 """Unit tests for the round-4 session additions: duplicated-substring
-windows, SemDeDup, fixed-point PageRank, versioned deletes, data-quality
+windows, SemDeDup, versioned deletes, data-quality
 expectations and column profiles."""
 
 from __future__ import annotations
@@ -67,38 +67,6 @@ def test_semantic_dedup_drops_exact_dups(spark):
     assert out[2] and out[3]        # copies dropped
     # orthogonal vectors never reach 0.9 cosine with anything
     assert out[4] is False and out[5] is False
-
-
-# --- fixed-point PageRank ------------------------------------------------
-
-def _pr(spark, nodes, edges, **kw):
-    from bigdata_spark.operators.graph import pagerank_fixed_point
-
-    ndf = spark.createDataFrame([(n,) for n in nodes], "node long")
-    edf = spark.createDataFrame(edges, "src long, dst long, w long")
-    return {
-        r["node"]: r["mass"]
-        for r in pagerank_fixed_point(ndf, edf, **kw).collect()
-    }
-
-
-def test_pagerank_star_ranks_center_highest(spark):
-    # spokes all point at node 0
-    masses = _pr(spark, range(5), [(i, 0, 1) for i in range(1, 5)])
-    assert masses[0] == max(masses.values())
-    assert len({masses[i] for i in range(1, 5)}) == 1  # spokes tie
-
-
-def test_pagerank_mass_bounds_and_determinism(spark):
-    edges = [(0, 1, 2), (1, 2, 1), (2, 0, 1), (1, 0, 3)]
-    m1 = _pr(spark, range(3), edges, iterations=5)
-    m2 = _pr(spark, range(3), edges, iterations=5)
-    assert m1 == m2  # bit-identical across runs
-    scale = 1_000_000_000_000
-    total = sum(m1.values())
-    # truncation only loses mass — never creates it
-    assert total <= 3 * scale
-    assert all(m >= scale * 3 // 20 for m in m1.values())  # ≥ teleport base
 
 
 # --- versioned delete + CDC ----------------------------------------------

@@ -1,5 +1,4 @@
-"""Round-7 operator additions: native recursive CTE, lateral top-N,
-personalized PageRank."""
+"""Round-7 operator additions: native recursive CTE, lateral top-N."""
 
 from __future__ import annotations
 
@@ -47,41 +46,6 @@ def test_lateral_topn_matches_window_formulation(spark):
         .collect()
     )
     assert got == ref
-
-
-def test_ppr_concentrates_mass_on_seeds(spark):
-    # 3-node line a->b->c with seed {a}: after convergence a holds the
-    # restart mass, b gets damped flow from a, c damped flow from b —
-    # strictly decreasing, and a non-seed with no path stays at 0
-    from bigdata_spark.operators.graph import pagerank_fixed_point
-
-    nodes = spark.createDataFrame([(0,), (1,), (2,), (3,)], "node long")
-    edges = spark.createDataFrame(
-        [(0, 1, 1), (1, 2, 1)], "src long, dst long, w long"
-    )
-    seeds = spark.createDataFrame([(0,)], "node long")
-    ranks = {
-        r["node"]: r["mass"]
-        for r in pagerank_fixed_point(
-            nodes, edges, iterations=8, scale=10**12, seeds=seeds
-        ).collect()
-    }
-    assert ranks[0] > ranks[1] > ranks[2] > 0
-    assert ranks[3] == 0  # unreachable non-seed gets no teleport, no flow
-
-
-def test_ppr_reduces_to_global_without_seeds(spark):
-    # seeds=None must preserve the original global-pagerank arithmetic
-    from bigdata_spark.operators.graph import pagerank_fixed_point
-
-    nodes = spark.createDataFrame([(0,), (1,)], "node long")
-    edges = spark.createDataFrame([(0, 1, 1), (1, 0, 1)], "src long, dst long, w long")
-    ranks = {
-        r["node"]: r["mass"]
-        for r in pagerank_fixed_point(nodes, edges, iterations=3, scale=1000).collect()
-    }
-    # symmetric 2-cycle: both nodes identical, mass = base + damped echo
-    assert ranks[0] == ranks[1] > 0
 
 
 def test_hll_merge_registers_identical(spark):
@@ -184,20 +148,3 @@ def test_fairness_ratios_invariants(spark):
             assert 0 <= r[c] <= 1_000_000
         assert r["di_ppm"] <= 1_000_000
         assert r["passes_80pct_rule"] == int(r["di_ppm"] >= 800_000)
-
-
-def test_modularity_contributions_sum_and_bounds(spark):
-    from bigdata_spark.plans.graphq import graph_modularity
-
-    rows = graph_modularity(spark, SF).collect()
-    assert rows, "co-purchase graph should be non-empty at sf0.001"
-    q_total = rows[0]["q_total"]
-    assert all(abs(r["q_total"] - q_total) < 1e-15 for r in rows)
-    assert -0.5 <= q_total <= 1.0  # modularity bounds
-    # per-community contributions sum to the total (same denominator)
-    m2 = sum(r["degree_sum"] for r in rows)  # 2m
-    assert m2 % 2 == 0
-    num_sum = sum(r["q_num"] for r in rows)
-    assert abs(num_sum / (m2 * m2) - q_total) < 1e-12
-    for r in rows:
-        assert 2 * r["intra_edges"] <= r["degree_sum"]

@@ -1,5 +1,5 @@
-"""Round-7 second-batch operators: weighted SSSP, HITS, allocation,
-isotonic fits, point-in-time joins and manifest pruning."""
+"""Round-7 second-batch operators: allocation, isotonic fits,
+point-in-time joins and manifest pruning."""
 
 from __future__ import annotations
 
@@ -8,72 +8,6 @@ import math
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
-
-
-def _trade_edge_list(spark):
-    from bigdata_spark.plans.graphq import _trade_edges
-
-    nodes, edges = _trade_edges(spark, SF)
-    ns = sorted(r["node"] for r in nodes.collect())
-    es = [(r["src"], r["dst"], r["w"]) for r in edges.collect()]
-    return ns, es
-
-
-def test_sssp_matches_python_bellman_ford(spark):
-    from bigdata_spark.plans.graphq import (
-        _SSSP_COST_NUM,
-        _SSSP_INF,
-        _SSSP_ROUNDS,
-        _SSSP_SEED,
-        graph_sssp_weighted,
-    )
-
-    ns, es = _trade_edge_list(spark)
-    cost = [(s, d, 1 + _SSSP_COST_NUM // w) for s, d, w in es]
-    dist = {n: (0 if n == _SSSP_SEED else _SSSP_INF) for n in ns}
-    for _ in range(_SSSP_ROUNDS):
-        relax = {}
-        for s, d, c in cost:
-            cand = dist[s] + c
-            if d not in relax or cand < relax[d]:
-                relax[d] = cand
-        dist = {n: min(dist[n], relax.get(n, _SSSP_INF)) for n in ns}
-
-    rows = graph_sssp_weighted(spark, SF).collect()
-    got = {r["n_nationkey"]: r["dist"] for r in rows}
-    assert got == dist
-    assert got[_SSSP_SEED] == 0
-    for r in rows:
-        assert r["reachable"] == (r["dist"] < _SSSP_INF)
-
-
-def test_hits_matches_python_integer_iteration(spark):
-    from bigdata_spark.plans.graphq import _HITS_ROUNDS, _HITS_SCALE, graph_hits
-
-    ns, es = _trade_edge_list(spark)
-
-    def norm(masses):
-        total = sum(masses.values())
-        div = max(1, total // _HITS_SCALE)
-        return {n: m // div for n, m in masses.items()}
-
-    hub = {n: _HITS_SCALE for n in ns}
-    auth = None
-    for _ in range(_HITS_ROUNDS):
-        raw_a = {n: 0 for n in ns}
-        for s, d, w in es:
-            raw_a[d] += hub[s] * w
-        auth = norm(raw_a)
-        raw_h = {n: 0 for n in ns}
-        for s, d, w in es:
-            raw_h[s] += auth[d] * w
-        hub = norm(raw_h)
-
-    rows = graph_hits(spark, SF).collect()
-    assert {r["n_nationkey"]: r["authority"] for r in rows} == auth
-    assert {r["n_nationkey"]: r["hub"] for r in rows} == hub
-    # integer renormalization pins the L1 norm near the scale
-    assert _HITS_SCALE // 2 <= sum(auth.values()) <= 2 * _HITS_SCALE
 
 
 def test_neyman_allocation_exhausts_budget(spark):
@@ -274,45 +208,6 @@ def test_pseudonymize_join_is_referentially_intact(spark):
     assert row["n_tokens"] == row["n_keys"] <= row["n_orders"]
 
 
-def test_resource_allocation_degree_discount(spark):
-    from bigdata_spark.plans.graphq import (
-        _RA_TOPK,
-        _copurchase_pairs,
-        graph_resource_allocation,
-    )
-
-    pairs = {
-        (r["pa"], r["pb"])
-        for r in _copurchase_pairs(spark, SF).select("pa", "pb").collect()
-    }
-    adj: dict[int, set] = {}
-    deg: dict[int, int] = {}
-    for a, b in pairs:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    for n, ns in adj.items():
-        deg[n] = len(ns)
-    scores = {}
-    for z, ns in adj.items():
-        ns_sorted = sorted(ns)
-        for i, a in enumerate(ns_sorted):
-            for b in ns_sorted[i + 1 :]:
-                if (a, b) in pairs:
-                    continue
-                key = (a, b)
-                cn, ra = scores.get(key, (0, 0))
-                scores[key] = (cn + 1, ra + 1_000_000 // deg[z])
-    expect = sorted(
-        ((ra, a, b, cn) for (a, b), (cn, ra) in scores.items()),
-        key=lambda t: (-t[0], t[1], t[2]),
-    )[:_RA_TOPK]
-    got = [
-        (r["ra_ppm"], r["a"], r["b"], r["cn"])
-        for r in graph_resource_allocation(spark, SF).collect()
-    ]
-    assert got == expect
-
-
 def test_source_dedup_priority_policy(spark):
     import hashlib
     import re
@@ -395,39 +290,6 @@ def test_capture_recapture_consistency(spark):
         # the estimate can never undercut either single method's catch
         assert row["est_pairs"] >= max(row["n1"], row["n2"])
         assert row["est_pairs_milli"] == (1000 * row["n1"] * row["n2"]) // row["m"]
-
-
-def test_assortativity_matches_python_pearson(spark):
-    import math
-
-    from bigdata_spark.plans.graphq import _copurchase_pairs, graph_assortativity
-
-    pairs = [
-        (r["pa"], r["pb"])
-        for r in _copurchase_pairs(spark, SF).select("pa", "pb").collect()
-    ]
-    deg: dict[int, int] = {}
-    for a, b in pairs:
-        deg[a] = deg.get(a, 0) + 1
-        deg[b] = deg.get(b, 0) + 1
-    xs, ys = [], []
-    for a, b in pairs:
-        xs += [deg[a], deg[b]]
-        ys += [deg[b], deg[a]]
-    m = len(xs)
-    sx, sy = sum(xs), sum(ys)
-    sxy = sum(x * y for x, y in zip(xs, ys))
-    sxx = sum(x * x for x in xs)
-    syy = sum(y * y for y in ys)
-    r = (m * sxy - sx * sy) / (
-        math.sqrt(m * sxx - sx * sx) * math.sqrt(m * syy - sy * sy)
-    )
-    row = graph_assortativity(spark, SF).collect()[0]
-    assert (row["m_directed_edges"], row["sum_deg_src"], row["sum_deg_prod"]) == (
-        m, sx, sxy,
-    )
-    assert math.isclose(row["assortativity_r"], r, rel_tol=1e-12)
-    assert -1.0 <= row["assortativity_r"] <= 1.0
 
 
 def test_manifest_stats_pruning_api(spark, tmp_path):

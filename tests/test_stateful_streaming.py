@@ -1,65 +1,7 @@
-"""Custom stateful streaming: per-key running totals must accumulate
-across micro-batches (maxFilesPerTrigger=1 forces multiple batches) and
-the final state must equal the batch aggregate."""
+"""Custom stateful streaming: the per-key dedup state must carry
+across micro-batches (maxFilesPerTrigger=1 forces multiple batches)."""
 
 from __future__ import annotations
-
-import math
-
-from pyspark.sql import functions as F
-
-from bigdata_spark.streaming.stateful import running_totals_stream
-
-
-def test_running_totals_across_batches(spark, tmp_path):
-    src = str(tmp_path / "stream_src")
-    rows = [(i, ["a", "b", "c"][i % 3], float(i)) for i in range(60)]
-    df = spark.createDataFrame(rows, "event_id long, event_type string, value double")
-    # two files → two micro-batches with maxFilesPerTrigger=1, so the
-    # second batch MUST read back batch-1 state to be correct
-    df.filter(F.col("event_id") < 30).coalesce(1).write.parquet(src + "/p1")
-    df.filter(F.col("event_id") >= 30).coalesce(1).write.parquet(src + "/p2")
-
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/p*")
-    )
-    assert stream.isStreaming
-    totals = running_totals_stream(stream, "event_type", "value")
-
-    q = (
-        totals.writeStream.format("memory")
-        .queryName("running_totals")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    # n_events is monotone per key → the max row per key is the final state
-    final = {
-        r["key"]: (r["n_events"], r["total"])
-        for r in spark.sql(
-            "SELECT key, n_events, total FROM running_totals a "
-            "WHERE n_events = (SELECT MAX(n_events) FROM running_totals b WHERE b.key = a.key)"
-        ).collect()
-    }
-    want = {
-        r["event_type"]: (r["n"], r["total"])
-        for r in df.groupBy("event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    assert set(final) == set(want)
-    for k in want:
-        assert final[k][0] == want[k][0]
-        assert math.isclose(final[k][1], want[k][1], rel_tol=1e-9)
-
-    # the stream really ran in >1 batch: some key must have an
-    # intermediate (smaller) update too
-    n_rows = spark.sql("SELECT COUNT(*) AS c FROM running_totals").first()["c"]
-    assert n_rows > len(want)
 
 
 def test_stream_dedup_first_seen_across_batches(spark, tmp_path):
@@ -106,119 +48,3 @@ def test_stream_dedup_first_seen_across_batches(spark, tmp_path):
         "k5": (9, 0),
         "k7": (10, 1),
     }
-
-
-def test_event_time_sessionize_both_eviction_paths(spark, tmp_path):
-    """Synthetic 2-batch stream exercising BOTH eviction paths of
-    event_time_sessionize: user A's first session closes via the DATA
-    path (a later over-gap event), user B's only session closes via the
-    EVENT-TIME TIMEOUT path (B is absent from batch 2, and the final
-    watermark passes B's gap horizon). User A's second session stays in
-    state (never emitted)."""
-    import datetime
-
-    from bigdata_spark.streaming.stateful import event_time_sessionize
-
-    gap_us = 3600 * 1_000_000  # 1 h
-    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
-
-    def ts(minutes):
-        return t0 + datetime.timedelta(minutes=minutes)
-
-    b1 = [
-        ("A", ts(0), 10),
-        ("A", ts(10), 20),   # A session 1: [0, 10min], n=2, vm=30
-        ("B", ts(5), 7),     # B session: [5min, 5min], n=1, vm=7
-    ]
-    b2 = [
-        ("A", ts(600), 1),   # 10 h later: closes A s1 (data path),
-                             # opens A s2 (stays in state)
-        ("C", ts(610), 2),   # advances the watermark past B's horizon
-    ]
-    schema = "user_id string, ts timestamp, vm long"
-    src = str(tmp_path / "ets_src")
-    spark.createDataFrame(b1, schema).coalesce(1).write.parquet(src + "/p1")
-    spark.createDataFrame(b2, schema).coalesce(1).write.parquet(src + "/p2")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/p*")
-        .withWatermark("ts", "1 minute")
-    )
-    out = event_time_sessionize(stream, "user_id", "ts", "vm", gap_us=gap_us)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("ets_unit")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-
-    got = {
-        (r["user_id"], r["start_us"], r["end_us"], r["n_events"], r["v_micros"])
-        for r in spark.table("ets_unit").collect()
-    }
-    us0 = int(t0.replace(tzinfo=datetime.timezone.utc).timestamp() * 1_000_000)
-
-    def mins(m):
-        return us0 + m * 60 * 1_000_000
-
-    want = {
-        ("A", mins(0), mins(10), 2, 30),  # data-path close
-        ("B", mins(5), mins(5), 1, 7),    # timeout-path close
-    }
-    assert got == want
-
-
-def test_event_time_sessionize_clamps_late_events(spark, tmp_path):
-    """A later micro-batch delivering an event OLDER than the session's
-    last timestamp (late but within the watermark) must merge by
-    clamping — start=min, last=max — never move the session end
-    backward, and never corrupt the gap test or the armed timeout."""
-    from bigdata_spark.streaming.stateful import event_time_sessionize
-
-    src = str(tmp_path / "ets_src")
-    schema = "user_id long, ts timestamp, vm long"
-
-    def stage(rows, name):
-        spark.createDataFrame(
-            [(u, t, v) for u, t, v in rows], "user_id long, sec long, vm long"
-        ).select(
-            "user_id", F.timestamp_seconds("sec").alias("ts"), "vm"
-        ).coalesce(1).write.parquet(src + "/" + name)
-
-    # batch 1: u1 opens a session spanning 1000..2000 s; u2 at 1000 s
-    stage([(1, 1000, 10), (1, 2000, 20), (2, 1000, 5)], "p1")
-    # batch 2: u1's LATE event at 1500 s (inside the open session's
-    # span); u2 jumps far ahead — closes its old session by data and
-    # advances the watermark so u1's idle session times out
-    stage([(1, 1500, 7), (2, 50000, 9)], "p2")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/p*")
-        .withWatermark("ts", "10 hours")
-    )
-    out = event_time_sessionize(
-        stream, "user_id", "ts", "vm", gap_us=3600 * 1_000_000
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("ets_clamp")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    got = {
-        r["user_id"]: (r["start_us"], r["end_us"], r["n_events"], r["v_micros"])
-        for r in spark.table("ets_clamp").collect()
-    }
-    # u1: one session, late event ABSORBED — end stays 2000 s, count 3
-    assert got[1] == (1000 * 1_000_000, 2000 * 1_000_000, 3, 37)
-    # u2: first session closed by the 50000 s event (data path); the
-    # new session stays in state (horizon above the final watermark)
-    assert got[2] == (1000 * 1_000_000, 1000 * 1_000_000, 1, 5)

@@ -112,10 +112,6 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
         ("lateral decorrelated to a group limit (no per-row subquery)", r"WindowGroupLimit"),
         ("customer filter pushed to scan", r"PushedFilters: \[.*LessThan\(c_custkey,20\)"),
     ],
-    "graph_ppr": [
-        ("seed set broadcast onto the node table", r"BroadcastExchange"),
-        ("no Python evaluation (integer fixed-point expressions)", r"^(?![\s\S]*(BatchEvalPython|ArrowEvalPython|MapInPandas))"),
-    ],
     "approx_hll_merge": [
         ("per-day registers map-side combine (partial max)", r"partial_max\("),
         ("scan pruned to (ts, user_id)", r"ReadSchema: struct<ts:timestamp_ntz,user_id:bigint>"),
@@ -196,11 +192,6 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
         ("bucket offsets broadcast onto fact rows", r"BroadcastHashJoin"),
         ("fact window is bucket-partitioned (no global sort of facts)", r"Window[\s\S]*partitionBy|windowspecdefinition\(bucket"),
     ],
-    "mb_frequent_pairs": [
-        ("no cartesian/self-join pair expansion", r"^(?![\s\S]*CartesianProduct)"),
-        ("basket-local HOF pair generation", r"Generate[\s\S]*explode\(flatten\(transform"),
-        ("item counts broadcast onto edges", r"BroadcastHashJoin"),
-    ],
     "dedup_symspell_join": [
         ("deletion-key blocking is an equi-join", r"^(?![\s\S]*CartesianProduct)(?![\s\S]*BroadcastNestedLoopJoin)"),
         ("native levenshtein verification", r"levenshtein"),
@@ -229,10 +220,6 @@ AUDITS.update({
         ("map-side partial aggregation", r"partial_count|partial_sum"),
         ("scan pruned to id+text", r"ReadSchema: struct<doc_id:bigint,text:string>"),
     ],
-    "graph_pagerank": [
-        ("nation dim broadcast in the final join", r"BroadcastHashJoin"),
-        ("integer mass arithmetic native", NO_PYTHON),
-    ],
     "w6_exact_median": [
         ("fact collapses via map-side partial agg (histogram, no fact-row window)", r"partial_count"),
         ("scan pruned to (returnflag, quantity)", r"ReadSchema: struct<l_quantity:double,l_returnflag:string>"),
@@ -252,18 +239,6 @@ AUDITS.update({
         ("bitmap rides as a literal: the one join is the exact verify, broadcast by stats", r"BroadcastHashJoin LeftOuter"),
         ("no shuffle join anywhere", r"^(?:(?!SortMergeJoin)[\s\S])*$"),
         ("all-native expressions", NO_PYTHON),
-    ],
-    "graph_bfs_hops": [
-        ("frontier joins stay shuffle-hash/broadcast scale shape", NO_PYTHON),
-    ],
-    "rec_item_item": [
-        ("item frequencies broadcast onto the pair table", r"BroadcastHashJoin"),
-        ("top-3 neighbors is a group limit", r"WindowGroupLimit"),
-        ("all-native expressions", NO_PYTHON),
-    ],
-    "graph_cc_distributed": [
-        ("census is a partial-agg groupBy over the star forest", r"partial_count|partial_min"),
-        ("no Python evaluation", NO_PYTHON),
     ],
     "er_blocked_linkage": [
         ("blocking is an equi-join (hash/broadcast, never a cross join)", r"BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"),
@@ -285,21 +260,6 @@ AUDITS.update({
         ("customer dim broadcast onto orders", r"BroadcastHashJoin"),
         ("per-segment counts partial-aggregated", r"partial_count|partial_sum"),
         ("integer ppm arithmetic native, no Python", NO_PYTHON),
-    ],
-    "graph_modularity": [
-        ("brand dimension broadcast", r"BroadcastHashJoin"),
-        ("degree and intra counts partial-aggregated", r"partial_count"),
-        ("integer modularity numerators, no Python", NO_PYTHON),
-    ],
-    # sssp/hits localCheckpoint each round, so the visible plan is the
-    # post-fixed-point segment: the nation decorate join + global sort
-    "graph_sssp_weighted": [
-        ("nation dimension broadcast onto the dist table", r"BroadcastHashJoin"),
-        ("BIGINT min-plus relaxation native, no Python", NO_PYTHON),
-    ],
-    "graph_hits": [
-        ("nation dimension broadcast onto the mass tables", r"BroadcastHashJoin"),
-        ("integer renormalization native, no Python", NO_PYTHON),
     ],
     "p9_neyman_allocation": [
         (
@@ -352,11 +312,6 @@ AUDITS.update({
         ("set algebra joins run on sketch-sized tables", r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin"),
         ("integer theta estimators native, no Python", NO_PYTHON),
     ],
-    "graph_local_clustering": [
-        ("wedge closure is an equi-join, never a cross join", r"^(?![\s\S]*CartesianProduct)"),
-        ("per-node triangle counts partial-aggregate", r"partial_count"),
-        ("integer ppm coefficients native, no Python", NO_PYTHON),
-    ],
     "mm_image_header_probe": [
         ("no shuffle anywhere (pure projection over the payload)", r"^(?![\s\S]*Exchange[\s\S]*hashpartitioning)"),
         ("header parse native, no Python", NO_PYTHON),
@@ -385,12 +340,6 @@ AUDITS.update({
         ("band cells partial-aggregate (mergeable)", r"partial_count|partial_sum"),
         ("argmax is a bounded TakeOrdered over the cells", r"TakeOrderedAndProject"),
         ("exact integer KS numerator, no Python", NO_PYTHON),
-    ],
-    "graph_jaccard_linkpred": [
-        ("degree tables broadcast onto the pair table", r"BroadcastHashJoin"),
-        ("existing edges drop via anti-join", r"LeftAnti"),
-        ("top-k is a bounded TakeOrdered, not a full sort", r"TakeOrderedAndProject"),
-        ("integer Jaccard ppm native, no Python", NO_PYTHON),
     ],
     "s36_manifest_compaction": [
         ("snapshot rollups are an executor checkpoint", r"Scan ExistingRDD"),
@@ -424,12 +373,6 @@ AUDITS.update({
         ("fitted step function broadcast back", r"BroadcastHashJoin"),
         ("no Python on the data path", NO_PYTHON),
     ],
-    "graph_resource_allocation": [
-        ("midpoint degrees broadcast onto the wedge join", r"BroadcastHashJoin"),
-        ("ppm contributions partial-aggregated", r"partial_sum"),
-        ("existing edges drop via anti-join", r"LeftAnti"),
-        ("integer RA index native, no Python", NO_PYTHON),
-    ],
     "llm_source_dedup_priority": [
         ("one window over content_key (the exact-dedup shuffle)", r"Window"),
         ("displacement matrix partial-aggregates", r"partial_count"),
@@ -448,22 +391,12 @@ AUDITS.update({
         ("both captures stay bucketed plans (no all-pairs)", r"BroadcastHashJoin|SortMergeJoin"),
         ("overlap join + count aggregates native, no Python", NO_PYTHON),
     ],
-    "graph_assortativity": [
-        ("degree table broadcast onto the edges (twice)", r"BroadcastHashJoin"),
-        ("decimal sufficient stats partial-aggregate", r"partial_sum\(.*decimal"),
-        ("closed-form r native, no Python", NO_PYTHON),
-    ],
 })
 
 # Round-8 additions: the new operator families must keep the same plan
 # discipline — bounded-domain aggregation before any window, broadcast
 # for small sides, no Python in the pipeline.
 AUDITS.update({
-    "graph_adamic_adar": [
-        ("degree table broadcast onto the wedge join", r"BroadcastHashJoin"),
-        ("existing edges dropped via anti join", r"LeftAnti"),
-        ("no Python", NO_PYTHON),
-    ],
     "ml_learning_curve": [
         ("fraction table broadcast (single fact pass)", r"BroadcastNestedLoopJoin|BroadcastHashJoin"),
         ("sufficient stats partial-aggregated", r"partial_sum"),
@@ -485,10 +418,6 @@ AUDITS.update({
     "dedup_sorted_neighborhood": [
         ("window deltas broadcast (rank+δ equi-join)", r"BroadcastHashJoin|BroadcastNestedLoopJoin"),
         ("native shingle intersection, no Python", NO_PYTHON),
-    ],
-    "graph_rectangles": [
-        ("wedge counts fold map-side", r"partial_count|partial_sum"),
-        ("no Python", NO_PYTHON),
     ],
     "j14_relational_division": [
         ("divisor dim broadcast", r"BroadcastHashJoin"),
@@ -539,18 +468,6 @@ BROADCAST_HINT_ALLOWLIST = {
     ("extended.py", "j14_relational_division", "need"),
     ("extended.py", "null_semantics", "dim"),
     ("extended.py", "range_join_price_bands", "bands"),
-    ("graphq.py", "graph_closeness", "n"),
-    ("graphq.py", "graph_degree_powerlaw", "tots"),
-    ("graphq.py", "graph_eccentricity", "n"),
-    ("graphq.py", "graph_hits", "n"),
-    ("graphq.py", "graph_hits", "total"),
-    ("graphq.py", "graph_katz", "n"),
-    ("graphq.py", "graph_modularity", "m_df"),
-    ("graphq.py", "graph_pagerank", "n"),
-    ("graphq.py", "graph_ppr", "n"),
-    ("graphq.py", "graph_reciprocity", "recip"),
-    ("graphq.py", "graph_sssp_weighted", "n"),
-    ("graphq.py", "mb_frequent_pairs", "n_orders"),
     ("mlq.py", "ml_brier_score", "mm"),
     ("mlq.py", "ml_conformal_interval", "fit"),
     ("mlq.py", "ml_conformal_interval", "qhat"),
@@ -671,7 +588,6 @@ ZERO_PARTITION_WINDOW_ALLOWLIST = {
     ("extended.py", "approx_quantile_hist"),   # fixed bucket grid
     ("extended.py", "approx_theta_ops"),       # theta sketch (k-bounded)
     ("extended.py", "j14_relational_division"),  # divisor grain (nations in region)
-    ("graphq.py", "graph_eccentricity"),       # landmark-root grain (capped BFS roots)
     ("mlq.py", "ml_gain_lift_deciles"),        # 10 deciles
     ("mlq.py", "ml_ks_separation"),            # score-band grain
     ("mlq.py", "ml_mutual_info"),              # ≤15 contingency cells
@@ -803,7 +719,6 @@ WINDOW_PARTITION_GRAIN_ALLOWLIST = {
     ("extended.py", "asof_join_orders_events", "user_id"),  # data-grown
     ("extended.py", "j10_pit_embargo_join", "user_id"),  # data-grown
     ("graph.py", "_cc_star_loop", "a"),          # data-grown: adjacency per vertex (star-contraction bounds it)
-    ("graphq.py", "rec_item_item", "item"),      # group-limit: rank<=3 filter → WindowGroupLimit
     ("minhash.py", "minhash_dup_pairs", "band_id,band_hash"),  # data-grown: salted LSH bucket
     ("mlq.py", "ml_als_factorize", "user_id"),   # data-grown: ratings per user
     ("mlq.py", "ml_cv_kfold", "vec_id"),         # data-grown: per-vector fold tag
