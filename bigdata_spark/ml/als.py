@@ -13,7 +13,7 @@ system (k=4 here). The factor tables that move between steps are
 ``collect`` anywhere in this module, so the interaction matrix and
 the entity tables can both be cluster-resident at any scale.
 
-Determinism (what lets the registry pin the output as a per-SF value
+Determinism (what lets the output be pinned as a per-SF value
 oracle): item factors initialize from a closed-form integer formula
 evaluated natively per row, each group's normal equations accumulate
 in sorted-key order with fixed-order numpy loops, the k×k solve is

@@ -332,6 +332,8 @@ class GlobalProximityTree:
         dtw_window: int | None = None,
     ) -> None:
         check_metric(metric)
+        if n_splitters < 1:
+            raise ValueError(f"n_splitters must be >= 1, got {n_splitters}")
         if exemplar_pool_k < 1:
             raise ValueError(f"exemplar_pool_k must be >= 1, got {exemplar_pool_k}")
         self.n_splitters = n_splitters

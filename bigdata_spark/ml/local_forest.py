@@ -55,6 +55,10 @@ class LocalProximityForest:
         dtw_window: int | None = None,
     ) -> None:
         check_metric(metric)
+        if num_partitions < 1:
+            raise ValueError(f"num_partitions must be >= 1, got {num_partitions}")
+        if n_splitters < 1:
+            raise ValueError(f"n_splitters must be >= 1, got {n_splitters}")
         self.num_partitions = num_partitions
         self.n_splitters = n_splitters
         self.max_depth = max_depth

@@ -8,12 +8,11 @@ d(d+1)/2 + d + 1 sufficient statistics of the covariance (int64
 units), followed by one tiny shuffle of (pos, partial) cells. The
 driver then solves a d×d problem (d=64 → a 64×64 eigensolve) — O(d³)
 driver work INDEPENDENT of corpus size, the same sufficient-statistic
-pattern as ``ml_linear_probe``'s exact ridge (plans/mlq.py) and the
-classic 100 TB PCA recipe. No LAPACK: the eigensolve is a cyclic
-Jacobi sweep in plain IEEE doubles (elementwise numpy ops only, no
-BLAS reductions), so given the exact integer Gram its output is
-bit-reproducible across runs and platforms — which is what lets the
-registry pin its values as a per-SF golden oracle.
+pattern as an exact ridge fit and the classic 100 TB PCA recipe. No
+LAPACK: the eigensolve is a cyclic Jacobi sweep in plain IEEE doubles
+(elementwise numpy ops only, no BLAS reductions), so given the exact
+integer Gram its output is bit-reproducible across runs and platforms,
+and its values can be pinned as a per-SF golden oracle.
 
 Reference parity: the reference has no PCA, but its ML surface
 (SURVEY.md §2 U/A rows) motivates the embedding-analytics extension

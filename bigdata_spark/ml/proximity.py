@@ -38,6 +38,8 @@ class ProximityTree:
         dtw_window: int | None = None,
     ) -> None:
         check_metric(metric)
+        if n_splitters < 1:
+            raise ValueError(f"n_splitters must be >= 1, got {n_splitters}")
         self.n_splitters = n_splitters
         self.max_depth = max_depth  # None: grow until no node splits
         self.min_samples_split = min_samples_split

@@ -29,8 +29,8 @@ def _qcol(name: str):
 def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
     """Long-format profile: (column, n_rows, n_nulls, n_distinct,
     min_value, max_value) with min/max rendered as strings so every
-    column type fits one schema. Distinct counts are EXACT (the
-    approx_* sketch path lives in plans/scaleq.approx_sketches)."""
+    column type fits one schema. Distinct counts are EXACT, not
+    sketched."""
     # Internal aliases are positional (_c{i}_*), never derived from the
     # user's column names, and the long-format rows are built with typed
     # Column expressions (F.stack) — a name containing quotes, spaces,

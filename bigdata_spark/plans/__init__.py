@@ -26,18 +26,14 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
     from . import (
         classifierq,
-        coverage,
         dedupq,
         erq,
-        extended,
-        mlq,
         multimodalq,
         relational,
         samplingq,
         scaleq,
         tpch_ext,
         tpch_full,
-        qualityq,
     )
 
     out: dict[str, tuple[QueryFn, str | None]] = {}
@@ -46,14 +42,10 @@ def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
         tpch_ext,
         tpch_full,
         classifierq,
-        coverage,
-        extended,
         dedupq,
         samplingq,
         scaleq,
-        mlq,
         multimodalq,
-        qualityq,
         erq,
     ):
         overlap = set(out) & set(mod.QUERIES)

@@ -369,7 +369,7 @@ def mm_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(F.when(F.col("is_cut"), F.col("frame_ix"))).cast("long"), F.lit(-1)
         ).alias("first_cut_ix"),
         # per-frame |delta| quantized to nano-units so the distributed
-        # sum is order-free exact (the ml_logreg_gd BIGINT trick) —
+        # sum is order-free exact (an integer BIGINT sum) —
         # no dependence on partition merge order
         (
             F.sum(F.floor(F.abs("delta") * 1e9 + F.lit(0.5)).cast("long")) / 1e9

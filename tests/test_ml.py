@@ -60,9 +60,16 @@ def test_local_forest_end_to_end(spark, tmp_path):
         assert [t.to_state() for t in reloaded.trees] == [t.to_state() for t in forest.trees]
         preds2 = reloaded.predict(test)
         assert preds2.filter(F.col("label") == F.col("prediction")).count() == preds.count()
-    # an unknown metric fails on the driver, before any job
-    with pytest.raises(ValueError, match=r"^metric must be 'euclidean' or 'dtw', got 'manhattan'$"):
-        LocalProximityForest(metric="manhattan")
+    # an unknown metric, or a fit that cannot split, fails on the driver, before any job
+    for model, kwargs, message in (
+        (LocalProximityForest, {"metric": "manhattan"}, r"^metric must be 'euclidean' or 'dtw', got 'manhattan'$"),
+        (LocalProximityForest, {"n_splitters": 0}, r"^n_splitters must be >= 1, got 0$"),
+        (LocalProximityForest, {"num_partitions": 0}, r"^num_partitions must be >= 1, got 0$"),
+        (GlobalProximityTree, {"n_splitters": 0}, r"^n_splitters must be >= 1, got 0$"),
+        (ProximityTree, {"n_splitters": 0}, r"^n_splitters must be >= 1, got 0$"),
+    ):
+        with pytest.raises(ValueError, match=message):
+            model(**kwargs)
 
 
 @pytest.mark.parametrize(
@@ -231,62 +238,3 @@ def test_metrics_counts_engine_matches_mllib(spark):
     ref = classification_metrics(df, engine="mllib")
     for k in ("accuracy", "weightedPrecision", "weightedRecall", "f1"):
         assert abs(fast[k] - ref[k]) < 1e-12, k
-
-
-def test_perceptron_fixed_matches_python(spark):
-    """Re-run the exact integer batch-perceptron recurrence in pure
-    Python and compare every reported field."""
-    from bigdata_spark.plans.mlq import (
-        _PC_DIMS,
-        _PC_EPOCHS,
-        _PC_SCALE,
-        _PC_SCALE2,
-        ml_perceptron_fixed,
-    )
-    from bigdata_spark.sources.catalog import load_table
-
-    sf = "/root/testdata/sf0.001"
-    rows = load_table(spark, sf, "embeddings").select("embedding", "label").collect()
-    data = []
-    for r in rows:
-        y = 1 if r["label"] % 2 == 0 else -1
-        x = [
-            int(round(float(v) * _PC_SCALE))
-            for v in list(r["embedding"])[:_PC_DIMS]
-        ]
-        data.append((y, x))
-    w, b = [0] * _PC_DIMS, 0
-    for _ in range(_PC_EPOCHS):
-        u, ub = [0] * _PC_DIMS, 0
-        for y, x in data:
-            if y * (sum(wi * xi for wi, xi in zip(w, x)) + b) <= 0:
-                for i in range(_PC_DIMS):
-                    u[i] += y * x[i]
-                ub += y * _PC_SCALE2
-        w = [wi + ui for wi, ui in zip(w, u)]
-        b += ub
-    mis = sum(
-        1
-        for y, x in data
-        if y * (sum(wi * xi for wi, xi in zip(w, x)) + b) <= 0
-    )
-    got = ml_perceptron_fixed(spark, sf).collect()[0]
-    assert got["n_rows"] == len(data)
-    assert got["n_misclassified"] == mis
-    assert got["weight_mass"] == sum(w)
-    assert got["bias"] == b
-    assert got["n_misclassified"] < got["n_rows"]  # it learned something
-
-
-def test_conformal_coverage_guarantee(spark):
-    """Split-conformal theory: coverage must land near (and in sample
-    sizes this large, above) 1 - alpha - small slack."""
-    from bigdata_spark.plans.mlq import ml_conformal_interval
-
-    rows = ml_conformal_interval(spark, "/root/testdata/sf0.01").collect()
-    assert len(rows) == 3
-    for r in rows:
-        assert r["n_train"] + 0 > 0 and r["n_cal"] > 0 and r["n_test"] > 0
-        assert r["qhat"] > 0
-        assert r["coverage"] >= 0.85, (r["l_returnflag"], r["coverage"])
-        assert abs(r["coverage"] - r["n_covered"] / r["n_test"]) < 1e-12

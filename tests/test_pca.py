@@ -1,5 +1,5 @@
 """Distributed PCA (ml/pca.py): exact Gram pass, Jacobi vs LAPACK,
-determinism, and the registry query's shape."""
+and determinism."""
 
 from __future__ import annotations
 

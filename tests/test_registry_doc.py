@@ -1,6 +1,8 @@
 """REGISTRY.md drift check: every live registry query must appear in
 the generated index (and no ghost rows may linger), so a forgotten
-`tools/gen_registry.py` after adding/removing a query fails."""
+`tools/gen_registry.py` after adding/removing a query fails. README.md
+and the golden pins of `plans/_golden.py` are held to the same live
+registry."""
 
 from __future__ import annotations
 
@@ -80,3 +82,10 @@ def test_registry_md_matches_live_registry():
         "run: python tools/gen_registry.py"
     )
 
+
+def test_every_golden_pin_names_a_live_query():
+    from bigdata_spark.plans import all_queries
+    from bigdata_spark.plans._golden import GOLDEN
+
+    stale = sorted(set(GOLDEN) - set(all_queries()))
+    assert not stale, f"_golden.py pins with no registry query: {stale}; run: python tools/pin_golden.py"

@@ -1,9 +1,6 @@
-"""Round-7 second-batch operators: allocation, isotonic fits,
-point-in-time joins and manifest pruning."""
+"""Round-7 second-batch operators: allocation and manifest pruning."""
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import functions as F
 
@@ -23,25 +20,6 @@ def test_neyman_allocation_exhausts_budget(spark):
     # Neyman must differ from proportional when stddevs differ... or at
     # minimum never allocate more than the budget to one stratum
     assert max(r["alloc_neyman"] for r in rows) < _ALLOC_N
-
-
-def test_quantile_hist_brackets_exact_percentile(spark):
-    from bigdata_spark.plans.extended import _QH_WIDTH, approx_quantile_hist
-    from bigdata_spark.sources.catalog import load_table
-
-    vals = sorted(
-        r["o_totalprice"]
-        for r in load_table(spark, SF, "orders").select("o_totalprice").collect()
-    )
-    rows = approx_quantile_hist(spark, SF).collect()
-    assert [r["pct"] for r in rows] == [50, 90, 95, 99]
-    for r in rows:
-        assert r["n"] == len(vals)
-        target = (r["pct"] * len(vals) + 99) // 100
-        assert r["target_rank"] == target
-        exact = vals[target - 1]  # rank-th smallest
-        assert abs(r["estimate"] - exact) <= _QH_WIDTH
-        assert r["bucket"] * _QH_WIDTH <= r["estimate"] <= (r["bucket"] + 1) * _QH_WIDTH
 
 
 def test_audio_silence_matches_gate_pattern(spark):
@@ -99,115 +77,6 @@ def test_manifest_time_travel_snapshot_isolation(spark):
             assert v2[st]["sum_price"] == r["sum_price"]
 
 
-def test_pava_rational_and_isotonic_fit(spark):
-    import random
-
-    from bigdata_spark.ml.isotonic import pava_rational
-    from bigdata_spark.plans.mlq import ml_isotonic_calibration
-
-    # property: monotone output, pool-mass preserved, idempotent
-    rng = random.Random(7)
-    for _ in range(20):
-        cells = [
-            (b, rng.randint(1, 20), 0) for b in range(rng.randint(1, 30))
-        ]
-        cells = [(b, n, rng.randint(0, n)) for b, n, _ in cells]
-        fit = pava_rational(cells)
-        assert len(fit) == len(cells)
-        # nondecreasing: num_i/den_i <= num_{i+1}/den_{i+1}
-        for (_, n1, d1), (_, n2, d2) in zip(fit, fit[1:]):
-            assert n1 * d2 <= n2 * d1
-        # exact mass conservation: Σ n_b · fit_b == Σ y_b (each pool
-        # contributes den · (num/den) = num) — identity-free rational check
-        from fractions import Fraction
-
-        total = sum(
-            Fraction(n) * Fraction(num, den)
-            for (_, n, _), (_, num, den) in zip(cells, fit)
-        )
-        assert total == sum(sy for _, _, sy in cells)
-        # the isotonic fit's closed form: fit_b = max_{i≤b} min_{j≥b}
-        # mean(i..j) — an independent exact reference
-        B = len(cells)
-        pn = [0] * (B + 1)
-        ps = [0] * (B + 1)
-        for ix, (_, n, sy) in enumerate(cells):
-            pn[ix + 1] = pn[ix] + n
-            ps[ix + 1] = ps[ix] + sy
-        for b, (_, num, den) in enumerate(fit):
-            expect = max(
-                min(
-                    Fraction(ps[j + 1] - ps[i], pn[j + 1] - pn[i])
-                    for j in range(b, B)
-                )
-                for i in range(b + 1)
-            )
-            assert Fraction(num, den) == expect
-
-    rows = ml_isotonic_calibration(spark, SF).collect()
-    ppm = [r["fitted_ppm"] for r in rows]
-    assert ppm == sorted(ppm)
-    assert all(0 <= p <= 1_000_000 for p in ppm)
-
-
-def test_pit_embargo_join_matches_python(spark):
-    import datetime as dt
-
-    from bigdata_spark.plans.extended import j10_pit_embargo_join
-    from bigdata_spark.sources.catalog import load_table
-
-    evs = (
-        load_table(spark, SF, "events")
-        .select("user_id", "ts", "event_type", "event_id")
-        .collect()
-    )
-    by_user: dict[int, list] = {}
-    for r in evs:
-        by_user.setdefault(r["user_id"], []).append(r)
-    expect = {}
-    for uid, rows in by_user.items():
-        labels = [r for r in rows if r["event_type"] == "purchase"]
-        if not labels:
-            continue
-        n_labels = len(labels)
-        sum_fc = max_fp = n_cold = 0
-        for lb in labels:
-            cutoff = lb["ts"] - dt.timedelta(hours=1)
-            fc = sum(
-                1 for r in rows if r["event_type"] == "click" and r["ts"] <= cutoff
-            )
-            fp = sum(
-                1
-                for r in rows
-                if r["event_type"] == "purchase" and r["ts"] <= cutoff
-            )
-            sum_fc += fc
-            max_fp = max(max_fp, fp)
-            n_cold += fc == 0
-        expect[uid] = (n_labels, sum_fc, max_fp, n_cold)
-    got = {
-        r["user_id"]: (
-            r["n_labels"],
-            r["sum_feat_clicks"],
-            r["max_feat_purchases"],
-            r["n_cold_start"],
-        )
-        for r in j10_pit_embargo_join(spark, SF).collect()
-    }
-    assert got == expect
-
-
-def test_pseudonymize_join_is_referentially_intact(spark):
-    from bigdata_spark.plans.qualityq import dq_pseudonymize_join
-    from bigdata_spark.sources.catalog import load_table
-
-    row = dq_pseudonymize_join(spark, SF).collect()[0]
-    assert row["collision_free"] and row["referentially_intact"]
-    assert row["n_orders"] == load_table(spark, SF, "orders").count()
-    assert row["n_joined_raw"] == row["n_orders"]  # every order has a customer
-    assert row["n_tokens"] == row["n_keys"] <= row["n_orders"]
-
-
 def test_source_dedup_priority_policy(spark):
     import hashlib
     import re
@@ -242,43 +111,6 @@ def test_source_dedup_priority_policy(spark):
         (r["winner_source"], r["loser_source"]): r["n_displaced"] for r in rows
     }
     assert got == matrix
-
-
-def test_roc_auc_matches_mann_whitney_direction(spark):
-    import math
-
-    from bigdata_spark.plans.mlq import _ROC_BUCKET_W, ml_roc_auc
-    from bigdata_spark.sources.catalog import load_table
-
-    rows = ml_roc_auc(spark, SF).collect()
-    # monotone curve, endpoints complete
-    tps = [r["cum_tp"] for r in rows]
-    fps = [r["cum_fp"] for r in rows]
-    assert tps == sorted(tps) and fps == sorted(fps)
-    raw = load_table(spark, SF, "orders").select(
-        "o_totalprice", "o_orderstatus"
-    ).collect()
-    pos = sum(1 for r in raw if r["o_orderstatus"] == "F")
-    neg = len(raw) - pos
-    assert tps[-1] == pos and fps[-1] == neg
-    # replicate AUC from banded counts
-    from collections import Counter
-
-    bands: dict[int, list[int]] = {}
-    for r in raw:
-        b = math.floor(r["o_totalprice"] / _ROC_BUCKET_W)
-        cell = bands.setdefault(b, [0, 0])
-        cell[0] += 1
-        cell[1] += r["o_orderstatus"] == "F"
-    ct = cf = num = 0
-    for b in sorted(bands, reverse=True):
-        n, tp = bands[b]
-        pt, pf = ct, cf
-        ct += tp
-        cf += n - tp
-        num += (cf - pf) * (ct + pt)
-    assert rows[0]["auc_ppm"] == (1_000_000 * num) // (2 * pos * neg)
-    assert all(r["auc_ppm"] == rows[0]["auc_ppm"] for r in rows)
 
 
 def test_capture_recapture_consistency(spark):

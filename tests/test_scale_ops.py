@@ -288,30 +288,3 @@ def test_binaryfile_source_prunes_decoy(spark):
     assert names == sorted(names) and len(names) == 4
     assert all(n.endswith(".png") for n in names)
     assert all(len(r["digest"]) == 32 for r in rows)
-
-
-def test_bloom_semijoin_no_false_negatives(spark):
-    """n_match must equal the plain exact semi-join count (the Bloom
-    prefilter may only ADD false positives, never drop matches)."""
-    import pyspark.sql.functions as F
-
-    from bigdata_spark.plans.extended import approx_bloom_semijoin
-    from bigdata_spark.sources.catalog import load_table
-
-    sf = "/root/testdata/sf0.01"
-    got = approx_bloom_semijoin(spark, sf).collect()[0]
-    o = (
-        load_table(spark, sf, "orders")
-        .filter(
-            (F.col("o_orderpriority") == "1-URGENT")
-            & (F.col("o_orderdate") >= F.to_timestamp(F.lit("1995-01-01")))
-            & (F.col("o_orderdate") < F.to_timestamp(F.lit("1996-01-01")))
-        )
-        .select("o_orderkey")
-    )
-    l = load_table(spark, sf, "lineitem")
-    exact = l.join(o, l.l_orderkey == o.o_orderkey, "left_semi").count()
-    assert got["n_match"] == exact
-    assert got["n_pass"] >= got["n_match"]
-    assert got["n_false_pos"] == got["n_pass"] - got["n_match"]
-    assert got["n_pass"] < got["n_fact"]  # it actually pruned

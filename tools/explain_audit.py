@@ -50,9 +50,6 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
         ("single codegen stage (scan→project fused)", r"codegen id : 1"),
         ("only needed columns read", r"ReadSchema: (?![^\n]*l_returnflag)"),
     ],
-    "range_join_price_bands": [
-        ("bands broadcast (fact side never shuffles for the join)", r"BroadcastNestedLoopJoin|BroadcastHashJoin"),
-    ],
     "tpch_q7": [
         ("nation dims broadcast", r"BroadcastHashJoin"),
         ("returnflag-free scan pruned to join+agg columns", r"ReadSchema: (?![^\n]*l_returnflag)"),
@@ -94,34 +91,9 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
         ("one-pass two-distinct census", r"partial_count\(l_suppkey[^\n]*FILTER"),
         ("supplier/nation broadcast", r"BroadcastExchange"),
     ],
-    "ml_cv_kfold": [
-        ("fold grid broadcast", r"BroadcastExchange"),
-        ("map-side partial centroid sums", r"partial_sum\(xi"),
-        ("embeddings scan pruned to 3 cols", r"ReadSchema: struct<vec_id:bigint,embedding:array<float>,label:int>"),
-    ],
-    "ml_target_encode": [
-        ("sample filter pushed to scan", r"PushedFilters: \[.*LessThan\(o_orderkey,10\)"),
-        ("category stats broadcast (facts never shuffle)", r"BroadcastHashJoin"),
-        ("exact decimal category sums", r"partial_sum\(v"),
-    ],
     "s33_recursive_cte": [
         ("recursion executes natively (UnionLoop operator, no driver loop)", r"UnionLoop"),
         ("per-depth census map-side combines", r"partial_sum\("),
-    ],
-    "j8_lateral_topn": [
-        ("lateral decorrelated to a group limit (no per-row subquery)", r"WindowGroupLimit"),
-        ("customer filter pushed to scan", r"PushedFilters: \[.*LessThan\(c_custkey,20\)"),
-    ],
-    "approx_hll_merge": [
-        ("per-day registers map-side combine (partial max)", r"partial_max\("),
-        ("scan pruned to (ts, user_id)", r"ReadSchema: struct<ts:timestamp_ntz,user_id:bigint>"),
-        ("no Python evaluation", r"^(?![\s\S]*(BatchEvalPython|ArrowEvalPython|MapInPandas))"),
-    ],
-    "dq_embedding_drift": [
-        ("embeddings scan pruned to (vec_id, embedding)", r"ReadSchema: struct<vec_id:bigint,embedding:array<float>>"),
-        ("per-dim sums map-side combine", r"partial_sum\("),
-        ("top-k is a bounded TakeOrdered, not a full sort", r"TakeOrderedAndProject"),
-        ("no Python evaluation", r"^(?![\s\S]*(BatchEvalPython|ArrowEvalPython|MapInPandas))"),
     ],
     "sql_pipe_syntax": [
         ("pipe-form filter still pushes to scan", r"PushedFilters: \[.*LessThanOrEqual\(l_shipdate"),
@@ -129,29 +101,10 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
         ("scan pruned to the agg+filter cols only", r"ReadSchema: struct<l_quantity:double,l_extendedprice:double,l_returnflag:string,l_linestatus:string"),
         ("no extra columns read", r"ReadSchema: (?![^\n]*l_orderkey)"),
     ],
-    "approx_hll_portable": [
-        ("events scan pruned to 2 cols", r"ReadSchema: struct<user_id:bigint,event_type:string>"),
-        ("registers map-side combine (partial max rho)", r"partial_max\("),
-        ("harmonic sum map-side combine", r"partial_sum\("),
-        ("no Python evaluation (native md5/bin expressions)", r"^(?![\s\S]*(BatchEvalPython|ArrowEvalPython|MapInPandas))"),
-    ],
     "mm_scene_cut": [
         ("pixels decode inside Arrow batches (only scalars shuffle)", r"MapInPandas"),
         ("cut detection is a per-video lag window", r"Window"),
         ("per-video census map-side combines", r"partial_sum\("),
-    ],
-    "ml_als_factorize": [
-        ("RMSE is a factor-join + order-free quantized agg (no driver loop)", r"partial_sum\(se_q"),
-        ("unseen = left-anti join against sampled users' histories", r"LeftAnti"),
-        ("top-1 per user is a group limit, not a full sort", r"WindowGroupLimit"),
-        ("events scan pruned to the 3 rating columns", r"ReadSchema: struct<user_id:bigint,value:double,props:string>"),
-        ("factor tables enter as checkpointed RDDs (training frozen, not re-run)", r"Scan ExistingRDD"),
-    ],
-    "ml_pca_embeddings": [
-        # the data-proportional work is one Arrow-batched map + a
-        # map-side-combined sum of ~d²/2 cells; the eigensolve is
-        # driver-side so the plan is just the reduced statistics table
-        ("result is the reduced driver table (no per-row plan)", r"Scan ExistingRDD"),
     ],
     "s32_bucketed_smb_join": [
         ("result is the reduced driver table (zero-Exchange asserted in-query)", r"Scan ExistingRDD"),
@@ -203,11 +156,6 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
         ("spectral decode is Arrow-batched mapInPandas", r"MapInPandas"),
         ("payload pruned before anything downstream", r"^(?![\s\S]*Exchange[\s\S]*payload)"),
     ],
-    "ml_naive_bayes": [
-        ("likelihood tables broadcast onto tuples", r"BroadcastHashJoin"),
-        ("training counts are map-side partial aggregates", r"partial_count"),
-        ("no Python anywhere in train or score", r"^(?![\s\S]*BatchEvalPython)(?![\s\S]*ArrowEvalPython)"),
-    ],
 }
 
 
@@ -220,46 +168,11 @@ AUDITS.update({
         ("map-side partial aggregation", r"partial_count|partial_sum"),
         ("scan pruned to id+text", r"ReadSchema: struct<doc_id:bigint,text:string>"),
     ],
-    "w6_exact_median": [
-        ("fact collapses via map-side partial agg (histogram, no fact-row window)", r"partial_count"),
-        ("scan pruned to (returnflag, quantity)", r"ReadSchema: struct<l_quantity:double,l_returnflag:string>"),
-    ],
-    "w9_percentile_cont": [
-        # the histogram's eager localCheckpoint cuts lineage; pin the
-        # selection shape over the checkpointed domain table instead
-        ("target/bucket tables broadcast, never shuffled", r"BroadcastHashJoin"),
-        ("fine pass windows on (group, target), never one partition", r"hashpartitioning\(l_returnflag[^\)]*tgt_id"),
-        ("no single-partition exchange anywhere", r"^(?:(?!Exchange SinglePartition)[\s\S])*$"),
-    ],
-    "dq_profile": [
-        ("single scan via Expand for multi-distinct", r"Expand"),
-        ("scan pruned to the four profiled columns", r"ReadSchema: struct<o_orderkey:bigint,o_custkey:bigint,o_orderstatus:string,o_orderdate:timestamp"),
-    ],
-    "approx_bloom_semijoin": [
-        ("bitmap rides as a literal: the one join is the exact verify, broadcast by stats", r"BroadcastHashJoin LeftOuter"),
-        ("no shuffle join anywhere", r"^(?:(?!SortMergeJoin)[\s\S])*$"),
-        ("all-native expressions", NO_PYTHON),
-    ],
     "er_blocked_linkage": [
         ("blocking is an equi-join (hash/broadcast, never a cross join)", r"BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"),
         ("no cartesian product anywhere", r"^(?![\s\S]*CartesianProduct)"),
         ("only key+name columns read from customer", r"ReadSchema: (?![^\n]*c_acctbal)"),
         ("no Python evaluation", NO_PYTHON),
-    ],
-    "approx_cms_topk": [
-        ("sketch grid is a partial-agg groupBy (mergeable cells)", r"partial_count"),
-        ("sketch broadcast to the probe side", r"BroadcastHashJoin"),
-        ("no Python evaluation", NO_PYTHON),
-    ],
-    "approx_kmv_distinct": [
-        ("scan pruned to (event_type, user_id)", r"ReadSchema: struct<user_id:bigint,event_type:string>|ReadSchema: struct<event_type:string,user_id:bigint>"),
-        ("distinct pre-aggregate is map-side partial", r"partial_count|HashAggregate"),
-        ("pure BIGINT estimator, no Python", NO_PYTHON),
-    ],
-    "dq_fairness_ratios": [
-        ("customer dim broadcast onto orders", r"BroadcastHashJoin"),
-        ("per-segment counts partial-aggregated", r"partial_count|partial_sum"),
-        ("integer ppm arithmetic native, no Python", NO_PYTHON),
     ],
     "p9_neyman_allocation": [
         (
@@ -270,27 +183,9 @@ AUDITS.update({
         ("stratum cent sums partial-aggregate as decimals", r"partial_sum\(.*decimal"),
         ("integer Hamilton apportionment native, no Python", NO_PYTHON),
     ],
-    "approx_quantile_hist": [
-        (
-            "scan pruned to o_totalprice only",
-            r"ReadSchema: struct<o_totalprice:double>",
-        ),
-        ("histogram cells partial-aggregate (mergeable)", r"partial_count"),
-        ("percentile spine broadcast onto the cells", r"BroadcastNestedLoopJoin|BroadcastExchange"),
-        ("interpolation native, no Python", NO_PYTHON),
-    ],
     "mm_audio_silence": [
         ("decode is Arrow-batched mapInPandas (never per-row Python)", r"MapInPandas"),
         ("run/total aggregates partial-aggregate after decode", r"partial_count|partial_min"),
-    ],
-    "j10_pit_embargo_join": [
-        ("one running-sum window serves all probes (no per-label subquery)",
-         r"RunningWindowFunction|Window"),
-        ("per-user rollup partial-aggregates", r"partial_sum|partial_count"),
-        ("feature serving native, no Python", NO_PYTHON),
-    ],
-    "dq_pseudonymize_join": [
-        ("stateless token projection + hash join, no Python", NO_PYTHON),
     ],
     # scratch-backed entries return an eager localCheckpoint (executor-
     # resident blocks; the scratch dir dies in the finally) — the visible
@@ -307,85 +202,22 @@ AUDITS.update({
     "s14_orc_roundtrip": [
         ("rollup is an executor checkpoint", r"Scan ExistingRDD"),
     ],
-    "approx_theta_ops": [
-        ("distinct collapse partial-aggregates before the sketch", r"partial_|HashAggregate"),
-        ("set algebra joins run on sketch-sized tables", r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin"),
-        ("integer theta estimators native, no Python", NO_PYTHON),
-    ],
     "mm_image_header_probe": [
         ("no shuffle anywhere (pure projection over the payload)", r"^(?![\s\S]*Exchange[\s\S]*hashpartitioning)"),
         ("header parse native, no Python", NO_PYTHON),
-    ],
-    "f15_higher_order_funcs": [
-        ("orderkey filter pushed to the scan", r"PushedFilters: \[.*LessThan\(l_orderkey,200"),
-        ("array build partial-aggregates (collect_list partial)", r"objectagg|partial_"),
-        ("every lambda stays JVM-side, no Python", NO_PYTHON),
     ],
     "dedup_minhash_error_audit": [
         ("singleton buckets pruned via the census window", r"Window"),
         ("candidate join is an equi-join, never a cross join", r"^(?![\s\S]*CartesianProduct)"),
         ("signature/shingle kernels native, no Python", NO_PYTHON),
     ],
-    "ml_gain_lift_deciles": [
-        (
-            "scan pruned to the three scoring columns",
-            r"ReadSchema: struct<o_orderkey:bigint,o_orderstatus:string,o_totalprice:double>"
-            r"|ReadSchema: struct<o_orderkey:bigint,o_totalprice:double,o_orderstatus:string>",
-        ),
-        ("within-ties rank partitions by the VALUE, not globally", r"hashpartitioning\(cents"),
-        ("histogram partial-aggregates", r"partial_count"),
-        ("integer gain/lift ppm native, no Python", NO_PYTHON),
-    ],
-    "ml_ks_separation": [
-        ("band cells partial-aggregate (mergeable)", r"partial_count|partial_sum"),
-        ("argmax is a bounded TakeOrdered over the cells", r"TakeOrderedAndProject"),
-        ("exact integer KS numerator, no Python", NO_PYTHON),
-    ],
     "s36_manifest_compaction": [
         ("snapshot rollups are an executor checkpoint", r"Scan ExistingRDD"),
-    ],
-    "ml_pr_auc": [
-        (
-            "scan pruned to (o_orderstatus, o_totalprice)",
-            r"ReadSchema: struct<o_orderstatus:string,o_totalprice:double>"
-            r"|ReadSchema: struct<o_totalprice:double,o_orderstatus:string>",
-        ),
-        ("band cells partial-aggregate (mergeable)", r"partial_count|partial_sum"),
-        ("integer AUC-PR fold native, no Python", NO_PYTHON),
-    ],
-    "ml_brier_score": [
-        (
-            "scan pruned to (o_orderstatus, o_totalprice)",
-            r"ReadSchema: struct<o_orderstatus:string,o_totalprice:double>"
-            r"|ReadSchema: struct<o_totalprice:double,o_orderstatus:string>",
-        ),
-        ("min/max broadcast back (no window over rows)", r"BroadcastNestedLoopJoin|BroadcastExchange"),
-        ("squared errors partial-aggregate as decimals", r"partial_sum\(.*decimal|partial_sum"),
-        ("ppm arithmetic native, no Python", NO_PYTHON),
-    ],
-    "ml_isotonic_calibration": [
-        (
-            "scan pruned to (o_orderstatus, o_totalprice)",
-            r"ReadSchema: struct<o_orderstatus:string,o_totalprice:double>"
-            r"|ReadSchema: struct<o_totalprice:double,o_orderstatus:string>",
-        ),
-        ("bucket cells partial-aggregate before the driver PAVA", r"partial_count|partial_sum"),
-        ("fitted step function broadcast back", r"BroadcastHashJoin"),
-        ("no Python on the data path", NO_PYTHON),
     ],
     "llm_source_dedup_priority": [
         ("one window over content_key (the exact-dedup shuffle)", r"Window"),
         ("displacement matrix partial-aggregates", r"partial_count"),
         ("priority policy native, no Python", NO_PYTHON),
-    ],
-    "ml_roc_auc": [
-        (
-            "scan pruned to (o_orderstatus, o_totalprice)",
-            r"ReadSchema: struct<o_orderstatus:string,o_totalprice:double>"
-            r"|ReadSchema: struct<o_totalprice:double,o_orderstatus:string>",
-        ),
-        ("band cells partial-aggregate (mergeable)", r"partial_count|partial_sum"),
-        ("integer AUC numerator native, no Python", NO_PYTHON),
     ],
     "dedup_capture_recapture": [
         ("both captures stay bucketed plans (no all-pairs)", r"BroadcastHashJoin|SortMergeJoin"),
@@ -397,39 +229,12 @@ AUDITS.update({
 # discipline — bounded-domain aggregation before any window, broadcast
 # for small sides, no Python in the pipeline.
 AUDITS.update({
-    "ml_learning_curve": [
-        ("fraction table broadcast (single fact pass)", r"BroadcastNestedLoopJoin|BroadcastHashJoin"),
-        ("sufficient stats partial-aggregated", r"partial_sum"),
-        ("no Python", NO_PYTHON),
-    ],
-    "wh_abc_analysis": [
-        # the part-grain rollup + range exchange run once, eagerly
-        # checkpointed inside range_cumsum; the visible plan is the
-        # bounded offsets pass + broadcast joins back onto it
-        ("offsets/total partial-aggregated", r"partial_sum"),
-        ("bounded sides broadcast onto the checkpointed cumsum", r"BroadcastNestedLoopJoin|BroadcastHashJoin"),
-        ("no Python", NO_PYTHON),
-    ],
-    "asof_forward_tolerance": [
-        ("event-type filters pushed to parquet", r"PushedFilters: \[.*EqualTo\(event_type,"),
-        ("single keyed window (no per-row subquery)", r"Window"),
-        ("no Python", NO_PYTHON),
-    ],
     "dedup_sorted_neighborhood": [
         ("window deltas broadcast (rank+δ equi-join)", r"BroadcastHashJoin|BroadcastNestedLoopJoin"),
         ("native shingle intersection, no Python", NO_PYTHON),
     ],
-    "j14_relational_division": [
-        ("divisor dim broadcast", r"BroadcastHashJoin"),
-        ("distinct-pair reduction before the coverage count", r"partial_"),
-        ("no Python", NO_PYTHON),
-    ],
     "mm_patch_census": [
         ("header parse native — payload never leaves the scan", NO_PYTHON),
-    ],
-    "dq_k_anonymity": [
-        ("QI-class rollup partial-aggregated", r"partial_count"),
-        ("no Python", NO_PYTHON),
     ],
 })
 
@@ -453,38 +258,9 @@ AUDITS.update({
 # (file, function, name); a new hint fails until its grain is reviewed.
 BROADCAST_HINT_ALLOWLIST = {
     ("classifierq.py", "nearest_exemplar", "ex"),
-    ("coverage.py", "f12_quantile_bins", "bnd"),
-    ("coverage.py", "w9_percentile_cont", "n_df"),
-    ("coverage.py", "wh_abc_analysis", "tot_df"),
     ("dedupq.py", "dedup_capture_recapture", "b"),
     ("dedupq.py", "dedup_capture_recapture", "both"),
     ("dedupq.py", "dedup_sorted_neighborhood", "deltas"),
-    ("extended.py", "above_avg_orders", "avg_price"),
-    ("extended.py", "approx_cms_topk", "sketch"),
-    ("extended.py", "approx_quantile_hist", "pcts"),
-    ("extended.py", "approx_theta_ops", "theta"),
-    ("extended.py", "approx_theta_ops", "truth"),
-    ("extended.py", "j14_relational_division", "divisor"),
-    ("extended.py", "j14_relational_division", "need"),
-    ("extended.py", "null_semantics", "dim"),
-    ("extended.py", "range_join_price_bands", "bands"),
-    ("mlq.py", "ml_brier_score", "mm"),
-    ("mlq.py", "ml_conformal_interval", "fit"),
-    ("mlq.py", "ml_conformal_interval", "qhat"),
-    ("mlq.py", "ml_cv_kfold", "folds"),
-    ("mlq.py", "ml_gain_lift_deciles", "ranked"),
-    ("mlq.py", "ml_isotonic_calibration", "fit_df"),
-    ("mlq.py", "ml_learning_curve", "fracs"),
-    ("mlq.py", "ml_mutual_info", "cells"),
-    ("mlq.py", "ml_mutual_info", "hx"),
-    ("mlq.py", "ml_mutual_info", "hy"),
-    ("mlq.py", "ml_naive_bayes", "likel"),
-    ("mlq.py", "ml_naive_bayes", "priors"),
-    ("mlq.py", "ml_target_encode", "stats"),
-    ("qualityq.py", "dq_benford", "total"),
-    ("qualityq.py", "dq_drift_psi", "bnd"),
-    ("qualityq.py", "dq_pseudonymize_join", "joined"),
-    ("qualityq.py", "dq_pseudonymize_join", "raw"),
     ("relational.py", "tpch_q5", "load_table"),
     ("samplingq.py", "p7_pps_systematic", "offs"),
     ("samplingq.py", "p7_pps_systematic", "wtot"),
@@ -579,23 +355,9 @@ def audit_broadcast_hints() -> int:
 # no-partitionBy WindowSpec must be registered here with its reviewed
 # grain; a new site fails until its input grain is reviewed. The
 # round-10 sweep converted the SF-grown offenders this rule surfaced
-# (wh_rfm_segments, ml_calibration_bins and four queries since
-# retired) to range_rank / range_ntile / agg+broadcast shapes.
+# (six queries, all since retired) to range_rank / range_ntile /
+# agg+broadcast shapes.
 ZERO_PARTITION_WINDOW_ALLOWLIST = {
-    ("coverage.py", "o7_skyline_pareto"),      # distinct (price, size) catalog pairs
-    ("coverage.py", "o8_range_partition_sort"),  # #partitions grain (pid census)
-    ("extended.py", "approx_kmv_distinct"),    # merged KMV sketch (k-bounded per group)
-    ("extended.py", "approx_quantile_hist"),   # fixed bucket grid
-    ("extended.py", "approx_theta_ops"),       # theta sketch (k-bounded)
-    ("extended.py", "j14_relational_division"),  # divisor grain (nations in region)
-    ("mlq.py", "ml_gain_lift_deciles"),        # 10 deciles
-    ("mlq.py", "ml_ks_separation"),            # score-band grain
-    ("mlq.py", "ml_mutual_info"),              # ≤15 contingency cells
-    ("mlq.py", "ml_pr_auc"),                   # score-band grain
-    ("mlq.py", "ml_roc_auc"),                  # score-band grain
-    ("mlq.py", "ml_woe_iv"),                   # score-bucket grain
-    ("qualityq.py", "dq_drift_psi"),           # PSI bucket grid (2 sites)
-    ("qualityq.py", "dq_fairness_ratios"),     # demographic-group grain
     ("ranking.py", "range_cumsum"),            # #partitions offset table (the operator's own bounded pass)
     ("ranking.py", "range_rank"),              # #partitions offset table (the operator's own bounded pass)
     ("samplingq.py", "p7_pps_systematic"),     # stratum/offset grain
@@ -701,31 +463,16 @@ def audit_zero_partition_windows() -> int:
 # the grain is re-reviewed. SF-grown bounded-key windows over fact rows
 # are NOT allowlistable — convert to operators/ranking.
 # grouped_range_rank / grouped_range_lead or operators/quantiles.
-# grouped_order_statistics (see the w6/w9/f12/w1/w5/ml_conformal
-# conversions).
+# grouped_order_statistics (see the w1_ranked_partition conversion).
 WINDOW_PARTITION_GRAIN_ALLOWLIST = {
-    ("coverage.py", "f13_locf_impute", "user_id"),  # data-grown: events per user
-    ("coverage.py", "o8_range_partition_sort", "pid"),  # data-grown: partition id — group size bounded by the range partitioner (#partitions grows with data)
-    ("coverage.py", "w6_exact_median", "l_returnflag"),  # bounded-input: (flag, quantity) value-domain histogram, ≤50 rows/flag
     ("dedupq.py", "dedup_keep_one", "content_key"),  # data-grown: duplicate group per content digest
     ("dedupq.py", "dedup_minhash_error_audit", "band_id,band_hash"),  # data-grown: salted LSH bucket
     ("dedupq.py", "dedup_stream_firstseen", "key"),  # data-grown: per-key stream state
     ("dedupq.py", "llm_source_dedup_priority", "content_key"),  # data-grown: cross-source duplicate group
     ("erq.py", "er_blocked_linkage", "c_custkey"),  # data-grown: block-bounded candidate matches per record
     ("exact.py", "exact_dedup", "_content_key(...)"),  # data-grown: duplicate group per digest
-    ("extended.py", "approx_kmv_distinct", "event_type"),  # bounded-input: merged KMV sketch rows (k-bounded)
-    ("extended.py", "approx_theta_ops", "lbl"),  # bounded-input: theta sketch rows (k-bounded)
-    ("extended.py", "asof_forward_tolerance", "user_id"),  # data-grown
-    ("extended.py", "asof_join_orders_events", "user_id"),  # data-grown
-    ("extended.py", "j10_pit_embargo_join", "user_id"),  # data-grown
     ("graph.py", "_cc_star_loop", "a"),          # data-grown: adjacency per vertex (star-contraction bounds it)
     ("minhash.py", "minhash_dup_pairs", "band_id,band_hash"),  # data-grown: salted LSH bucket
-    ("mlq.py", "ml_als_factorize", "user_id"),   # data-grown: ratings per user
-    ("mlq.py", "ml_cv_kfold", "vec_id"),         # data-grown: per-vector fold tag
-    ("mlq.py", "ml_gain_lift_deciles", "cents"),  # data-grown: same-cents tie group (value-domain spread)
-    ("mlq.py", "ml_mutual_info", "x"),           # bounded-input: contingency cells
-    ("mlq.py", "ml_mutual_info", "y"),           # bounded-input: contingency cells
-    ("mlq.py", "ml_naive_bayes", "qb,db,tb,truth"),  # bounded-input: likelihood cells
     ("multimodalq.py", "mm_audio_silence", "media_id"),  # data-grown: frames per clip (duration-bounded)
     ("multimodalq.py", "mm_scene_cut", "media_id"),  # data-grown: frames per clip (duration-bounded)
     ("ngram.py", "ngram_jaccard_pairs", "_bucket,tok"),  # data-grown: salted token bucket

@@ -62,19 +62,8 @@ def main() -> None:
     spark = get_spark("pin_golden", extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
 
-    from bigdata_spark.plans.mlq import (
-        ml_als_factorize,
-        ml_isotonic_calibration,
-        ml_linear_probe,
-        ml_pca_embeddings,
-    )
-
     per_sf = {
-        "ml_isotonic_calibration": ml_isotonic_calibration,
-        "ml_pca_embeddings": ml_pca_embeddings,
-        "ml_als_factorize": ml_als_factorize,
         "ml_global_tree": ml_global_tree,
-        "ml_linear_probe": ml_linear_probe,
         "ml_local_forest": ml_local_forest,
         "ml_dtw_distances": ml_dtw_distances,
     }
