@@ -1,3 +1,5 @@
+"""Native Catalyst distance expressions over array columns (``distances``)."""
+
 from .distances import (
     cosine_distance,
     cosine_similarity,
@@ -7,7 +9,6 @@ from .distances import (
     manhattan_distance,
     nearest_exemplar_index,
 )
-from .hashing import portable_hash64, shingles
 
 __all__ = [
     "cosine_distance",
@@ -17,6 +18,4 @@ __all__ = [
     "l2_norm",
     "manhattan_distance",
     "nearest_exemplar_index",
-    "portable_hash64",
-    "shingles",
 ]

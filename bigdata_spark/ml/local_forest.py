@@ -48,7 +48,7 @@ class LocalProximityForest:
         self,
         num_partitions: int = 4,
         n_splitters: int = 5,
-        max_depth: int = 20,
+        max_depth: int | None = 20,
         use_weighting: bool = False,
         seed: int = 42,
         metric: str = "euclidean",

@@ -90,12 +90,7 @@ class Canvas:
                 row[x] = color
 
     def save(self, path: str) -> str:
-        """Dispatch on extension: .pdf → single-page PDF wrapping the
-        raster (ml/pdf.py), anything else → PNG."""
-        if path.lower().endswith(".pdf"):
-            from .pdf import write_pdf
-
-            return write_pdf(path, self.pix)
+        """Write the raster as a PNG, whatever the extension."""
         return write_png(path, self.pix)
 
 

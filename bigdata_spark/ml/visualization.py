@@ -1,11 +1,11 @@
 """Plot sink (SURVEY §2.1 S8; reference code/src/visualization.py:6-81 —
-confusion-matrix heatmap + per-class metric bars to PNG/PDF).
+confusion-matrix heatmap + per-class metric bars).
 
 The data preparation (dense confusion grid, per-class metric table) is
 real Spark→driver code and unit-tested. Rendering uses matplotlib when
 installed; otherwise it falls back to the in-repo pure-stdlib raster
-backend (ml/png.py), so the sink produces an actual PNG artifact in
-every deployment."""
+backend (ml/png.py), which writes a PNG whatever the path's extension,
+so the sink produces an actual image in every deployment."""
 
 from __future__ import annotations
 

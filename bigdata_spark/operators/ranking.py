@@ -44,10 +44,10 @@ def range_rank(
     the assignment of ranks among tied rows is valid but
     NON-DETERMINISTIC across reruns (a boundary may split the tie
     group differently). Callers that need hash-stable results append a
-    unique tiebreaker — the dedup_sorted_neighborhood pattern of
-    ending the key with ``doc_id``. (The pre-checkpoint lineage is
-    nondeterministic for the same reason; the eager localCheckpoint
-    pins ONE consistent permutation for both passes.)"""
+    unique tiebreaker, ending the key with a unique id column. (The
+    pre-checkpoint lineage is nondeterministic for the same reason;
+    the eager localCheckpoint pins ONE consistent permutation for both
+    passes.)"""
     parts = (
         df.repartitionByRange(num_partitions, *order_cols)
         if num_partitions
@@ -93,9 +93,6 @@ def grouped_range_rank(
     order_cols: list[str],
     rank_col: str = "r",
     count_col: str | None = None,
-    sum_col: str | None = None,
-    cumsum_col: str = "cum",
-    total_col: str = "total",
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Per-GROUP row_number over ``order_cols`` without sorting any
@@ -118,11 +115,6 @@ def grouped_range_rank(
     tiebreaker). DESC dimensions: negate the column before calling.
     ``count_col``: optionally also attach the group's total row count
     (from the same tiny count table — no extra data pass).
-    ``sum_col``: optionally also compute the per-group RUNNING sum of
-    that column in the same order (→ ``cumsum_col``) and the group
-    total (→ ``total_col``), riding the same range exchange and the
-    same tiny offset table — the grouped twin of range_cumsum, fused
-    so rank + cumsum cost ONE pass.
 
     Reference parity: the reference ranks per label inside one process
     (preprocessing.py:73-76) — correct at 5,000 rows, a scale-killer
@@ -134,51 +126,28 @@ def grouped_range_rank(
         else df.repartitionByRange(*keys)
     )
     w_local = Window.partitionBy("_pid", *group_cols).orderBy(*order_cols)
-    staged = parts.withColumn("_pid", F.spark_partition_id()).withColumn(
-        "_lr", F.row_number().over(w_local)
+    ranked_local = (
+        parts.withColumn("_pid", F.spark_partition_id())
+        .withColumn("_lr", F.row_number().over(w_local))
+        .localCheckpoint()
     )
-    if sum_col is not None:
-        staged = staged.withColumn(
-            "_lcs",
-            F.sum(sum_col).over(
-                w_local.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
-    ranked_local = staged.localCheckpoint()
-    agg_cols = [F.count("*").alias("_c")]
-    if sum_col is not None:
-        agg_cols.append(F.sum(sum_col).alias("_s"))
-    counts = ranked_local.groupBy("_pid", *group_cols).agg(*agg_cols)
+    counts = ranked_local.groupBy("_pid", *group_cols).agg(F.count("*").alias("_c"))
     # offsets grain: ≤ #partitions + #groups − 1 rows (contiguity)
     w_off = (
         Window.partitionBy(*group_cols)
         .orderBy("_pid")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    off_cols = [
-        F.coalesce(F.sum("_c").over(w_off), F.lit(0)).alias("_off")
-    ]
-    if sum_col is not None:
-        off_cols.append(F.sum("_s").over(w_off).alias("_soff"))
-    offsets = counts.select("_pid", *group_cols, *off_cols)
+    offsets = counts.select(
+        "_pid", *group_cols, F.coalesce(F.sum("_c").over(w_off), F.lit(0)).alias("_off")
+    )
     out = (
         _join_null_safe(ranked_local, F.broadcast(offsets), ["_pid", *group_cols])
         .withColumn(rank_col, (F.col("_lr") + F.col("_off")).cast("long"))
-        .drop("_lr", "_off")
+        .drop("_lr", "_off", "_pid")
     )
-    if sum_col is not None:
-        out = out.withColumn(
-            cumsum_col,
-            F.col("_lcs") + F.coalesce(F.col("_soff"), F.lit(0)),
-        ).drop("_lcs", "_soff")
-    out = out.drop("_pid")
-    if count_col is not None or sum_col is not None:
-        tot_cols = []
-        if count_col is not None:
-            tot_cols.append(F.sum("_c").cast("long").alias(count_col))
-        if sum_col is not None:
-            tot_cols.append(F.sum("_s").alias(total_col))
-        totals = counts.groupBy(*group_cols).agg(*tot_cols)
+    if count_col is not None:
+        totals = counts.groupBy(*group_cols).agg(F.sum("_c").cast("long").alias(count_col))
         out = _join_null_safe(out, F.broadcast(totals), list(group_cols))
     return out
 

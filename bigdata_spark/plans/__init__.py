@@ -26,7 +26,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
     from . import (
         classifierq,
-        dedupq,
         erq,
         multimodalq,
         relational,
@@ -42,7 +41,6 @@ def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
         tpch_ext,
         tpch_full,
         classifierq,
-        dedupq,
         samplingq,
         scaleq,
         multimodalq,

@@ -248,7 +248,7 @@ _PHASH_BANDS, _PHASH_BAND_BITS, _PHASH_MAX_HAM = 4, 16, 3
 
 def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-duplicate detection by perceptual hash with banded
-    candidate generation — the multimodal twin of MinHash-LSH dedup.
+    candidate generation (banded LSH over the image hash).
 
     Pixels reduce to a 64-bit aHash inside Arrow batches
     (multimodal/media.perceptual_hash); candidate pairs come from a

@@ -77,7 +77,7 @@ def _run(
     model: str,
     partition_counts: list[int],
     n_splitters: int = 3,
-    max_depth: int = 10,
+    max_depth: int | None = 10,
     train_fraction: float = 0.8,
     seed: int = 42,
     label_col: str = "label",
@@ -180,7 +180,7 @@ def run_pipeline(
     model: str = "local",
     num_partitions: int = 4,
     n_splitters: int = 3,
-    max_depth: int = 10,
+    max_depth: int | None = 10,
     train_fraction: float = 0.8,
     seed: int = 42,
     label_col: str = "label",

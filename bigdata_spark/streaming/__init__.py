@@ -1,2 +1,1 @@
-"""Structured Streaming operators: per-key state (``stateful``) and the
-keyed-upsert parquet sink (``upsert_sink``)."""
+"""Structured Streaming: the keyed-upsert parquet sink (``upsert_sink``)."""

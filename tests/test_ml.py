@@ -60,6 +60,16 @@ def test_local_forest_end_to_end(spark, tmp_path):
         assert [t.to_state() for t in reloaded.trees] == [t.to_state() for t in forest.trees]
         preds2 = reloaded.predict(test)
         assert preds2.filter(F.col("label") == F.col("prediction")).count() == preds.count()
+    # the paper's max_depth=None grows until no node splits: the same
+    # trees as an unreachable bound, and it survives save/load
+    unbounded = LocalProximityForest(num_partitions=3, n_splitters=3, seed=5, max_depth=None).fit(train)
+    deep = LocalProximityForest(num_partitions=3, n_splitters=3, seed=5, max_depth=10_000).fit(train)
+    assert [t.to_state() for t in unbounded.trees] == [t.to_state() | {"max_depth": None} for t in deep.trees]
+    p = str(tmp_path / "forest-unbounded.json")
+    unbounded.save(p)
+    reloaded = LocalProximityForest.load(p)
+    assert reloaded.max_depth is None
+    assert [t.to_state() for t in reloaded.trees] == [t.to_state() for t in unbounded.trees]
     # an unknown metric, or a fit that cannot split, fails on the driver, before any job
     for model, kwargs, message in (
         (LocalProximityForest, {"metric": "manhattan"}, r"^metric must be 'euclidean' or 'dtw', got 'manhattan'$"),

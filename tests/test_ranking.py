@@ -301,45 +301,6 @@ def test_grouped_order_statistics_matches_sorted_selection(spark):
         assert got == want, f"order-statistic mismatch at width={width}"
 
 
-def test_grouped_range_rank_fused_cumsum_matches_windows(spark):
-    """sum_col must reproduce SUM() OVER (PARTITION BY g ORDER BY ...
-    ROWS UNBOUNDED PRECEDING) plus the group total, in the same pass."""
-    from bigdata_spark.operators.ranking import grouped_range_rank
-
-    df = spark.range(0, 500).select(
-        (F.col("id") % 5).alias("g"),
-        (F.col("id") * 37 % 211).alias("v"),
-        F.col("id").alias("tie"),
-        ((F.col("id") % 23) - 11).alias("x"),
-    )
-    got = {
-        (r["g"], r["v"], r["tie"]): (r["rn"], r["cum"], r["total"])
-        for r in grouped_range_rank(
-            df,
-            ["g"],
-            ["v", "tie"],
-            "rn",
-            sum_col="x",
-            num_partitions=6,
-        ).collect()
-    }
-    w = Window.partitionBy("g").orderBy("v", "tie")
-    want = {
-        (r["g"], r["v"], r["tie"]): (r["rn"], r["cum"], r["total"])
-        for r in df.select(
-            "g",
-            "v",
-            "tie",
-            F.row_number().over(w).cast("long").alias("rn"),
-            F.sum("x")
-            .over(w.rowsBetween(Window.unboundedPreceding, 0))
-            .alias("cum"),
-            F.sum("x").over(Window.partitionBy("g")).alias("total"),
-        ).collect()
-    }
-    assert got == want
-
-
 def test_grouped_range_lead_matches_window_lead(spark):
     """grouped_range_lead must reproduce lead() OVER (PARTITION BY g
     ORDER BY ...) exactly, including NULL at each group's last row,

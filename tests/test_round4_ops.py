@@ -1,72 +1,9 @@
-"""Unit tests for the round-4 session additions: duplicated-substring
-windows, SemDeDup, versioned deletes, data-quality
-expectations and column profiles."""
+"""Unit tests for the round-4 session additions: versioned deletes,
+data-quality expectations and column profiles."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-
-
-# --- duplicated-substring windows ----------------------------------------
-
-def test_substring_dup_stats(spark):
-    from bigdata_spark.dedup.substring import duplicate_window_stats
-
-    # k=3: doc 1/2 share "a b c d" (two 3-windows); doc 3 is unique;
-    # doc 4 too short for any window
-    df = spark.createDataFrame(
-        [
-            (1, "a b c d x y z"),
-            (2, "p q a b c d"),
-            (3, "one two three four five"),
-            (4, "tiny doc"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: r
-        for r in duplicate_window_stats(df, k=3).collect()
-    }
-    assert out[1]["n_windows"] == 5 and out[1]["n_dup"] == 2
-    assert out[2]["n_windows"] == 4 and out[2]["n_dup"] == 2
-    assert out[3]["n_dup"] == 0
-    assert out[4]["n_windows"] == 0 and out[4]["dup_frac"] == 0.0
-    assert abs(out[1]["dup_frac"] - 2 / 5) < 1e-9
-
-
-def test_substring_within_doc_repeat_counts(spark):
-    from bigdata_spark.dedup.substring import duplicate_window_stats
-
-    # the same window twice WITHIN one doc is a duplicate (global
-    # occurrence count ≥ 2), matching Lee et al. semantics
-    df = spark.createDataFrame(
-        [(1, "x y z q x y z")], "doc_id long, text string"
-    )
-    row = duplicate_window_stats(df, k=3).collect()[0]
-    # windows: xyz yzq zqx qxy xyz → the two xyz occurrences are dups
-    assert row["n_windows"] == 5 and row["n_dup"] == 2
-
-
-# --- SemDeDup ------------------------------------------------------------
-
-def test_semantic_dedup_drops_exact_dups(spark):
-    from bigdata_spark.dedup.semantic import semantic_dedup
-
-    # three exact copies of one vector + two orthogonal singles
-    rows = [
-        (1, [1.0, 0.0, 0.0, 0.0]),
-        (2, [1.0, 0.0, 0.0, 0.0]),
-        (3, [1.0, 0.0, 0.0, 0.0]),
-        (4, [0.0, 1.0, 0.0, 0.0]),
-        (5, [0.0, 0.0, 1.0, 0.0]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = {r["vec_id"]: r["is_dropped"] for r in
-           semantic_dedup(df, n_clusters=2, threshold=0.9).collect()}
-    assert out[1] is False          # lowest id of the dup group survives
-    assert out[2] and out[3]        # copies dropped
-    # orthogonal vectors never reach 0.9 cosine with anything
-    assert out[4] is False and out[5] is False
 
 
 # --- versioned delete + CDC ----------------------------------------------

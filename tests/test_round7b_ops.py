@@ -77,53 +77,6 @@ def test_manifest_time_travel_snapshot_isolation(spark):
             assert v2[st]["sum_price"] == r["sum_price"]
 
 
-def test_source_dedup_priority_policy(spark):
-    import hashlib
-    import re
-
-    from bigdata_spark.plans.dedupq import llm_source_dedup_priority
-    from bigdata_spark.sources.catalog import load_table
-
-    docs = load_table(spark, SF, "documents").select(
-        "doc_id", "text", "source"
-    ).collect()
-    corpus = [(r["doc_id"], r["text"], r["source"]) for r in docs]
-    corpus += [
-        (r["doc_id"] + 2_000_000, r["text"], f"src{(r['doc_id'] + 3) % 20}")
-        for r in docs
-        if r["doc_id"] % 11 == 0
-    ]
-    groups: dict[str, list] = {}
-    for did, text, src in corpus:
-        key = hashlib.md5(
-            re.sub(r"\s+", " ", text.lower().strip()).encode()
-        ).hexdigest()
-        groups.setdefault(key, []).append((int(src[3:]), did, src))
-    matrix: dict[tuple, int] = {}
-    for members in groups.values():
-        members.sort()
-        winner = members[0][2]
-        for _, _, loser in members[1:]:
-            matrix[(winner, loser)] = matrix.get((winner, loser), 0) + 1
-    rows = llm_source_dedup_priority(spark, SF).collect()
-    assert rows, "the duplicate wave guarantees displacements"
-    got = {
-        (r["winner_source"], r["loser_source"]): r["n_displaced"] for r in rows
-    }
-    assert got == matrix
-
-
-def test_capture_recapture_consistency(spark):
-    from bigdata_spark.plans.dedupq import dedup_capture_recapture
-
-    row = dedup_capture_recapture(spark, SF).collect()[0]
-    assert row["n1"] >= row["m"] and row["n2"] >= row["m"]
-    if row["m"] > 0:
-        # the estimate can never undercut either single method's catch
-        assert row["est_pairs"] >= max(row["n1"], row["n2"])
-        assert row["est_pairs_milli"] == (1000 * row["n1"] * row["n2"]) // row["m"]
-
-
 def test_manifest_stats_pruning_api(spark, tmp_path):
     """collect_file_stats harvests footer min/max; read_snapshot_pruned
     skips non-intersecting files, keeps stat-less files (safe), and

@@ -133,21 +133,9 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
         ("OR-of-ANDs: part conjuncts prune the broadcast build", r"PushedFilters: \[Or\(|Filter[^\n]*p_brand"),
         ("quantity disjuncts reach the lineitem side", r"l_quantity"),
     ],
-    "dedup_ngram_jaccard": [
-        ("inverted index aggregates pair counts (no per-pair array ops)", r"partial_count|HashAggregate"),
-        ("size-ratio prune inside the join condition", r"join[^\n]*threshold|\(cast\(sz#\d+ as double\) >="),
-    ],
-    "dedup_keep_one": [
-        ("representative selection is a group limit, not a full sort per key", r"WindowGroupLimit|window"),
-        ("survivor counts partially aggregated", r"partial_count"),
-    ],
     "p7_pps_systematic": [
         ("bucket offsets broadcast onto fact rows", r"BroadcastHashJoin"),
         ("fact window is bucket-partitioned (no global sort of facts)", r"Window[\s\S]*partitionBy|windowspecdefinition\(bucket"),
-    ],
-    "dedup_symspell_join": [
-        ("deletion-key blocking is an equi-join", r"^(?![\s\S]*CartesianProduct)(?![\s\S]*BroadcastNestedLoopJoin)"),
-        ("native levenshtein verification", r"levenshtein"),
     ],
     "s23_merge_into": [
         ("single full-outer join realizes the merge", r"FullOuter"),
@@ -162,12 +150,6 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
 NO_PYTHON = r"^(?:(?!BatchEvalPython|ArrowEvalPython)[\s\S])*$"
 
 AUDITS.update({
-    "dedup_substring": [
-        ("window enumeration native (no Python eval)", NO_PYTHON),
-        ("native Generate for the window explode", r"Generate"),
-        ("map-side partial aggregation", r"partial_count|partial_sum"),
-        ("scan pruned to id+text", r"ReadSchema: struct<doc_id:bigint,text:string>"),
-    ],
     "er_blocked_linkage": [
         ("blocking is an equi-join (hash/broadcast, never a cross join)", r"BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"),
         ("no cartesian product anywhere", r"^(?![\s\S]*CartesianProduct)"),
@@ -206,22 +188,8 @@ AUDITS.update({
         ("no shuffle anywhere (pure projection over the payload)", r"^(?![\s\S]*Exchange[\s\S]*hashpartitioning)"),
         ("header parse native, no Python", NO_PYTHON),
     ],
-    "dedup_minhash_error_audit": [
-        ("singleton buckets pruned via the census window", r"Window"),
-        ("candidate join is an equi-join, never a cross join", r"^(?![\s\S]*CartesianProduct)"),
-        ("signature/shingle kernels native, no Python", NO_PYTHON),
-    ],
     "s36_manifest_compaction": [
         ("snapshot rollups are an executor checkpoint", r"Scan ExistingRDD"),
-    ],
-    "llm_source_dedup_priority": [
-        ("one window over content_key (the exact-dedup shuffle)", r"Window"),
-        ("displacement matrix partial-aggregates", r"partial_count"),
-        ("priority policy native, no Python", NO_PYTHON),
-    ],
-    "dedup_capture_recapture": [
-        ("both captures stay bucketed plans (no all-pairs)", r"BroadcastHashJoin|SortMergeJoin"),
-        ("overlap join + count aggregates native, no Python", NO_PYTHON),
     ],
 })
 
@@ -229,10 +197,6 @@ AUDITS.update({
 # discipline — bounded-domain aggregation before any window, broadcast
 # for small sides, no Python in the pipeline.
 AUDITS.update({
-    "dedup_sorted_neighborhood": [
-        ("window deltas broadcast (rank+δ equi-join)", r"BroadcastHashJoin|BroadcastNestedLoopJoin"),
-        ("native shingle intersection, no Python", NO_PYTHON),
-    ],
     "mm_patch_census": [
         ("header parse native — payload never leaves the scan", NO_PYTHON),
     ],
@@ -258,9 +222,6 @@ AUDITS.update({
 # (file, function, name); a new hint fails until its grain is reviewed.
 BROADCAST_HINT_ALLOWLIST = {
     ("classifierq.py", "nearest_exemplar", "ex"),
-    ("dedupq.py", "dedup_capture_recapture", "b"),
-    ("dedupq.py", "dedup_capture_recapture", "both"),
-    ("dedupq.py", "dedup_sorted_neighborhood", "deltas"),
     ("relational.py", "tpch_q5", "load_table"),
     ("samplingq.py", "p7_pps_systematic", "offs"),
     ("samplingq.py", "p7_pps_systematic", "wtot"),
@@ -465,17 +426,10 @@ def audit_zero_partition_windows() -> int:
 # grouped_range_rank / grouped_range_lead or operators/quantiles.
 # grouped_order_statistics (see the w1_ranked_partition conversion).
 WINDOW_PARTITION_GRAIN_ALLOWLIST = {
-    ("dedupq.py", "dedup_keep_one", "content_key"),  # data-grown: duplicate group per content digest
-    ("dedupq.py", "dedup_minhash_error_audit", "band_id,band_hash"),  # data-grown: salted LSH bucket
-    ("dedupq.py", "dedup_stream_firstseen", "key"),  # data-grown: per-key stream state
-    ("dedupq.py", "llm_source_dedup_priority", "content_key"),  # data-grown: cross-source duplicate group
     ("erq.py", "er_blocked_linkage", "c_custkey"),  # data-grown: block-bounded candidate matches per record
-    ("exact.py", "exact_dedup", "_content_key(...)"),  # data-grown: duplicate group per digest
     ("graph.py", "_cc_star_loop", "a"),          # data-grown: adjacency per vertex (star-contraction bounds it)
-    ("minhash.py", "minhash_dup_pairs", "band_id,band_hash"),  # data-grown: salted LSH bucket
     ("multimodalq.py", "mm_audio_silence", "media_id"),  # data-grown: frames per clip (duration-bounded)
     ("multimodalq.py", "mm_scene_cut", "media_id"),  # data-grown: frames per clip (duration-bounded)
-    ("ngram.py", "ngram_jaccard_pairs", "_bucket,tok"),  # data-grown: salted token bucket
     ("quantiles.py", "grouped_order_statistics", "*group_cols"),  # operator-internal: coarse-bucket census per group
     ("quantiles.py", "grouped_order_statistics", "*group_cols,tgt_id"),  # operator-internal: one selected bucket's value domain
     ("ranking.py", "grouped_range_lead", "*group_cols"),  # operator-internal: per-(pid, group) firsts stitch table
