@@ -30,7 +30,6 @@ def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
         multimodalq,
         relational,
         samplingq,
-        scaleq,
         tpch_ext,
         tpch_full,
     )
@@ -42,7 +41,6 @@ def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
         tpch_full,
         classifierq,
         samplingq,
-        scaleq,
         multimodalq,
         erq,
     ):

@@ -18,11 +18,10 @@ Scale design: each blocking pass is one equi-join on the block key
 block-size², and the key choice matters — the two passes use the LAST four digits
 and the four digits just before the tail, both uniform across
 customers, while any LEADING window is degenerate at every SF
-(everything starts '0000…' — one all-pairs block, the exact skew trap
-operators/skew.py exists for; the first cut of this query made that
-mistake and went quadratic). Scoring joins carry only (key, name)
-pairs; the argmin is a per-dirty-record window over its own candidate
-set.
+(everything starts '0000…' — one all-pairs block; the first cut of
+this query made that mistake and went quadratic). Scoring joins
+carry only (key, name) pairs; the argmin is a per-dirty-record window
+over its own candidate set.
 """
 
 from __future__ import annotations

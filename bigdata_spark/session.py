@@ -116,10 +116,6 @@ def get_spark(
         # clusters commonly run 0 too and let scan partition sizing do
         # the locality work; latency-sensitive mixed clusters may
         # prefer the 3s default — override via extra_conf there.
-        # NOTE: narrow coalesce(1) over Python-materialized partitions
-        # is a separate trap — the single task pays one Python-worker
-        # round-trip PER PARENT (measured ~130 ms × 32 parents);
-        # single-file writers here use repartition(1) instead.
         .config("spark.locality.wait", "0s")
     )
     if master is not None:

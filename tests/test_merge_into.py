@@ -1,5 +1,4 @@
-"""Row-level semantics of operators/merge.merge_into (the aggregate
-cross-engine check is the s23_merge_into oracle)."""
+"""Row-level semantics of operators/merge.merge_into."""
 
 from __future__ import annotations
 

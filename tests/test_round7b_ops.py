@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 SF = "/root/testdata/sf0.001"
 
 
@@ -46,35 +44,6 @@ def test_audio_silence_matches_gate_pattern(spark):
         assert r["longest_run_ms"] == longest * _SIL_WIN_MS
         first = silent_wins[0] * _SIL_WIN_MS if silent_wins else -1
         assert r["first_silence_ms"] == first
-
-
-def test_manifest_time_travel_snapshot_isolation(spark):
-    from bigdata_spark.plans.scaleq import s34_manifest_time_travel
-    from bigdata_spark.sources.catalog import load_table
-
-    rows = s34_manifest_time_travel(spark, SF).collect()
-    v1 = {r["o_orderstatus"]: r for r in rows if r["version"] == 1}
-    v2 = {r["o_orderstatus"]: r for r in rows if r["version"] == 2}
-    assert set(v1) == set(v2)
-    base = (
-        load_table(spark, SF, "orders")
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_price"),
-        )
-        .collect()
-    )
-    for r in base:
-        st = r["o_orderstatus"]
-        assert v1[st]["n"] == r["n"] and v1[st]["sum_price"] == r["sum_price"]
-        assert v2[st]["n"] == r["n"]
-        if st == "F":  # the rewritten partition: prices exactly doubled
-            assert v2[st]["sum_price"] == 2 * r["sum_price"]
-        else:  # untouched partitions identical across versions
-            assert v2[st]["sum_price"] == r["sum_price"]
 
 
 def test_manifest_stats_pruning_api(spark, tmp_path):

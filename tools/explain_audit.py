@@ -91,33 +91,15 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
         ("one-pass two-distinct census", r"partial_count\(l_suppkey[^\n]*FILTER"),
         ("supplier/nation broadcast", r"BroadcastExchange"),
     ],
-    "s33_recursive_cte": [
-        ("recursion executes natively (UnionLoop operator, no driver loop)", r"UnionLoop"),
-        ("per-depth census map-side combines", r"partial_sum\("),
-    ],
-    "sql_pipe_syntax": [
-        ("pipe-form filter still pushes to scan", r"PushedFilters: \[.*LessThanOrEqual\(l_shipdate"),
-        ("pipe-form aggregate still map-side combines", r"partial_sum\("),
-        ("scan pruned to the agg+filter cols only", r"ReadSchema: struct<l_quantity:double,l_extendedprice:double,l_returnflag:string,l_linestatus:string"),
-        ("no extra columns read", r"ReadSchema: (?![^\n]*l_orderkey)"),
-    ],
     "mm_scene_cut": [
         ("pixels decode inside Arrow batches (only scalars shuffle)", r"MapInPandas"),
         ("cut detection is a per-video lag window", r"Window"),
         ("per-video census map-side combines", r"partial_sum\("),
     ],
-    "s32_bucketed_smb_join": [
-        ("result is the reduced driver table (zero-Exchange asserted in-query)", r"Scan ExistingRDD"),
-    ],
     "tpch_q22": [
         ("NOT EXISTS compiled to anti join", r"LeftAnti"),
         ("positive-balance filter pushed", r"PushedFilters: \[.*GreaterThan\(c_acctbal,0\.0\)"),
         ("exact decimal balance sums", r"partial_sum\(cast\(c_acctbal[^\n]*decimal"),
-    ],
-    "skew_salted_agg": [
-        ("phase 1 shuffles on (key, salt) — hot key spread over salts", r"hashpartitioning\(event_type#\d+, _salt#\d+"),
-        ("phase 2 merges per-key over the tiny partial table", r"hashpartitioning\(event_type#\d+, \d+\)"),
-        ("map-side partials before both shuffles", r"partial_sum"),
     ],
     "tpch_q8": [
         ("every dim side broadcast (7-way star, facts never re-shuffle for dims)", r"BroadcastHashJoin"),
@@ -136,9 +118,6 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
     "p7_pps_systematic": [
         ("bucket offsets broadcast onto fact rows", r"BroadcastHashJoin"),
         ("fact window is bucket-partitioned (no global sort of facts)", r"Window[\s\S]*partitionBy|windowspecdefinition\(bucket"),
-    ],
-    "s23_merge_into": [
-        ("single full-outer join realizes the merge", r"FullOuter"),
     ],
     "mm_audio_spectral": [
         ("spectral decode is Arrow-batched mapInPandas", r"MapInPandas"),
@@ -169,27 +148,9 @@ AUDITS.update({
         ("decode is Arrow-batched mapInPandas (never per-row Python)", r"MapInPandas"),
         ("run/total aggregates partial-aggregate after decode", r"partial_count|partial_min"),
     ],
-    # scratch-backed entries return an eager localCheckpoint (executor-
-    # resident blocks; the scratch dir dies in the finally) — the visible
-    # plan must be exactly the checkpoint scan, proving no driver collect
-    "s18_incremental_agg": [
-        ("customer-grain result is an executor checkpoint, not a driver collect", r"Scan ExistingRDD"),
-    ],
-    "s16_avro_roundtrip": [
-        ("rollup is an executor checkpoint (rows never visited the driver)", r"Scan ExistingRDD"),
-    ],
-    "s34_manifest_time_travel": [
-        ("snapshot rollups are an executor checkpoint", r"Scan ExistingRDD"),
-    ],
-    "s14_orc_roundtrip": [
-        ("rollup is an executor checkpoint", r"Scan ExistingRDD"),
-    ],
     "mm_image_header_probe": [
         ("no shuffle anywhere (pure projection over the payload)", r"^(?![\s\S]*Exchange[\s\S]*hashpartitioning)"),
         ("header parse native, no Python", NO_PYTHON),
-    ],
-    "s36_manifest_compaction": [
-        ("snapshot rollups are an executor checkpoint", r"Scan ExistingRDD"),
     ],
 })
 
@@ -225,9 +186,6 @@ BROADCAST_HINT_ALLOWLIST = {
     ("relational.py", "tpch_q5", "load_table"),
     ("samplingq.py", "p7_pps_systematic", "offs"),
     ("samplingq.py", "p7_pps_systematic", "wtot"),
-    ("scaleq.py", "s37_incremental_mv", "counters"),
-    ("scaleq.py", "s38_mv_retraction", "counters"),
-    ("scaleq.py", "s41_metadata_only_count", "per_file"),
     ("tpch_ext.py", "tpch_q11", "n"),
     ("tpch_ext.py", "tpch_q11", "total"),
     ("tpch_ext.py", "tpch_q15", "mx"),
@@ -427,7 +385,6 @@ def audit_zero_partition_windows() -> int:
 # grouped_order_statistics (see the w1_ranked_partition conversion).
 WINDOW_PARTITION_GRAIN_ALLOWLIST = {
     ("erq.py", "er_blocked_linkage", "c_custkey"),  # data-grown: block-bounded candidate matches per record
-    ("graph.py", "_cc_star_loop", "a"),          # data-grown: adjacency per vertex (star-contraction bounds it)
     ("multimodalq.py", "mm_audio_silence", "media_id"),  # data-grown: frames per clip (duration-bounded)
     ("multimodalq.py", "mm_scene_cut", "media_id"),  # data-grown: frames per clip (duration-bounded)
     ("quantiles.py", "grouped_order_statistics", "*group_cols"),  # operator-internal: coarse-bucket census per group
