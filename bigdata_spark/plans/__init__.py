@@ -26,10 +26,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
     from . import (
         classifierq,
-        erq,
         multimodalq,
         relational,
-        samplingq,
         tpch_ext,
         tpch_full,
     )
@@ -40,9 +38,7 @@ def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
         tpch_ext,
         tpch_full,
         classifierq,
-        samplingq,
         multimodalq,
-        erq,
     ):
         overlap = set(out) & set(mod.QUERIES)
         if overlap:

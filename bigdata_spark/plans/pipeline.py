@@ -92,6 +92,10 @@ def _run(
         raise ValueError(f"model must be 'global' or 'local', got {model!r}")
     if not partition_counts:
         raise ValueError("partition_counts is empty")
+    if len(set(partition_counts)) != len(partition_counts):
+        raise ValueError(f"partition_counts has a repeated count: {partition_counts}")
+    if min(partition_counts) < 1:
+        raise ValueError(f"partition_counts must all be >= 1, got {partition_counts}")
     spark = df.sparkSession
     mem_start = _memory_snapshot(spark)
     split_timings: dict[str, float] = {}

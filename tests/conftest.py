@@ -1,11 +1,17 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, ROOT)
+# Python workers inherit PYTHONPATH, not the driver's sys.path: without
+# the root on it they cannot import bigdata_spark unless pytest starts
+# from the repo root.
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 
 @pytest.fixture(scope="session")

@@ -1,6 +1,5 @@
 """Regression tests for the round-4 ADVICE findings: upsert-sink
-order-col validation + batch-wins tiebreak, and profile_columns with
-hostile column names."""
+order-col validation + batch-wins tiebreak."""
 
 from __future__ import annotations
 
@@ -38,20 +37,3 @@ def test_upsert_equal_order_ties_resolve_batch_wins(spark, tmp_path):
     keyed_upsert_batch(table, b2, ["k"], [F.col("seq").desc()], ["seq", "v"])
     rows = table.read().collect()
     assert len(rows) == 1 and rows[0]["v"] == "new"
-
-
-def test_profile_columns_hostile_names(spark):
-    from bigdata_spark.operators.profile import profile_columns
-
-    df = spark.createDataFrame(
-        [(1, "a"), (2, None), (2, "c")],
-        ["weird col's", "it\"s.dotted"],
-    )
-    out = {
-        r["column_name"]: r
-        for r in profile_columns(df, ["weird col's", 'it"s.dotted']).collect()
-    }
-    assert out["weird col's"]["n_distinct"] == 2
-    assert out["weird col's"]["n_nulls"] == 0
-    assert out['it"s.dotted']["n_nulls"] == 1
-    assert out['it"s.dotted']["min_value"] == "a"

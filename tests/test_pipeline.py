@@ -66,8 +66,9 @@ def test_partition_sweep_report(spark, tmp_path, monkeypatch):
 
 
 def test_bad_arguments_and_a_failed_fit_leave_nothing_cached(spark):
-    """An unknown model or an empty count list fails before any Spark
-    work; a fit that fails (a ragged row) releases the cached split."""
+    """An unknown model or an empty, repeated or non-positive count
+    list fails before any Spark work; a fit that fails (a ragged row)
+    releases the cached split."""
     df = _clusters(spark, n_per=10)
     spark.catalog.clearCache()
     cache = spark._jsparkSession.sharedState().cacheManager()
@@ -75,6 +76,10 @@ def test_bad_arguments_and_a_failed_fit_leave_nothing_cached(spark):
         run_pipeline(df, model="forest")
     with pytest.raises(ValueError, match=r"partition_counts is empty"):
         run_partition_sweep(df, [])
+    with pytest.raises(ValueError, match=r"partition_counts has a repeated count: \[2, 2\]"):
+        run_partition_sweep(df, [2, 2])
+    with pytest.raises(ValueError, match=r"partition_counts must all be >= 1, got \[0\]"):
+        run_partition_sweep(df, [0])
     assert cache.isEmpty()
 
     ragged = df.union(spark.createDataFrame([(1, [0.0, 0.0, 0.0])], df.schema))

@@ -1,5 +1,4 @@
-"""Unit tests for the round-4 session additions: versioned deletes,
-data-quality expectations and column profiles."""
+"""Unit tests for the round-4 session additions: versioned deletes."""
 
 from __future__ import annotations
 
@@ -44,52 +43,3 @@ def test_versioned_delete_null_predicate_retains(spark, tmp_path):
     versioned_delete_where(t, F.col("v") == "x")
     # row 2's predicate is NULL → retained, SQL DELETE semantics
     assert [r["k"] for r in t.read().collect()] == [2]
-
-
-# --- data-quality expectations -------------------------------------------
-
-def test_expectations_count_violations(spark):
-    from bigdata_spark.operators.profile import (
-        check_expectations,
-        expect_in_range,
-        expect_in_set,
-        expect_not_null,
-        expect_references,
-        expect_unique,
-    )
-
-    t = spark.createDataFrame(
-        [(1, 5.0, "ok"), (1, -2.0, "ok"), (2, None, "bad"), (3, 150.0, None)],
-        "k long, v double, s string",
-    )
-    dim = spark.createDataFrame([(1,), (3,)], "pk long")
-    out = {
-        r["check_name"]: (r["n_violations"], r["passed"])
-        for r in check_expectations(
-            {
-                "unique_k": expect_unique(t, "k"),         # k=1 twice → 1
-                "v_not_null": expect_not_null(t, "v"),     # one null → 1
-                "v_range": expect_in_range(t, "v", 0.0, 100.0),  # -2, 150 → 2
-                "s_set": expect_in_set(t, "s", ["ok"]),    # 'bad' → 1 (null not counted)
-                "k_refs": expect_references(t, "k", dim, "pk"),  # k=2 orphan → 1
-            }
-        ).collect()
-    }
-    assert out["unique_k"] == (1, False)
-    assert out["v_not_null"] == (1, False)
-    assert out["v_range"] == (2, False)
-    assert out["s_set"] == (1, False)
-    assert out["k_refs"] == (1, False)
-
-
-def test_profile_columns_nulls_and_distinct(spark):
-    from bigdata_spark.operators.profile import profile_columns
-
-    t = spark.createDataFrame(
-        [(1, "a"), (2, None), (2, "b")], "k long, s string"
-    )
-    out = {r["column_name"]: r for r in profile_columns(t, ["k", "s"]).collect()}
-    assert out["k"]["n_rows"] == 3 and out["k"]["n_nulls"] == 0
-    assert out["k"]["n_distinct"] == 2
-    assert out["s"]["n_nulls"] == 1 and out["s"]["n_distinct"] == 2
-    assert out["k"]["min_value"] == "1" and out["k"]["max_value"] == "2"

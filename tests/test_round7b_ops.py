@@ -1,23 +1,8 @@
-"""Round-7 second-batch operators: allocation and manifest pruning."""
+"""Round-7 second-batch operators: audio silence and manifest pruning."""
 
 from __future__ import annotations
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_neyman_allocation_exhausts_budget(spark):
-    from bigdata_spark.plans.samplingq import _ALLOC_N, p9_neyman_allocation
-    from bigdata_spark.sources.catalog import load_table
-
-    rows = p9_neyman_allocation(spark, SF).collect()
-    assert sum(r["alloc_neyman"] for r in rows) == _ALLOC_N
-    assert sum(r["n_rows"] for r in rows) == load_table(spark, SF, "orders").count()
-    for r in rows:
-        assert r["sd_cents"] > 0 and r["neyman_weight"] > 0
-        assert 0 <= r["alloc_proportional"] <= _ALLOC_N
-    # Neyman must differ from proportional when stddevs differ... or at
-    # minimum never allocate more than the budget to one stratum
-    assert max(r["alloc_neyman"] for r in rows) < _ALLOC_N
 
 
 def test_audio_silence_matches_gate_pattern(spark):

@@ -96,34 +96,3 @@ def test_group_topk_layout_invariant(spark):
         draws.append(sorted(tuple(r) for r in got.collect()))
     assert draws[0] == draws[1]
     assert len(draws[0]) == 9
-
-
-def test_pps_systematic_properties(spark):
-    """PPS draw: exactly k rows, ticks strictly increase, and any item
-    with weight >= W/k is selected with certainty."""
-    from bigdata_spark.plans.samplingq import p7_pps_systematic
-
-    sf = "/root/testdata/sf0.001"
-    rows = p7_pps_systematic(spark, sf).collect()
-    # one row per DISTINCT item hit: an item with w > W/k consumes
-    # several ticks but is emitted once, so len <= k with equality when
-    # no item spans two ticks
-    assert 0 < len(rows) <= 200
-    ticks = [r["tick"] for r in rows]
-    assert ticks == sorted(ticks) and len(set(ticks)) == len(ticks)
-    assert ticks[-1] == 200  # the full weight line is consumed
-    total_w = sum(
-        r["weight_cents"]
-        for r in spark.read.parquet(f"{sf}/part.parquet")
-        .selectExpr("CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS weight_cents")
-        .collect()
-    )
-    certain = total_w // 200
-    picked = {r["p_partkey"] for r in rows}
-    for r in (
-        spark.read.parquet(f"{sf}/part.parquet")
-        .selectExpr("p_partkey", "CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS w")
-        .collect()
-    ):
-        if r["w"] >= certain:
-            assert r["p_partkey"] in picked

@@ -115,10 +115,6 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
         ("OR-of-ANDs: part conjuncts prune the broadcast build", r"PushedFilters: \[Or\(|Filter[^\n]*p_brand"),
         ("quantity disjuncts reach the lineitem side", r"l_quantity"),
     ],
-    "p7_pps_systematic": [
-        ("bucket offsets broadcast onto fact rows", r"BroadcastHashJoin"),
-        ("fact window is bucket-partitioned (no global sort of facts)", r"Window[\s\S]*partitionBy|windowspecdefinition\(bucket"),
-    ],
     "mm_audio_spectral": [
         ("spectral decode is Arrow-batched mapInPandas", r"MapInPandas"),
         ("payload pruned before anything downstream", r"^(?![\s\S]*Exchange[\s\S]*payload)"),
@@ -129,21 +125,6 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
 NO_PYTHON = r"^(?:(?!BatchEvalPython|ArrowEvalPython)[\s\S])*$"
 
 AUDITS.update({
-    "er_blocked_linkage": [
-        ("blocking is an equi-join (hash/broadcast, never a cross join)", r"BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"),
-        ("no cartesian product anywhere", r"^(?![\s\S]*CartesianProduct)"),
-        ("only key+name columns read from customer", r"ReadSchema: (?![^\n]*c_acctbal)"),
-        ("no Python evaluation", NO_PYTHON),
-    ],
-    "p9_neyman_allocation": [
-        (
-            "scan pruned to (o_orderpriority, o_totalprice)",
-            r"ReadSchema: struct<o_orderpriority:string,o_totalprice:double>"
-            r"|ReadSchema: struct<o_totalprice:double,o_orderpriority:string>",
-        ),
-        ("stratum cent sums partial-aggregate as decimals", r"partial_sum\(.*decimal"),
-        ("integer Hamilton apportionment native, no Python", NO_PYTHON),
-    ],
     "mm_audio_silence": [
         ("decode is Arrow-batched mapInPandas (never per-row Python)", r"MapInPandas"),
         ("run/total aggregates partial-aggregate after decode", r"partial_count|partial_min"),
@@ -184,8 +165,6 @@ AUDITS.update({
 BROADCAST_HINT_ALLOWLIST = {
     ("classifierq.py", "nearest_exemplar", "ex"),
     ("relational.py", "tpch_q5", "load_table"),
-    ("samplingq.py", "p7_pps_systematic", "offs"),
-    ("samplingq.py", "p7_pps_systematic", "wtot"),
     ("tpch_ext.py", "tpch_q11", "n"),
     ("tpch_ext.py", "tpch_q11", "total"),
     ("tpch_ext.py", "tpch_q15", "mx"),
@@ -273,15 +252,10 @@ def audit_broadcast_hints() -> int:
 # ``Window.orderBy`` spelling), so every construction site of a
 # no-partitionBy WindowSpec must be registered here with its reviewed
 # grain; a new site fails until its input grain is reviewed. The
-# round-10 sweep converted the SF-grown offenders this rule surfaced
-# (six queries, all since retired) to range_rank / range_ntile /
-# agg+broadcast shapes.
-ZERO_PARTITION_WINDOW_ALLOWLIST = {
-    ("ranking.py", "range_cumsum"),            # #partitions offset table (the operator's own bounded pass)
-    ("ranking.py", "range_rank"),              # #partitions offset table (the operator's own bounded pass)
-    ("samplingq.py", "p7_pps_systematic"),     # stratum/offset grain
-    ("samplingq.py", "p9_neyman_allocation"),  # stratum grain
-}
+# package has no such site left, so the allowlist is empty: over an
+# input that grows with the data, rank with grouped_range_rank or fold
+# the windowed value as agg + crossJoin(broadcast) instead.
+ZERO_PARTITION_WINDOW_ALLOWLIST: set[tuple[str, str]] = set()
 
 
 def _no_partition_window_sites(root) -> list[tuple[str, str]]:
@@ -340,7 +314,7 @@ def audit_zero_partition_windows() -> int:
                 f"FAIL {fname}:{fn}: no-partitionBy window spec not in the"
                 " reviewed bounded-grain allowlist (single-partition"
                 " exchange — review the input grain; if it grows with"
-                " the data, use operators/ranking.range_rank/range_ntile"
+                " the data, use operators/ranking.grouped_range_rank"
                 " or fold it as agg + crossJoin(broadcast))"
             )
     if stale:
@@ -381,25 +355,17 @@ def audit_zero_partition_windows() -> int:
 # Exact-mirror rule: a new site OR a stale entry fails the audit until
 # the grain is re-reviewed. SF-grown bounded-key windows over fact rows
 # are NOT allowlistable — convert to operators/ranking.
-# grouped_range_rank / grouped_range_lead or operators/quantiles.
-# grouped_order_statistics (see the w1_ranked_partition conversion).
+# grouped_range_rank (see the w1_ranked_partition conversion) or to
+# agg + crossJoin(broadcast).
 WINDOW_PARTITION_GRAIN_ALLOWLIST = {
-    ("erq.py", "er_blocked_linkage", "c_custkey"),  # data-grown: block-bounded candidate matches per record
     ("multimodalq.py", "mm_audio_silence", "media_id"),  # data-grown: frames per clip (duration-bounded)
     ("multimodalq.py", "mm_scene_cut", "media_id"),  # data-grown: frames per clip (duration-bounded)
-    ("quantiles.py", "grouped_order_statistics", "*group_cols"),  # operator-internal: coarse-bucket census per group
-    ("quantiles.py", "grouped_order_statistics", "*group_cols,tgt_id"),  # operator-internal: one selected bucket's value domain
-    ("ranking.py", "grouped_range_lead", "*group_cols"),  # operator-internal: per-(pid, group) firsts stitch table
-    ("ranking.py", "grouped_range_lead", "_pid,*group_cols"),  # operator-internal: local lead within one range partition
     ("ranking.py", "grouped_range_rank", "*group_cols"),  # operator-internal: per-(pid, group) offset table
     ("ranking.py", "grouped_range_rank", "_pid,*group_cols"),  # operator-internal: local rank within one range partition
-    ("ranking.py", "range_cumsum", "_pid"),      # operator-internal: local cumsum within one range partition
-    ("ranking.py", "range_rank", "_pid"),        # operator-internal: local rank within one range partition
     ("relational.py", "w2_group_topk", "o_orderpriority"),  # group-limit: rank<=3 filter → WindowGroupLimit
     ("relational.py", "w3_lag_delta", "user_id"),  # data-grown
     ("relational.py", "w4_moving_avg", "user_id"),  # data-grown
     ("sampling.py", "group_topk_random_sample", "*group_cols"),  # group-limit: rank<=k filter → WindowGroupLimit
-    ("samplingq.py", "p7_pps_systematic", "bucket"),  # bounded-input: stratum offset table
     ("upsert_sink.py", "keyed_upsert_batch", "*key_cols"),  # data-grown: versions per key
 }
 
@@ -472,8 +438,8 @@ def audit_window_partition_grains() -> int:
                 " reviewed partition-grain allowlist — classify the key:"
                 " data-grown group size is fine; a bounded-cardinality key"
                 " over an SF-grown input sorts a constant fraction of the"
-                " data in ONE task — convert to grouped_range_rank/"
-                "grouped_range_lead/grouped_order_statistics instead"
+                " data in ONE task — convert to grouped_range_rank or"
+                " agg + crossJoin(broadcast) instead"
             )
     if stale:
         failures += len(stale)
@@ -493,27 +459,36 @@ def audit_window_partition_grains() -> int:
     return 0
 
 
+def plan_audit(spark, name: str, sf_dir: str) -> list[str]:
+    """Check ``AUDITS[name]`` against the formatted physical plan of the
+    registry query ``name`` over ``sf_dir``. Prints one ok/FAIL line per
+    check and returns the failed checks (empty when all hold)."""
+    from bigdata_spark.plans import all_queries
+
+    fn, _ = all_queries()[name]
+    df = fn(spark, sf_dir)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    failed = []
+    for desc, pattern in AUDITS[name]:
+        if re.search(pattern, plan):
+            print(f"ok   {name}: {desc}")
+        else:
+            failed.append(f"{name}: {desc}  (pattern {pattern!r} not found)")
+            print(f"FAIL {failed[-1]}")
+    return failed
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from bigdata_spark.plans import all_queries
     from bigdata_spark.session import get_spark
 
     spark = get_spark("explain-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    registry = all_queries()
     failures = audit_broadcast_hints()
     failures += audit_zero_partition_windows()
     failures += audit_window_partition_grains()
-    for name, checks in AUDITS.items():
-        fn, _ = registry[name]
-        df = fn(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-        for desc, pattern in checks:
-            if re.search(pattern, plan):
-                print(f"ok   {name}: {desc}")
-            else:
-                failures += 1
-                print(f"FAIL {name}: {desc}  (pattern {pattern!r} not found)")
+    for name in AUDITS:
+        failures += len(plan_audit(spark, name, sf_dir))
     print(f"\n{failures} plan-audit failures")
     return 1 if failures else 0
 
