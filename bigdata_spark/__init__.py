@@ -15,7 +15,7 @@ Layout:
     plans       — composed relational queries (TPC-H-ish analytics)
     streaming   — keyed-upsert parquet sink
     ml          — proximity tree/forest, prediction, evaluation
-    multimodal  — binary payload columns, PPM/WAV/PNG/JPEG/MP4 codecs
+    multimodal  — PPM/WAV/PNG/JPEG codecs (no plan calls them)
 """
 
 __version__ = "0.1.0"

@@ -1,15 +1,2 @@
-from .media import (
-    MEDIA_SCHEMA,
-    decode_image_features,
-    frame_sample_plan,
-    media_metadata,
-    resize_images,
-)
-
-__all__ = [
-    "MEDIA_SCHEMA",
-    "decode_image_features",
-    "frame_sample_plan",
-    "media_metadata",
-    "resize_images",
-]
+"""Pure-numpy media codecs: PPM, WAV and PNG (``codecs``) and baseline
+JPEG (``jpeg``). No plan or model module imports them."""

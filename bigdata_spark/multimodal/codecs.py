@@ -1,16 +1,12 @@
-"""Pure-python/numpy media codecs for the multimodal surface.
+"""Pure-python/numpy media codecs.
 
 This container ships no PIL/torchaudio/ffmpeg, so the engine decodes
 what stdlib+numpy can genuinely parse: binary PPM (P6) images, PCM16
 RIFF/WAVE audio, and — since zlib ships with Python — real
 Deflate-compressed PNG (8-bit gray/RGB/alpha, all five scanline
-filters). That makes the decode → feature-extract → resize path
-execute on real pixels/samples for both raw and compressed images;
-only jpeg/mp4 (DCT/H.264, no stdlib path) still fall back to the
-documented stub in media.py.
+filters). Baseline JPEG lives in ``jpeg.py``.
 
-All functions are driver/executor-agnostic plain numpy — they run
-inside Arrow-batched mapInPandas workers.
+All functions are driver/executor-agnostic plain numpy.
 """
 
 from __future__ import annotations

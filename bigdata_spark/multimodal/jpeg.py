@@ -3,9 +3,7 @@
 The container ships no PIL/libjpeg, but baseline sequential JPEG is
 decodable from first principles with ~400 lines of numpy: marker parse,
 canonical Huffman decode, dequantize, 8x8 inverse DCT (orthonormal
-cosine matrix), chroma upsample, YCbCr->RGB. This closes the last
-stubbed *image* format in the multimodal surface (media.py); mp4/H.264
-remains out of stdlib reach.
+cosine matrix), chroma upsample, YCbCr->RGB.
 
 Decoder scope (what a training-data pipeline actually meets):
 - baseline sequential DCT (SOF0) and extended sequential (SOF1),
@@ -23,8 +21,7 @@ quantization tables, standard Annex-K Huffman tables, optional restart
 interval. All tables below are from the public JPEG spec (ITU-T T.81
 Annex K) — they are the universally shipped defaults.
 
-Everything here is plain numpy and runs inside Arrow-batched
-mapInPandas workers (media.py); nothing touches Spark.
+Everything here is plain numpy; nothing touches Spark.
 """
 
 from __future__ import annotations

@@ -24,22 +24,10 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
 def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
-    from . import (
-        classifierq,
-        multimodalq,
-        relational,
-        tpch_ext,
-        tpch_full,
-    )
+    from . import classifierq, relational, tpch_ext, tpch_full
 
     out: dict[str, tuple[QueryFn, str | None]] = {}
-    for mod in (
-        relational,
-        tpch_ext,
-        tpch_full,
-        classifierq,
-        multimodalq,
-    ):
+    for mod in (relational, tpch_ext, tpch_full, classifierq):
         overlap = set(out) & set(mod.QUERIES)
         if overlap:
             raise ValueError(f"duplicate query names: {overlap}")

@@ -1,7 +1,6 @@
 """Render pinned-literal DuckDB oracles for deterministic queries whose
 computation is not SQL-expressible (seeded iterative training, DP
-distances, binary decode) but whose OUTPUT is a pure function of the
-input data.
+distances) but whose OUTPUT is a pure function of the input data.
 
 Round 2 left five queries "rows-only" in the driver's correctness gate.
 They are seeded and (after the content-hash determinism pass) layout-
@@ -33,9 +32,6 @@ def _lit(v, typ: str) -> str:
         return f"CAST({int(v)} AS BIGINT)"
     if typ == "boolean":
         return "TRUE" if v else "FALSE"
-    if typ == "varchar":
-        escaped = str(v).replace("'", "''")
-        return f"'{escaped}'"
     raise ValueError(f"unknown literal type {typ}")
 
 
@@ -47,16 +43,6 @@ def _values(rows, types) -> str:
 
 
 _UNPINNED = "SELECT NULL WHERE FALSE  -- not pinned yet: run tools/pin_golden.py"
-
-
-def values_oracle(name: str, schema: list[tuple[str, str]]) -> str:
-    """SF-independent oracle: SELECT the pinned rows verbatim."""
-    if name not in GOLDEN:  # bootstrap: query exists, literals not yet pinned
-        return _UNPINNED
-    rows = GOLDEN[name]
-    cols = ", ".join(c for c, _ in schema)
-    types = [t for _, t in schema]
-    return f"SELECT {cols} FROM (VALUES {_values(rows, types)}) AS g({cols})"
 
 
 def keyed_values_oracle(name: str, schema: list[tuple[str, str]]) -> str:

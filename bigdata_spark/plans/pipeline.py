@@ -96,6 +96,9 @@ def _run(
         raise ValueError(f"partition_counts has a repeated count: {partition_counts}")
     if min(partition_counts) < 1:
         raise ValueError(f"partition_counts must all be >= 1, got {partition_counts}")
+    # NaN fails this test too; 0 or 1 would leave one side of the split empty
+    if not 0.0 < train_fraction < 1.0:
+        raise ValueError(f"train_fraction must be in (0, 1), got {train_fraction!r}")
     spark = df.sparkSession
     mem_start = _memory_snapshot(spark)
     split_timings: dict[str, float] = {}

@@ -1,20 +1,24 @@
 """Property-based checks for the pure-python media codecs, the PNG
 raster backend, and FastDTW (hypothesis-generated inputs, no Spark
 session needed — these all run inside executors at scale, so their
-invariants must hold on arbitrary data)."""
+invariants must hold on arbitrary data), and fixed-example checks of
+the PPM/WAV codecs' feature statistics and resize."""
 
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from bigdata_spark.ml.dtw import dtw_distance, fast_dtw
 from bigdata_spark.ml.png import read_png, write_png
 from bigdata_spark.multimodal.codecs import (
+    audio_features,
     decode_ppm,
     decode_wav,
     encode_ppm,
     encode_wav,
+    image_features,
     resize_ppm,
 )
 
@@ -61,6 +65,44 @@ def test_wav_roundtrip_any_samples(n, rate, seed):
     back, got_rate = decode_wav(encode_wav(samples, rate))
     assert got_rate == rate
     assert np.array_equal(back, samples.astype(np.float64) / 32768.0)
+
+
+def test_ppm_codec_roundtrip_and_stats():
+    # solid-color 4×6 image: channel means are exactly the color
+    pix = np.zeros((4, 6, 3), dtype=np.uint8)
+    pix[:, :, 0], pix[:, :, 1], pix[:, :, 2] = 255, 128, 0
+    payload = encode_ppm(pix)
+    assert (decode_ppm(payload) == pix).all()
+    f = image_features(payload)
+    assert f[0] == pytest.approx(1.0)
+    assert f[1] == pytest.approx(128 / 255)
+    assert f[2] == pytest.approx(0.0)
+    assert f[3] == pytest.approx(0.0)  # solid → zero gray std
+    assert f[6] == pytest.approx(6 / 4)  # aspect w/h
+    # comment-bearing header also parses
+    with_comment = b"P6\n# crafted\n6 4\n255\n" + pix.tobytes()
+    assert (decode_ppm(with_comment) == pix).all()
+
+
+def test_wav_codec_roundtrip_and_stats():
+    rate = 8000
+    t = np.arange(rate, dtype=np.float64)  # 1 s
+    samples = (np.sin(2 * np.pi * 100 * t / rate) * 16384).astype(np.int16)
+    payload = encode_wav(samples, rate)
+    back, got_rate = decode_wav(payload)
+    assert got_rate == rate and len(back) == rate
+    assert np.allclose(back, samples / 32768.0)
+    f = audio_features(payload)
+    assert f[0] == pytest.approx(0.0, abs=1e-3)  # sine mean ~0
+    assert f[4] == pytest.approx(0.5 / np.sqrt(2), abs=1e-3)  # RMS of 0.5-amp sine
+    assert f[7] == pytest.approx(rate / 48000.0)
+
+
+def test_resize_ppm_nearest_neighbor():
+    pix = np.arange(4 * 4 * 3, dtype=np.uint8).reshape(4, 4, 3)
+    small = decode_ppm(resize_ppm(encode_ppm(pix), 2, 2))
+    # nearest-neighbor with floor mapping keeps rows/cols 0 and 2
+    assert (small == pix[[0, 2]][:, [0, 2]]).all()
 
 
 @settings(max_examples=15, deadline=None)

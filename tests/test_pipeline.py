@@ -66,9 +66,9 @@ def test_partition_sweep_report(spark, tmp_path, monkeypatch):
 
 
 def test_bad_arguments_and_a_failed_fit_leave_nothing_cached(spark):
-    """An unknown model or an empty, repeated or non-positive count
-    list fails before any Spark work; a fit that fails (a ragged row)
-    releases the cached split."""
+    """An unknown model, an empty, repeated or non-positive count list
+    or a train fraction outside (0, 1) fails before any Spark work; a
+    fit that fails (a ragged row) releases the cached split."""
     df = _clusters(spark, n_per=10)
     spark.catalog.clearCache()
     cache = spark._jsparkSession.sharedState().cacheManager()
@@ -80,6 +80,9 @@ def test_bad_arguments_and_a_failed_fit_leave_nothing_cached(spark):
         run_partition_sweep(df, [2, 2])
     with pytest.raises(ValueError, match=r"partition_counts must all be >= 1, got \[0\]"):
         run_partition_sweep(df, [0])
+    for fraction in (0.0, 1.0, 1.5, float("nan")):
+        with pytest.raises(ValueError, match=r"train_fraction must be in \(0, 1\)"):
+            run_pipeline(df, train_fraction=fraction)
     assert cache.isEmpty()
 
     ragged = df.union(spark.createDataFrame([(1, [0.0, 0.0, 0.0])], df.schema))

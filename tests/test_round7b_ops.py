@@ -1,34 +1,6 @@
-"""Round-7 second-batch operators: audio silence and manifest pruning."""
+"""Round-7 second-batch operators: manifest pruning."""
 
 from __future__ import annotations
-
-SF = "/root/testdata/sf0.001"
-
-
-def test_audio_silence_matches_gate_pattern(spark):
-    from bigdata_spark.plans.multimodalq import _SIL_WIN_MS, mm_audio_silence
-
-    rows = {r["media_id"]: r for r in mm_audio_silence(spark, SF).collect()}
-    assert len(rows) == 48
-    for i in range(48):
-        period = 2 + i % 3
-        silent_blocks = [b for b in range(8) if (b + i) % period == 0]
-        # 250 ms blocks → two 125 ms windows each
-        silent_wins = sorted(w for b in silent_blocks for w in (2 * b, 2 * b + 1))
-        runs = []
-        for w in silent_wins:
-            if runs and w == runs[-1][1] + 1:
-                runs[-1][1] = w
-            else:
-                runs.append([w, w])
-        r = rows[i]
-        assert r["n_windows"] == 16
-        assert r["n_silent"] == len(silent_wins)
-        assert r["n_runs"] == len(runs)
-        longest = max((b - a + 1 for a, b in runs), default=0)
-        assert r["longest_run_ms"] == longest * _SIL_WIN_MS
-        first = silent_wins[0] * _SIL_WIN_MS if silent_wins else -1
-        assert r["first_silence_ms"] == first
 
 
 def test_manifest_stats_pruning_api(spark, tmp_path):

@@ -91,11 +91,6 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
         ("one-pass two-distinct census", r"partial_count\(l_suppkey[^\n]*FILTER"),
         ("supplier/nation broadcast", r"BroadcastExchange"),
     ],
-    "mm_scene_cut": [
-        ("pixels decode inside Arrow batches (only scalars shuffle)", r"MapInPandas"),
-        ("cut detection is a per-video lag window", r"Window"),
-        ("per-video census map-side combines", r"partial_sum\("),
-    ],
     "tpch_q22": [
         ("NOT EXISTS compiled to anti join", r"LeftAnti"),
         ("positive-balance filter pushed", r"PushedFilters: \[.*GreaterThan\(c_acctbal,0\.0\)"),
@@ -115,34 +110,7 @@ AUDITS: dict[str, list[tuple[str, str]]] = {
         ("OR-of-ANDs: part conjuncts prune the broadcast build", r"PushedFilters: \[Or\(|Filter[^\n]*p_brand"),
         ("quantity disjuncts reach the lineitem side", r"l_quantity"),
     ],
-    "mm_audio_spectral": [
-        ("spectral decode is Arrow-batched mapInPandas", r"MapInPandas"),
-        ("payload pruned before anything downstream", r"^(?![\s\S]*Exchange[\s\S]*payload)"),
-    ],
 }
-
-
-NO_PYTHON = r"^(?:(?!BatchEvalPython|ArrowEvalPython)[\s\S])*$"
-
-AUDITS.update({
-    "mm_audio_silence": [
-        ("decode is Arrow-batched mapInPandas (never per-row Python)", r"MapInPandas"),
-        ("run/total aggregates partial-aggregate after decode", r"partial_count|partial_min"),
-    ],
-    "mm_image_header_probe": [
-        ("no shuffle anywhere (pure projection over the payload)", r"^(?![\s\S]*Exchange[\s\S]*hashpartitioning)"),
-        ("header parse native, no Python", NO_PYTHON),
-    ],
-})
-
-# Round-8 additions: the new operator families must keep the same plan
-# discipline — bounded-domain aggregation before any window, broadcast
-# for small sides, no Python in the pipeline.
-AUDITS.update({
-    "mm_patch_census": [
-        ("header parse native — payload never leaves the scan", NO_PYTHON),
-    ],
-})
 
 
 # --- source-level hint audit ------------------------------------------------
@@ -358,8 +326,6 @@ def audit_zero_partition_windows() -> int:
 # grouped_range_rank (see the w1_ranked_partition conversion) or to
 # agg + crossJoin(broadcast).
 WINDOW_PARTITION_GRAIN_ALLOWLIST = {
-    ("multimodalq.py", "mm_audio_silence", "media_id"),  # data-grown: frames per clip (duration-bounded)
-    ("multimodalq.py", "mm_scene_cut", "media_id"),  # data-grown: frames per clip (duration-bounded)
     ("ranking.py", "grouped_range_rank", "*group_cols"),  # operator-internal: per-(pid, group) offset table
     ("ranking.py", "grouped_range_rank", "_pid,*group_cols"),  # operator-internal: local rank within one range partition
     ("relational.py", "w2_group_topk", "o_orderpriority"),  # group-limit: rank<=3 filter → WindowGroupLimit

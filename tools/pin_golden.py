@@ -1,17 +1,16 @@
 """Regenerate ``bigdata_spark/plans/_golden.py`` — the pinned literal
 outputs for the seeded/deterministic queries whose computation is not
-SQL-expressible (iterative tree training, DP distances, binary decode).
+SQL-expressible (iterative tree training, DP distances).
 
 The queries are pure functions of the input data (content-hash splits,
 sorted driver collects, seeded numpy), so their outputs are stable
 across sessions, cluster layouts, and retries — which is what makes a
-literal-value oracle legitimate. The embeddings-dependent queries are
-keyed by a cheap per-SF discriminator (``sum(vec_id*label)``) so ONE
-oracle string serves every scale factor; the synthetic-media queries
-are SF-independent.
+literal-value oracle legitimate. Each pin is keyed by a cheap per-SF
+discriminator (``sum(vec_id*label)``) so ONE oracle string serves every
+scale factor.
 
 Run after any change that alters these outputs (new seed, new split
-recipe, new codec): python tools/pin_golden.py && git diff
+recipe): python tools/pin_golden.py && git diff
 """
 
 from __future__ import annotations
@@ -37,11 +36,11 @@ OUT = os.path.join(
 HEADER = '''"""GENERATED by tools/pin_golden.py — do not edit by hand.
 
 Pinned literal outputs for the deterministic non-SQL-expressible
-queries (seeded ML fits, DTW distances, multimodal decode). Keys of
-the per-SF dicts are the DuckDB discriminator
-``CAST(sum(vec_id*label) AS BIGINT)`` over the embeddings table, so
-the rendered oracle (plans/golden_sql.py) picks the right literal rows
-for whatever scale factor the driver runs."""
+queries (seeded ML fits, DTW distances). Keys of the per-SF dicts are
+the DuckDB discriminator ``CAST(sum(vec_id*label) AS BIGINT)`` over
+the embeddings table, so the rendered oracle (plans/golden_sql.py)
+picks the right literal rows for whatever scale factor the driver
+runs."""
 
 GOLDEN = '''
 
@@ -51,12 +50,6 @@ def main() -> None:
         ml_dtw_distances,
         ml_global_tree,
         ml_local_forest,
-    )
-    from bigdata_spark.plans.multimodalq import (
-        mm_audio_spectral,
-        mm_decode_features,
-        mm_metadata,
-        mm_phash_dedup,
     )
 
     spark = get_spark("pin_golden", extra_conf={"spark.ui.showConsoleProgress": "false"})
@@ -78,23 +71,6 @@ def main() -> None:
             rows = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
             by_key[int(key)] = rows
         out[name] = by_key
-
-    from bigdata_spark.plans.multimodalq import (
-        mm_audio_silence,
-        mm_mp4_frames,
-        mm_scene_cut,
-    )
-
-    for name, fn in (
-        ("mm_metadata", mm_metadata),
-        ("mm_decode_features", mm_decode_features),
-        ("mm_audio_spectral", mm_audio_spectral),
-        ("mm_phash_dedup", mm_phash_dedup),
-        ("mm_mp4_frames", mm_mp4_frames),
-        ("mm_scene_cut", mm_scene_cut),
-        ("mm_audio_silence", mm_audio_silence),
-    ):
-        out[name] = sorted(tuple(r) for r in fn(spark, "/root/testdata/sf0.01").collect())
 
     with open(OUT, "w") as f:
         f.write(HEADER)
