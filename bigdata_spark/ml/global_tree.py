@@ -367,6 +367,8 @@ class GlobalProximityTree:
         for w, n in zip(wt.column("width").to_pylist(), wt.column("n").to_pylist()):
             widths[w] = widths.get(w, 0) + n
         dim = training_width(widths, level["dim"])
+        # every level job reads every training row
+        self.fit_stats_["rows"] = sum(widths.values())
 
         return tbl.filter(kind == _ENTRY), tbl.filter(kind == _SERIES), dim
 
@@ -392,12 +394,15 @@ class GlobalProximityTree:
         otherwise the fit raises ``ValueError`` with the count. An empty
         ``df`` raises ``ValueError`` too.
 
-        ``fit_stats_`` then reports the Spark jobs the fit ran (in the
-        caller's job group), the depth at which it went local (None:
-        never), the rows it held on the driver, and ``_LOCAL_BYTES``."""
+        ``fit_stats_`` then reports the training rows, the Spark jobs
+        the fit ran (in the caller's job group), the depth at which it
+        went local (None: never), the rows it held on the driver, and
+        ``_LOCAL_BYTES``."""
         sc = df.sparkSession.sparkContext
         before = _group_jobs(sc)
-        self.fit_stats_ = {"jobs": 0, "local_from_depth": None, "held_rows": 0, "local_bytes": _LOCAL_BYTES}
+        self.fit_stats_ = {
+            "rows": 0, "jobs": 0, "local_from_depth": None, "held_rows": 0, "local_bytes": _LOCAL_BYTES
+        }
         rng = random.Random(self.seed)
         frame = _spread(
             df.select(

@@ -74,7 +74,8 @@ class LocalProximityForest:
     def fit(self, df: DataFrame, label_col: str = "label", features_col: str = "features") -> "LocalProximityForest":
         """df: (label int, features array<double>). Assigns balanced
         stratified partitions (W1+O3) then trains one tree per partition
-        via applyInPandas. An empty ``df`` raises ``ValueError``."""
+        via applyInPandas. An empty ``df`` raises ``ValueError``.
+        ``fit_stats_`` then reports the training rows."""
         # _row_key: content hash carried into the pandas group so each
         # partition's rows can be sorted deterministically before
         # training — applyInPandas delivers rows in shuffle-fetch order,
@@ -134,6 +135,7 @@ class LocalProximityForest:
         for r in rows:
             widths.update(dict(json.loads(r["widths"])))
         training_width(widths)
+        self.fit_stats_ = {"rows": sum(widths.values())}
         rows.sort(key=lambda r: r["partition_id"])
         self.trees = [ProximityTree.from_state(json.loads(r["tree_json"])) for r in rows]
         self.weights = [r["oob_score"] if self.use_weighting else 1.0 for r in rows]

@@ -10,6 +10,16 @@ Spark-first differences from the reference:
 - the partition sweep ingests and splits once, not once per count,
 - the report is the same nested shape (performance/timing/complexity →
   JSON sink, S7 parity with evaluation.py:313-347).
+
+A model's pass runs the fit's jobs + 2: the fit, then one
+score-and-tabulate pass (predict feeding the confusion table, two jobs
+under adaptive execution). On the ECG benchmark that is 4 jobs for the
+global tree and 11 for the forest. Nothing is cached and nothing is
+counted apart: ``rows.train`` is the count the fit makes of its
+training rows (``fit_stats_["rows"]``), ``rows.test`` the sum of the
+confusion counts. The split is a content-hash filter over the caller's
+frame, recomputed by each job that reads it; a caller whose frame is
+costly to compute caches it.
 """
 
 from __future__ import annotations
@@ -18,7 +28,6 @@ import json
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..ml.evaluation import (
     _confusion_counts,
@@ -33,12 +42,12 @@ from ..operators.sampling import stratified_split
 
 def _memory_snapshot(spark: SparkSession) -> dict:
     """Point-in-time memory reading (reference evaluation.py:313-347
-    samples psutil around each stage; same shape here without the hard
-    dependency): Python-driver RSS from stdlib ``resource`` (psutil's
-    current-RSS added when available) plus the JVM's own view of every
-    executor's block-manager storage memory — on local[*] that is one
-    entry; on a 1000-executor cluster the same call returns all of
-    them, so the report stays meaningful at scale."""
+    samples psutil around each stage; same shape here without the
+    dependency): the Python driver's peak RSS from stdlib ``resource``
+    plus the JVM's own view of every executor's block-manager storage
+    memory — on local[*] that is one entry; on a 1000-executor cluster
+    the same call returns all of them, so the report stays meaningful
+    at scale."""
     import resource
 
     ru = resource.getrusage(resource.RUSAGE_SELF)
@@ -46,14 +55,6 @@ def _memory_snapshot(spark: SparkSession) -> dict:
         # ru_maxrss is KiB on Linux — peak, monotone over the process
         "driver_peak_rss_mb": round(ru.ru_maxrss / 1024.0, 1),
     }
-    try:
-        import psutil  # noqa: F401  (optional, parity with reference)
-
-        snap["driver_rss_mb"] = round(
-            psutil.Process().memory_info().rss / 2**20, 1
-        )
-    except ImportError:
-        pass
     try:
         status = spark.sparkContext._jsc.sc().getExecutorMemoryStatus()
         it = status.iterator()
@@ -87,7 +88,14 @@ def _run(
     ``model`` (``"global"`` or ``"local"``) once per partition count;
     returns one report per count. Every report carries the one split's
     rows and ingest/split times. Bad arguments raise ``ValueError``
-    before any Spark work."""
+    before any Spark work.
+
+    Each count runs the fit's jobs + 2 and caches nothing. The timing
+    keys: ``ingestion_time`` and ``split_time`` time building the lazy
+    cleaned frame and split (no job), ``training_time`` the fit,
+    ``prediction_time`` the fused predict-and-tabulate job, and
+    ``evaluation_time`` the metrics computed on the driver from the
+    confusion counts."""
     if model not in ("global", "local"):
         raise ValueError(f"model must be 'global' or 'local', got {model!r}")
     if not partition_counts:
@@ -109,76 +117,61 @@ def _run(
 
     t0 = time.time()
     train, test = stratified_split(df, label_col, train_fraction, seed=seed)
-    train = train.persist()
-    test = test.persist()
-    preds = None
-    try:
-        n_train, n_test = train.count(), test.count()
-        split_timings["split_time"] = time.time() - t0
+    split_timings["split_time"] = time.time() - t0
 
-        reports = []
-        for i, num_partitions in enumerate(partition_counts):
-            if i:  # the first count's pass started before the ingest
-                mem_start = _memory_snapshot(spark)
-            timings = dict(split_timings)
-            t0 = time.time()
-            complexity: dict[str, float] = {}
-            fit_stats: dict = {}  # the global fit's GlobalProximityTree.fit_stats_
-            if model == "local":
-                m = LocalProximityForest(
-                    num_partitions=num_partitions, n_splitters=n_splitters,
-                    max_depth=max_depth, seed=seed,
-                ).fit(train, label_col, features_col)
-                complexity["n_trees"] = len(m.trees)
-            else:
-                m = GlobalProximityTree(
-                    n_splitters=n_splitters, max_depth=max_depth, seed=seed
-                ).fit(train, label_col, features_col)
-                complexity["depth"] = m.depth
-                complexity["n_nodes"] = len(m.tree)
-                fit_stats = m.fit_stats_
-            timings["training_time"] = time.time() - t0
-            mem_after_train = _memory_snapshot(spark)
+    reports = []
+    for i, num_partitions in enumerate(partition_counts):
+        if i:  # the first count's pass started before the ingest
+            mem_start = _memory_snapshot(spark)
+        timings = dict(split_timings)
+        t0 = time.time()
+        complexity: dict[str, float] = {}
+        if model == "local":
+            m = LocalProximityForest(
+                num_partitions=num_partitions, n_splitters=n_splitters,
+                max_depth=max_depth, seed=seed,
+            ).fit(train, label_col, features_col)
+            complexity["n_trees"] = len(m.trees)
+        else:
+            m = GlobalProximityTree(
+                n_splitters=n_splitters, max_depth=max_depth, seed=seed
+            ).fit(train, label_col, features_col)
+            complexity["depth"] = m.depth
+            complexity["n_nodes"] = len(m.tree)
+        timings["training_time"] = time.time() - t0
+        mem_after_train = _memory_snapshot(spark)
 
-            t0 = time.time()
-            preds = m.predict(test, features_col).persist()
-            preds.count()
-            timings["prediction_time"] = time.time() - t0
+        t0 = time.time()
+        # one pass scores the test side and tabulates (label, prediction);
+        # the predictions are never cached or counted apart
+        counts = _confusion_counts(m.predict(test, features_col), label_col, "prediction")
+        timings["prediction_time"] = time.time() - t0
 
-            t0 = time.time()
-            # one confusion-counts job feeds every metric (ml/evaluation.py)
-            counts = _confusion_counts(preds, label_col, "prediction")
-            performance = metrics_from_counts(counts)
-            performance["balanced_accuracy"] = balanced_accuracy_from_counts(counts)
-            timings["evaluation_time"] = time.time() - t0
+        t0 = time.time()
+        performance = metrics_from_counts(counts)
+        performance["balanced_accuracy"] = balanced_accuracy_from_counts(counts)
+        timings["evaluation_time"] = time.time() - t0
 
-            preds.unpersist()
-            if i == len(partition_counts) - 1:
-                train.unpersist()
-                test.unpersist()
-            reports.append({
-                "model": model,
-                "num_partitions": num_partitions,
-                # the split is an exact complement (a never-null content hash
-                # puts each row on one side), so the sides add up to the total
-                "rows": {"total": n_train + n_test, "train": n_train, "test": n_test},
-                "performance": {k: round(v, 6) for k, v in performance.items()},
-                "timing": {k: round(v, 3) for k, v in timings.items()},
-                "complexity": complexity,
-                "fit": fit_stats,
-                # reference evaluation.py:313-347 parity: memory sampled at the
-                # stage boundaries that matter (start, post-train, end)
-                "memory": {
-                    "start": mem_start,
-                    "after_training": mem_after_train,
-                    "end": _memory_snapshot(spark),
-                },
-            })
-    finally:
-        # a failed fit or predict must not leave the split cached
-        for frame in (train, test, preds):
-            if frame is not None:
-                frame.unpersist()
+        # the fit counts its training rows, the confusion table the test
+        # rows; the split is an exact complement (a never-null content
+        # hash puts each row on one side), so they add up to the total
+        n_train, n_test = m.fit_stats_["rows"], sum(counts.values())
+        reports.append({
+            "model": model,
+            "num_partitions": num_partitions,
+            "rows": {"total": n_train + n_test, "train": n_train, "test": n_test},
+            "performance": {k: round(v, 6) for k, v in performance.items()},
+            "timing": {k: round(v, 3) for k, v in timings.items()},
+            "complexity": complexity,
+            "fit": m.fit_stats_,
+            # reference evaluation.py:313-347 parity: memory sampled at the
+            # stage boundaries that matter (start, post-train, end)
+            "memory": {
+                "start": mem_start,
+                "after_training": mem_after_train,
+                "end": _memory_snapshot(spark),
+            },
+        })
     return reports
 
 

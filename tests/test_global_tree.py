@@ -75,6 +75,7 @@ def test_fit_independent_of_layout_one_job_per_level(spark, monkeypatch, params,
             bound = tree.depth + 1 if name == "distributed" else 2
             assert jobs <= bound + (partitions == 1), (name, partitions, jobs, tree.depth)
             assert tree.fit_stats_ == {
+                "rows": n,
                 "jobs": jobs,
                 "local_from_depth": None if name == "distributed" else 0,
                 "held_rows": 0 if name == "distributed" else n,

@@ -7,6 +7,8 @@ import json
 import numpy as np
 import pytest
 
+from bigdata_spark.operators.preprocess import drop_all_null_rows
+from bigdata_spark.operators.sampling import stratified_split
 from bigdata_spark.plans import pipeline
 from bigdata_spark.plans.pipeline import run_partition_sweep, run_pipeline
 
@@ -25,22 +27,49 @@ def test_run_pipeline_local(spark):
     assert rep["rows"]["train"] + rep["rows"]["test"] == rep["rows"]["total"] == 120
     assert rep["performance"]["accuracy"] > 0.9
     assert rep["complexity"]["n_trees"] == 3
-    assert rep["fit"] == {}
+    assert rep["fit"] == {"rows": rep["rows"]["train"]}
     assert all(t >= 0 for t in rep["timing"].values())
 
 
 def test_run_pipeline_rows_total_is_train_plus_test(spark):
     """``rows.total`` counts the rows left after dropping all-null rows,
-    duplicates included, as the two sides of the split."""
+    duplicates included, as the two sides of the split: for both models
+    ``rows.train`` (the fit's count) and ``rows.test`` (the confusion
+    table's sum) equal counts of the split's sides made here."""
     df = _clusters(spark, n_per=20)
     df = df.union(df.limit(5)).union(spark.createDataFrame([(None, None)], df.schema))
-    rep = run_pipeline(df, model="global", max_depth=4)
-    assert rep["rows"]["total"] == 65
-    assert rep["rows"]["train"] + rep["rows"]["test"] == 65
+    train, test = stratified_split(drop_all_null_rows(df), "label", 0.8, seed=42)
+    n_train, n_test = train.count(), test.count()
+    assert n_train + n_test == 65
+    reports = {model: run_pipeline(df, model=model, max_depth=4) for model in ("global", "local")}
+    for rep in reports.values():
+        assert rep["rows"] == {"total": 65, "train": n_train, "test": n_test}
+        assert rep["fit"]["rows"] == n_train
     # the global fit's own record: this small set is held from the root
-    assert rep["fit"]["local_from_depth"] == 0
-    assert rep["fit"]["held_rows"] == rep["rows"]["train"]
-    assert 2 <= rep["fit"]["jobs"] <= 3
+    fit = reports["global"]["fit"]
+    assert fit["local_from_depth"] == 0
+    assert fit["held_rows"] == n_train
+    assert 2 <= fit["jobs"] <= 3
+
+
+@pytest.mark.parametrize("model,jobs", [("global", 4), ("local", 11)])
+def test_run_pipeline_jobs_per_pass(spark, model, jobs):
+    """A pass runs the fit's jobs and one score-and-tabulate pass of
+    two jobs: the split, the predictions and the row counts cost none.
+    The input is cached first, as the benchmark caches its frame."""
+    sc = spark.sparkContext
+    df = _clusters(spark).persist()
+    df.count()
+    group = f"pipeline-pass-{model}"
+    sc.setJobGroup(group, group)
+    try:
+        rep = run_pipeline(df, model=model, num_partitions=3)
+    finally:
+        sc.setJobGroup("", "")
+        df.unpersist()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+    if model == "global":
+        assert rep["fit"]["jobs"] + 2 == jobs
 
 
 def test_partition_sweep_report(spark, tmp_path, monkeypatch):
@@ -68,7 +97,7 @@ def test_partition_sweep_report(spark, tmp_path, monkeypatch):
 def test_bad_arguments_and_a_failed_fit_leave_nothing_cached(spark):
     """An unknown model, an empty, repeated or non-positive count list
     or a train fraction outside (0, 1) fails before any Spark work; a
-    fit that fails (a ragged row) releases the cached split."""
+    fit that fails (a ragged row) leaves nothing cached."""
     df = _clusters(spark, n_per=10)
     spark.catalog.clearCache()
     cache = spark._jsparkSession.sharedState().cacheManager()

@@ -3,11 +3,11 @@
 Build ``--rows`` series of the ``perfbench/ecg.py`` set, split them 80/20
 the way ``run_pipeline`` does, fit ``GlobalProximityTree`` on the
 training side, and print one JSON line: the fit's wall time, its
-``fit_stats_`` (Spark jobs, the depth at which it went local, the rows
-it held, the budget), the tree's depth and node count, and the sha256 of
-its ``to_state()`` (``json.dumps(..., sort_keys=True)``). A
-bootstrap-only fit (``max_depth=0``) runs first, so that ``fit_s`` does
-not include the session's one-time start of its Python workers. Two
+``fit_stats_`` (training rows, Spark jobs, the depth at which it went
+local, the rows it held, the budget), the tree's depth and node count,
+and the sha256 of its ``to_state()`` (``json.dumps(..., sort_keys=True)``).
+A bootstrap-only fit (``max_depth=0``) runs first, so that ``fit_s``
+does not include the session's one-time start of its Python workers. Two
 checkouts fit the same tree exactly when they print the same sha256:
 
     python tools/global_fit_probe.py --rows 20000 --seed 11 --max-depth none
@@ -49,18 +49,15 @@ def main() -> None:
     spark = get_spark("global_fit_probe")
     df = drop_all_null_rows(ecg_frame(spark, *make_ecg(args.rows, args.seed)))
     train, _ = stratified_split(df, "label", 0.8, seed=args.seed)
-    train = train.persist()
-    n_train = train.count()
     GlobalProximityTree(n_splitters=args.n_splitters, max_depth=0, seed=args.seed).fit(train)
     tree = GlobalProximityTree(n_splitters=args.n_splitters, max_depth=max_depth, seed=args.seed)
     t0 = time.perf_counter()
     tree.fit(train)
     fit_s = time.perf_counter() - t0
-    train.unpersist()
     state = json.dumps(tree.to_state(), sort_keys=True).encode()
     print(json.dumps({
-        "rows": args.rows, "train_rows": n_train, "seed": args.seed, "max_depth": max_depth,
-        "fit_s": round(fit_s, 3), "fit_stats_": getattr(tree, "fit_stats_", None),
+        "rows": args.rows, "train_rows": tree.fit_stats_.get("rows"), "seed": args.seed, "max_depth": max_depth,
+        "fit_s": round(fit_s, 3), "fit_stats_": tree.fit_stats_,
         "depth": tree.depth, "nodes": len(tree.tree), "sha256": hashlib.sha256(state).hexdigest(),
     }), flush=True)
     spark.stop()

@@ -47,10 +47,8 @@ def main() -> None:
     for seed in args.seeds:
         df = drop_all_null_rows(ecg_frame(spark, *make_ecg(EcgPipelines.rows, seed)))
         train, _ = stratified_split(df, "label", 0.8, seed=seed)
-        train = train.persist()
         tree = GlobalProximityTree(seed=seed, **ECG_PARAMS).fit(train)
         forest = LocalProximityForest(num_partitions=EcgPipelines.partitions, seed=seed, **ECG_PARAMS).fit(train)
-        train.unpersist()
         print(f"seed {seed} global {_sha(tree.to_state())} "
               f"forest {_sha([t.to_state() for t in forest.trees])} trees {len(forest.trees)}", flush=True)
     spark.stop()
